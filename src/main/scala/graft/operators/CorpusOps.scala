@@ -558,43 +558,65 @@ object CorpusOps {
       .drop("_ws_g", "_ws_id", "_ws_key")
   }
 
-  /** Whole-document bin packing, next-fit style (round 15) — the
-    * OTHER packing mode trainers use: [[packSequences]] lays documents
-    * end-to-end and CHOPS at the budget (attention masks handle the
-    * splice); this one keeps every document intact and opens a new bin
-    * whenever the next document would overflow — the "no document may
-    * span sequences" loader contract. Within each shard, documents are
-    * taken in `idCol` order and folded:
+  /** The one whole-document bin-placement fold, shared by
+    * [[packBinsNextFit]], [[packBinsFirstFitDecreasing]], the driver
+    * pack in [[pretrainingRun]] and the streaming packer
+    * (`graft.streaming.StatefulOps.packStream`). It holds the open
+    * (bin, fill) pairs OLDEST first and the next bin id. Each item
+    * goes into the first open bin with `fill + n_tok <= budget`;
+    * otherwise it opens a new bin, and a new bin past `maxOpen`
+    * closes the oldest open bin (it can never receive another item).
+    * A new bin always accepts its first item, so an oversize item
+    * (n_tok > budget) owns a bin no later item can join. One uniform
+    * rule, no oversize special case. `place` returns the receiving
+    * bin and its fill after placement.
     *
-    *   fits  = fill == 0 || fill + n_tok <= budget
-    *   bin'  = if fits then bin else bin + 1
-    *   fill' = if fits then fill + n_tok else n_tok
-    *
-    * starting from (bin 0, fill 0). The `fill == 0` arm makes an
-    * EMPTY bin always accept its first document, so an oversize
-    * document (n_tok > budget) occupies a bin of its own — including
-    * bin 0 when it leads the shard — and the next document opens a
-    * fresh bin (its fill can never accept more). One uniform rule,
-    * no oversize special case.
-    * Output: (shard, doc id, n_tok, bin_idx, fill_after) one row per
-    * document.
-    *
-    * Shape: ONE shuffle (repartition on the shard key), a
-    * sort-within-partitions on (shard, id), then a sequential
-    * per-shard fold in mapPartitions. The fold is the honest plan: a
-    * bin boundary is a data-dependent RESET of the running fill, which
-    * no window/prefix-sum algebra expresses (the reset depends on the
-    * fill, which depends on earlier resets) — so this is the
-    * documented mapPartitions-as-last-resort case, like the multimodal
-    * decoders. Shards are the unit of parallelism exactly as in
-    * [[packSequences]]; rows carry (shard, id, n_tok) only — text
-    * never moves, and per-row state is two longs. The q212 oracle
-    * replays the fold as a recursive CTE per shard (the q211
-    * state-machine discipline applied to packing).
+    * The `maxOpen` cap keeps per-shard state bounded (classic FFD
+    * keeps every bin open: O(bins) state and O(n·bins) scans on a
+    * 100 TB shard) and keeps the q216 oracle's recursive-CTE state a
+    * bounded fill list. Not thread-safe: one instance per shard.
     */
-  def packBinsNextFit(df: DataFrame, shardCol: Column, idCol: Column,
-      tokenCountCol: Column, budget: Long): DataFrame = {
+  private[graft] final class BinFold(budget: Long, maxOpen: Int,
+      open0: Seq[(Long, Long)] = Nil, nextBin0: Long = 0L) {
+    private val bins = scala.collection.mutable.ArrayBuffer.from(open0)
+    private var next = nextBin0
+    def openBins: List[(Long, Long)] = bins.toList
+    def nextBin: Long = next
+    def place(shard: String, id: Long, tok: Long): (Long, Long) = {
+      // n_tok <= 0 would let a full bin keep accepting — a caller bug;
+      // fail loudly, not creatively (round-15 ADVICE)
+      require(tok > 0, s"n_tok must be positive, got $tok for doc $id in shard $shard")
+      val slot = bins.indexWhere { case (_, f) => f + tok <= budget }
+      if (slot >= 0) {
+        val (b, f) = bins(slot)
+        bins(slot) = (b, f + tok)
+        (b, f + tok)
+      } else {
+        val b = next
+        next += 1L
+        if (bins.size >= maxOpen) bins.remove(0)
+        bins += ((b, tok))
+        (b, tok)
+      }
+    }
+  }
+
+  /** The shared plan of the batch packers: ONE shuffle (repartition
+    * on shard), a sort within partitions on (shard, `order`), then a
+    * sequential [[BinFold]] per shard in mapPartitions. The fold is
+    * the honest plan: a bin boundary is a data-dependent RESET of the
+    * running fill, which no window/prefix-sum algebra expresses (the
+    * reset depends on the fill, which depends on earlier resets) — so
+    * this is the documented mapPartitions-as-last-resort case, like
+    * the multimodal decoders. Rows carry (shard, id, n_tok) only —
+    * text never moves. Output: (shard, doc_id, n_tok, bin_idx,
+    * fill_after), bin_idx counting bins in open order per shard.
+    */
+  private def packBins(df: DataFrame, shardCol: Column, idCol: Column,
+      tokenCountCol: Column, budget: Long, maxOpen: Int,
+      order: Column*): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
+    require(maxOpen >= 1, s"maxOpen must be >= 1, got $maxOpen")
     val spark = df.sparkSession
     import spark.implicits._
     df.select(shardCol.cast("string").as("shard"),
@@ -603,29 +625,37 @@ object CorpusOps {
       .filter(col("shard").isNotNull && col("doc_id").isNotNull &&
         col("n_tok").isNotNull)
       .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), col("doc_id"))
+      .sortWithinPartitions(col("shard") +: order: _*)
       .as[(String, Long, Long)]
       .mapPartitions { it =>
         // a partition holds whole shards (hash-partitioned on shard),
-        // possibly several — reset the fold at each shard boundary
+        // possibly several — a fresh fold at each shard boundary
         var shard: String = null
-        var bin = 0L
-        var fill = 0L
+        var fold: BinFold = null
         it.map { case (s, id, tok) =>
-          // n_tok <= 0 would re-enter the empty-bin arm mid-shard
-          // (fill stays 0, every successor joins "this" bin) —
-          // diverging from the documented fold. A non-positive token
-          // count is a caller bug; fail loudly, not creatively
-          // (round-15 ADVICE).
-          require(tok > 0, s"n_tok must be positive, got $tok for doc $id in shard $s")
-          if (s != shard) { shard = s; bin = 0L; fill = 0L }
-          if (fill == 0L || fill + tok <= budget) fill += tok
-          else { bin += 1L; fill = tok }
+          if (s != shard) { shard = s; fold = new BinFold(budget, maxOpen) }
+          val (bin, fill) = fold.place(s, id, tok)
           (s, id, tok, bin, fill)
         }
       }
       .toDF("shard", "doc_id", "n_tok", "bin_idx", "fill_after")
   }
+
+  /** Whole-document bin packing, next-fit style (round 15) — the
+    * OTHER packing mode trainers use: [[packSequences]] lays documents
+    * end-to-end and CHOPS at the budget (attention masks handle the
+    * splice); this one keeps every document intact and opens a new bin
+    * whenever the next document would overflow — the "no document may
+    * span sequences" loader contract. Next-fit is [[BinFold]] with ONE
+    * open bin, over each shard's documents in `idCol` order; the plan
+    * is [[packBins]]'s. Shards are the unit of parallelism exactly as
+    * in [[packSequences]]. The q212 oracle replays the fold as a
+    * recursive CTE per shard (the q211 state-machine discipline
+    * applied to packing).
+    */
+  def packBinsNextFit(df: DataFrame, shardCol: Column, idCol: Column,
+      tokenCountCol: Column, budget: Long): DataFrame =
+    packBins(df, shardCol, idCol, tokenCountCol, budget, 1, col("doc_id"))
 
   /** DSIR importance weights (round 16; Xie et al. 2023, "Data
     * Selection for Language Models via Importance Resampling" — the
@@ -1050,66 +1080,16 @@ object CorpusOps {
     * by token count DESCENDING (ties to the lower doc id) and places
     * each into the FIRST open bin with room, opening a new bin only
     * when none fits — the classic 11/9·OPT+6/9 offline heuristic
-    * (Johnson 1973; public result).
-    *
-    * Open bins are CAPPED at `maxOpen` per shard: when a new bin
-    * opens beyond the cap, the OLDEST open bin closes (it can never
-    * receive another document). The cap is the scale concession that
-    * keeps per-shard fold state bounded (classic FFD keeps every bin
-    * open, O(bins) state and O(n·bins) scans on a 100 TB shard) AND
-    * keeps the q216 oracle's recursive-CTE state a bounded fill list.
-    * With decreasing order the loss is small: once sizes shrink, old
+    * (Johnson 1973; public result). This is [[BinFold]] with
+    * `maxOpen` open bins in that order, on [[packBins]]'s plan. With
+    * decreasing order the cap loses little: once sizes shrink, old
     * bins are nearly full anyway.
-    *
-    * Same honest plan as next-fit: ONE shuffle (repartition on
-    * shard), sortWithinPartitions (shard, n_tok desc, doc_id), a
-    * sequential per-shard fold in mapPartitions carrying at most
-    * `maxOpen` (bin, fill) pairs. Rows are (shard, id, n_tok) —
-    * text never moves. Output: (shard, doc_id, n_tok, bin_idx,
-    * fill_after) where fill_after is the receiving bin's fill after
-    * placement; bin_idx counts bins in open order per shard.
     */
   def packBinsFirstFitDecreasing(df: DataFrame, shardCol: Column,
       idCol: Column, tokenCountCol: Column, budget: Long,
-      maxOpen: Int = 4): DataFrame = {
-    require(budget > 0, s"budget must be positive, got $budget")
-    require(maxOpen >= 1, s"maxOpen must be >= 1, got $maxOpen")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(shardCol.cast("string").as("shard"),
-        idCol.cast("long").as("doc_id"),
-        tokenCountCol.cast("long").as("n_tok"))
-      .filter(col("shard").isNotNull && col("doc_id").isNotNull &&
-        col("n_tok").isNotNull)
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), col("n_tok").desc, col("doc_id"))
-      .as[(String, Long, Long)]
-      .mapPartitions { it =>
-        var shard: String = null
-        var nbins = 0L
-        // open bins in bin-idx (= creation) order, <= maxOpen entries
-        val open = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        it.map { case (s, id, tok) =>
-          require(tok > 0, s"n_tok must be positive, got $tok for doc $id in shard $s")
-          if (s != shard) { shard = s; nbins = 0L; open.clear() }
-          val slot = open.indexWhere { case (_, f) => f + tok <= budget }
-          val (binIdx, fillAfter) =
-            if (slot >= 0) {
-              val (b, f) = open(slot)
-              open(slot) = (b, f + tok)
-              (b, f + tok)
-            } else {
-              val b = nbins
-              nbins += 1L
-              if (open.size >= maxOpen) open.remove(0)
-              open += ((b, tok))
-              (b, tok)
-            }
-          (s, id, tok, binIdx, fillAfter)
-        }
-      }
-      .toDF("shard", "doc_id", "n_tok", "bin_idx", "fill_after")
-  }
+      maxOpen: Int = 4): DataFrame =
+    packBins(df, shardCol, idCol, tokenCountCol, budget, maxOpen,
+      col("n_tok").desc, col("doc_id"))
 
   /** A [[pretrainingRun]]'s dispositions plus the release handle for
     * its internal caches — the [[CurationRun]] contract: `release()`
@@ -1453,18 +1433,17 @@ object CorpusOps {
       }
     val domTail: Seq[Column] =
       if (domainTrain.isDefined) Seq(col("domain")) else Seq.empty
-    // FFD bin assignment replayed on the DRIVER when the resample is
-    // local rows of the exact spine types (optimization round 19): the
-    // Spark plan is repartition(shard) + sortWithinPartitions + a
-    // sequential per-shard fold — 3 stages of pure scheduling over a
-    // <= cap LocalRelation. The replay is the same fold verbatim
-    // ([[packBinsFirstFitDecreasing]]'s mapPartitions body): same
-    // null filter, same (n_tok desc, doc_id) order within a shard
-    // (the fold resets at shard boundaries, so shard ORDER is
-    // irrelevant), same maxOpen eviction, same positive-token
-    // require. Gated on the schema types so the replay never has to
-    // replicate Spark cast semantics; any other shape (or the
-    // over-cap fallback) takes the distributed packer unchanged.
+    // FFD bin assignment on the DRIVER when the resample is local rows
+    // of the exact spine types (optimization round 19): the Spark plan
+    // is repartition(shard) + sortWithinPartitions + a sequential
+    // per-shard fold — 3 stages of pure scheduling over a <= cap
+    // LocalRelation. Here the same [[BinFold]] runs over the collected
+    // triples, after the same null filter and in the same (n_tok desc,
+    // doc_id) order within a shard (the fold resets at shard
+    // boundaries, so shard ORDER is irrelevant). Gated on the schema
+    // types so it never has to replicate Spark cast semantics; any
+    // other shape (or the over-cap fallback) takes the distributed
+    // packer.
     val sSchema = sampledDf.schema
     val localPackOk = probe.length <= sampleCollectCap && {
       import org.apache.spark.sql.types._
@@ -1481,23 +1460,9 @@ object CorpusOps {
           .map(r => (r.getString(iS), r.getLong(iD), r.getLong(iT))).toArray
         val outRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
         triples.groupBy(_._1).foreach { case (s, rs) =>
-          var nbins = 0L
-          val open = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          rs.sortBy { case (_, id, tok) => (-tok, id) }.foreach {
-            case (_, id, tok) =>
-              require(tok > 0,
-                s"n_tok must be positive, got $tok for doc $id in shard $s")
-              val slot = open.indexWhere { case (_, f) => f + tok <= packBudget }
-              val binIdx =
-                if (slot >= 0) { val (b, f) = open(slot); open(slot) = (b, f + tok); b }
-                else {
-                  val b = nbins
-                  nbins += 1L
-                  if (open.size >= maxOpen) open.remove(0)
-                  open += ((b, tok))
-                  b
-                }
-              outRows.add(org.apache.spark.sql.Row(id, binIdx)); ()
+          val fold = new BinFold(packBudget, maxOpen)
+          rs.sortBy { case (_, id, tok) => (-tok, id) }.foreach { case (_, id, tok) =>
+            outRows.add(org.apache.spark.sql.Row(id, fold.place(s, id, tok)._1))
           }
         }
         import org.apache.spark.sql.types._
@@ -1562,6 +1527,7 @@ object CorpusOps {
     */
   def packSequences(df: DataFrame, idCol: Column, shardCol: Column,
       tokenCountCol: Column, budget: Int): DataFrame = {
+    require(budget > 0, s"budget must be positive, got $budget")
     val w = Window.partitionBy(shardCol).orderBy(idCol)
       .rowsBetween(Window.unboundedPreceding, -1)
     df.select(

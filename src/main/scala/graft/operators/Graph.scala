@@ -357,7 +357,7 @@ object Graph {
     * size ESTIMATE through eager checkpoints too, so the estimate
     * triples its bit length per round into plan-time BigInteger
     * blowup (the round-13 extension of ckptEager's round-12
-    * constraint; both measured in StatsProbe).
+    * constraint).
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, iters: Int): DataFrame = {

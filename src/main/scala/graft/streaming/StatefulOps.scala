@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.CorpusOps.BinFold
+
 /** Arbitrary-state exemplar (SURVEY.md §2 B36): the size-governor
   * semantics of lambda/main.py:137-151 generalized to CROSS-batch
   * state per key — a running byte budget that marks records Dropped
@@ -152,10 +154,9 @@ object StatefulOps {
   case class PackDoc(shard: String, doc_id: Long, n_tok: Long)
   case class PackAssign(shard: String, doc_id: Long, n_tok: Long,
       bin_idx: Long, fill_after: Long)
-  /** Open-bin state: (bin_idx, fill) pairs OLDEST FIRST + the next
-    * bin id — exactly the batch FFD fold's bounded state
-    * ([[graft.operators.CorpusOps.packBinsFirstFitDecreasing]]),
-    * maxOpen pairs of longs per shard, checkpointed with the query.
+  /** Open-bin state: a [[graft.operators.CorpusOps.BinFold]]'s
+    * (bin_idx, fill) pairs OLDEST FIRST + its next bin id — maxOpen
+    * pairs of longs per shard, checkpointed with the query.
     */
   case class PackBins(open: List[(Long, Long)], nextBin: Long)
 
@@ -170,16 +171,12 @@ object StatefulOps {
     * (the "decreasing" that buys FFD its packing bound) is
     * structurally unavailable at ingest time; this is the same
     * honest adaptation distance as next-fit vs FFD in the batch
-    * family, stated rather than hidden. Within one trigger docs fold
-    * in doc_id order (an iterator order is not a replay contract);
-    * across triggers, arrival order. Bin rules match the batch fold
-    * exactly: place into the FIRST open bin with room (oldest
-    * first), a no-fit doc opens a new bin, and a new bin past the
-    * `maxOpen` cap closes the OLDEST open bin (which can never
-    * accept again — packed shards ship in bin order). A doc larger
-    * than `budget` gets a bin of its own that never accepts another
-    * doc. n_tok <= 0 fails the trigger loudly (the batch folds'
-    * round-16 contract).
+    * family, stated rather than hidden. Each trigger rebuilds the
+    * shard's [[graft.operators.CorpusOps.BinFold]] from its
+    * [[PackBins]] state, folds the trigger's docs in doc_id order (an
+    * iterator order is not a replay contract) and writes the fold
+    * back; across triggers, arrival order. A closed bin never accepts
+    * again, so packed shards ship in bin order.
     *
     * Scale: state is maxOpen (bin, fill) pairs + one counter per
     * shard — constant; the only shuffle is the shard groupBy, and
@@ -194,23 +191,13 @@ object StatefulOps {
     docs.groupByKey(_.shard)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (shard: String, rows: Iterator[PackDoc], state: GroupState[PackBins]) =>
-          var st = state.getOption.getOrElse(PackBins(Nil, 0L))
+          val st = state.getOption.getOrElse(PackBins(Nil, 0L))
+          val fold = new BinFold(budget, maxOpen, st.open, st.nextBin)
           val out = rows.toVector.sortBy(_.doc_id).map { d =>
-            require(d.n_tok > 0,
-              s"n_tok must be positive, got ${d.n_tok} for doc ${d.doc_id} in shard $shard")
-            st.open.find { case (_, f) => f + d.n_tok <= budget } match {
-              case Some((b, f)) =>
-                st = st.copy(open = st.open.map { case (bb, ff) =>
-                  if (bb == b) (bb, ff + d.n_tok) else (bb, ff) })
-                PackAssign(shard, d.doc_id, d.n_tok, b, f + d.n_tok)
-              case None =>
-                val b = st.nextBin
-                val kept = if (st.open.size >= maxOpen) st.open.tail else st.open
-                st = PackBins(kept :+ (b, d.n_tok), b + 1)
-                PackAssign(shard, d.doc_id, d.n_tok, b, d.n_tok)
-            }
+            val (b, fill) = fold.place(shard, d.doc_id, d.n_tok)
+            PackAssign(shard, d.doc_id, d.n_tok, b, fill)
           }
-          state.update(st)
+          state.update(PackBins(fold.openBins, fold.nextBin))
           out.iterator
       }
   }

@@ -71,6 +71,18 @@ class CorpusOpsSpec extends SparkSpec {
     assert(out(11L) == ((512L, 1L, 1L, 0)))
   }
 
+  test("packSequences: a non-positive budget is rejected at the call") {
+    // 0 would divide by zero at execution; -1 would return negative
+    // seq_first/seq_last without complaint
+    val df = Seq((1L, "s1", 300L)).toDF("doc_id", "source", "n")
+    Seq(0, -1).foreach { b =>
+      val e = intercept[IllegalArgumentException] {
+        CorpusOps.packSequences(df, col("doc_id"), col("source"), col("n"), budget = b)
+      }
+      assert(e.getMessage.contains(s"budget must be positive, got $b"), e.getMessage)
+    }
+  }
+
   // the test's own copy of the operator's hash: md5-prefix-48 mod buckets
   private def bucketOf(id: Long, buckets: Int = 1000): Long = {
     val d = java.security.MessageDigest.getInstance("MD5")

@@ -68,29 +68,70 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: packBinsNextFit equals an independent sequential fold on random shards") {
+    // extended to the whole packer family: FFD at maxOpen 1/2/4 and
+    // packStream on a batch Dataset, each against its own reference
     import graft.operators.CorpusOps
+    import graft.streaming.StatefulOps
+    import StatefulOps.PackDoc
+    val budget = 512L
     val rowsGen = Gen.listOfN(40, for {
       shard <- Gen.oneOf("a", "b", "c")
       tok <- Gen.choose(1L, 700L) // spans under- and over-budget (512)
     } yield (shard, tok))
-    forAllSampled(rowsGen, 15) { rows =>
-      val df = rows.zipWithIndex.map { case ((s, t), i) => (s, i.toLong, t) }
-        .toDF("shard", "doc_id", "n_tok")
-      val got = CorpusOps.packBinsNextFit(df, col("shard"), col("doc_id"),
-          col("n_tok"), budget = 512L)
-        .collect().map(r => (r.getString(0), r.getLong(1)) -> ((r.getLong(3), r.getLong(4))))
+    // reference first-fit: an immutable Vector of open (bin, fill)
+    // pairs, oldest first; a new bin past the cap drops the head
+    def firstFit(docs: Seq[(Long, Long)], maxOpen: Int): Seq[(Long, (Long, Long))] = {
+      var open = Vector.empty[(Long, Long)]
+      var next = 0L
+      docs.map { case (id, tok) =>
+        open.indexWhere(_._2 + tok <= budget) match {
+          case -1 =>
+            open = (if (open.size == maxOpen) open.tail else open) :+ ((next, tok))
+            next += 1L
+            id -> ((next - 1L, tok))
+          case i =>
+            val (b, f) = open(i)
+            open = open.updated(i, (b, f + tok))
+            id -> ((b, f + tok))
+        }
+      }
+    }
+    def perShard(docs: Seq[(String, Long, Long)])(
+        fold: Seq[(Long, Long)] => Seq[(Long, (Long, Long))]): Map[(String, Long), (Long, Long)] =
+      docs.groupBy(_._1).flatMap { case (s, ds) =>
+        fold(ds.map(d => (d._2, d._3))).map { case (id, bf) => (s, id) -> bf }
+      }
+    def assigned(df: org.apache.spark.sql.DataFrame): Map[(String, Long), (Long, Long)] =
+      df.collect().map(r => (r.getString(0), r.getLong(1)) -> ((r.getLong(3), r.getLong(4))))
         .toMap
+    forAllSampled(rowsGen, 15) { rows =>
+      val docs = rows.zipWithIndex.map { case ((s, t), i) => (s, i.toLong, t) }
+      val df = docs.toDF("shard", "doc_id", "n_tok")
+      val got = assigned(CorpusOps.packBinsNextFit(df, col("shard"), col("doc_id"),
+          col("n_tok"), budget))
       // reference: a plain Scala fold per shard in doc_id order
-      val want = rows.zipWithIndex.map { case ((s, t), i) => (s, i.toLong, t) }
-        .groupBy(_._1).flatMap { case (s, docs) =>
-          var bin = 0L; var fill = 0L
-          docs.sortBy(_._2).map { case (_, id, tok) =>
-            if (fill == 0L || fill + tok <= 512L) fill += tok
-            else { bin += 1L; fill = tok }
-            (s, id) -> ((bin, fill))
-          }
-        }.toMap
+      val want = perShard(docs) { ds =>
+        var bin = 0L; var fill = 0L
+        ds.sortBy(_._1).map { case (id, tok) =>
+          if (fill == 0L || fill + tok <= budget) fill += tok
+          else { bin += 1L; fill = tok }
+          id -> ((bin, fill))
+        }
+      }
       assert(got == want, s"fold diverged on ${rows.take(6)}...")
+      Seq(1, 2, 4).foreach { maxOpen =>
+        val ffd = assigned(CorpusOps.packBinsFirstFitDecreasing(df, col("shard"),
+          col("doc_id"), col("n_tok"), budget, maxOpen))
+        val ffdWant = perShard(docs)(ds =>
+          firstFit(ds.sortBy { case (id, tok) => (-tok, id) }, maxOpen))
+        assert(ffd == ffdWant, s"FFD maxOpen=$maxOpen diverged on ${rows.take(6)}...")
+      }
+      // a batch Dataset is one trigger: first-fit in doc_id order
+      val streamed = StatefulOps.packStream(
+          docs.map { case (s, id, t) => PackDoc(s, id, t) }.toDS(), budget, maxOpen = 2)
+        .collect().map(a => (a.shard, a.doc_id) -> ((a.bin_idx, a.fill_after))).toMap
+      val streamWant = perShard(docs)(ds => firstFit(ds.sortBy(_._1), 2))
+      assert(streamed == streamWant, s"packStream diverged on ${rows.take(6)}...")
     }
   }
 
