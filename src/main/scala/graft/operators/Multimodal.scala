@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   * without an image signature (e.g. the synthetic UTF-8 corpora the
   * oracle checks) fall back to the deterministic byte-identity
   * buffer, so every oracle query stays bit-stable while real images
-  * get real pixels through the same operators. Video containers and
-  * compressed audio remain metadata-stubs (no JDK codec exists for
-  * them). The Spark-side plumbing is identical either way:
+  * get real pixels through the same operators. WAV audio (PCM,
+  * G.711, IMA-ADPCM) decodes through [[decodeAudioPcm]] and video
+  * through [[VideoKernel]]. The Spark-side plumbing is identical
+  * either way:
   *  - the schema contract (binary payload + width/height/channels),
   *  - the batch iteration shape (`grouped(batchSize)` inside
   *    mapPartitions — the same amortization Arrow/pandas batches give
@@ -149,7 +150,7 @@ object Multimodal {
   private[operators] def decodeStub(payload: Array[Byte]): Array[Int] =
     payload.map(b => b & 0xff)
 
-  /** RIFF/WAVE container sniff — gates the JDK audio codec attempt. */
+  /** RIFF/WAVE container sniff — gates [[wavHeader]]'s chunk walk. */
   private[graft] def isWavPayload(p: Array[Byte]): Boolean =
     p.length >= 12 &&
       p(0) == 'R' && p(1) == 'I' && p(2) == 'F' && p(3) == 'F' &&
@@ -161,10 +162,10 @@ object Multimodal {
     (p(o) & 0xffL) | ((p(o + 1) & 0xffL) << 8) |
       ((p(o + 2) & 0xffL) << 16) | ((p(o + 3) & 0xffL) << 24)
 
-  /** THE RIFF chunk walk — single-sourced so every WAV consumer
-    * (dispatch sniff, ADPCM decode) shares one set of bounds/padding/
-    * overflow rules: offsets accumulate in LONG (a crafted u32 size
-    * near Int.MaxValue must not wrap the cursor back into range — the
+  /** THE RIFF chunk walk — single-sourced so every WAV codec leg
+    * (through [[wavHeader]]) shares one set of bounds/padding/overflow
+    * rules: offsets accumulate in LONG (a crafted u32 size near
+    * Int.MaxValue must not wrap the cursor back into range — the
     * round-15 self-review found exactly that escape), sizes are
     * clamped to the payload, and the walk simply stops at the first
     * chunk that doesn't fit. Returns (fourcc, dataOffset,
@@ -184,16 +185,29 @@ object Multimodal {
     out.result()
   }
 
-  /** The `fmt ` chunk's wFormatTag — the dispatch key between the JDK
-    * codec path and the hand-rolled IMA-ADPCM leg (the JDK ships no
-    * ADPCM codec; handing tag 0x11 to javax.sound would just throw).
-    * First fmt chunk wins, like every WAV reader. Malformed payloads
-    * return None — the row fails, never the task.
+  /** A WAV's `fmt ` fields and its `data` span (offset, length — the
+    * length already clamped to the payload by [[riffChunks]]).
     */
-  private[graft] def wavFormatTag(p: Array[Byte]): Option[Int] =
+  private[graft] case class WavHeader(tag: Int, channels: Int, rate: Float,
+      blockAlign: Int, bits: Int, dataOff: Int, dataLen: Int)
+
+  /** THE WAV header parse — one [[riffChunks]] walk per payload, read
+    * by every codec leg of [[decodeAudioPcm]]. The first `fmt ` and
+    * first `data` chunk win, like every WAV reader; a payload without
+    * the 16-byte PCMWAVEFORMAT core or any channel is None — the row
+    * fails, never the task.
+    */
+  private[graft] def wavHeader(p: Array[Byte]): Option[WavHeader] =
     if (!isWavPayload(p)) None
-    else riffChunks(p).collectFirst {
-      case ("fmt ", off, size) if size >= 2 => leU16(p, off)
+    else {
+      val chunks = riffChunks(p)
+      for {
+        (f, fmtLen) <- chunks.collectFirst { case ("fmt ", off, size) => (off, size) }
+        if fmtLen >= 16 && leU16(p, f + 2) >= 1
+        (dataOff, dataLen) <- chunks.collectFirst { case ("data", off, size) => (off, size) }
+      } yield WavHeader(tag = leU16(p, f), channels = leU16(p, f + 2),
+        rate = leU32(p, f + 4).toFloat, blockAlign = leU16(p, f + 12),
+        bits = leU16(p, f + 14), dataOff = dataOff, dataLen = dataLen)
     }
 
   /** IMA/DVI ADPCM step-size table (the public reference algorithm's
@@ -293,26 +307,7 @@ object Multimodal {
       }
       off += n
     }
-    val data = blocks.toByteArray
-    // same container framing as the builder (20-byte fmt, fact, data)
-    val bos = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Array[Byte] = Array(
-      (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    def u16(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def cc(s: String): Array[Byte] =
-      s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    val fmt = u16(0x11) ++ u16(1) ++ u32(rate.toLong) ++
-      u32(rate.toLong * blockAlign / perBlock) ++
-      u16(blockAlign) ++ u16(4) ++ u16(2) ++ u16(perBlock)
-    val pad = if (data.length % 2 == 1) Array(0.toByte) else Array.empty[Byte]
-    val body = cc("WAVE") ++
-      cc("fmt ") ++ u32(20) ++ fmt ++
-      cc("fact") ++ u32(4) ++ u32(usable.toLong) ++
-      cc("data") ++ u32(data.length.toLong) ++ data ++ pad
-    bos.write(cc("RIFF")); bos.write(u32(body.length.toLong)); bos.write(body)
-    bos.toByteArray
+    writeWav(0x11, 1, rate, blockAlign, 4, perBlock, usable.toLong, blocks.toByteArray)
   }
 
   /** Synthesize ENCODED IMA-ADPCM WAVs from deterministic PCM derived
@@ -354,90 +349,53 @@ object Multimodal {
     * independent, so a SQL oracle replays each from its header with a
     * recursive CTE (q211 mono, q213 stereo). Truncated/garbage
     * payloads return None or a partial last block — never throw (the
-    * fuzz contract all container parsers here obey).
+    * fuzz contract all container parsers here obey). Fed by
+    * [[wavHeader]]; the data span is already clamped to the payload.
     */
-  private[graft] def decodeImaAdpcm(payload: Array[Byte]): Option[(Float, Array[Int])] =
-    try {
-      val p = payload
-      if (!wavFormatTag(p).contains(0x11)) return None
-      // fmt + data located by the ONE shared bounds-checked walk
-      // ([[riffChunks]] — sizes already clamped to the payload)
-      val chunks = riffChunks(p)
-      val fmt = chunks.collectFirst {
-        case ("fmt ", off, size) if size >= 16 =>
-          (leU16(p, off + 2), leU32(p, off + 4).toFloat, leU16(p, off + 12))
+  private def decodeImaAdpcm(p: Array[Byte], wav: WavHeader): Option[(Float, Array[Int])] = {
+    val WavHeader(_, channels, rate, blockAlign, _, dataOff, dataLen) = wav
+    if (channels > 2 || blockAlign < 4 * channels + 1 || dataLen < 4 * channels) return None
+    val out = new scala.collection.mutable.ArrayBuffer[Int]
+    var b = dataOff
+    val end = dataOff + dataLen
+    while (b + 4 * channels <= end) {
+      val pred = new Array[Int](channels)
+      val idx = new Array[Int](channels)
+      var c = 0
+      while (c < channels) {
+        val h = b + 4 * c
+        pred(c) = (((p(h + 1) & 0xff) << 8) | (p(h) & 0xff)).toShort.toInt
+        idx(c) = math.max(0, math.min(88, p(h + 2) & 0xff))
+        c += 1
       }
-      val data = chunks.collectFirst { case ("data", off, size) => (off, size) }
-      if (fmt.isEmpty || data.isEmpty) return None
-      val (channels, rate, blockAlign) = fmt.get
-      val (dataOff, dataLen) = data.get
-      if (channels < 1 || channels > 2 || blockAlign < 4 * channels + 1 ||
-        dataLen < 4 * channels) return None
-      val out = new scala.collection.mutable.ArrayBuffer[Int]
-      var b = dataOff
-      val end = dataOff + dataLen
-      while (b + 4 * channels <= end) {
-        val pred = new Array[Int](channels)
-        val idx = new Array[Int](channels)
-        var c = 0
-        while (c < channels) {
-          val h = b + 4 * c
-          pred(c) = (((p(h + 1) & 0xff) << 8) | (p(h) & 0xff)).toShort.toInt
-          idx(c) = math.max(0, math.min(88, p(h + 2) & 0xff))
-          c += 1
-        }
-        out += pred(0) // channel 0's header predictor IS its first sample
-        val blockEnd = math.min(b + blockAlign, end)
-        var j = b + 4 * channels
-        while (j < blockEnd) {
-          // 4-byte groups alternate channels; mono degenerates to ch 0
-          val ch = ((j - b - 4 * channels) / 4) % channels
-          val byte = p(j) & 0xff
-          val (p1, i1) = imaStep(pred(ch), idx(ch), byte & 0xf) // low nibble first
-          val (p2, i2) = imaStep(p1, i1, byte >> 4)
-          if (ch == 0) { out += p1; out += p2 }
-          pred(ch) = p2; idx(ch) = i2
-          j += 1
-        }
-        b += blockAlign
+      out += pred(0) // channel 0's header predictor IS its first sample
+      val blockEnd = math.min(b + blockAlign, end)
+      var j = b + 4 * channels
+      while (j < blockEnd) {
+        // 4-byte groups alternate channels; mono degenerates to ch 0
+        val ch = ((j - b - 4 * channels) / 4) % channels
+        val byte = p(j) & 0xff
+        val (p1, i1) = imaStep(pred(ch), idx(ch), byte & 0xf) // low nibble first
+        val (p2, i2) = imaStep(p1, i1, byte >> 4)
+        if (ch == 0) { out += p1; out += p2 }
+        pred(ch) = p2; idx(ch) = i2
+        j += 1
       }
-      Some((rate, out.toArray))
-    } catch {
-      case scala.util.control.NonFatal(_) => None
+      b += blockAlign
     }
+    Some((rate, out.toArray))
+  }
 
-  /** REAL audio decode via the JDK's `javax.sound.sampled` (WAV/PCM
-    * ships with every JRE): returns (sampleRate, channel-0 samples) —
-    * 16-bit PCM as signed ints, 8-bit PCM as unsigned — or None when
-    * the payload is not a decodable WAV.
-    *
-    * COMPRESSED leg (round 14): G.711 µ-law/A-law payloads
-    * (WAVE_FORMAT_MULAW/ALAW, the log-companded telephony codecs the
-    * JDK ships a codec for) are first expanded to 16-bit signed
-    * little-endian PCM through `AudioSystem`'s format conversion —
-    * the real codec path, not a table transcription. The expansion is
-    * a fixed 256-entry function of each encoded byte (CCITT G.711),
-    * so a SQL oracle can predict every decoded sample from byte
-    * arithmetic while this side runs the actual javax.sound decode —
-    * the q203 discipline applied to audio (q208; MultimodalSpec pins
-    * javax == the G.711 closed form over all 256 µ-law bytes).
-    */
-  /** G.711 expansion captured from the JDK codec ONCE per JVM
-    * (optimization round 19, guide §4.5 "initialise heavyweight state
-    * once"): µ-law/A-law expansion is a pure function of each encoded
-    * BYTE, so running javax.sound's own ULAW/ALAW -> PCM_SIGNED
-    * conversion over the 256 possible bytes yields the codec's entire
-    * behavior as two lookup tables. The JDK codec stays the source of
-    * truth (the table is DERIVED from it at runtime, not transcribed
-    * into literals — MultimodalSpec additionally pins it to the CCITT
-    * closed form); what changes is the per-row cost: the old shape
-    * built an AudioSystem conversion STREAM per payload, a path that
-    * walks the process-global synchronized provider registry per call
-    * — the measured round-18 contention that made widening these
-    * queries 1.7x slower, and the measured round-19 full-bench rot
-    * (q208 1.4 s in isolation, 7.2 s after 200 queries' worth of
-    * loaded classes/JIT state). Per-row work is now: container parse
-    * + one table lookup per channel-0 byte.
+  /** G.711 expansion captured from the JDK codec ONCE per JVM:
+    * µ-law/A-law expansion is a pure function of each encoded BYTE,
+    * so running javax.sound's own ULAW/ALAW -> PCM_SIGNED conversion
+    * over the 256 possible bytes yields the codec's entire behavior
+    * as two lookup tables. The JDK codec stays the source of truth
+    * (the tables are DERIVED from it at runtime, not transcribed into
+    * literals — MultimodalSpec additionally pins them to the CCITT
+    * closed form), and this capture is the only javax.sound call in
+    * the decode: per row, [[decodeAudioPcm]] does one header parse and
+    * one table lookup per channel-0 byte.
     */
   private lazy val g711Tables: (Array[Int], Array[Int]) = {
     import javax.sound.sampled.{AudioFormat, AudioInputStream, AudioSystem}
@@ -456,67 +414,39 @@ object Multimodal {
     (table(AudioFormat.Encoding.ULAW), table(AudioFormat.Encoding.ALAW))
   }
 
+  /** REAL WAV audio decode: returns (sampleRate, channel-0 samples),
+    * or None when the payload is not a WAV this reader decodes. One
+    * [[wavHeader]] parse, then a dispatch on wFormatTag:
+    *  - PCM (1): 16-bit signed little-endian, 8-bit unsigned, read
+    *    straight from channel 0 of each whole frame;
+    *  - G.711 A-law (6) / µ-law (7), 8-bit: each channel-0 byte
+    *    through the [[g711Tables]] captured from the JDK codec. The
+    *    expansion is the fixed CCITT closed form of each byte, so a
+    *    SQL oracle predicts every decoded sample from byte arithmetic
+    *    (q208/q209; MultimodalSpec pins the tables to that form over
+    *    all 256 bytes);
+    *  - IMA-ADPCM (0x11): [[decodeImaAdpcm]]'s block loop.
+    * Float, WAVE_FORMAT_EXTENSIBLE, 24/32-bit PCM and any other tag
+    * fail the row, so [[audioRmsWindows]] takes its codepoint fallback.
+    * NonFatal for the same reason as decodeImage: whatever a corrupt
+    * body does, the contract is the ROW fails, never the task.
+    */
   private[graft] def decodeAudioPcm(payload: Array[Byte]): Option[(Float, Array[Int])] =
-    if (!isWavPayload(payload)) None
-    // IMA ADPCM (round 15): no JDK codec exists — dispatch on the fmt
-    // tag to the spec's own state machine instead of letting
-    // javax.sound throw into the NonFatal fallback
-    else if (wavFormatTag(payload).contains(0x11)) decodeImaAdpcm(payload)
-    else try {
-      val raw = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      val enc = raw.getFormat.getEncoding
-      if (enc == javax.sound.sampled.AudioFormat.Encoding.ULAW ||
-          enc == javax.sound.sampled.AudioFormat.Encoding.ALAW) {
-        // compressed leg: expand channel 0 through the JVM-wide table
-        // captured from the JDK codec above — same samples the per-row
-        // conversion stream produced, none of its per-call machinery
-        val t = if (enc == javax.sound.sampled.AudioFormat.Encoding.ULAW)
-          g711Tables._1 else g711Tables._2
-        val f = raw.getFormat
-        val frameSize = f.getFrameSize // = channels for 8-bit G.711
-        // fuzz hardening (MultimodalSpec's bit-flipped fmt chunks): a
-        // corrupted header can carry frameSize <= 0, and
-        // AudioInputStream.read returns 0 — not -1 — for any request
-        // shorter than a frame, which sends readAllBytes into an
-        // allocation spin. Reject nonsense frames and treat a <= 0
-        // read as EOF in an explicit frame-aligned loop.
-        if (frameSize <= 0 || frameSize > (1 << 20)) return None
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](math.max(1, 65536 / frameSize) * frameSize)
-        var n = raw.read(buf)
-        while (n > 0) { bos.write(buf, 0, n); n = raw.read(buf) }
-        val data = bos.toByteArray
-        val nFrames = data.length / frameSize
-        val out = new Array[Int](nFrames)
-        var i = 0
-        while (i < nFrames) {
-          out(i) = t(data(i * frameSize) & 0xff)
-          i += 1
-        }
-        return Some((f.getSampleRate, out))
+    try wavHeader(payload).flatMap { h =>
+      val p = payload
+      def channel0(sampleBytes: Int)(sample: Int => Int): Option[(Float, Array[Int])] = {
+        val frame = sampleBytes * h.channels
+        Some((h.rate, Array.tabulate(h.dataLen / frame)(i => sample(h.dataOff + i * frame))))
       }
-      val ais = raw
-      val fmt = ais.getFormat
-      val data = ais.readAllBytes()
-      val frameSize = fmt.getFrameSize
-      val nFrames = data.length / frameSize
-      val out = new Array[Int](nFrames)
-      var i = 0
-      while (i < nFrames) {
-        val off = i * frameSize // channel 0 of each frame
-        out(i) =
-          if (fmt.getSampleSizeInBits == 16) {
-            if (fmt.isBigEndian) (data(off) << 8) | (data(off + 1) & 0xff)
-            else (data(off + 1) << 8) | (data(off) & 0xff)
-          } else data(off) & 0xff // 8-bit WAV PCM is unsigned
-        i += 1
+      (h.tag, h.bits) match {
+        case (1, 16) => channel0(2)(o => (p(o + 1) << 8) | (p(o) & 0xff))
+        case (1, 8) => channel0(1)(o => p(o) & 0xff)
+        case (6, 8) => val t = g711Tables._2; channel0(1)(o => t(p(o) & 0xff))
+        case (7, 8) => val t = g711Tables._1; channel0(1)(o => t(p(o) & 0xff))
+        case (0x11, _) => decodeImaAdpcm(p, h)
+        case _ => None
       }
-      Some((fmt.getSampleRate, out))
     } catch {
-      // NonFatal for the same reason as decodeImage: a corrupt RIFF
-      // body can drive the JDK WAV parser into runtime exceptions,
-      // and the contract is the ROW fails, never the task
       case scala.util.control.NonFatal(_) => None
     }
 
@@ -524,7 +454,7 @@ object Multimodal {
 
   /** REAL per-window RMS energy over decoded PCM — the DSP feature
     * [[sampleAudioWindows]] stubs with payload probes. WAV payloads
-    * decode through the JDK codec (channel 0); anything else falls
+    * decode through [[decodeAudioPcm]] (channel 0); anything else falls
     * back to the payload text's codepoint sequence, which keeps the
     * operator oracle-checkable on synthetic corpora (DuckDB mirrors
     * codepoints with `ord`). Full `winSamples`-sized windows only;
@@ -536,14 +466,10 @@ object Multimodal {
   def audioRmsWindows(audio: Dataset[AudioRecord], winSamples: Int): DataFrame = {
     require(winSamples > 0, s"winSamples must be positive, got $winSamples")
     import audio.sparkSession.implicits._
-    // NOT widened (measured, optimization round 18): the G.711 leg
-    // decodes through javax.sound's AudioSystem, whose provider
-    // registry is process-global and synchronized — 32 concurrent
-    // tasks contend on it and a widened q208/q209 ran 1.7x SLOWER
-    // than the single-task scan (2.9 s vs 1.7 s at 32 cores); the
-    // per-byte table expansion itself is too cheap to amortize the
-    // repartition. The in-JVM ADPCM leg has no such lock and its
-    // queries were flat either way.
+    // NOT widened (measured, optimization round 18): the decode is a
+    // header parse plus one table lookup or state step per sample,
+    // too cheap to amortize the repartition — the ADPCM queries ran
+    // flat either way.
     audio.mapPartitions { it =>
       it.flatMap { a =>
         val samples: Array[Int] = decodeAudioPcm(a.payload) match {
@@ -1086,31 +1012,43 @@ object Multimodal {
       lit(16000).as("sample_rate"),
       ((col("n_chars") * 137) % 100000 + 16000).cast("int").as("n_samples"))
 
-  /** Assemble a REAL G.711 WAV byte stream (RIFF container: 18-byte
-    * `fmt ` chunk with wFormatTag 7 = µ-law / 6 = A-law, the `fact`
-    * chunk compressed formats carry, then the `data` chunk of 8-bit
-    * log-companded samples) — the containers [[decodeAudioPcm]]'s
-    * compressed leg expands through the JDK's G.711 codecs.
+  /** THE WAV container writer behind [[buildG711Wav]],
+    * [[buildImaAdpcmWav]], [[buildImaAdpcmStereoWav]] and
+    * [[encodeImaAdpcmWav]]: RIFF/WAVE framing around a `fmt ` chunk
+    * (wFormatTag, channels, rate, byte rate = rate * blockAlign /
+    * samplesPerBlock, blockAlign, bits, cbSize — 18 bytes, or 20 for
+    * IMA-ADPCM, whose cbSize-2 extension carries samplesPerBlock),
+    * the `fact` chunk compressed formats carry (per-channel sample
+    * count), and the `data` chunk, padded to an even length as RIFF
+    * requires.
     */
-  private def buildG711Wav(data: Array[Byte], rate: Int,
-      formatTag: Int): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Array[Byte] = Array(
-      (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    def u16(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def cc(s: String): Array[Byte] =
-      s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    val fmt = u16(formatTag) ++ u16(1) ++ u32(rate.toLong) ++ u32(rate.toLong) ++
-      u16(1) ++ u16(8) ++ u16(0) // mono, 8-bit, blockAlign 1, cbSize 0
-    val body = cc("WAVE") ++
-      cc("fmt ") ++ u32(18) ++ fmt ++
-      cc("fact") ++ u32(4) ++ u32(data.length.toLong) ++
-      cc("data") ++ u32(data.length.toLong) ++ data
-    bos.write(cc("RIFF")); bos.write(u32(body.length.toLong)); bos.write(body)
-    bos.toByteArray
+  private def writeWav(tag: Int, channels: Int, rate: Int, blockAlign: Int,
+      bits: Int, samplesPerBlock: Int, factSamples: Long,
+      data: Array[Byte]): Array[Byte] = {
+    val adpcm = tag == 0x11
+    val fmtLen = if (adpcm) 20 else 18
+    val riffLen = 4 + (8 + fmtLen) + (8 + 4) + (8 + data.length + (data.length & 1))
+    val b = java.nio.ByteBuffer.allocate(8 + riffLen)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    def cc(id: String) = b.put(id.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+    cc("RIFF").putInt(riffLen); cc("WAVE")
+    cc("fmt ").putInt(fmtLen).putShort(tag.toShort).putShort(channels.toShort)
+      .putInt(rate).putInt((rate.toLong * blockAlign / samplesPerBlock).toInt)
+      .putShort(blockAlign.toShort).putShort(bits.toShort)
+      .putShort((if (adpcm) 2 else 0).toShort)
+    if (adpcm) b.putShort(samplesPerBlock.toShort)
+    cc("fact").putInt(4).putInt(factSamples.toInt)
+    cc("data").putInt(data.length).put(data) // pad byte: allocate's zero
+    b.array()
   }
+
+  /** Assemble a REAL G.711 WAV byte stream (wFormatTag 7 = µ-law /
+    * 6 = A-law, mono, 8-bit log-companded samples) — the containers
+    * [[decodeAudioPcm]] expands through the [[g711Tables]] captured
+    * from the JDK's G.711 codecs.
+    */
+  private def buildG711Wav(data: Array[Byte], rate: Int, formatTag: Int): Array[Byte] =
+    writeWav(formatTag, 1, rate, 1, 8, 1, data.length.toLong, data)
 
   private[graft] def buildMulawWav(data: Array[Byte], rate: Int): Array[Byte] =
     buildG711Wav(data, rate, 7)
@@ -1124,10 +1062,10 @@ object Multimodal {
     * (8 kHz mono, WAVE_FORMAT_MULAW). Unlike [[audioFromDocuments]]
     * (opaque payload + metadata columns), these payloads pass through
     * a real COMPRESSED audio codec: [[decodeAudioPcm]] must parse the
-    * container and run the JDK's G.711 expansion to recover the
-    * samples — and the oracle (q208) still predicts them exactly
-    * because µ-law expansion is the fixed CCITT closed form of each
-    * byte (spec-pinned against javax over all 256 values). Same
+    * container and expand each byte through the G.711 table captured
+    * from the JDK codec — and the oracle (q208) still predicts the
+    * samples exactly because µ-law expansion is the fixed CCITT
+    * closed form of each byte (spec-pinned over all 256 values). Same
     * builder shape as [[mjpegAviFromDocuments]]: a narrow
     * mapPartitions (the write side of a media ingest — payloads are
     * built per-partition and never shuffle).
@@ -1141,16 +1079,15 @@ object Multimodal {
     * is likewise a fixed closed form of each byte (x = b ^ 0x55;
     * t = 16m+8 for segment 0, else (16m+264) << (s-1); sign bit SET
     * means positive — note the polarity is opposite to µ-law's), so
-    * q209 puts the second JDK audio codec under the same oracle
+    * q209 puts the second G.711 table under the same oracle
     * discipline as q208.
     */
   def alawWavFromDocuments(docs: DataFrame, rate: Int = 8000): DataFrame =
     g711FromDocuments(docs, rate, 6)
 
-  /** Assemble a REAL IMA-ADPCM WAV byte stream: 20-byte `fmt ` chunk
-    * (wFormatTag 0x11, mono, 4-bit, cbSize 2 carrying samplesPerBlock),
-    * `fact` chunk with the true decoded sample count, and a `data`
-    * chunk of `blockAlign`-sized blocks — each a 4-byte header
+  /** Assemble a REAL IMA-ADPCM WAV byte stream (wFormatTag 0x11,
+    * mono, 4-bit; `fact` holds the true decoded sample count) whose
+    * `data` chunk is `blockAlign`-sized blocks — each a 4-byte header
     * (initial predictor 0, initial index 0) + nibble data. The doc's
     * bytes become the nibble stream, so the oracle knows every block's
     * starting state and payload exactly.
@@ -1158,31 +1095,12 @@ object Multimodal {
   private[graft] def buildImaAdpcmWav(data: Array[Byte], rate: Int,
       blockAlign: Int = 256): Array[Byte] = {
     require(blockAlign >= 5, s"blockAlign must be >= 5, got $blockAlign")
-    val bos = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Array[Byte] = Array(
-      (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    def u16(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def cc(s: String): Array[Byte] =
-      s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
     val chunkBytes = blockAlign - 4
     val chunks = data.grouped(chunkBytes).toSeq
-    val samplesPerBlock = 1 + 2 * chunkBytes
     val totalSamples = chunks.map(c => 1L + 2L * c.length).sum
-    val blocks = chunks.flatMap { c =>
-      u16(0) ++ Array(0.toByte, 0.toByte) ++ c // pred=0, index=0, reserved
-    }.toArray
-    val fmt = u16(0x11) ++ u16(1) ++ u32(rate.toLong) ++
-      u32(rate.toLong * blockAlign / samplesPerBlock) ++
-      u16(blockAlign) ++ u16(4) ++ u16(2) ++ u16(samplesPerBlock)
-    val pad = if (blocks.length % 2 == 1) Array(0.toByte) else Array.empty[Byte]
-    val body = cc("WAVE") ++
-      cc("fmt ") ++ u32(20) ++ fmt ++
-      cc("fact") ++ u32(4) ++ u32(totalSamples) ++
-      cc("data") ++ u32(blocks.length.toLong) ++ blocks ++ pad
-    bos.write(cc("RIFF")); bos.write(u32(body.length.toLong)); bos.write(body)
-    bos.toByteArray
+    // block header: pred=0, index=0, reserved
+    val blocks = chunks.flatMap(c => new Array[Byte](4) ++ c).toArray
+    writeWav(0x11, 1, rate, blockAlign, 4, 1 + 2 * chunkBytes, totalSamples, blocks)
   }
 
   /** Assemble a STEREO IMA-ADPCM WAV: per block, TWO 4-byte channel
@@ -1197,14 +1115,6 @@ object Multimodal {
       blockAlign: Int = 256): Array[Byte] = {
     require(blockAlign >= 9 && (blockAlign - 8) % 8 == 0,
       s"stereo blockAlign must be 8 + a multiple of 8, got $blockAlign")
-    val bos = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Array[Byte] = Array(
-      (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    def u16(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def cc(s: String): Array[Byte] =
-      s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
     val usable = data.take(data.length - data.length % 8)
     val chunkBytes = blockAlign - 8
     val chunks = usable.grouped(chunkBytes).toSeq
@@ -1212,18 +1122,9 @@ object Multimodal {
     // bytes for this channel) * 2 nibbles = 1 + chunkBytes
     val spb = 1 + chunkBytes
     val totalSamples = chunks.map(c => 1L + c.length.toLong).sum // per channel
-    val header = u16(0) ++ Array(0.toByte, 0.toByte)
-    val blocks = chunks.flatMap(c => header ++ header ++ c).toArray
-    val fmt = u16(0x11) ++ u16(2) ++ u32(rate.toLong) ++
-      u32(rate.toLong * blockAlign / math.max(spb, 1)) ++
-      u16(blockAlign) ++ u16(4) ++ u16(2) ++ u16(spb)
-    val pad = if (blocks.length % 2 == 1) Array(0.toByte) else Array.empty[Byte]
-    val body = cc("WAVE") ++
-      cc("fmt ") ++ u32(20) ++ fmt ++
-      cc("fact") ++ u32(4) ++ u32(totalSamples) ++
-      cc("data") ++ u32(blocks.length.toLong) ++ blocks ++ pad
-    bos.write(cc("RIFF")); bos.write(u32(body.length.toLong)); bos.write(body)
-    bos.toByteArray
+    // two (0, 0)-seeded channel headers, then the block's data bytes
+    val blocks = chunks.flatMap(c => new Array[Byte](8) ++ c).toArray
+    writeWav(0x11, 2, rate, blockAlign, 4, spb, totalSamples, blocks)
   }
 
   /** The STEREO twin of [[imaAdpcmWavFromDocuments]] (q213): doc

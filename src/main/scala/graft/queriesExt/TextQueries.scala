@@ -1010,8 +1010,9 @@ object TextQueries {
     * per-window RMS energy over the decoded sample stream. On this
     * synthetic corpus the payloads are UTF-8 text, so the kernel's
     * deterministic fallback (codepoint sequence) is what both engines
-    * compute; a real WAV payload takes the JDK PCM decode through the
-    * SAME operator (MultimodalSpec proves sine/silence separation).
+    * compute; a real WAV payload takes the PCM leg of
+    * [[graft.operators.Multimodal.decodeAudioPcm]] through the SAME
+    * operator (MultimodalSpec proves sine/silence separation).
     * Integer sum-of-squares grid + floor-1e-6 sqrt keep the mirror
     * exact.
     */
@@ -1045,8 +1046,9 @@ object TextQueries {
     * streams ([[graft.operators.Multimodal.mulawWavFromDocuments]] —
     * each doc's UTF-8 bytes as the 8-bit log-companded sample
     * stream), and [[graft.operators.Multimodal.audioRmsWindows]] must
-    * parse the RIFF container AND run the JDK's G.711 expansion
-    * (javax.sound's ULAW->PCM codec) to recover 16-bit samples. The
+    * parse the RIFF container AND expand each byte through the µ-law
+    * table captured once per JVM from the JDK codec (javax.sound's
+    * ULAW->PCM conversion) to recover 16-bit samples. The
     * oracle never touches a codec: µ-law expansion is the fixed CCITT
     * closed form of each encoded byte u = ~b & 0xff,
     * t = ((u%16)*8 + 132) << ((u%128)//16), sample = t-132 (sign bit
@@ -1095,8 +1097,9 @@ object TextQueries {
     FROM s ORDER BY media_id, win_idx"""))
 
   /** The A-LAW half of the G.711 pair (q208 is µ-law): same real
-    * RIFF/WAVE container (wFormatTag 6), same javax.sound expansion
-    * on the Spark side, and the oracle replays the A-law closed form
+    * RIFF/WAVE container (wFormatTag 6), same table expansion on the
+    * Spark side (the A-law table captured from javax.sound's codec),
+    * and the oracle replays the A-law closed form
     * — x = b ^ 85; segment s = (x%128)//16, mantissa m = x%16;
     * t = 16m+8 when s = 0 else (16m+264) << (s-1); sign bit SET is
     * POSITIVE (polarity opposite to µ-law, which is why the pair is

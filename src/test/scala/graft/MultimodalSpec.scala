@@ -123,21 +123,26 @@ class MultimodalSpec extends SparkSpec {
     assert(feats.n_bytes == 3 && feats.mean_prefix == ('a' + 'b' + 'c') / 3.0)
   }
 
+  /** A WAV written by the JDK's own `AudioSystem.write` — the
+    * test-side reference container for the PCM leg.
+    */
+  private def jdkWav(pcm: Array[Byte], fmt: javax.sound.sampled.AudioFormat): Array[Byte] = {
+    import javax.sound.sampled.{AudioFileFormat, AudioInputStream, AudioSystem}
+    val bos = new java.io.ByteArrayOutputStream()
+    AudioSystem.write(new AudioInputStream(new java.io.ByteArrayInputStream(pcm), fmt,
+      (pcm.length / fmt.getFrameSize).toLong), AudioFileFormat.Type.WAVE, bos)
+    bos.toByteArray
+  }
+
+  private def le16(samples: Array[Short]): Array[Byte] =
+    samples.flatMap(v => Array((v & 0xff).toByte, (v >> 8).toByte))
+
   test("REAL audio decode: WAV payloads decode via JDK javax.sound; RMS separates tone from silence") {
     import spark.implicits._
-    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
-    def wav(samples: Array[Short], rate: Float = 8000f): Array[Byte] = {
-      val pcm = new Array[Byte](samples.length * 2)
-      samples.zipWithIndex.foreach { case (v, i) =>
-        pcm(2 * i) = (v & 0xff).toByte; pcm(2 * i + 1) = (v >> 8).toByte
-      }
-      val fmt = new AudioFormat(rate, 16, 1, true, false)
-      val bos = new java.io.ByteArrayOutputStream()
-      AudioSystem.write(
-        new AudioInputStream(new java.io.ByteArrayInputStream(pcm), fmt, samples.length.toLong),
-        AudioFileFormat.Type.WAVE, bos)
-      bos.toByteArray
-    }
+    import javax.sound.sampled.AudioFormat
+    // the JDK's WAV writer is the test-side reference container
+    def wav(samples: Array[Short], rate: Float = 8000f): Array[Byte] =
+      jdkWav(le16(samples), new AudioFormat(rate, 16, 1, true, false))
     val amp = 12000
     val sine = Array.tabulate(2048)(i =>
       (math.sin(2 * math.Pi * 440 * i / 8000.0) * amp).toShort)
@@ -147,6 +152,28 @@ class MultimodalSpec extends SparkSpec {
     val (rate, decoded) = Multimodal.decodeAudioPcm(wav(ramp)).get
     assert(rate == 8000f && decoded.toSeq == ramp.map(_.toInt).toSeq, "PCM roundtrip broken")
     assert(Multimodal.decodeAudioPcm("not audio".getBytes("UTF-8")).isEmpty)
+    // parity with the JDK writer across the PCM layouts it emits
+    def parity(name: String, p: Array[Byte], rate: Float, want: Seq[Int]): Unit = {
+      val (r, got) = Multimodal.decodeAudioPcm(p).get
+      assert(r == rate && got.toSeq == want, s"$name: rate $r, ${got.take(8).toSeq}")
+    }
+    val bytes8 = Array.tabulate(256)(_.toByte)
+    parity("8-bit unsigned mono",
+      jdkWav(bytes8, new AudioFormat(8000f, 8, 1, false, false)), 8000f, (0 until 256))
+    val right = ramp.map(v => (-v).toShort)
+    parity("16-bit stereo returns channel 0",
+      jdkWav(le16(ramp.zip(right).flatMap { case (l, r) => Array(l, r) }),
+        new AudioFormat(8000f, 16, 2, true, false)), 8000f, ramp.map(_.toInt).toSeq)
+    parity("44.1 kHz", wav(ramp, 44100f), 44100f, ramp.map(_.toInt).toSeq)
+    // an odd-sized LIST chunk (5 bytes + RIFF pad byte) ahead of `data`
+    val plain = wav(ramp)
+    val at = plain.indexOfSlice("data".getBytes("US-ASCII"))
+    val list = "LIST".getBytes("US-ASCII") ++ Array[Byte](5, 0, 0, 0) ++
+      "INFOx".getBytes("US-ASCII") ++ Array[Byte](0)
+    val withList = plain.take(at) ++ list ++ plain.drop(at)
+    java.nio.ByteBuffer.wrap(withList).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(4, withList.length - 8)
+    parity("padded LIST chunk", withList, 8000f, ramp.map(_.toInt).toSeq)
     val audio = Seq(
       Multimodal.AudioRecord(1L, wav(sine)),
       Multimodal.AudioRecord(2L, wav(silence))).toDS()
@@ -269,9 +296,8 @@ class MultimodalSpec extends SparkSpec {
     assert(twoBlocks.length == (1 + 504) + (1 + 2))
     assert(twoBlocks(505) == 0 && twoBlocks(506) == 4 && twoBlocks(507) == 15,
       s"block 1 must restart from its (0,0) header: ${twoBlocks.slice(505, 508).toSeq}")
-    // dispatch: the 0x11 tag never reaches javax (which would throw
-    // into the fallback and decode nothing)
-    assert(Multimodal.wavFormatTag(wav).contains(0x11))
+    // dispatch: the one header parse reads the 0x11 tag
+    assert(Multimodal.wavHeader(wav).map(_.tag).contains(0x11))
   }
 
   test("IMA-ADPCM encoder: decode(encode(pcm)) is the encoder's own prediction and tracks a smooth signal") {
@@ -634,6 +660,32 @@ class MultimodalSpec extends SparkSpec {
       val j = new Array[Byte](128); rnd.nextBytes(j); j
     }
     assert(Multimodal.decodeAudioPcm(wavJunk).isEmpty, "corrupt WAV must fail its row")
+    // well-formed containers of formats this reader does not decode
+    // (float, WAVE_FORMAT_EXTENSIBLE, 24-bit PCM) fail the row too, so
+    // audioRmsWindows folds codepoints instead of misread low bytes
+    def container(tag: Int, bits: Int, fmtTail: Array[Byte]): Array[Byte] = {
+      val fmtLen = 16 + fmtTail.length
+      val data = Array.tabulate(96)(i => (i * 7).toByte)
+      val b = java.nio.ByteBuffer.allocate(20 + fmtLen + 8 + data.length)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      b.put("RIFF".getBytes("US-ASCII")).putInt(b.capacity - 8).put("WAVE".getBytes("US-ASCII"))
+      b.put("fmt ".getBytes("US-ASCII")).putInt(fmtLen).putShort(tag.toShort).putShort(1)
+        .putInt(8000).putInt(8000 * bits / 8).putShort((bits / 8).toShort)
+        .putShort(bits.toShort).put(fmtTail)
+      b.put("data".getBytes("US-ASCII")).putInt(data.length).put(data)
+      b.array()
+    }
+    val pcmGuid = Array(1, 0, 0, 0, 0, 0, 0x10, 0, 0x80, 0, 0, 0xaa, 0, 0x38, 0x9b, 0x71)
+      .map(_.toByte)
+    val extensible = java.nio.ByteBuffer.allocate(24).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putShort(22).putShort(16).putInt(4).put(pcmGuid).array()
+    for ((name, p) <- Seq(
+        "float" -> container(3, 32, Array.empty),
+        "WAVE_FORMAT_EXTENSIBLE" -> container(0xFFFE, 16, extensible),
+        "24-bit PCM" -> container(1, 24, Array.empty))) {
+      assert(Multimodal.wavHeader(p).nonEmpty, s"$name: container must parse")
+      assert(Multimodal.decodeAudioPcm(p).isEmpty, s"$name must fail its row")
+    }
   }
 
   test("decodeImage: palette-indexed images take the color path, not the raw-sample fast path") {
@@ -759,12 +811,12 @@ class MultimodalSpec extends SparkSpec {
 
   test("container parsers never throw: random truncations and bit-flips of valid payloads row-fail at worst") {
     // the hand-written byte walkers (Y4m header/FRAME walk, MjpegAvi
-    // RIFF walk, ImageIO wrappers) must uphold row-fails-never-task
-    // under ARBITRARY corruption, not just the crafted cases above —
-    // 300 mutations per container class: truncate at a random point,
-    // flip a random byte, or both. Any exception here is a task
-    // killer in production; None/short-decode is the only acceptable
-    // outcome.
+    // RIFF walk, WAV header parse, ImageIO wrappers) must uphold
+    // row-fails-never-task under ARBITRARY corruption, not just the
+    // crafted cases above — 300 mutations per container class:
+    // truncate at a random point, flip a random byte, or both. Any
+    // exception here is a task killer in production; None/short-decode
+    // is the only acceptable outcome.
     import graft.operators.VideoKernel
     val rnd = new scala.util.Random(4242)
     val y4mP = y4m("YUV4MPEG2 W4 H2 F30:1 C420",
@@ -779,6 +831,13 @@ class MultimodalSpec extends SparkSpec {
       val bos = new java.io.ByteArrayOutputStream()
       javax.imageio.ImageIO.write(img, "png", bos); bos.toByteArray
     }
+    val wavData = Array.tabulate(300)(i => (i * 29 + 3).toByte)
+    val wavPs = Seq(
+      jdkWav(wavData.take(296), new javax.sound.sampled.AudioFormat(8000f, 16, 2, true, false)),
+      Multimodal.buildMulawWav(wavData, 8000),
+      Multimodal.buildAlawWav(wavData, 8000),
+      Multimodal.buildImaAdpcmWav(wavData, 8000),
+      Multimodal.buildImaAdpcmStereoWav(wavData, 8000))
     def mutate(p: Array[Byte]): Array[Byte] = {
       var c = p.clone()
       if (rnd.nextBoolean() && c.length > 1)
@@ -797,6 +856,16 @@ class MultimodalSpec extends SparkSpec {
       VideoKernel.MjpegAvi.probe(ma)
       VideoKernel.MjpegAvi.decodeFrames(ma, 1, 16)
       Multimodal.decodeImage(mutate(pngP))
+    }
+    // WAV legs: no throw, and no sample count beyond what the bytes can
+    // encode — a 4-bit codec yields at most two samples per byte, every
+    // other leg at most one (no hang, no unbounded allocation)
+    for (_ <- 0 until 300; p <- wavPs) {
+      val m = mutate(p)
+      val perByte = if (Multimodal.wavHeader(m).exists(_.tag == 0x11)) 2 else 1
+      Multimodal.decodeAudioPcm(m).foreach { case (_, s) =>
+        assert(s.length <= perByte * m.length, s"${s.length} samples from ${m.length} bytes")
+      }
     }
   }
 
