@@ -1133,7 +1133,9 @@ object CorpusOps {
     *                     importance weights it would itself be
     *                     selected by;
     *  - `not_sampled`  — passed the gates, scrubbed and DSIR-weighted,
-    *                     but lost the per-language Gumbel resample;
+    *                     but lost the per-language Gumbel resample, or
+    *                     has a null `lang` (no shard to pack into, so
+    *                     it is never resampled);
     *  - `packed`       — sampled, with its FFD bin assignment.
     *
     * Columns: (doc_id, lang, disposition, dsir_weight_u, sample_rank,
@@ -1172,22 +1174,9 @@ object CorpusOps {
       lit(null).cast("int").as("sample_rank"),
       lit(null).cast("long").as("bin_idx"),
       lit(null).cast("long").as("n_tok"))
-    // stage-attribution hook (optimization round 18): cutLineage is
-    // EAGER, so timing it times the stage's materialization — set
-    // SPARK_GRAFT_STAGE_TIMING=1 to print per-stage wall to stderr
-    // (diagnostic only; never on in the bench/driver path).
-    val stageTiming = sys.env.contains("SPARK_GRAFT_STAGE_TIMING")
-    val stageNo = new java.util.concurrent.atomic.AtomicInteger(0)
     def cachedLeaf(df: DataFrame): (DataFrame, DataFrame) = {
       val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val t0 = System.nanoTime()
-      val cut = org.apache.spark.sql.graft.shims.cutLineage(p)
-      if (stageTiming) {
-        val n = stageNo.incrementAndGet()
-        System.err.println(f"[spine-stage] #$n%d ${(System.nanoTime() - t0) / 1e9}%.3f s" +
-          s" [${Thread.currentThread().getName}]")
-      }
-      (cut, p)
+      (org.apache.spark.sql.graft.shims.cutLineage(p), p)
     }
     // OVERLAP independent stage materializations (optimization round
     // 19, guide §2.6 — the round-18 verdict's #1 item: the spine ran
@@ -1219,14 +1208,10 @@ object CorpusOps {
         // round 18).
         val (lpRaw, priorsRaw) = nbModel(tr, col("doc_id"), col("text"),
           col("label"), nbDim)
-        val tNb = System.nanoTime()
         val lpRows = lpRaw.collect()
         require(lpRows.nonEmpty,
           "empty NB model (lp has no rows) — train on a non-empty labeled set")
         val priorRows = priorsRaw.collect()
-        if (stageTiming) System.err.println(
-          f"[spine-stage] nb-model-collect ${(System.nanoTime() - tNb) / 1e9}%.3f s" +
-            s" [${Thread.currentThread().getName}]")
         val spark = docs.sparkSession
         (spark.createDataFrame(java.util.Arrays.asList(lpRows: _*), lpRaw.schema),
           spark.createDataFrame(java.util.Arrays.asList(priorRows: _*), priorsRaw.schema))
@@ -1278,7 +1263,7 @@ object CorpusOps {
     // nested-InMemoryRelation subtree. Without the cut, the composed
     // plan's PRINTED form grows exponentially in the persist-stack
     // depth, and AQE re-renders it on every stage update — measured
-    // (SpineDecontamProbe, sf0.1, gated spine): the second write of a
+    // (SCALE.md "Round 18", sf0.1, gated spine): the second write of a
     // fully-cached result burned 38 s of pure driver time at 3
     // task-seconds of real work. With the cuts the spine plans in
     // milliseconds at ANY stack depth. Cost of the cut: the run is
@@ -1419,8 +1404,10 @@ object CorpusOps {
     // the joins key on doc_id). Over the cap, fall back to the
     // persisted-stage path (round 17's shape) and let the cluster
     // carry what the driver cannot.
-    val sampledDf = gumbelTopK(weighted, col("doc_id"),
-      col("dsir_weight_u"), sampleGroup, samplesPerLang)
+    // only docs with a shard are resampled: both packers drop null
+    // shards, so a sampled null-`lang` doc would land in no disposition
+    val sampledDf = gumbelTopK(weighted.filter(col("lang").isNotNull),
+      col("doc_id"), col("dsir_weight_u"), sampleGroup, samplesPerLang)
     val probe = sampledDf.limit(sampleCollectCap + 1).collect()
     val (sampled, sampleCached) =
       if (probe.length <= sampleCollectCap)

@@ -731,7 +731,7 @@ object Dedup {
     * chains in the LABEL graph, but min-labels still crossed the
     * ORIGINAL graph one merge-boundary per round — measured on a
     * 500-node scrambled cycle (the affine family x -> 13x+7 mod n,
-    * GraphScaleProbe's warm-up), it was still merging at round 25.
+    * SCALE.md "Round-13"), it was still merging at round 25.
     * With contraction every region merges with its smallest neighbor
     * SIMULTANEOUSLY, so the region count at least halves per round —
     * genuine O(log n) rounds on ANY topology, and the edge frame

@@ -341,7 +341,7 @@ object Graph {
     * (broadcast when small — `removed` descends from a
     * measured-stats frame, so the optimizer sees its true scale).
     * Measured on a 10k-node path at k=2 (30 rounds, ~2 removals per
-    * round, GraphScaleProbe): 867k -> 30k shuffle records (29x).
+    * round, SCALE.md "Round-13"): 867k -> 30k shuffle records (29x).
     * Wall time at that toy scale RISES 8.1 -> ~11s — the per-round
     * broadcast-build + count driver jobs are the same per-stage
     * launch floor ROADMAP documents for q102/q123; what transfers to

@@ -648,7 +648,7 @@ object CorpusQueries {
       FROM k3),
     sampled AS MATERIALIZED (SELECT doc_id, lang, n_tok, dsir_weight_u,
                        CAST(rn AS INT) AS sample_rank
-                FROM r WHERE rn <= 25),
+                FROM r WHERE rn <= 25 AND lang IS NOT NULL),
     tp AS MATERIALIZED (
       SELECT lang AS shard, doc_id, n_tok,
              CAST(row_number() OVER (PARTITION BY lang
@@ -951,7 +951,7 @@ object CorpusQueries {
       FROM k3),
     sampled AS MATERIALIZED (SELECT doc_id, lang, n_tok, dsir_weight_u,
                        CAST(rn AS INT) AS sample_rank
-                FROM r WHERE rn <= 25),
+                FROM r WHERE rn <= 25 AND lang IS NOT NULL),
     tp AS MATERIALIZED (
       SELECT lang AS shard, doc_id, n_tok,
              CAST(row_number() OVER (PARTITION BY lang
@@ -1162,7 +1162,7 @@ object CorpusQueries {
       FROM k3),
     sampled AS MATERIALIZED (SELECT doc_id, lang, domain, n_tok, dsir_weight_u,
                        CAST(rn AS INT) AS sample_rank
-                FROM r WHERE rn <= 3),
+                FROM r WHERE rn <= 3 AND lang IS NOT NULL),
     tp AS MATERIALIZED (
       SELECT lang AS shard, doc_id, n_tok,
              CAST(row_number() OVER (PARTITION BY lang
@@ -1361,7 +1361,7 @@ object CorpusQueries {
       FROM k3),
     sampled AS MATERIALIZED (SELECT doc_id, lang, n_tok, dsir_weight_u,
                        CAST(rn AS INT) AS sample_rank
-                FROM r WHERE rn <= 20),
+                FROM r WHERE rn <= 20 AND lang IS NOT NULL),
     tp AS MATERIALIZED (
       SELECT lang AS shard, doc_id, n_tok,
              CAST(row_number() OVER (PARTITION BY lang
@@ -1671,7 +1671,7 @@ object CorpusQueries {
       FROM k3),
     sampled AS MATERIALIZED (SELECT doc_id, lang, domain, n_tok, dsir_weight_u,
                        CAST(rn AS INT) AS sample_rank
-                FROM r WHERE rn <= 3),
+                FROM r WHERE rn <= 3 AND lang IS NOT NULL),
     tp AS MATERIALIZED (
       SELECT lang AS shard, doc_id, n_tok,
              CAST(row_number() OVER (PARTITION BY lang

@@ -57,7 +57,7 @@ object shims {
     * description string on every stage update
     * (`ExplainUtils.generateOperatorIDs` / `generateTreeString`), and
     * that DRIVER-side rendering measured 20-60 s per action on the
-    * gated pretraining spine (SpineDecontamProbe: second write of a
+    * gated pretraining spine (SCALE.md "Round 18": second write of a
     * fully-cached result = 38 s wall, 3 task-seconds). A LogicalRDD
     * leaf renders as one `Scan ExistingRDD` line — the rendering cost
     * disappears and the optimizer/canonicalization walk shrinks with

@@ -449,7 +449,8 @@ class CorpusOpsSpec extends SparkSpec {
       (4L, "fr", prose(42, 5)),                            // kept
       (5L, "en", "tiny"),                                  // < 2 tokens: gated (no 2-gram)
       (6L, "en", prose(500, 3)),                           // too long: gated
-      (7L, "en", ("spam beacon " * 30).trim)               // repetitive: gated by top2
+      (7L, "en", ("spam beacon " * 30).trim),              // repetitive: gated by top2
+      (8L, null, prose(43, 13))                            // kept, no shard: not_sampled
     ).toDF("doc_id", "lang", "text")
     val run = CorpusOps.pretrainingRun(docs,
       minWords = 10L, maxWords = 100L, minMeanLen = 1.0, maxMeanLen = 9.0,
@@ -457,10 +458,11 @@ class CorpusOpsSpec extends SparkSpec {
       targetPred = col("lang") === "en", dim = 16, samplesPerLang = 2,
       packBudget = 64L, maxOpen = 2)
     val rows = run.result.collect()
-    assert(rows.map(_.getLong(0)).sorted.toSeq == (1L to 7L),
+    assert(rows.map(_.getLong(0)).sorted.toSeq == (1L to 8L),
       "every doc exactly one disposition")
     val byId = rows.map(r => r.getLong(0) -> r.getString(2)).toMap
     assert(byId(5L) == "gated" && byId(6L) == "gated" && byId(7L) == "gated", byId.toString)
+    assert(byId(8L) == "not_sampled", byId.toString)
     // en keepers: 3 docs, k=2 -> exactly 2 packed + 1 not_sampled;
     // fr keeper: 1 doc -> packed
     val en = rows.filter(r => r.getString(1) == "en" && r.getString(2) != "gated")
@@ -694,7 +696,7 @@ class CorpusOpsSpec extends SparkSpec {
       s"fuzzy machinery leaked into the result plan:\n${plan.take(1200)}")
     // and the rendered plan is FLAT: round 17's nested-InMemoryRelation
     // prints grew exponentially with persist depth, costing tens of
-    // seconds of pure driver time per AQE update (SpineDecontamProbe:
+    // seconds of pure driver time per AQE update (SCALE.md "Round 18":
     // 38 s wall / 3 task-seconds on a fully-cached second write)
     assert(plan.length < 200000, s"plan string blew up: ${plan.length} chars")
     // release() frees the caches; the leaves recompute through the

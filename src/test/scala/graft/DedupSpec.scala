@@ -83,8 +83,8 @@ class DedupSpec extends SparkSpec {
     // SCRAMBLED (so min-labels cannot ride one wavefront) is the
     // adversarial topology for label propagation — the pre-round-13
     // pointer-jumping variant was still merging at round 25 on a
-    // 500-node instance of this shape (GraphScaleProbe's affine
-    // warm-up graph), because jumping compresses the LABEL graph
+    // 500-node instance of this shape (the affine graph of SCALE.md
+    // "Round-13"), because jumping compresses the LABEL graph
     // while merges still crossed the ORIGINAL graph one boundary per
     // round. Contraction merges every region with its smallest
     // neighbor simultaneously, so 4096 regions must converge in
