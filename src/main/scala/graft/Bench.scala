@@ -101,9 +101,10 @@ object Bench {
       // sentinel -1 so a crashed query can't masquerade as a fast one
       val ok = times.filter(_ >= 0)
       // min is the reported time (contention-robust); the MEDIAN rides
-      // bench_full.json alongside it so a contended host self-identifies
-      // in the artifact (min << median => noisy run, not a regression —
-      // two rounds of phantom 3x outliers cost judge re-adjudication)
+      // bench_full_c{N}.json alongside it so a contended host
+      // self-identifies in the artifact (min << median => noisy run,
+      // not a regression — two rounds of phantom 3x outliers cost
+      // judge re-adjudication)
       val med = if (ok.isEmpty) -1.0 else {
         val s = ok.sorted
         if (s.size % 2 == 1) s(s.size / 2)
@@ -173,7 +174,7 @@ object Bench {
     // stdout line must stay under that window or it can never be
     // parsed (every BENCH_r*.json through r09 has parsed:null for
     // exactly this reason — the full per-query dict outgrew the
-    // window in round 1). Full detail goes to bench_full.json; the
+    // window in round 1). Full detail goes to bench_full_c{N}.json; the
     // stdout line carries the headline total, the slowest queries,
     // and EVERY failure sentinel, and stays ~1.5 KB.
     // Subset iteration runs must not clobber the version-controlled
@@ -183,8 +184,10 @@ object Bench {
     val lineFile = if (only.isDefined) "bench_subset.json" else "bench_line.txt"
     // subset runs keep their OWN full-detail file too, so the line's
     // "detail" pointer never aims at a stale full-corpus artifact and
-    // per-query subset timings beyond the 15 slowest are not lost
-    val fullFile = if (only.isDefined) "bench_subset_full.json" else "bench_full.json"
+    // per-query subset timings beyond the 15 slowest are not lost; the
+    // core count is in the name so an 8-core run never overwrites the
+    // 32-core medians
+    val fullFile = (if (only.isDefined) "bench_subset_full" else "bench_full") + s"_c$cpus.json"
     def writeArtifact(name: String, content: String): Unit = {
       val p = java.nio.file.Paths.get(sys.props.getOrElse("user.dir", "."), name)
       try java.nio.file.Files.writeString(p, content + "\n")

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.VersionedDir
+
 /** Versioned IVF store lifecycle (SURVEY.md §2 B41/B54, round 15) —
   * the RE-INDEX verb that closes the serving loop the other three
   * verbs imply: [[graft.streaming.StreamingOps.maintainIvfIndex]]
@@ -33,7 +35,8 @@ import org.apache.spark.sql.functions._
   *
   * Atomic cutover, from first principles of what object stores give
   * us: a version's data and codebook are written COMPLETELY first,
-  * then a zero-byte marker `versions/v-N` is CREATED (file creation
+  * then a zero-byte marker `versions/v-N` is CREATED
+  * ([[graft.streaming.VersionedDir]]'s marker-last rule: file creation
   * is the one atomic publish primitive that needs no rename-overwrite
   * semantics — HDFS rename won't clobber, S3 has no rename at all).
   * Readers resolve "live" as the max marker ONCE per call and then
@@ -130,17 +133,12 @@ object IvfStore {
     * small directory listing — resolve once per query/stream, then
     * bind to that version's directories.
     */
-  def liveVersion(spark: SparkSession, storeDir: String): Option[Long] = {
-    val dir = new Path(s"$storeDir/versions")
-    val fs = fsOf(spark, storeDir)
-    if (!fs.exists(dir)) None
-    else {
-      val vs = fs.listStatus(dir).map(_.getPath.getName)
-        .filter(_.startsWith("v-"))
-        .flatMap(n => n.stripPrefix("v-").toLongOption)
-      if (vs.isEmpty) None else Some(vs.max)
-    }
-  }
+  def liveVersion(spark: SparkSession, storeDir: String): Option[Long] =
+    versions(spark, storeDir).live
+
+  /** The store's publish markers (`versions/v-N`). */
+  private def versions(spark: SparkSession, storeDir: String): VersionedDir =
+    new VersionedDir(spark, s"$storeDir/versions")
 
   /** Publish `version`: create its marker, making it the live version
     * iff it is the highest. Refuses to publish a version whose data or
@@ -157,9 +155,7 @@ object IvfStore {
         s"publish($version): $what directory $d does not exist — " +
           "write the version completely before publishing its marker")
     }
-    val marker = new Path(s"$storeDir/versions/v-$version")
-    fs.mkdirs(marker.getParent)
-    if (!fs.exists(marker)) fs.create(marker, false).close()
+    versions(spark, storeDir).publish(version)
   }
 
   /** Write `load` cell-assigned under `centroids` as version
@@ -306,7 +302,7 @@ object IvfStore {
     val fs = fsOf(spark, storeDir)
     fs.mkdirs(claim.getParent)
     if (fs.exists(claim) && staleClaimMs != Long.MaxValue &&
-        !fs.exists(new Path(s"$storeDir/versions/v-$version"))) {
+        !versions(spark, storeDir).published.contains(version)) {
       val age = System.currentTimeMillis() - fs.getFileStatus(claim).getModificationTime
       if (age > staleClaimMs) {
         val tomb = staleTombstone(storeDir, version)
@@ -427,11 +423,8 @@ object IvfStore {
     // makes the boundary self-describing (the PQ-geometry
     // discipline); [[catchUp]]/[[strandedBatchIds]] floor their
     // afterBatchId with it automatically.
-    if (foldBatchesUpTo != Long.MinValue) {
-      val m = new Path(s"$storeDir/v=$next/fold-$foldBatchesUpTo")
-      fs.mkdirs(m.getParent)
-      if (!fs.exists(m)) fs.create(m, false).close()
-    }
+    if (foldBatchesUpTo != Long.MinValue)
+      folds(spark, storeDir, next).publish(foldBatchesUpTo)
     publish(spark, storeDir, next)
     fs.delete(claim, false)
     next
@@ -445,17 +438,13 @@ object IvfStore {
     * One directory listing, no data read.
     */
   def foldBoundary(spark: SparkSession, storeDir: String,
-      version: Long): Option[Long] = {
-    val dir = new Path(s"$storeDir/v=$version")
-    val fs = fsOf(spark, storeDir)
-    if (!fs.exists(dir)) None
-    else {
-      val bs = fs.listStatus(dir).map(_.getPath.getName)
-        .filter(_.startsWith("fold-"))
-        .flatMap(n => n.stripPrefix("fold-").toLongOption)
-      if (bs.isEmpty) None else Some(bs.max)
-    }
-  }
+      version: Long): Option[Long] =
+    folds(spark, storeDir, version).live
+
+  /** A version's recorded fold boundaries (`v=N/fold-M` markers). */
+  private def folds(spark: SparkSession, storeDir: String,
+      version: Long): VersionedDir =
+    new VersionedDir(spark, s"$storeDir/v=$version", prefix = "fold-")
 
   /** Recover from a CRASHED reindex without filesystem surgery
     * (round 16; rename-serialized round 17): remove `version`'s
@@ -478,7 +467,7 @@ object IvfStore {
     */
   def reclaim(spark: SparkSession, storeDir: String, version: Long): Unit = {
     val fs = fsOf(spark, storeDir)
-    require(!fs.exists(new Path(s"$storeDir/versions/v-$version")),
+    require(!versions(spark, storeDir).published.contains(version),
       s"version $version is published — its claim cannot be stale; nothing to reclaim")
     val claim = new Path(s"$storeDir/claims/v-$version")
     fs.mkdirs(claim.getParent)
@@ -565,10 +554,7 @@ object IvfStore {
     // do after a full fold (maxBatchId = bootstrap) — duplicates rows
     val boundary = math.max(afterBatchId,
       foldBoundary(spark, storeDir, toVersion).getOrElse(BootstrapBatchId))
-    val pending = fs.listStatus(from).map(_.getPath.getName)
-      .filter(_.startsWith("batchId="))
-      .flatMap(n => n.stripPrefix("batchId=").toLongOption)
-      .filter(_ > boundary).sorted
+    val pending = batchIdsOf(spark, storeDir, fromVersion).filter(_ > boundary)
     if (pending.isEmpty) return 0L
     val rows = spark.read
       .option("basePath", dataDir(storeDir, fromVersion))
@@ -887,8 +873,8 @@ object IvfStore {
       .filter(b => b > boundary && !to.contains(b))
   }
 
-  /** Prune versions strictly below `keepFrom` (their markers AND
-    * their directories) — run once in-flight readers of the old
+  /** Prune versions strictly below `keepFrom` (each marker, then its
+    * directory) — run once in-flight readers of the old
     * version have drained. Refuses a `keepFrom` above the live
     * version: that off-by-one (`live + 1` read as "drop below the
     * next one") would delete EVERY version including the live one
@@ -897,20 +883,11 @@ object IvfStore {
     */
   def dropVersionsBelow(spark: SparkSession, storeDir: String,
       keepFrom: Long): Unit = {
-    val fs = fsOf(spark, storeDir)
-    val dir = new Path(s"$storeDir/versions")
-    if (!fs.exists(dir)) return
-    val live = liveVersion(spark, storeDir)
-    require(live.exists(_ >= keepFrom),
+    val vd = versions(spark, storeDir)
+    val live = vd.live
+    require(live.forall(_ >= keepFrom),
       s"dropVersionsBelow(keepFrom=$keepFrom) would delete the live version " +
-        s"(${live.fold("none")(_.toString)}) — pass keepFrom <= liveVersion")
-    fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("v-"))
-      .flatMap(n => n.stripPrefix("v-").toLongOption)
-      .filter(_ < keepFrom)
-      .foreach { v =>
-        fs.delete(new Path(s"$storeDir/v=$v"), true)
-        fs.delete(new Path(s"$storeDir/versions/v-$v"), false)
-      }
+        s"(${live.get}) — pass keepFrom <= liveVersion")
+    vd.prune(keepFrom, v => s"$storeDir/v=$v")
   }
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 
 import graft.operators.CorpusOps.BinFold
 
@@ -203,28 +204,18 @@ object StatefulOps {
   }
 
   /** [[packStream]] wired to a replay-safe manifest sink: each
-    * trigger's bin assignments land under `outDir/batchId=N` as a
-    * batchId-keyed OVERWRITE (the curationStream write discipline),
-    * so a replayed batch — whose state store restores to the
-    * pre-batch version from the checkpoint — rewrites exactly the
-    * rows its first attempt produced instead of appending
-    * duplicates. Downstream shard builders read the manifest by
-    * batchId partition and ship (shard, bin_idx) groups.
+    * trigger's bin assignments land under `outDir/batchId=N`
+    * ([[StreamingOps.batchKeyedSink]]), so a replayed batch — whose
+    * state store restores to the pre-batch version from the checkpoint
+    * — rewrites exactly the rows its first attempt produced instead of
+    * appending duplicates. Downstream shard builders read the manifest
+    * by batchId partition and ship (shard, bin_idx) groups.
     */
   def packStreamSink(docs: Dataset[PackDoc], budget: Long, maxOpen: Int,
       outDir: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    packStream(docs, budget, maxOpen).writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[PackAssign], batchId: Long) =>
-        batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$outDir/batchId=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    StreamingOps.batchKeyedSink(packStream(docs, budget, maxOpen).toDF(), checkpointDir,
+      trigger)(StreamingOps.writeBatch(_, outDir, _))
 
   def sessionizeStream(events: Dataset[SessEvent], gapSec: Long,
       delay: String): Dataset[Session] = {

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** Event-time windowing + dedup operators (SURVEY.md §2 B32-B35).
   *
@@ -183,7 +185,7 @@ object StreamingOps {
     * docs collide on every band). On a BATCH input they are
     * `distinct`-ed here; on a STREAMING input they are returned as-is
     * and the consumer dedups per micro-batch (`batch.distinct()`
-    * inside foreachBatch) — a streaming `distinct` would be a
+    * inside its batch sink) — a streaming `distinct` would be a
     * stateful Deduplicate with NO watermark bound, growing state with
     * every pair ever emitted, which is exactly the unbounded-state
     * failure this operator's 100 TB contract forbids. Pairs only
@@ -235,6 +237,71 @@ object StreamingOps {
     if (pairs.isStreaming) pairs else pairs.distinct()
   }
 
+  /** The one micro-batch sink every streaming operator here runs on:
+    * an append `writeStream` whose per-batch callback persists the batch,
+    * runs `body`, and unpersists in `finally`, checkpointed at
+    * `checkpointDir` under `trigger`.
+    *
+    * Replay safety is the body's half of the contract: every output is
+    * keyed by the micro-batch id — a [[writeBatch]] `batchId=N`
+    * overwrite, or a [[VersionedDir]] version published marker-last —
+    * so a batch replayed after a crash (sink ran, commit did not)
+    * rewrites exactly what its first attempt wrote instead of
+    * duplicating it. That is the FirehoseDelivery exactly-once
+    * discipline; FirehoseDelivery keeps its own writer because its
+    * trigger comes from its conf and its batch manages its own
+    * persists.
+    */
+  private[streaming] def batchKeyedSink(stream: DataFrame, checkpointDir: String,
+      trigger: Trigger)(body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream.outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        batch.persist()
+        try body(batch, batchId) finally batch.unpersist()
+        ()
+      }
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .start()
+
+  /** The `batchId=N` overwrite: `df` lands under `dir/batchId=N`
+    * (partitioned by `partCols`), replacing whatever an earlier attempt
+    * of the same batch left there.
+    */
+  private[streaming] def writeBatch(df: DataFrame, dir: String, batchId: Long,
+      partCols: String*): Unit =
+    df.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
+      .parquet(s"$dir/batchId=$batchId")
+
+  /** The replay-side read of a [[writeBatch]] table: the `fields` of
+    * every batch STRICTLY before `batchId`, through the `batchId`
+    * partition column — so a replayed batch N reads exactly the history
+    * its first attempt saw, never its own half-written output. Before
+    * the first batch lands there is no table yet: empty.
+    */
+  private def batchesBefore(spark: SparkSession, dir: String, batchId: Long,
+      fields: (String, DataType)*): DataFrame =
+    try spark.read.parquet(dir).filter(col("batchId") < batchId)
+      .select(fields.map(f => col(f._1)): _*)
+    catch { case _: AnalysisException => emptyDf(spark, fields: _*) }
+
+  private def emptyDf(spark: SparkSession, fields: (String, DataType)*): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(fields.map { case (f, t) => StructField(f, t) }))
+
+  /** A static side collected ONCE before start() and rebuilt as a
+    * LocalRelation per trigger — otherwise every micro-batch
+    * re-executes the static frame's full lineage (the round-13
+    * maintainIvfIndex lesson). The frame must be config-sized; an
+    * empty one fails at setup with `emptyMsg`.
+    */
+  private def collectOnce(df: DataFrame, emptyMsg: String): SparkSession => DataFrame = {
+    val rows = df.collect()
+    val schema = df.schema
+    require(rows.nonEmpty, emptyMsg)
+    spark => spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
   /** The FEEDER for the IVF cell-partitioned corpus store: assign each
     * arriving vector to its nearest trained centroid
     * ([[graft.operators.Similarity.assignCells]] — a broadcast argmin,
@@ -248,13 +315,13 @@ object StreamingOps {
     * .filter(col("cell").isin(probed: _*))` prunes across every batch
     * directory.
     *
-    * Replay safety: one batchId-keyed overwrite per micro-batch, the
-    * same discipline as every sink here — a replayed batch rewrites
-    * its own directory, never duplicates. Centroids are the TRAINED
-    * codebook ([[graft.operators.Similarity.trainKMeans]] or any
-    * k-means) and must stay FIXED while the stream runs: re-training
-    * moves cell boundaries, which is a batch re-index (rewrite the
-    * store), not a streaming concern.
+    * Replay safety: one [[writeBatch]] overwrite per micro-batch
+    * ([[batchKeyedSink]]) — a replayed batch rewrites its own
+    * directory, never duplicates. Centroids are the TRAINED codebook
+    * ([[graft.operators.Similarity.trainKMeans]] or any k-means) and
+    * must stay FIXED while the stream runs: re-training moves cell
+    * boundaries, which is a batch re-index (rewrite the store), not a
+    * streaming concern.
     *
     * PQ-enabled store versions (round 16): pass the version's stored
     * PQ codebooks (`IvfStore.readCodebooks`) and every fed row also
@@ -272,10 +339,8 @@ object StreamingOps {
     */
   def maintainIvfIndex(stream: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, indexDir: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-      codebooks: Option[DataFrame] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.SaveMode
+      trigger: Trigger = Trigger.AvailableNow(),
+      codebooks: Option[DataFrame] = None): StreamingQuery = {
     if (codebooks.isEmpty) {
       // feeding a versioned store's data dir? its layout is
       // storeDir/v=N/data — a sibling codebooks dir means the version
@@ -304,52 +369,42 @@ object StreamingOps {
     // all-subspaces-matched ADC guard excludes null-coded rows rather
     // than mis-rank them). Collected once, same rationale as centroids.
     val fixedCbs = codebooks.map { c =>
-      val rows = c.select(col("subspace").cast("int"), col("code").cast("int"),
-        col("subvec")).collect()
-      require(rows.nonEmpty, "maintainIvfIndex: codebooks frame is empty")
-      val geom = graft.operators.IvfStore.geometryOf(c)
-      (rows, c.select(col("subspace").cast("int").as("subspace"),
-        col("code").cast("int").as("code"), col("subvec")).schema, geom)
+      val cbLocal = collectOnce(c.select(col("subspace").cast("int").as("subspace"),
+          col("code").cast("int").as("code"), col("subvec")),
+        "maintainIvfIndex: codebooks frame is empty")
+      (cbLocal, graft.operators.IvfStore.geometryOf(c))
     }
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val ctrLocal = fixed.toDF("cell", "ctr") // LocalRelation: no re-execution
-        val assigned = graft.operators.Similarity.assignCells(batch, ctrLocal, idCol, vecCol)
-          .select(col("_id").as(idCol), col("_v").as(vecCol), col("cell"))
-        val coded = fixedCbs match {
-          case None => assigned
-          case Some((rows, schema, (nSub, subDim))) =>
-            val cbLocal = spark.createDataFrame(
-              java.util.Arrays.asList(rows: _*), schema)
-            val codeCols = (0 until nSub).map(sIdx =>
-              element_at(col("_codes"), sIdx + 1).as(s"c$sIdx"))
-            assigned
-              .crossJoin(broadcast(graft.operators.Similarity.pqCodebookArray(cbLocal)))
-              .withColumn("_codes", graft.functions.pq.encodeCodes(
-                col(vecCol), col("_cbs"), nSub, subDim))
-              .select(col(idCol) +: col(vecCol) +: codeCols :+ col("cell"): _*)
-        }
-        coded.write.mode(SaveMode.Overwrite).partitionBy("cell")
-          .parquet(s"$indexDir/batchId=$batchId")
-        ()
+    batchKeyedSink(stream, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val ctrLocal = fixed.toDF("cell", "ctr") // LocalRelation: no re-execution
+      val assigned = graft.operators.Similarity.assignCells(batch, ctrLocal, idCol, vecCol)
+        .select(col("_id").as(idCol), col("_v").as(vecCol), col("cell"))
+      val coded = fixedCbs match {
+        case None => assigned
+        case Some((cbLocal, (nSub, subDim))) =>
+          val codeCols = (0 until nSub).map(sIdx =>
+            element_at(col("_codes"), sIdx + 1).as(s"c$sIdx"))
+          assigned
+            .crossJoin(broadcast(graft.operators.Similarity.pqCodebookArray(cbLocal(spark))))
+            .withColumn("_codes", graft.functions.pq.encodeCodes(
+              col(vecCol), col("_cbs"), nSub, subDim))
+            .select(col(idCol) +: col(vecCol) +: codeCols :+ col("cell"): _*)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      writeBatch(coded, indexDir, batchId, "cell")
+    }
   }
 
   /** The DRIFT MONITOR for the IVF serving lifecycle (round 14, the
-    * q210 composition per micro-batch): every arriving vector batch
-    * is cell-assigned against the FIXED trained centroids and its
+    * q210 composition per micro-batch): every arriving vector batch is
+    * cell-assigned against the FIXED trained centroids and its
     * occupancy mix is PSI-scored against the INDEX-TIME baseline
     * occupancy — the "when do I re-index?" alarm that
     * [[maintainIvfIndex]]'s centroids-stay-fixed contract implies
     * someone must watch. Per-cell micro-PSI rows land under
-    * `outDir/batchId=N` with overwrite (the idempotence pattern every
-    * sink here uses); a consumer sums `psi_micro` per batch and fires
-    * the batch re-index at the usual 0.1/0.2 thresholds.
+    * `outDir/batchId=N` ([[batchKeyedSink]]); a consumer sums
+    * `psi_micro` per batch and fires the batch re-index at the usual
+    * 0.1/0.2 thresholds.
     *
     * Both static inputs are collected ONCE before start() (the
     * maintainIvfIndex lesson): the centroid table (k rows) and the
@@ -363,9 +418,7 @@ object StreamingOps {
   def ivfDriftStream(stream: DataFrame, centroids: DataFrame,
       baseline: DataFrame, idCol: String, vecCol: String,
       outDir: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.SaveMode
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val fixedCtrs = collectCentroids(centroids, "ivfDriftStream")
     val baseCounts = {
       val spark0 = baseline.sparkSession
@@ -381,24 +434,18 @@ object StreamingOps {
     require(baseCounts.nonEmpty,
       "ivfDriftStream: baseline produced no cell assignments (empty or " +
         "all-null baseline) — occupancy PSI is undefined without a baseline mix")
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val ctrLocal = fixedCtrs.toDF("cell", "ctr")
-          val cc = graft.operators.Similarity.assignCells(batch, ctrLocal, idCol, vecCol)
-            .groupBy(col("cell").cast("string").as("cat"))
-            .agg(count(lit(1)).as("cur_cnt"))
-          graft.operators.Profiler.psiCategoricalCounts(
-              baseCounts.toDF("cat", "base_cnt"), cc)
-            .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batchId=$batchId")
-        }
-        ()
+    batchKeyedSink(stream, checkpointDir, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        import spark.implicits._
+        val ctrLocal = fixedCtrs.toDF("cell", "ctr")
+        val cc = graft.operators.Similarity.assignCells(batch, ctrLocal, idCol, vecCol)
+          .groupBy(col("cell").cast("string").as("cat"))
+          .agg(count(lit(1)).as("cur_cnt"))
+        writeBatch(graft.operators.Profiler.psiCategoricalCounts(
+          baseCounts.toDF("cat", "base_cnt"), cc), outDir, batchId)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    }
   }
 
   /** STREAMING SERVING against the versioned IVF store (round 16 —
@@ -414,13 +461,12 @@ object StreamingOps {
     * the micro-batch grain. Every output row carries
     * `served_version` so consumers can audit exactly that.
     *
-    * Results land under `outDir/batchId=N` with overwrite (the
-    * repo-wide replay discipline). One caveat follows from it: a
-    * batch REPLAYED after a crash re-resolves the CURRENT live
-    * version, which may be newer than its first attempt's — the
-    * overwrite keeps the output dir single-version either way, and
-    * serving (unlike ingestion) has no exactly-once obligation to an
-    * older index.
+    * Results land under `outDir/batchId=N` ([[batchKeyedSink]]). One
+    * caveat follows from that replay discipline: a batch REPLAYED after
+    * a crash re-resolves the CURRENT live version, which may be newer
+    * than its first attempt's — the overwrite keeps the output dir
+    * single-version either way, and serving (unlike ingestion) has no
+    * exactly-once obligation to an older index.
     *
     * PQ geometry is never a parameter here: each trigger's
     * `topKPqOf` derives (nSub, subDim) from the bound version's OWN
@@ -438,41 +484,32 @@ object StreamingOps {
       idCol: String, vecCol: String, k: Int, nprobe: Int,
       outDir: String, checkpointDir: String,
       compressed: Boolean = false, shortlist: Int = 0,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.SaveMode
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import graft.operators.IvfStore
     require(!compressed || shortlist >= k,
       s"compressed serving needs shortlist >= k, got (k=$k, shortlist=$shortlist)")
-    queryStream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val v = IvfStore.liveVersion(spark, storeDir).getOrElse(
-          throw new IllegalStateException(
-            s"no published version under $storeDir — bootstrap or reindex before serving"))
-        val served =
-          if (compressed)
-            IvfStore.topKPqOf(spark, storeDir, v, batch, idCol, vecCol, k, nprobe, shortlist)
-          else
-            IvfStore.topKOf(spark, storeDir, v, batch, idCol, vecCol, k, nprobe)
-        served.withColumn("served_version", lit(v))
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batchId=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    batchKeyedSink(queryStream, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val v = IvfStore.liveVersion(spark, storeDir).getOrElse(
+        throw new IllegalStateException(
+          s"no published version under $storeDir — bootstrap or reindex before serving"))
+      val served =
+        if (compressed)
+          IvfStore.topKPqOf(spark, storeDir, v, batch, idCol, vecCol, k, nprobe, shortlist)
+        else
+          IvfStore.topKOf(spark, storeDir, v, batch, idCol, vecCol, k, nprobe)
+      writeBatch(served.withColumn("served_version", lit(v)), outDir, batchId)
+    }
   }
 
   /** The FEEDER for [[nearDupAgainstHistory]]'s history table: maintain
     * the band-key table incrementally as documents stream in. Each
-    * micro-batch's (doc_id, band_key) rows land under a
-    * `batchId=N` subdirectory with overwrite mode — the
-    * FirehoseDelivery idempotence pattern, so checkpoint replays
-    * overwrite their own output instead of duplicating history. The
-    * per-row band keys are [[rowLshBandKeys]] (bit-identical to the
-    * batch `Dedup.lshBands` layout), so a table bootstrapped in batch
-    * and grown by this stream is ONE consistent key space.
+    * micro-batch's (doc_id, band_key) rows land under a `batchId=N`
+    * subdirectory ([[batchKeyedSink]]), so checkpoint replays overwrite
+    * their own output instead of duplicating history. The per-row band
+    * keys are [[rowLshBandKeys]] (bit-identical to the batch
+    * `Dedup.lshBands` layout), so a table bootstrapped in batch and
+    * grown by this stream is ONE consistent key space.
     *
     * Read it back with `spark.read.option("recursiveFileLookup",
     * "true").parquet(tableDir)`. At 100 TB the table is the small
@@ -482,66 +519,40 @@ object StreamingOps {
   def maintainBandTable(stream: DataFrame, idCol: String, textCol: String,
       tableDir: String, checkpointDir: String,
       n: Int = 3, k: Int = 8, rowsPerBand: Int = 2,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.select(col(idCol).as("doc_id"),
-        explode(rowLshBandKeys(col(textCol), n, k, rowsPerBand)).as("band_key"))
-      .writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        b.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$tableDir/batchId=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    batchKeyedSink(stream.select(col(idCol).as("doc_id"),
+        explode(rowLshBandKeys(col(textCol), n, k, rowsPerBand)).as("band_key")),
+      checkpointDir, trigger)(writeBatch(_, tableDir, _))
 
-  /** STREAMING DOMAIN ROUTING (round 17) — the per-micro-batch face
-    * of [[graft.operators.CorpusOps.nbClassify]]: every arriving
-    * document is scored against a FROZEN Naive Bayes model and its
-    * (predicted, score_u, margin_u) row lands under
-    * `outDir/batchId=N` with overwrite (the repo-wide replay
-    * discipline). This is the ingest-time router a 100 TB pipeline
-    * runs INLINE with arrival: domain quotas, quality gates and
-    * language routing act one trigger after the data lands.
+  /** STREAMING DOMAIN ROUTING (round 17) — the per-micro-batch face of
+    * [[graft.operators.CorpusOps.nbClassify]]: every arriving document
+    * is scored against a FROZEN Naive Bayes model and its (predicted,
+    * score_u, margin_u) row lands under `outDir/batchId=N`
+    * ([[batchKeyedSink]]). This is the ingest-time router a 100 TB
+    * pipeline runs INLINE with arrival: domain quotas, quality gates
+    * and language routing act one trigger after the data lands.
     *
     * The model tables are trained and COLLECTED ONCE before start()
-    * (the maintainIvfIndex lesson: otherwise every trigger re-executes
-    * the training lineage) — both are config-sized by construction
-    * (labels x dim log-probs, labels priors) and replay as
-    * LocalRelations per trigger. Stateless; per batch the work is one
+    * ([[collectOnce]]: otherwise every trigger re-executes the training
+    * lineage) — both are config-sized by construction (labels x dim
+    * log-probs, labels priors). Stateless; per batch the work is one
     * batch-local (doc, bucket) count + two broadcast joins + the
     * |labels|-row argmax window.
     */
   def classifyStream(stream: DataFrame, train: DataFrame, idCol: String,
       textCol: String, labelCol: String, outDir: String,
       checkpointDir: String, dim: Int = 64,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.SaveMode
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val (lpDf, priorsDf) = graft.operators.CorpusOps.nbModel(
       train, col(idCol), col(textCol), col(labelCol), dim)
-    val lpRows = lpDf.collect()
-    val lpSchema = lpDf.schema
-    require(lpRows.nonEmpty,
+    val lp = collectOnce(lpDf,
       "classifyStream: the training set produced an empty model — no labeled docs?")
-    val priorRows = priorsDf.collect()
-    val priorSchema = priorsDf.schema
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val lp = spark.createDataFrame(
-          java.util.Arrays.asList(lpRows: _*), lpSchema)
-        val priors = spark.createDataFrame(
-          java.util.Arrays.asList(priorRows: _*), priorSchema)
-        graft.operators.CorpusOps.nbScore(batch, lp, priors,
-            col(idCol), col(textCol), dim)
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batchId=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    val priors = collectOnce(priorsDf, "classifyStream: the training set produced no priors")
+    batchKeyedSink(stream, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      writeBatch(graft.operators.CorpusOps.nbScore(batch, lp(spark), priors(spark),
+        col(idCol), col(textCol), dim), outDir, batchId)
+    }
   }
 
   /** Streaming DSIR scoring (round 18) — the per-micro-batch face of
@@ -549,29 +560,25 @@ object StreamingOps {
     * batch-only gap in the ingest-time curation story: every arriving
     * document is scored against a FROZEN importance-ratio model
     * ([[graft.operators.CorpusOps.dsirModel]] — two distributions
-    * folded into one dim-row (bucket, lr_u) table) and its
-    * (n_grams, dsir_weight_u) row lands under `outDir/batchId=N` with
-    * overwrite (the repo-wide replay discipline). Downstream, the
-    * weights feed the resample/mix steps exactly as the batch
-    * pipeline's do — in integer micro-nats, so stream == batch to the
-    * last bit.
+    * folded into one dim-row (bucket, lr_u) table) and its (n_grams,
+    * dsir_weight_u) row lands under `outDir/batchId=N`
+    * ([[batchKeyedSink]]). Downstream, the weights feed the
+    * resample/mix steps exactly as the batch pipeline's do — in integer
+    * micro-nats, so stream == batch to the last bit.
     *
-    * The model is derived and COLLECTED ONCE before start() (the
-    * classifyStream discipline: otherwise every trigger re-executes
-    * the two corpus-scale gram passes) and replays as a LocalRelation
-    * per trigger. An empty TARGET fails AT SETUP — with add-1
-    * smoothing an all-smoothed model is well-defined but meaningless
-    * (every weight a constant), exactly the silent mis-routing a
-    * fail-fast exists to prevent. Stateless; per batch the work is
-    * one batch-local (doc, bucket) count + one broadcast join + one
-    * per-doc fold.
+    * The model is derived and COLLECTED ONCE before start()
+    * ([[collectOnce]]: otherwise every trigger re-executes the two
+    * corpus-scale gram passes). An empty TARGET fails AT SETUP — with
+    * add-1 smoothing an all-smoothed model is well-defined but
+    * meaningless (every weight a constant), exactly the silent
+    * mis-routing a fail-fast exists to prevent. Stateless; per batch
+    * the work is one batch-local (doc, bucket) count + one broadcast
+    * join + one per-doc fold.
     */
   def dsirScoreStream(stream: DataFrame, raw: DataFrame, target: DataFrame,
       idCol: String, textCol: String, outDir: String,
       checkpointDir: String, dim: Int = 64,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.SaveMode
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(!target
         .filter(col(idCol).isNotNull && col(textCol).isNotNull &&
           col(textCol) =!= "").isEmpty,
@@ -580,64 +587,40 @@ object StreamingOps {
         "pass a non-empty target")
     val lrDf = graft.operators.CorpusOps.dsirModel(
       raw, target, col(idCol), col(textCol), dim)
-    val lrRows = lrDf.collect()
-    val lrSchema = lrDf.schema
-    require(lrRows.nonEmpty,
-      "dsirScoreStream: model derivation produced no rows")
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val lr = spark.createDataFrame(
-          java.util.Arrays.asList(lrRows: _*), lrSchema)
-        graft.operators.CorpusOps.dsirScore(batch, lr,
-            col(idCol), col(textCol), dim)
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batchId=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    val lr = collectOnce(lrDf, "dsirScoreStream: model derivation produced no rows")
+    batchKeyedSink(stream, checkpointDir, trigger) { (batch, batchId) =>
+      writeBatch(graft.operators.CorpusOps.dsirScore(batch, lr(batch.sparkSession),
+        col(idCol), col(textCol), dim), outDir, batchId)
+    }
   }
 
   /** Streaming DATA-QUALITY MONITOR — the per-micro-batch face of
     * [[graft.operators.Profiler]]: every arriving batch is profiled
     * (per-column totals/nulls/exact distincts/bounds) and the report
-    * lands under `outDir/batchId=N` with overwrite — the idempotence
-    * pattern every sink here uses, so a replayed batch re-profiles
-    * identically. This is the ingest gate a 100 TB lake runs INLINE
-    * with arrival: a null-rate or cardinality anomaly is visible one
-    * trigger after the bad data lands, not at the next nightly sweep.
-    * Stateless (profiles are per-batch aggregations; cross-batch
-    * trending is a batch query over the batchId-partitioned reports).
+    * lands under `outDir/batchId=N` ([[batchKeyedSink]]), so a replayed
+    * batch re-profiles identically. This is the ingest gate a 100 TB
+    * lake runs INLINE with arrival: a null-rate or cardinality anomaly
+    * is visible one trigger after the bad data lands, not at the next
+    * nightly sweep. Stateless (profiles are per-batch aggregations;
+    * cross-batch trending is a batch query over the batchId-partitioned
+    * reports).
     */
   def profileStream(stream: DataFrame, cols: Seq[String], outDir: String,
       checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch.persist()
-          try graft.operators.Profiler.profile(batch, cols)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$outDir/batchId=$batchId")
-          finally batch.unpersist()
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    batchKeyedSink(stream, checkpointDir, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        writeBatch(graft.operators.Profiler.profile(batch, cols), outDir, batchId)
+    }
 
   /** Streaming CDC — the per-micro-batch face of
     * [[graft.operators.ChangeCapture.snapshotDiff]]: each arriving
     * batch of upsert rows is diffed against a STATIC baseline and the
-    * I/U changes land under `outDir/batchId=N` with overwrite — the
-    * idempotence pattern every sink here uses, so a replayed batch
-    * re-diffs identically. The baseline is scoped to the batch's keys
-    * first (one left-semi join), so per-batch cost follows the BATCH
-    * size, never the baseline size — at 100 TB the baseline is the
-    * big side and only the touched keys' rows join.
+    * I/U changes land under `outDir/batchId=N` ([[batchKeyedSink]]), so
+    * a replayed batch re-diffs identically. The baseline is scoped to
+    * the batch's keys first (one left-semi join), so per-batch cost
+    * follows the BATCH size, never the baseline size — at 100 TB the
+    * baseline is the big side and only the touched keys' rows join.
     *
     * Semantics: a PLAIN upsert stream (deleteCol = None) observes
     * presence, not absence — every old-side key is by construction in
@@ -656,72 +639,53 @@ object StreamingOps {
   def diffStream(upserts: DataFrame, baseline: DataFrame,
       keyCols: Seq[String], compareCols: Seq[String],
       outDir: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+      trigger: Trigger = Trigger.AvailableNow(),
       deleteCol: Option[String] = None,
-      orderCols: Seq[String] = Nil): org.apache.spark.sql.streaming.StreamingQuery =
-    upserts.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch.persist()
-          try {
-            val diff = deleteCol match {
-              case Some(d) =>
-                // tombstoneDiff scopes the baseline internally (two
-                // left-semi joins on the batch's keys); orderCols
-                // compacts a multi-change-per-key batch to its last
-                // write first (Debezium/compacted-topic cadence)
-                graft.operators.ChangeCapture
-                  .tombstoneDiff(batch, baseline, keyCols, compareCols, d, orderCols)
-              case None =>
-                val touched = batch.select(keyCols.map(col): _*).distinct()
-                val scoped = baseline.join(touched, keyCols, "left_semi")
-                graft.operators.ChangeCapture
-                  .snapshotDiff(scoped, batch, keyCols, compareCols)
-            }
-            diff.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$outDir/batchId=$batchId")
-          } finally batch.unpersist()
+      orderCols: Seq[String] = Nil): StreamingQuery =
+    batchKeyedSink(upserts, checkpointDir, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val diff = deleteCol match {
+          case Some(d) =>
+            // tombstoneDiff scopes the baseline internally (two
+            // left-semi joins on the batch's keys); orderCols
+            // compacts a multi-change-per-key batch to its last
+            // write first (Debezium/compacted-topic cadence)
+            graft.operators.ChangeCapture
+              .tombstoneDiff(batch, baseline, keyCols, compareCols, d, orderCols)
+          case None =>
+            val touched = batch.select(keyCols.map(col): _*).distinct()
+            val scoped = baseline.join(touched, keyCols, "left_semi")
+            graft.operators.ChangeCapture
+              .snapshotDiff(scoped, batch, keyCols, compareCols)
         }
-        ()
+        writeBatch(diff, outDir, batchId)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    }
 
-  /** Streaming DISTRIBUTION-DRIFT MONITOR — the per-micro-batch face
-    * of [[graft.operators.Profiler.psiAgainst]]: the baseline's
+  /** Streaming DISTRIBUTION-DRIFT MONITOR — the per-micro-batch face of
+    * [[graft.operators.Profiler.psiAgainst]]: the baseline's
     * config-sized [[graft.operators.Profiler.PsiBaseline]] summary is
-    * computed ONCE before the stream starts, then every arriving
-    * batch is scored in one narrow pass (literal bin chain +
+    * computed ONCE before the stream starts, then every arriving batch
+    * is scored in one narrow pass (literal bin chain +
     * map-side-combined counts — the baseline never re-reads) and its
-    * per-bin micro-PSI report lands under `outDir/batchId=N` with
-    * overwrite, the idempotence pattern every sink here uses. This is
-    * the "is today's feed still distributed like the training data"
-    * gate running INLINE with ingest: a drifted batch is visible one
-    * trigger after it lands. Stateless; empty batches are skipped
-    * (PSI over zero rows is undefined).
+    * per-bin micro-PSI report lands under `outDir/batchId=N`
+    * ([[batchKeyedSink]]). This is the "is today's feed still
+    * distributed like the training data" gate running INLINE with
+    * ingest: a drifted batch is visible one trigger after it lands.
+    * Stateless; empty batches are skipped (PSI over zero rows is
+    * undefined).
     */
   def driftStream(stream: DataFrame, baseline: DataFrame, valueCol: String,
       outDir: String, checkpointDir: String, nBins: Int = 8,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val pb = graft.operators.Profiler.psiBaseline(baseline, col(valueCol), nBins)
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        // all-null batches carry no measurable rows: proportions (and
-        // PSI) are undefined, so they skip like empty ones
-        try if (!batch.filter(col(valueCol).isNotNull).isEmpty)
-          graft.operators.Profiler.psiAgainst(pb, batch, col(valueCol))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$outDir/batchId=$batchId")
-        finally batch.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    batchKeyedSink(stream, checkpointDir, trigger) { (batch, batchId) =>
+      // all-null batches carry no measurable rows: proportions (and
+      // PSI) are undefined, so they skip like empty ones
+      if (!batch.filter(col(valueCol).isNotNull).isEmpty)
+        writeBatch(graft.operators.Profiler.psiAgainst(pb, batch, col(valueCol)),
+          outDir, batchId)
+    }
   }
 
   /** Streaming ENTITY CANONICALIZATION — the per-micro-batch face of
@@ -729,47 +693,35 @@ object StreamingOps {
     * dirty values is matched to its nearest catalog entry (within the
     * distance budget; deterministic (dist, value) tie-break; unmatched
     * kept with nulls) and the linked batch lands under
-    * `outDir/batchId=N` with overwrite — the idempotence pattern every
-    * sink here uses. This is inline ingest cleansing: records are
-    * canonicalized one trigger after arrival instead of by a nightly
-    * sweep. The catalog is STATIC per stream (the common deployment;
-    * restart the stream to pick up a new catalog) and per-batch cost
-    * follows the batch's distinct values x the catalog's adjacent
-    * length buckets — the batch operator's own blocked equi-join
-    * shape, never all-pairs. Stateless.
+    * `outDir/batchId=N` ([[batchKeyedSink]]). This is inline ingest
+    * cleansing: records are canonicalized one trigger after arrival
+    * instead of by a nightly sweep. The catalog is STATIC per stream
+    * (the common deployment; restart the stream to pick up a new
+    * catalog) and per-batch cost follows the batch's distinct values x
+    * the catalog's adjacent length buckets — the batch operator's own
+    * blocked equi-join shape, never all-pairs. Stateless.
     */
   def linkStream(stream: DataFrame, catalog: DataFrame, dirtyCol: String,
       catalogCol: String, maxDist: Int, outDir: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     // pin the static side once for the stream's lifetime — without
     // this, every trigger would re-run the catalog's full lineage
     val cat = catalog.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch.persist()
-          try graft.operators.Linkage
-            .linkBest(batch, cat, dirtyCol, catalogCol, maxDist)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$outDir/batchId=$batchId")
-          finally batch.unpersist()
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    batchKeyedSink(stream, checkpointDir, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        writeBatch(graft.operators.Linkage
+          .linkBest(batch, cat, dirtyCol, catalogCol, maxDist), outDir, batchId)
+    }
   }
 
   /** Streaming POINT-IN-TIME ENRICHMENT — the per-micro-batch face of
-    * [[graft.operators.Temporal.pitJoin]]: each arriving fact batch
-    * is joined to the dimension version valid AT EACH FACT'S OWN
-    * EVENT TIME against a static SCD2 history, and the enriched rows
-    * land under `outDir/batchId=N` with overwrite (the idempotence
-    * pattern every sink here uses). This is the leak-proof feature
-    * join running INLINE with ingest — late-arriving facts still get
-    * the version that was true at their timestamp, never today's.
+    * [[graft.operators.Temporal.pitJoin]]: each arriving fact batch is
+    * joined to the dimension version valid AT EACH FACT'S OWN EVENT
+    * TIME against a static SCD2 history, and the enriched rows land
+    * under `outDir/batchId=N` ([[batchKeyedSink]]). This is the
+    * leak-proof feature join running INLINE with ingest — late-arriving
+    * facts still get the version that was true at their timestamp,
+    * never today's.
     *
     * The history is scoped to the batch's keys FIRST (one left-semi
     * join), so per-trigger cost follows the BATCH, never the history
@@ -782,28 +734,17 @@ object StreamingOps {
   def pitStream(facts: DataFrame, history: DataFrame, keyCols: Seq[String],
       factTsCol: String, attrCols: Seq[String],
       outDir: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     // pin the static side once for the stream's lifetime
     val hist = history.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    facts.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch.persist()
-          try {
-            val scoped = hist.join(
-              batch.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
-            graft.operators.Temporal
-              .pitJoin(batch, scoped, keyCols, factTsCol, attrCols)
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$outDir/batchId=$batchId")
-          } finally batch.unpersist()
-        }
-        ()
+    batchKeyedSink(facts, checkpointDir, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val scoped = hist.join(
+          batch.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
+        writeBatch(graft.operators.Temporal
+          .pitJoin(batch, scoped, keyCols, factTsCol, attrCols), outDir, batchId)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    }
   }
 
   /** Streaming MATERIALIZED-VIEW MAINTENANCE — the per-micro-batch
@@ -811,14 +752,22 @@ object StreamingOps {
     * changelog stream (snapshotDiff-shaped rows — change_type plus
     * old_/new_ images, e.g. [[diffStream]] output) folds into a
     * running grouped aggregate kept as VERSIONED parquet under
-    * `mvDir/v=N`. The base aggregate is materialized as v=0 before
-    * the stream starts; batch b reads exactly v=b, applies the batch's
+    * `mvDir/v=N`, each version published marker-last at
+    * `mvDir/_published/v-N` ([[VersionedDir]]). The base aggregate is
+    * materialized and published as v=0 before the stream starts;
+    * batch b reads exactly v=b, applies the batch's
     * retractions/additions (one union-fed hash aggregation — no join,
-    * no fact rescan), and overwrites v=b+1. Versioning by batchId is
-    * what makes checkpoint replay exactly-once: a replayed batch
-    * re-reads its input version (still on disk) and re-overwrites its
-    * output version, landing the identical aggregate. Versions older
-    * than the replay horizon (b-1) are pruned.
+    * no fact rescan), writes v=b+1 and publishes it. Versioning by
+    * batchId is what makes checkpoint replay exactly-once: a batch
+    * replayed after its sink ran but before its commit finds v=b+1
+    * already published and skips the rewrite (published versions are
+    * immutable — a reader may be scanning it); one that crashed
+    * mid-write finds no marker and re-overwrites its output from its
+    * input version (still on disk). Versions older than the replay
+    * horizon (b-1) are pruned, marker first. A crash or a racing
+    * trigger can leave a half-written `v=N` directory, but never a
+    * published one, and [[readLatestMv]] reads published versions
+    * only.
     *
     * At 100 TB this is the nightly-MV refresh run CONTINUOUSLY: per
     * trigger the work is |MV| + 2|batch| — the facts are never
@@ -828,53 +777,46 @@ object StreamingOps {
   def maintainAggStream(changelog: DataFrame, baseAgg: DataFrame,
       groupCols: Seq[String], measureCols: Seq[String],
       mvDir: String, checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val spark = changelog.sparkSession
-    val mvPath = new org.apache.hadoop.fs.Path(mvDir)
-    val fs = mvPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mv = mvVersions(spark, mvDir)
+    def version(v: Long) = s"$mvDir/v=$v"
     // materialize the base ONLY on a genuinely fresh MV: after batch 1
     // prunes v=0, a restarted stream still has its later versions — a
     // v=0-only check would re-run the base aggregate's full fact scan
-    // (the cost this operator exists to avoid) into an orphaned v=0
-    val hasVersions = fs.exists(mvPath) &&
-      fs.listStatus(mvPath).exists(_.getPath.getName.startsWith("v="))
-    if (!hasVersions)
-      baseAgg.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$mvDir/v=0")
-    changelog.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          val cur = spark.read.parquet(s"$mvDir/v=$batchId")
-          graft.operators.ChangeCapture
-            .maintainAgg(cur, batch, groupCols, measureCols)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$mvDir/v=${batchId + 1}")
-          // replay can only revisit THIS batch: b-1 and older inputs
-          // are committed, their versions unreachable — prune them
-          if (batchId >= 1)
-            fs.delete(new org.apache.hadoop.fs.Path(s"$mvDir/v=${batchId - 1}"), true)
-        } finally batch.unpersist()
-        ()
+    // (the cost this operator exists to avoid) into an orphaned v=0.
+    // Published versions, not directories: a crash can leave an
+    // unpublished v=0 that no batch could read.
+    if (mv.published.isEmpty) {
+      baseAgg.write.mode(SaveMode.Overwrite).parquet(version(0))
+      mv.publish(0)
+    }
+    batchKeyedSink(changelog, checkpointDir, trigger) { (batch, batchId) =>
+      if (!mv.published.contains(batchId + 1)) {
+        graft.operators.ChangeCapture
+          .maintainAgg(spark.read.parquet(version(batchId)), batch, groupCols, measureCols)
+          .write.mode(SaveMode.Overwrite).parquet(version(batchId + 1))
+        mv.publish(batchId + 1)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      // replay can only revisit THIS batch: b-1 and older inputs
+      // are committed, their versions unreachable — prune them
+      mv.prune(batchId, version)
+    }
   }
 
-  /** The current view of a [[maintainAggStream]] MV: the
-    * highest-numbered `v=N` directory under `mvDir`.
+  private def mvVersions(spark: SparkSession, mvDir: String): VersionedDir =
+    new VersionedDir(spark, s"$mvDir/_published")
+
+  /** The current view of a [[maintainAggStream]] MV: its highest
+    * PUBLISHED version. A half-written `v=N` directory (a crash, or a
+    * trigger still writing) has no marker and is never read. MV
+    * directories written before versions carried markers have none
+    * and fail here.
     */
-  def readLatestMv(spark: org.apache.spark.sql.SparkSession, mvDir: String): DataFrame = {
-    val mvPath = new org.apache.hadoop.fs.Path(mvDir)
-    val fs = mvPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(mvPath), s"MV directory $mvDir does not exist")
-    val versions = fs.listStatus(mvPath)
-      .map(_.getPath.getName).filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toLong)
-    require(versions.nonEmpty, s"no v=N versions under $mvDir — not a maintainAggStream dir")
-    spark.read.parquet(s"$mvDir/v=${versions.max}")
+  def readLatestMv(spark: SparkSession, mvDir: String): DataFrame = {
+    val v = mvVersions(spark, mvDir).live.getOrElse(throw new IllegalArgumentException(
+      s"no published version under $mvDir — not a maintainAggStream dir"))
+    spark.read.parquet(s"$mvDir/v=$v")
   }
 
   /** Micro-batch HYBRID RETRIEVAL SERVING — the streaming face of the
@@ -882,11 +824,10 @@ object StreamingOps {
     * sparse (per-query BM25 more-like-this) + dense (cosine over the
     * query ids' embeddings) + reciprocal-rank-fusion pipeline against
     * STATIC corpus tables, and lands its fused top-k under
-    * `outDir/batchId=N` with overwrite — the FirehoseDelivery
-    * idempotence pattern, so checkpoint replays re-serve rather than
-    * duplicate. The query stream carries (id, text); the dense side
-    * resolves each query's embedding from the static embeddings table
-    * by id (a serving-size broadcast join).
+    * `outDir/batchId=N` ([[batchKeyedSink]]), so checkpoint replays
+    * re-serve rather than duplicate. The query stream carries (id,
+    * text); the dense side resolves each query's embedding from the
+    * static embeddings table by id (a serving-size broadcast join).
     *
     * Scale: stateless — corpus statistics and scores are recomputed
     * per batch from the static tables (cache/persist them in a real
@@ -902,31 +843,22 @@ object StreamingOps {
       idCol: String = "doc_id", textCol: String = "text",
       vecIdCol: String = "vec_id", vecCol: String = "embedding",
       perRanker: Int = 10, topK: Int = 5,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import graft.operators.{Similarity, TextAnalysis}
-    queryStream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val q = batch.select(col(idCol), col(textCol)).persist()
-          try {
-            val sparse = TextAnalysis.bm25Retrieve(docs, q, idCol, textCol, perRanker)
-              .select(col("query_id"), col("neighbor_id"), col("rank"))
-            val qVecs = embeddings.join(
-              broadcast(q.select(col(idCol).as(vecIdCol))), vecIdCol)
-            val dense = Similarity.bruteForceTopK(embeddings, qVecs,
-                vecIdCol, vecCol, perRanker)
-              .select(col("query_id"), col("neighbor_id"), col("rank"))
-            Similarity.reciprocalRankFusion(Seq(sparse, dense), k = 60, topK = topK)
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(s"$outDir/batchId=$batchId")
-          } finally q.unpersist()
-        }
-        ()
+    batchKeyedSink(queryStream, checkpointDir, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val q = batch.select(col(idCol), col(textCol))
+        val sparse = TextAnalysis.bm25Retrieve(docs, q, idCol, textCol, perRanker)
+          .select(col("query_id"), col("neighbor_id"), col("rank"))
+        val qVecs = embeddings.join(
+          broadcast(q.select(col(idCol).as(vecIdCol))), vecIdCol)
+        val dense = Similarity.bruteForceTopK(embeddings, qVecs,
+            vecIdCol, vecCol, perRanker)
+          .select(col("query_id"), col("neighbor_id"), col("rank"))
+        writeBatch(Similarity.reciprocalRankFusion(Seq(sparse, dense), k = 60, topK = topK),
+          outDir, batchId)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    }
   }
 
   /** Compaction for [[maintainBandTable]]/[[screenAndMaintain]]'s
@@ -948,24 +880,26 @@ object StreamingOps {
     * default of 1) would serialize the compaction this verb exists
     * to make cheap.
     */
-  def compactBandTable(spark: org.apache.spark.sql.SparkSession,
-      tableDir: String, outDir: String, writerTasks: Int = 0): Long = {
-    val t = spark.read.parquet(tableDir)
-      .select(col("doc_id"), col("band_key"), col("batchId"))
-    t.repartition(compactTasks(spark, writerTasks), col("batchId"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("batchId").parquet(outDir)
-    spark.read.parquet(outDir).count()
-  }
+  def compactBandTable(spark: SparkSession,
+      tableDir: String, outDir: String, writerTasks: Int = 0): Long =
+    compact(spark.read.parquet(tableDir)
+      .select(col("doc_id"), col("band_key"), col("batchId")), outDir, writerTasks, "batchId")
 
-  /** Shared knob resolution for the compaction verbs: 0 means "the
-    * context's defaultParallelism" — proportional to the host, never
-    * a silent single-task rewrite.
+  /** The one body of the compaction verbs: hash `t` by its partition
+    * columns into `writerTasks` writer tasks (0 means "the context's
+    * defaultParallelism" — proportional to the host, never a silent
+    * single-task rewrite), overwrite `outDir` partitioned the same
+    * way, and return the row count written.
     */
-  private def compactTasks(spark: org.apache.spark.sql.SparkSession,
-      writerTasks: Int): Int = {
+  private def compact(t: DataFrame, outDir: String, writerTasks: Int,
+      partCols: String*): Long = {
     require(writerTasks >= 0, s"writerTasks must be >= 0, got $writerTasks")
-    if (writerTasks == 0) spark.sparkContext.defaultParallelism else writerTasks
+    val spark = t.sparkSession
+    val tasks = if (writerTasks == 0) spark.sparkContext.defaultParallelism else writerTasks
+    t.repartition(tasks, partCols.map(col): _*)
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy(partCols: _*).parquet(outDir)
+    spark.read.parquet(outDir).count()
   }
 
   /** Shared centroid gather for the IVF streaming verbs: k rows of
@@ -1011,16 +945,11 @@ object StreamingOps {
     * per-directory file cap — see [[compactBandTable]]: hashing by
     * the partition key keeps every directory at exactly one file.
     */
-  def compactCurationHistory(spark: org.apache.spark.sql.SparkSession,
+  def compactCurationHistory(spark: SparkSession,
       stateDir: String, outDir: String, writerTasks: Int = 0): (Long, Long) = {
-    def compact(sub: String): Long = {
-      val t = spark.read.parquet(s"$stateDir/$sub") // discovers batchId
-      t.repartition(compactTasks(spark, writerTasks), col("batchId"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("batchId").parquet(s"$outDir/$sub")
-      spark.read.parquet(s"$outDir/$sub").count()
-    }
-    (compact("md5"), compact("bands"))
+    def table(sub: String): Long = // the read discovers batchId
+      compact(spark.read.parquet(s"$stateDir/$sub"), s"$outDir/$sub", writerTasks, "batchId")
+    (table("md5"), table("bands"))
   }
 
   /** Compaction for [[maintainIvfIndex]]'s cell-partitioned store —
@@ -1043,14 +972,10 @@ object StreamingOps {
     * streaming restarts, like [[compactBandTable]]. Returns the row
     * count written so callers can assert the rewrite lost nothing.
     */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, outDir: String, writerTasks: Int = 0): Long = {
-    val t = spark.read.parquet(indexDir) // discovers batchId + cell partitions
-    t.repartition(compactTasks(spark, writerTasks), col("batchId"), col("cell"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("batchId", "cell").parquet(outDir)
-    spark.read.parquet(outDir).count()
-  }
+  def compactIvfIndex(spark: SparkSession,
+      indexDir: String, outDir: String, writerTasks: Int = 0): Long =
+    // the read discovers the batchId + cell partitions
+    compact(spark.read.parquet(indexDir), outDir, writerTasks, "batchId", "cell")
 
   /** The full incremental-LSH loop in ONE streaming query: each
     * micro-batch (1) screens its documents against the band table AS
@@ -1060,13 +985,13 @@ object StreamingOps {
     * against everything that arrived before it, with no full-corpus
     * recompute, ever.
     *
-    * Replay safety: both writes are batchId-keyed overwrites, and the
+    * Replay safety: both writes are [[writeBatch]] overwrites, and the
     * screen reads the table THROUGH its batchId partition column with
     * `batchId < N` — a replayed batch N therefore screens against
     * exactly the same history as the first attempt (its own half-
     * written keys from the failed run are filtered out, not
-    * self-collided with). Within-batch pairs are not reported, per
-    * the [[nearDupAgainstHistory]] contract.
+    * self-collided with). Within-batch pairs are not reported, per the
+    * [[nearDupAgainstHistory]] contract.
     *
     * Scale: the screen is a stateless band-key equi-join per batch —
     * the stream side shuffles (id, band_key) only; the table side is
@@ -1077,38 +1002,16 @@ object StreamingOps {
   def screenAndMaintain(stream: DataFrame, idCol: String, textCol: String,
       tableDir: String, pairsDir: String, checkpointDir: String,
       n: Int = 3, k: Int = 8, rowsPerBand: Int = 2,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.SaveMode
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        batch.persist()
-        try {
-          val history =
-            try spark.read.parquet(tableDir)
-              .filter(col("batchId") < batchId)
-              .select(col("doc_id"), col("band_key"))
-            catch {
-              case _: org.apache.spark.sql.AnalysisException => // first batch: no table yet
-                spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  StructType(Seq(StructField("doc_id", LongType),
-                    StructField("band_key", StringType))))
-            }
-          nearDupAgainstHistory(batch, history, idCol, textCol, "doc_id",
-              n, k, rowsPerBand)
-            .write.mode(SaveMode.Overwrite).parquet(s"$pairsDir/batchId=$batchId")
-          batch.select(col(idCol).as("doc_id"),
-              explode(rowLshBandKeys(col(textCol), n, k, rowsPerBand)).as("band_key"))
-            .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/batchId=$batchId")
-        } finally batch.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    batchKeyedSink(stream, checkpointDir, trigger) { (batch, batchId) =>
+      val history = batchesBefore(batch.sparkSession, tableDir, batchId,
+        "doc_id" -> LongType, "band_key" -> StringType)
+      writeBatch(nearDupAgainstHistory(batch, history, idCol, textCol, "doc_id",
+        n, k, rowsPerBand), pairsDir, batchId)
+      writeBatch(batch.select(col(idCol).as("doc_id"),
+          explode(rowLshBandKeys(col(textCol), n, k, rowsPerBand)).as("band_key")),
+        tableDir, batchId)
+    }
   }
 
   /** The STREAMING serving form of
@@ -1162,12 +1065,12 @@ object StreamingOps {
     * per doc, not a retroactive split over data it already shipped.
     *
     * Replay safety, same discipline as [[screenAndMaintain]]: every
-    * write (dispositions under `outDir/batchId=N`, accepted md5s
-    * under `stateDir/md5/batchId=N`, accepted band keys under
-    * `stateDir/bands/batchId=N`) is a batchId-keyed overwrite, and
-    * history reads filter `batchId < N` through the partition
-    * column — a replayed batch screens against exactly the history
-    * its first attempt saw.
+    * write (dispositions under `outDir/batchId=N`, accepted md5s under
+    * `stateDir/md5/batchId=N`, accepted band keys under
+    * `stateDir/bands/batchId=N`) is a [[writeBatch]] overwrite, and
+    * history reads filter `batchId < N` through the partition column —
+    * a replayed batch screens against exactly the history its first
+    * attempt saw.
     *
     * Scale: quality + md5 are narrow per-row work in the batch scan;
     * the only shuffles are the within-batch keeper window (keyed by
@@ -1211,18 +1114,10 @@ object StreamingOps {
       evalDir: Option[String] = None,
       gopher: Option[graft.operators.TextAnalysis.GopherGate] = None,
       c4: Option[graft.operators.TextAnalysis.C4Policy] = None,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.SaveMode
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(evalDocs.isEmpty || evalDir.isEmpty,
       "pass evalDocs (static benchmark set, collected once) OR evalDir " +
         "(version-keyed churning set, read per trigger) — not both")
-    def emptyDf(spark: org.apache.spark.sql.SparkSession,
-        fields: (String, org.apache.spark.sql.types.DataType)*) =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(fields.map { case (f, t) => StructField(f, t) }))
     // The decontamination gate's static half, built ONCE before
     // start(): collected eval gram hashes (bounded by contract — the
     // benchmark set is small) + a bloom over them, broadcast to every
@@ -1251,182 +1146,167 @@ object StreamingOps {
         Seq("n_lines", "kept_lines", "has_lorem", "has_brace", "has_badword")
       else Seq.empty
     val audit: Seq[String] = c4Audit ++ gopherAudit
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // C4 PRE-CLEAN stage (round 18): the cleaner runs FIRST, per
-        // the batch spine's ordering argument — the quality stage
-        // scores the text the stream would actually ship, and every
-        // downstream key (md5, band keys) is computed on the CLEANED
-        // text, so a page that near-dups an accepted page only after
-        // boilerplate removal is still caught. Dropped pages land the
-        // `boilerplate` disposition (null quality — they are never
-        // scored); null-id/text rows bypass the cleaner and fall
-        // through to the quality stage's explicit low_quality reject,
-        // exactly as without the leg. Per-batch-local and stateless:
-        // replay determinism untouched.
-        val (srcBatch, c4State) = c4 match {
-          case None => (batch, None)
-          case Some(p) =>
-            val cleaned = graft.operators.TextAnalysis
-              .c4Clean(batch, col(idCol), col(textCol), p)
-            cleaned.persist()
-            val surv = cleaned.filter(col("keep") === 1)
-              .select(col("doc_id").as(idCol),
-                translate(col("clean_text"), "\n", " ").as(textCol),
-                col("n_lines"), col("kept_lines"), col("has_lorem"),
-                col("has_brace"), col("has_badword"))
-            val nullRows = batch
-              .filter(col(idCol).isNull || col(textCol).isNull)
-              .select(Seq(col(idCol), col(textCol)) ++ c4Audit.map(f =>
-                lit(null).cast(if (f.startsWith("has_")) "int" else "long")
-                  .as(f)): _*)
-            val boiler = cleaned.filter(col("keep") === 0)
-              .select(Seq(col("doc_id"),
-                lit(null).cast("double").as("quality")) ++
-                c4Audit.map(col) ++ gopherAudit.map(f =>
-                  lit(null).cast(
-                    if (f == "n_words" || f == "stop_hits") "long"
-                    else "double").as(f)) :+
-                lit("boilerplate").as("disposition"): _*)
-            (surv.unionByName(nullRows), Some((cleaned, boiler)))
-        }
-        val scored0 = srcBatch.select(Seq(col(idCol).as("doc_id"),
-          col(textCol).as("text"),
-          graft.operators.TextAnalysis.qualityColumn(textCol).as("quality")) ++
-          c4Audit.map(col): _*)
-        val scored = gopher match {
-          case None =>
-            scored0.withColumn("_pass",
-              col("quality").isNotNull && col("quality") >= qualityMin)
-          case Some(g) =>
-            scored0.join(
-              graft.operators.TextAnalysis
-                .gopherQualityGate(srcBatch, col(idCol), col(textCol), g)
-                .select(col("doc_id"), col("n_words"), col("mean_word_len"),
-                  col("stop_hits"), col("top2_frac"), col("keep")),
-              Seq("doc_id"), "left")
-              .withColumn("_pass", coalesce(col("keep"), lit(false)))
-        }
-        scored.persist()
-        def out(df: DataFrame, disp: String): DataFrame =
-          df.select(Seq(col("doc_id"), col("quality")) ++ audit.map(col) :+
-            lit(disp).as("disposition"): _*)
-        var gateCache: Option[DataFrame] = None
-        try {
-          val lowQ = out(scored.filter(!col("_pass")), "low_quality")
-          // keeper via groupBy(min) + join back, not a window — the
-          // CorpusOps.curationPipeline skew rationale (one row per
-          // distinct text through the shuffle, AQE-splittable join)
-          val withMd5 = scored.filter(col("_pass"))
-            .withColumn("_md5", md5(encode(col("text"), "UTF-8")))
-          val pass = withMd5.join(
-            withMd5.groupBy(col("_md5")).agg(min(col("doc_id")).as("_keeper")),
-            Seq("_md5"))
-          val histMd5 =
-            try spark.read.parquet(s"$stateDir/md5")
-              .filter(col("batchId") < batchId).select(col("_md5"))
-            catch { case _: org.apache.spark.sql.AnalysisException =>
-              emptyDf(spark, "_md5" -> StringType) }
-          val keepers = pass.filter(col("doc_id") === col("_keeper"))
-          val freshMd5 = keepers.join(histMd5, Seq("_md5"), "left_anti")
-          val exactDup = out(pass.filter(col("doc_id") =!= col("_keeper"))
-            .unionByName(keepers.join(histMd5, Seq("_md5"), "left_semi")),
-            "exact_dup")
-          // decontamination gate. With evalDocs (static set): bloom
-          // probe in the batch's scan stage, exact confirm on the
-          // survivors — byte-identical to the pure exact gate, per
-          // q99. With evalDir (CHURNING set): the version-keyed gram
-          // table is read per trigger through `version <= batchId` —
-          // the accepted-history read discipline, so a replayed batch
-          // gates against exactly the versions its first attempt saw —
-          // and the batch's grams broadcast-semi-join it directly (the
-          // table is config-sized by the same contract that lets the
-          // static path collect it; a per-trigger bloom build would
-          // just repeat the broadcast's hash table on the driver).
-          def contamSplit(contamIds: DataFrame) =
-            (Some(out(freshMd5.join(contamIds, Seq("doc_id"), "left_semi"),
-              "contaminated")),
-              freshMd5.join(contamIds, Seq("doc_id"), "left_anti"),
-              Some(contamIds))
-          def batchGramHashes = freshMd5
-            .select(col("doc_id"), explode(array_distinct(
-              graft.functions.shingles.wordShingles(col("text"), evalN))).as("_g"))
-            .select(col("doc_id"), graft.operators.Dedup.hash48(col("_g")).as("_h"))
-          val (contaminated, cleanFresh, gateCache0) = (evalGate, evalDir) match {
-            case (Some((bfBc, hashes)), _) =>
-              import spark.implicits._
-              val mightContain = udf((h: Long) => bfBc.value.mightContainLong(h))
-              val evalSet = hashes.toSeq.toDF("_h") // LocalRelation, rebuilt free
-              // persisted per batch: the id set feeds the semi branch,
-              // the anti branch, AND every downstream consumer of
-              // cleanFresh (near-dup screen, kept, history writes) —
-              // without the cache the batch-gram explode re-runs per
-              // sink action. Unpersisted in the finally below.
-              contamSplit(batchGramHashes
-                .filter(mightContain(col("_h")))
-                .join(broadcast(evalSet), Seq("_h"), "left_semi")
-                .select(col("doc_id")).distinct()
-                .persist())
-            case (None, Some(dir)) =>
-              // versions above the current batchId are INACTIVE: a
-              // publisher stands up version V ahead of time and it
-              // first gates batch V — so the active set is a pure
-              // function of batchId and replay is deterministic as
-              // long as versions are published monotonically (never
-              // publish V once batch V has committed). Only MARKED
-              // versions are read (publishEvalGrams creates the
-              // marker after the gram files are complete), so a
-              // half-written publish is invisible; the explicit
-              // schema skips footer inference, so an unmarked partial
-              // directory is never even opened.
-              val active = publishedEvalVersions(spark, dir).filter(_ <= batchId)
-              val evalSet =
-                if (active.isEmpty) emptyDf(spark, "_h" -> LongType) // gate open
-                else spark.read.schema("_h BIGINT, version BIGINT").parquet(dir)
-                  .filter(col("version").isin(active: _*)).select(col("_h"))
-              contamSplit(batchGramHashes
-                .join(broadcast(evalSet), Seq("_h"), "left_semi")
-                .select(col("doc_id")).distinct()
-                .persist())
-            case (None, None) => (None, freshMd5, None)
-          }
-          gateCache = gateCache0
-          val histBands =
-            try spark.read.parquet(s"$stateDir/bands")
-              .filter(col("batchId") < batchId)
-              .select(col("doc_id"), col("band_key"))
-            catch { case _: org.apache.spark.sql.AnalysisException =>
-              emptyDf(spark, "doc_id" -> LongType, "band_key" -> StringType) }
-          val collided = nearDupAgainstHistory(cleanFresh, histBands,
-              "doc_id", "text", "doc_id", n, k, rowsPerBand)
-            .select(col("new_id").as("doc_id")).distinct()
-          val nearDup = out(
-            cleanFresh.join(collided, Seq("doc_id"), "left_semi"), "near_dup")
-          val kept = cleanFresh.join(collided, Seq("doc_id"), "left_anti")
-          kept.persist()
-          try {
-            (contaminated.toSeq ++ c4State.map(_._2))
-              .foldLeft(lowQ.unionByName(exactDup))(_ unionByName _)
-              .unionByName(nearDup)
-              .unionByName(out(kept, "kept"))
-              .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batchId=$batchId")
-            kept.select(col("_md5"))
-              .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/md5/batchId=$batchId")
-            kept.select(col("doc_id"),
-                explode(rowLshBandKeys(col("text"), n, k, rowsPerBand)).as("band_key"))
-              .write.mode(SaveMode.Overwrite).parquet(s"$stateDir/bands/batchId=$batchId")
-          } finally kept.unpersist()
-        } finally {
-          scored.unpersist()
-          gateCache.foreach(_.unpersist())
-          c4State.foreach(_._1.unpersist())
-        }
-        ()
+    batchKeyedSink(stream, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // C4 PRE-CLEAN stage (round 18): the cleaner runs FIRST, per
+      // the batch spine's ordering argument — the quality stage
+      // scores the text the stream would actually ship, and every
+      // downstream key (md5, band keys) is computed on the CLEANED
+      // text, so a page that near-dups an accepted page only after
+      // boilerplate removal is still caught. Dropped pages land the
+      // `boilerplate` disposition (null quality — they are never
+      // scored); null-id/text rows bypass the cleaner and fall
+      // through to the quality stage's explicit low_quality reject,
+      // exactly as without the leg. Per-batch-local and stateless:
+      // replay determinism untouched.
+      val (srcBatch, c4State) = c4 match {
+        case None => (batch, None)
+        case Some(p) =>
+          val cleaned = graft.operators.TextAnalysis
+            .c4Clean(batch, col(idCol), col(textCol), p)
+          cleaned.persist()
+          val surv = cleaned.filter(col("keep") === 1)
+            .select(col("doc_id").as(idCol),
+              translate(col("clean_text"), "\n", " ").as(textCol),
+              col("n_lines"), col("kept_lines"), col("has_lorem"),
+              col("has_brace"), col("has_badword"))
+          val nullRows = batch
+            .filter(col(idCol).isNull || col(textCol).isNull)
+            .select(Seq(col(idCol), col(textCol)) ++ c4Audit.map(f =>
+              lit(null).cast(if (f.startsWith("has_")) "int" else "long")
+                .as(f)): _*)
+          val boiler = cleaned.filter(col("keep") === 0)
+            .select(Seq(col("doc_id"),
+              lit(null).cast("double").as("quality")) ++
+              c4Audit.map(col) ++ gopherAudit.map(f =>
+                lit(null).cast(
+                  if (f == "n_words" || f == "stop_hits") "long"
+                  else "double").as(f)) :+
+              lit("boilerplate").as("disposition"): _*)
+          (surv.unionByName(nullRows), Some((cleaned, boiler)))
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      val scored0 = srcBatch.select(Seq(col(idCol).as("doc_id"),
+        col(textCol).as("text"),
+        graft.operators.TextAnalysis.qualityColumn(textCol).as("quality")) ++
+        c4Audit.map(col): _*)
+      val scored = gopher match {
+        case None =>
+          scored0.withColumn("_pass",
+            col("quality").isNotNull && col("quality") >= qualityMin)
+        case Some(g) =>
+          scored0.join(
+            graft.operators.TextAnalysis
+              .gopherQualityGate(srcBatch, col(idCol), col(textCol), g)
+              .select(col("doc_id"), col("n_words"), col("mean_word_len"),
+                col("stop_hits"), col("top2_frac"), col("keep")),
+            Seq("doc_id"), "left")
+            .withColumn("_pass", coalesce(col("keep"), lit(false)))
+      }
+      scored.persist()
+      def out(df: DataFrame, disp: String): DataFrame =
+        df.select(Seq(col("doc_id"), col("quality")) ++ audit.map(col) :+
+          lit(disp).as("disposition"): _*)
+      var gateCache: Option[DataFrame] = None
+      try {
+        val lowQ = out(scored.filter(!col("_pass")), "low_quality")
+        // keeper via groupBy(min) + join back, not a window — the
+        // CorpusOps.curationPipeline skew rationale (one row per
+        // distinct text through the shuffle, AQE-splittable join)
+        val withMd5 = scored.filter(col("_pass"))
+          .withColumn("_md5", md5(encode(col("text"), "UTF-8")))
+        val pass = withMd5.join(
+          withMd5.groupBy(col("_md5")).agg(min(col("doc_id")).as("_keeper")),
+          Seq("_md5"))
+        val histMd5 = batchesBefore(spark, s"$stateDir/md5", batchId, "_md5" -> StringType)
+        val keepers = pass.filter(col("doc_id") === col("_keeper"))
+        val freshMd5 = keepers.join(histMd5, Seq("_md5"), "left_anti")
+        val exactDup = out(pass.filter(col("doc_id") =!= col("_keeper"))
+          .unionByName(keepers.join(histMd5, Seq("_md5"), "left_semi")),
+          "exact_dup")
+        // decontamination gate. With evalDocs (static set): bloom
+        // probe in the batch's scan stage, exact confirm on the
+        // survivors — byte-identical to the pure exact gate, per
+        // q99. With evalDir (CHURNING set): the version-keyed gram
+        // table is read per trigger through `version <= batchId` —
+        // the accepted-history read discipline, so a replayed batch
+        // gates against exactly the versions its first attempt saw —
+        // and the batch's grams broadcast-semi-join it directly (the
+        // table is config-sized by the same contract that lets the
+        // static path collect it; a per-trigger bloom build would
+        // just repeat the broadcast's hash table on the driver).
+        def contamSplit(contamIds: DataFrame) =
+          (Some(out(freshMd5.join(contamIds, Seq("doc_id"), "left_semi"),
+            "contaminated")),
+            freshMd5.join(contamIds, Seq("doc_id"), "left_anti"),
+            Some(contamIds))
+        def batchGramHashes = freshMd5
+          .select(col("doc_id"), explode(array_distinct(
+            graft.functions.shingles.wordShingles(col("text"), evalN))).as("_g"))
+          .select(col("doc_id"), graft.operators.Dedup.hash48(col("_g")).as("_h"))
+        val (contaminated, cleanFresh, gateCache0) = (evalGate, evalDir) match {
+          case (Some((bfBc, hashes)), _) =>
+            import spark.implicits._
+            val mightContain = udf((h: Long) => bfBc.value.mightContainLong(h))
+            val evalSet = hashes.toSeq.toDF("_h") // LocalRelation, rebuilt free
+            // persisted per batch: the id set feeds the semi branch,
+            // the anti branch, AND every downstream consumer of
+            // cleanFresh (near-dup screen, kept, history writes) —
+            // without the cache the batch-gram explode re-runs per
+            // sink action. Unpersisted in the finally below.
+            contamSplit(batchGramHashes
+              .filter(mightContain(col("_h")))
+              .join(broadcast(evalSet), Seq("_h"), "left_semi")
+              .select(col("doc_id")).distinct()
+              .persist())
+          case (None, Some(dir)) =>
+            // versions above the current batchId are INACTIVE: a
+            // publisher stands up version V ahead of time and it
+            // first gates batch V — so the active set is a pure
+            // function of batchId and replay is deterministic as
+            // long as versions are published monotonically (never
+            // publish V once batch V has committed). Only MARKED
+            // versions are read (publishEvalGrams creates the
+            // marker after the gram files are complete), so a
+            // half-written publish is invisible; the explicit
+            // schema skips footer inference, so an unmarked partial
+            // directory is never even opened.
+            val active = evalVersions(spark, dir).published.filter(_ <= batchId)
+            val evalSet =
+              if (active.isEmpty) emptyDf(spark, "_h" -> LongType) // gate open
+              else spark.read.schema("_h BIGINT, version BIGINT").parquet(dir)
+                .filter(col("version").isin(active: _*)).select(col("_h"))
+            contamSplit(batchGramHashes
+              .join(broadcast(evalSet), Seq("_h"), "left_semi")
+              .select(col("doc_id")).distinct()
+              .persist())
+          case (None, None) => (None, freshMd5, None)
+        }
+        gateCache = gateCache0
+        val histBands = batchesBefore(spark, s"$stateDir/bands", batchId,
+          "doc_id" -> LongType, "band_key" -> StringType)
+        val collided = nearDupAgainstHistory(cleanFresh, histBands,
+            "doc_id", "text", "doc_id", n, k, rowsPerBand)
+          .select(col("new_id").as("doc_id")).distinct()
+        val nearDup = out(
+          cleanFresh.join(collided, Seq("doc_id"), "left_semi"), "near_dup")
+        val kept = cleanFresh.join(collided, Seq("doc_id"), "left_anti")
+        kept.persist()
+        try {
+          writeBatch((contaminated.toSeq ++ c4State.map(_._2))
+            .foldLeft(lowQ.unionByName(exactDup))(_ unionByName _)
+            .unionByName(nearDup)
+            .unionByName(out(kept, "kept")), outDir, batchId)
+          writeBatch(kept.select(col("_md5")), s"$stateDir/md5", batchId)
+          writeBatch(kept.select(col("doc_id"),
+              explode(rowLshBandKeys(col("text"), n, k, rowsPerBand)).as("band_key")),
+            s"$stateDir/bands", batchId)
+        } finally kept.unpersist()
+      } finally {
+        scored.unpersist()
+        gateCache.foreach(_.unpersist())
+        c4State.foreach(_._1.unpersist())
+      }
+    }
   }
 
   /** Publish one VERSION of the churning eval-gram table
@@ -1444,8 +1324,8 @@ object StreamingOps {
     * first attempt saw, and back-publishing below committed progress
     * would break that determinism.
     *
-    * Publish is ATOMIC via the marker discipline (the IvfStore
-    * shape): the gram files land first, then a zero-byte
+    * Publish is ATOMIC via the marker discipline ([[VersionedDir]]):
+    * the gram files land first, then a zero-byte
     * `_published/v-$version` marker is created LAST, and the gate
     * reads ONLY marked versions — so a half-written or in-flight
     * publish is invisible to every trigger, and a crashed publish
@@ -1464,31 +1344,22 @@ object StreamingOps {
       evalDir: String, version: Long, evalN: Int = 8): Long = {
     require(version >= 0, s"version must be >= 0 (it gates batchId >= version), got $version")
     val spark = evalDocs.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(s"$evalDir/_published/v-$version")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    val published = evalVersions(spark, evalDir)
+    if (!published.published.contains(version)) {
       evalDocs
         .select(explode(array_distinct(
           graft.functions.shingles.wordShingles(col(textCol), evalN))).as("_g"))
         .select(graft.operators.Dedup.hash48(col("_g")).as("_h")).distinct()
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .write.mode(SaveMode.Overwrite)
         .parquet(s"$evalDir/version=$version")
-      fs.mkdirs(marker.getParent)
-      if (!fs.exists(marker)) fs.create(marker, false).close()
+      published.publish(version)
     }
     spark.read.parquet(s"$evalDir/version=$version").count()
   }
 
-  /** The marked (= fully published) eval-gram versions under
-    * `evalDir` — what the gate trusts; everything else is invisible.
+  /** The eval-gram publish markers (`_published/v-N`): the marked
+    * versions are what the gate trusts; everything else is invisible.
     */
-  private def publishedEvalVersions(
-      spark: org.apache.spark.sql.SparkSession, evalDir: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$evalDir/_published")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("v-"))
-      .flatMap(_.stripPrefix("v-").toLongOption).toSeq
-  }
+  private def evalVersions(spark: SparkSession, evalDir: String): VersionedDir =
+    new VersionedDir(spark, s"$evalDir/_published")
 }

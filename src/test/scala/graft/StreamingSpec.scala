@@ -1018,11 +1018,69 @@ class StreamingSpec extends SparkSpec {
     assert(Files.deleteIfExists(Paths.get(s"$base/ck/commits/0")))
     Files.deleteIfExists(Paths.get(s"$base/ck/commits/.0.crc"))
     writeSlice(s1, s2, 1)
-    run() // replays batch 0 against v=0 (idempotent), then applies batch 1
+    run() // replays batch 0 (v=1 already published: no rewrite), then applies batch 1
     val got = StreamingOps.readLatestMv(spark, s"$base/mv")
     val want = agg(s2)
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       s"replayed MV diverged: ${got.collect().toSeq} vs ${want.collect().toSeq}")
+  }
+
+  /** MV crash fixture: customer snapshots s0..s2 as two changelog
+    * slices; `run` streams whatever slices are in `base/in` into
+    * `base/mv` over base agg(s0).
+    */
+  private def mvFixture(base: String) = {
+    def agg(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("cnt"), sum(col("bal_cents")).as("bal_cents"))
+    val customer = Tables.load(spark, sfDir, "customer")
+      .select(col("c_custkey"), col("c_mktsegment"),
+        floor(col("c_acctbal") * 100 + lit(0.5)).cast("long").as("bal_cents"))
+    val snaps = Seq(customer, customer.filter(col("c_custkey") % 7 =!= 0),
+      customer.filter(col("c_custkey") % 3 =!= 0))
+    val now = System.currentTimeMillis()
+    snaps.sliding(2).zipWithIndex.foreach { case (Seq(a, b), i) =>
+      graft.operators.ChangeCapture
+        .snapshotDiff(a, b, Seq("c_custkey"), Seq("c_mktsegment", "bal_cents"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$base/staging-$i")
+      val part = new java.io.File(s"$base/staging-$i").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = new java.io.File(s"$base/in/slice-$i.parquet")
+      Files.createDirectories(dst.toPath.getParent)
+      Files.copy(part.toPath, dst.toPath)
+      assert(dst.setLastModified(now - (2 - i) * 60000L)) // slice order = arrival order
+    }
+    def run(): Unit = {
+      val stream = spark.readStream.schema(spark.read.parquet(s"$base/staging-0").schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
+      val q = StreamingOps.maintainAggStream(stream, agg(snaps.head),
+        Seq("c_mktsegment"), Seq("bal_cents"), s"$base/mv", s"$base/ck")
+      q.awaitTermination(180000)
+      assert(!q.isActive)
+    }
+    (agg(snaps.last), () => run())
+  }
+
+  test("MV maintenance stream: a half-written newer version is invisible to readLatestMv") {
+    val base = tmp()
+    val (want, run) = mvFixture(base)
+    run() // two batches: the MV is at v=2
+    // what a crash mid-write (or a trigger still writing) leaves behind
+    Files.createDirectories(Paths.get(s"$base/mv/v=3/_temporary/0"))
+    val got = StreamingOps.readLatestMv(spark, s"$base/mv")
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      s"MV read a half-written version: ${got.collect().toSeq} vs ${want.collect().toSeq}")
+  }
+
+  test("MV maintenance stream: a half-written base left by a crashed first start is rebuilt") {
+    val base = tmp()
+    val (want, run) = mvFixture(base)
+    // a first start that crashed while writing the base aggregate
+    Files.createDirectories(Paths.get(s"$base/mv/v=0/_temporary/0"))
+    run()
+    val got = StreamingOps.readLatestMv(spark, s"$base/mv")
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      s"MV diverged from recompute: ${got.collect().toSeq} vs ${want.collect().toSeq}")
   }
 
   test("hybrid retrieval serving: streamed query batches reproduce the batch sparse+dense+RRF stack") {
