@@ -153,12 +153,13 @@ case class Base64Unchunked(child: Expression) extends UnaryExpression {
     else
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires BINARY input, got ${child.dataType.catalogString}")
+  // base64 output is ASCII: its bytes are the UTF-8 string, no String round trip
   override def nullSafeEval(v: Any): Any =
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      java.util.Base64.getEncoder.encodeToString(v.asInstanceOf[Array[Byte]]))
+    org.apache.spark.unsafe.types.UTF8String.fromBytes(
+      java.util.Base64.getEncoder.encode(v.asInstanceOf[Array[Byte]]))
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.unsafe.types.UTF8String.fromString(java.util.Base64.getEncoder().encodeToString($c))")
+      c => s"org.apache.spark.unsafe.types.UTF8String.fromBytes(java.util.Base64.getEncoder().encode($c))")
   override protected def withNewChildInternal(c: Expression): Base64Unchunked = copy(child = c)
 }
 

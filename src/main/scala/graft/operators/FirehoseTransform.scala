@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.functions.{transform => transformArray}
 
 import graft.envelope.Envelope
 import graft.functions.codecs
@@ -17,12 +16,12 @@ import graft.functions.codecs
   *
   * Design notes (100 TB):
   *  - No shuffle anywhere: the per-record event re-assembly
-  *    (lambda/main.py:92, a b''.join over logEvents) is done with the
-  *    array higher-order functions `transform` + `array_join` on the
-  *    UNexploded array, so record-internal event order is preserved
-  *    without a groupBy/collect_list (whose post-shuffle order is
-  *    nondeterministic). The whole transform is a narrow map pipeline
-  *    that whole-stage-codegens into a single stage.
+  *    (lambda/main.py:92, a b''.join over logEvents) is one
+  *    `array_join` on the UNexploded array, so record-internal event
+  *    order is preserved without a groupBy/collect_list (whose
+  *    post-shuffle order is nondeterministic). The whole transform is a
+  *    narrow map pipeline in a single stage; `from_json` is its one
+  *    interpreted expression.
   *  - Corrupt inputs: the reference raises and fails the whole batch
   *    (main.py:74 has no try/except). In permissive mode (default) we
   *    instead route undecodable/unparsable records to ProcessingFailed,
@@ -32,12 +31,21 @@ object FirehoseTransform {
 
   import Envelope.Result._
 
-  /** transformLogEvent (lambda/main.py:55-69): literal replace of all
-    * occurrences of "Hello" with "Hell Yeah", then append "\n"
-    * (delimiters are the transform's job, main.py:42-44).
+  /** The record payload (main.py:92): transformLogEvent
+    * (main.py:55-69: every "Hello" -> "Hell Yeah", then a "\n"
+    * delimiter, main.py:42-44) over each event, in event order.
+    * Computed over the joined text instead of per event, with one
+    * array_join and one replace: "Hello" holds no "\n", so no match can
+    * straddle a delimiter, and null messages are skipped either way. An
+    * empty or all-null array yields "".
     */
-  def transformLogEvent(message: Column): Column =
-    concat(replace(message, lit("Hello"), lit("Hell Yeah")), lit("\n"))
+  private def transformLogEvents(messages: Column): Column =
+    when(array_max(messages).isNull, lit(""))
+      .otherwise(replace(concat(array_join(messages, "\n"), lit("\n")),
+        lit("Hello"), lit("Hell Yeah")))
+
+  /** Java's `\s`: a bare-string payload is `^\s*"` (main.py:80-85). */
+  private val Whitespace = " \t\n\u000B\f\r"
 
   /** Decode + dispatch + transform (processRecords, lambda/main.py:72-98).
     *
@@ -47,22 +55,25 @@ object FirehoseTransform {
     * non-cheap expressions referenced more than once, so gunzip and
     * from_json each run once per record instead of once per consuming
     * expression (the dispatch CASEs reference them ~6 times).
+    * No regex runs per record: the bare-string test is an ltrim over
+    * `\s` and a prefix compare, and `get_json_object` sits behind it in
+    * every CASE, so only bare strings pay for it.
     */
   def transform(records: DataFrame, permissive: Boolean = true): DataFrame = {
     val payload = codecs.gunzip(unbase64(col("data")), lenient = permissive)
-
+    val text = col("_text")
     val decoded = records
-      .withColumn("_text", payload.cast("string"))
+      .select(col("recordId"), payload.cast("string").as("_text"))
       // PERMISSIVE from_json: corrupt JSON => null struct.
-      .withColumn("_env", from_json(col("_text"), Envelope.ENVELOPE_SCHEMA))
+      .select(col("recordId"), text, from_json(text, Envelope.ENVELOPE_SCHEMA).as("_env"))
 
     // Re-ingested data comes back as a bare JSON string (main.py:80-85):
     // json.loads yields a str; pass it through unchanged with result Ok.
-    val isBareString = col("_text").rlike("^\\s*\"")
-    val bareValue = get_json_object(col("_text"), "$")
-    val transformed = codecs.base64Unchunked(encode(
-      array_join(transformArray(col("_env.logEvents"), e => transformLogEvent(e.getField("message"))), ""),
-      "UTF-8"))
+    val isBareString = ltrim(text, Whitespace).startsWith("\"")
+    val bareValue = get_json_object(text, "$")
+    // array_join output is valid UTF-8, so the cast is the encode
+    val transformed = codecs.base64Unchunked(
+      transformLogEvents(col("_env.logEvents.message")).cast("binary"))
 
     // A bare-string payload whose JSON is malformed (quote-prefixed
     // but unparsable) must fail like any other corrupt input, not pass
@@ -117,29 +128,30 @@ object FirehoseTransform {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val recSize = when(col("result") === ProcessingFailed, lit(0L))
       .otherwise(length(col("data")).cast("long") + length(col("recordId")).cast("long"))
+    val drop = col("result") =!= ProcessingFailed && col("_cum") > cap
     transformed
-      .withColumn("_ord", ord)
-      // same window spec as _cum -> computed by the same Window operator
-      .withColumn("_rn", row_number().over(w))
-      .withColumn("_cum", sum(recSize).over(w))
-      .withColumn("_drop", col("result") =!= ProcessingFailed && col("_cum") > cap)
+      .select(col("*"), ord.as("_ord"))
+      // one window spec -> one Window operator computes both
+      .select(col("*"), row_number().over(w).as("_rn"), sum(recSize).over(w).as("_cum"))
       .select(
         col("recordId"),
         when(col("_rn") > maxBatchRows, raise_error(concat(
             lit(s"sizeGovernor: batch exceeds maxBatchRows=$maxBatchRows rows "),
             lit("— this operator is a batch-local fold; bound the batch or raise the limit"))))
-          .when(col("_drop"), lit(Dropped)).otherwise(col("result")).as("result"),
-        when(col("_drop"), lit(null)).otherwise(col("data")).as("data"),
-        when(col("_drop"), col("data")).as("reingest_data"))
+          .when(drop, lit(Dropped)).otherwise(col("result")).as("result"),
+        when(drop, lit(null)).otherwise(col("data")).as("data"),
+        when(drop, col("data")).as("reingest_data"))
   }
 
   /** Build Firehose-framed records from a DataFrame of envelope columns:
     * to_json -> utf8 -> gzip -> base64 (the producer side of the wire
     * format, main.py:30 + put_test_log_to_log_stream.sh). `envelope`
-    * must be a struct column matching ENVELOPE_SCHEMA.
+    * must be a struct column matching ENVELOPE_SCHEMA. to_json output
+    * is valid UTF-8, so the binary cast is the encode, without
+    * `encode`'s per-row validation.
     */
   def frameRecords(df: DataFrame, recordId: Column, envelope: Column): DataFrame =
     df.select(
       recordId.cast("string").as("recordId"),
-      codecs.base64Unchunked(codecs.gzip(encode(to_json(envelope), "UTF-8"))).as("data"))
+      codecs.base64Unchunked(codecs.gzip(to_json(envelope).cast("binary"))).as("data"))
 }

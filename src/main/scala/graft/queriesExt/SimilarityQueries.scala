@@ -713,6 +713,8 @@ object SimilarityQueries {
     val store = java.nio.file.Files.createTempDirectory("graft-q215").toString
     IvfStore.bootstrap(e.select("vec_id", "embedding"), centroids,
       "vec_id", "embedding", store, 1L, Some(pqCodebooks(e)))
+    // the result reads the store lazily, so it lives until the JVM exits
+    org.apache.commons.io.FileUtils.forceDeleteOnExit(new java.io.File(store))
     IvfStore.topKPq(s, store, e.filter(col("vec_id") % 89 === 0),
         "vec_id", "embedding", k = 4, nprobe = 2, shortlist = 16)
       .orderBy(col("query_id"), col("rank"))

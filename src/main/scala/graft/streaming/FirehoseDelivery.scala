@@ -1,5 +1,8 @@
 package graft.streaming
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -103,164 +106,162 @@ object FirehoseDelivery {
 
   /** One micro-batch through the full reference pipeline. Public so the
     * batch path and tests can drive it without a streaming context.
+    *
+    * Order of work, each step as early as its inputs allow:
+    *  1. persist the raw batch: the source is scanned (and its JSON
+    *     parsed) once per trigger, whatever reads it;
+    *  2. build and persist `governed`: transform + size governor, with
+    *     each Ok payload decoded ONCE into its primary line `value`;
+    *  3. one probe job over `governed` (it also fills both caches):
+    *     the Ok bytes set the primary file count, the dropped count
+    *     decides whether the re-ingest leg runs;
+    *  4. start the A16 backup, primary, ProcessingFailed and re-ingest
+    *     legs. The backup reads only the raw batch, but it starts after
+    *     the probe: a job started before the cache is filled computes
+    *     its partitions itself, and on a multi-executor cluster two
+    *     jobs' tasks for one partition can each scan the source;
+    *  5. await every leg, then unpersist. Any failed leg fails the
+    *     batch; nothing is unpersisted while a leg may still read it.
+    * The legs are independent actions over persisted frames writing to
+    * disjoint directories, so they overlap on the shared
+    * [[graft.operators.Par.overlapPool]], each with the submitting
+    * thread's scheduler properties (job group, streaming query tag), so
+    * StreamingQuery.stop()'s group-cancel reaches every leg's jobs.
     */
   def processBatch(batch: DataFrame, batchId: Long, conf: Config): Unit = {
     val spark = batch.sparkSession
-    // The batch is traversed by four sinks: persist the RAW batch so
-    // the file source is scanned (and its JSON parsed) exactly once
-    // per micro-batch — without this, the backup sink's direct write
-    // of `batch` re-reads the source a second time (measured 2x
-    // numInputRows, ~2x JSON-parse cost per trigger) — then
-    // materialize the (narrow) transform once for its three sinks.
+    val sc = spark.sparkContext
+    val legs = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
+    def fork(body: => Unit): Unit = legs += graft.operators.Par.inheritedFuture(sc)(body)
+    def awaitLegs(): Unit = legs.foreach(Await.ready(_, Duration.Inf))
+    // Without the persist, the backup's direct write of `batch` re-reads
+    // the source a second time (measured 2x numInputRows, ~2x
+    // JSON-parse cost per trigger).
     batch.persist()
-    // Effectively-once read-back (opt-in): re-ingested records carry
-    // the replay-stable id `reingest-<srcBatch>-<recordId>`; duplicates
-    // arise from (a) the same id landing twice in ONE batch (a sink
-    // task retry appended two files) — dropDuplicates, and (b) the
-    // same id re-arriving in a LATER batch (checkpoint replay of the
-    // source batch re-sent its Dropped set) — anti-join against the
-    // seen registry. The registry is batchId-keyed overwritten parquet
-    // (the same idempotence pattern as every other sink here) and the
-    // anti-join EXCLUDES the current batchId, so a replayed batch
-    // admits exactly the records its first attempt admitted. Scale:
-    // registry volume ∝ dropped records (kilobytes per batch); prune
-    // partitions older than the retry horizon (maxAttempts triggers)
-    // the same way the band table compacts. Backup still receives the
-    // RAW batch — dedup is a delivery concern, not an archival one.
-    val admitted =
-      if (!conf.effectivelyOnce) batch
-      else {
-        val isRe = coalesce(col("recordId").startsWith("reingest-"), lit(false))
-        val re = batch.filter(isRe).dropDuplicates("recordId")
-        val seen =
-          try spark.read.parquet(conf.seenDir)
-            .filter(col("batchId") =!= batchId).select(col("recordId"))
-          catch { case _: org.apache.spark.sql.AnalysisException => // no registry yet
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("recordId",
-                  org.apache.spark.sql.types.StringType))))
-          }
-        // fresh is re-derived for the union below — cheap, both passes
-        // read the persisted raw batch and the registry is tiny
-        val fresh = re.join(seen, Seq("recordId"), "left_anti")
-        fresh.select("recordId").write.mode(SaveMode.Overwrite)
-          .parquet(s"${conf.seenDir}/batchId=$batchId")
-        batch.filter(!isRe).unionByName(fresh)
-      }
-    val governed = FirehoseTransform.sizeGovernor(
-      FirehoseTransform.transform(admitted, conf.permissive), conf.sizeCap)
-      .persist()
+    var governed: DataFrame = null
     try {
+      // Effectively-once read-back (opt-in): re-ingested records carry
+      // the replay-stable id `reingest-<srcBatch>-<recordId>`; duplicates
+      // arise from (a) the same id landing twice in ONE batch (a sink
+      // task retry appended two files) — dropDuplicates, and (b) the
+      // same id re-arriving in a LATER batch (checkpoint replay of the
+      // source batch re-sent its Dropped set) — anti-join against the
+      // seen registry. The registry is batchId-keyed overwritten parquet
+      // (the same idempotence pattern as every other sink here) and the
+      // anti-join EXCLUDES the current batchId, so a replayed batch
+      // admits exactly the records its first attempt admitted. Scale:
+      // registry volume ∝ dropped records (kilobytes per batch); prune
+      // partitions older than the retry horizon (maxAttempts triggers)
+      // the same way the band table compacts. Backup still receives the
+      // RAW batch — dedup is a delivery concern, not an archival one.
+      val admitted =
+        if (!conf.effectivelyOnce) batch
+        else {
+          val isRe = coalesce(col("recordId").startsWith("reingest-"), lit(false))
+          val re = batch.filter(isRe).dropDuplicates("recordId")
+          val seen =
+            try spark.read.parquet(conf.seenDir)
+              .filter(col("batchId") =!= batchId).select(col("recordId"))
+            catch { case _: org.apache.spark.sql.AnalysisException => // no registry yet
+              spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                org.apache.spark.sql.types.StructType(Seq(
+                  org.apache.spark.sql.types.StructField("recordId",
+                    org.apache.spark.sql.types.StringType))))
+            }
+          // fresh is re-derived for the union below — cheap, both passes
+          // read the persisted raw batch and the registry is tiny
+          val fresh = re.join(seen, Seq("recordId"), "left_anti")
+          fresh.select("recordId").write.mode(SaveMode.Overwrite)
+            .parquet(s"${conf.seenDir}/batchId=$batchId")
+          batch.filter(!isRe).unionByName(fresh)
+        }
       // A15 primary: Firehose writes the transformed record bytes; our
       // payloads are newline-terminated text (delimiters are the
       // transform's job, main.py:42-44), so the S3-shaped object is a
-      // text file. The text writer appends one "\n" per row, so the
-      // payload's own trailing delimiter is stripped to keep the byte
-      // stream identical to the reference's concatenation. (\n\z, not
-      // \n$: Java's $ also matches BEFORE a final newline, which would
-      // strip two delimiters from payloads ending in an empty event.)
+      // text file. The text writer appends one "\n" per row, so exactly
+      // one trailing "\n" byte of the payload is stripped to keep the
+      // byte stream identical to the reference's concatenation (a
+      // payload ending in an empty event keeps its other "\n").
+      val bytes = col("_bytes")
+      val primaryLine =
+        when(bytes.substr(-1, 1) === lit(Array('\n'.toByte)),
+          bytes.substr(lit(1), octet_length(bytes) - 1))
+          .otherwise(bytes).cast("string")
+      governed = FirehoseTransform.sizeGovernor(
+        FirehoseTransform.transform(admitted, conf.permissive), conf.sizeCap)
+        .select(col("recordId"), col("result"), col("reingest_data"),
+          when(col("result") === Ok, unbase64(col("data"))).as("_bytes"))
+        .select(col("recordId"), col("result"), col("reingest_data"), primaryLine.as("value"))
+        .persist()
+      val statsRow = governed.agg(
+        sum(octet_length(col("value"))).as("_ok_bytes"),
+        count(when(col("result") === Dropped, lit(1))).as("_n_dropped")).head()
+      val okBytes = if (statsRow.isNullAt(0)) 0L else statsRow.getLong(0)
+      val anyDropped = statsRow.getLong(1) > 0L
+      // A16 backup: raw source records, untransformed
+      // (s3_backup_mode = Enabled, main.tf:27-41).
+      fork {
+        batch.write.mode(SaveMode.Overwrite)
+          .json(s"${conf.backupDir}/batchId=$batchId")
+      }
       // Firehose flushes on buffer_interval OR buffer_size, whichever
       // first; the time side is the trigger, the size side is file
-      // rotation: split the batch into ~flushBytes-sized objects.
-      val ok = governed.filter(col("result") === Ok)
-        .select(regexp_replace(unbase64(col("data")).cast("string"), "\\n\\z", "").as("value"))
-      // ONE probe job per batch (optimization round 18): the primary
-      // sink's byte total and the re-ingest leg's emptiness test used
-      // to be two separate actions over `governed`; this agg feeds
-      // both (and doubles as the persist's materializing action, so
-      // the concurrent sinks below race only over cached blocks).
-      val statsRow = governed.agg(
-        sum(when(col("result") === Ok,
-          octet_length(regexp_replace(unbase64(col("data")).cast("string"),
-            "\\n\\z", "")))).as("_ok_bytes"),
-        count(when(col("result") === Dropped, lit(1))).as("_n_dropped")).head()
-      val okBytes = statsRow.getAs[Any](0) match {
-        case null => 0L
-        case n: Long => n
-        case n: Number => n.longValue()
-      }
-      val anyDropped = statsRow.getLong(1) > 0L
+      // rotation: split the batch into ~flushBytes-sized objects. The
+      // governor's window leaves `governed` in one partition, so one
+      // file needs no shuffle.
       val nFiles = math.max(1, math.ceil(okBytes.toDouble / conf.flushBytes).toInt)
-      // The three sinks AND the re-ingest leg are independent actions
-      // over PERSISTED frames writing to disjoint directories — run
-      // them concurrently (guide §2.6 "overlap independent jobs"):
-      // each job's tail no longer serializes the batch, and the
-      // trigger wall drops to the slowest write instead of their sum.
-      // Failures propagate — the batch fails if any sink fails,
-      // exactly as before. Round 19: the pool is the SHARED lazy
-      // executor (a fresh 3-thread pool was built and torn down every
-      // 200 ms trigger — round-18 review item), with the submitting
-      // thread's scheduler properties (job group, streaming query tag)
-      // re-installed per task so StreamingQuery.stop()'s group-cancel
-      // still reaches every sink job; and the re-ingest leg — which
-      // used to serialize AFTER the three parallel sinks despite
-      // depending only on the same persisted `governed` frame and the
-      // already-computed anyDropped probe — joins the same fan-out
-      // (round-18 "not yet optimized" #5).
+      val ok = governed.filter(col("result") === Ok).select(col("value"))
+      fork {
+        (if (nFiles == 1) ok.coalesce(1) else ok.repartition(nFiles))
+          .write.mode(SaveMode.Overwrite)
+          .text(s"${conf.primaryDir}/batchId=$batchId")
+      }
+      // A17 error side channel (main.py:36-38).
+      fork {
+        governed.filter(col("result") === ProcessingFailed)
+          .select(col("recordId"))
+          .write.mode(SaveMode.Overwrite)
+          .json(s"${conf.failedDir}/batchId=$batchId")
+      }
       // A13 re-ingest self-loop: Dropped payloads go back into the
-      // stream. The payload is wrapped as a JSON *string* (gzip+b64)
-      // so it re-enters through the bare-string branch of the
-      // transform (main.py:80-85 receiving side, 148-151 sending).
+      // stream; a drop-free batch (decided by the probe) skips the leg.
+      // The payload is wrapped as a JSON *string* (gzip+b64) so it
+      // re-enters through the bare-string branch of the transform
+      // (main.py:80-85 receiving side, 148-151 sending).
       // Pipeline-generated payloads are base64 text, but a dropped
       // bare-string record can contain arbitrary characters — escape
       // the JSON string properly (backslash first, then quote and the
-      // common control characters).
-      val escaped = regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        col("reingest_data"),
-        "\\\\", "\\\\\\\\"), "\"", "\\\\\""), "\n", "\\\\n"), "\r", "\\\\r")
-      val toReingest = governed.filter(col("result") === Dropped)
-        .select(
-          concat(lit(s"reingest-$batchId-"), col("recordId")).as("recordId"),
-          codecs.base64Unchunked(codecs.gzip(encode(
-            concat(lit("\""), escaped, lit("\"")), "UTF-8"))).as("data"))
-      val sc = spark.sparkContext
-      def fork(body: => Unit) = graft.operators.Par.inheritedFuture(sc)(body)
-      val sinks = Seq(
-        fork {
-          ok.repartition(nFiles)
-            .write.mode(SaveMode.Overwrite)
-            .text(s"${conf.primaryDir}/batchId=$batchId")
-        },
-        // A16 backup: raw source records, untransformed
-        // (s3_backup_mode = Enabled, main.tf:27-41).
-        fork {
-          batch.write.mode(SaveMode.Overwrite)
-            .json(s"${conf.backupDir}/batchId=$batchId")
-        },
-        // A17 error side channel (main.py:36-38).
-        fork {
-          governed.filter(col("result") === ProcessingFailed)
-            .select(col("recordId"))
-            .write.mode(SaveMode.Overwrite)
-            .json(s"${conf.failedDir}/batchId=$batchId")
-        },
-        // A13 re-ingest: emptiness decided by the batch's single probe
-        // agg above — a drop-free batch skips the whole leg without
-        // its own job (the Future resolves immediately).
+      // common control characters). Literal replaces: each returns its
+      // input untouched when the character is absent, as it is in
+      // base64. The payload is valid UTF-8, so the cast is the encode.
+      if (anyDropped) {
+        val escaped = Seq("\\" -> "\\\\", "\"" -> "\\\"", "\n" -> "\\n", "\r" -> "\\r")
+          .foldLeft(col("reingest_data")) { case (c, (from, to)) => replace(c, lit(from), lit(to)) }
+        val toReingest = governed.filter(col("result") === Dropped)
+          .select(
+            concat(lit(s"reingest-$batchId-"), col("recordId")).as("recordId"),
+            codecs.base64Unchunked(codecs.gzip(
+              concat(lit("\""), escaped, lit("\"")).cast("binary"))).as("data"))
         fork {
           conf.reingestSink match {
+            // per-record protocol: chunked put_record_batch with
+            // failed-subset retry, bounded by the same attempt budget.
             case Some(sink) =>
-              // per-record protocol: chunked put_record_batch with
-              // failed-subset retry, bounded by the same attempt budget.
-              if (anyDropped) {
-                RecordSink.deliver(toReingest, sink, maxAttempts = conf.maxAttempts)
-              }
+              RecordSink.deliver(toReingest, sink, maxAttempts = conf.maxAttempts)
             case None =>
-              if (anyDropped) {
-                putRecords(toReingest, s"${conf.inputDir}/reingest-batch-$batchId",
-                  attemptsMade = 0, maxAttempts = conf.maxAttempts)
-              }
+              putRecords(toReingest, s"${conf.inputDir}/reingest-batch-$batchId",
+                attemptsMade = 0, maxAttempts = conf.maxAttempts)
           }
-        })
-      implicit val ec: scala.concurrent.ExecutionContext =
-        graft.operators.Par.overlapPool
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(sinks),
-        scala.concurrent.duration.Duration.Inf)
+        }
+      }
+      awaitLegs()
+      legs.foreach(_.value.get.get) // rethrows the first failed leg's error
     } finally {
-      governed.unpersist()
-      batch.unpersist()
+      try awaitLegs()
+      finally {
+        if (governed != null) governed.unpersist()
+        batch.unpersist()
+      }
     }
     // Retry-horizon pruning (Config.seenRetention) runs LAST: `admitted`
     // re-derives its anti-join against the registry lazily on every

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class BucketingSpec extends SparkSpec {
 
   test("bucketed tables co-locate the join: no Exchange on the join key") {
-    val base = java.nio.file.Files.createTempDirectory("graft-bucket").toString
+    val base = tmpDir("graft-bucket")
     val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "lang", "source")
     val toks = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tok"))
@@ -46,7 +46,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("bucketed scan prunes buckets for a point-lookup filter") {
-    val base = java.nio.file.Files.createTempDirectory("graft-bucket2").toString
+    val base = tmpDir("graft-bucket2")
     val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "lang")
     // the planner's auto-bucketed-scan turns bucketed reads OFF when no
     // join/agg needs the distribution; disable it so the point lookup

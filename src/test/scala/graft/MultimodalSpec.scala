@@ -32,7 +32,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("metadata-only query prunes the payload column from the scan") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-media").toString
+    val tmp = tmpDir("graft-media")
     Multimodal.mediaFromDocuments(Tables.load(spark, sfDir, "documents"))
       .write.mode("overwrite").parquet(s"$tmp/media")
     val metaOnly = spark.read.parquet(s"$tmp/media")

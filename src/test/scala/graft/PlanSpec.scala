@@ -114,7 +114,7 @@ class PlanSpec extends SparkSpec {
     // input-growth would be a plan defect, not a bigger answer.
     import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val base = java.nio.file.Files.createTempDirectory("graft-inflate10").toString
+    val base = tmpDir("graft-inflate10")
     val SHIFT = 1000000000L
     def inflate(name: String, keys: Seq[String], jitterPrice: Boolean): Unit =
       (0 until 10).map { i =>

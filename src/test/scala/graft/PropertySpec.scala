@@ -528,7 +528,7 @@ class ApproxSpec extends SparkSpec {
 /** B4: partitioned parquet sink + partition-pruned read-back. */
 class PartitionedSinkSpec extends SparkSpec {
   test("partitionBy write, partition-pruned scan on read") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val tmp = tmpDir("graft-part")
     Tables.events(spark, sfDir)
       .withColumn("day", to_date(col("ts")))
       .write.partitionBy("event_type").mode("overwrite").parquet(s"$tmp/events")
@@ -549,7 +549,7 @@ class PartitionedSinkSpec extends SparkSpec {
     // and touches exactly the probed cells' rows.
     import graft.functions.CentroidAggregator
     import graft.operators.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-store").toString
+    val tmp = tmpDir("graft-ivf-store")
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val centroidUdaf = udaf(new CentroidAggregator(64))
     val centroids = e.groupBy(col("label").cast("int").as("cell"))
@@ -574,7 +574,7 @@ class PartitionedSinkSpec extends SparkSpec {
     // score, a new provenance field); old files must stay readable and
     // new columns null-fill for them
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-evolve").toString
+    val tmp = tmpDir("graft-evolve")
     Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
       .write.mode("append").parquet(tmp)
     Seq((3L, "gamma", 0.9)).toDF("doc_id", "text", "quality")

@@ -64,7 +64,7 @@ class SketchSpec extends SparkSpec {
     // to one MG summary (a tiny map), foreachBatch merges it into the
     // running summary with the Aggregator's OWN merge — state is one
     // capacity-bounded map, not a token count per key
-    val base = java.nio.file.Files.createTempDirectory("graft-mg-stream").toString
+    val base = tmpDir("graft-mg-stream")
     val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
     docs.repartition(3).write.mode("overwrite").parquet(s"$base/in")
     val agg = new MisraGriesAggregator(64)

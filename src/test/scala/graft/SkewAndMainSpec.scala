@@ -127,7 +127,7 @@ class FlatMapStateSpec extends SparkSpec {
   import spark.implicits._
 
   test("flatMapGroupsWithState emits per-record admission decisions across batches") {
-    val base = java.nio.file.Files.createTempDirectory("graft-fms").toString
+    val base = tmpDir("graft-fms")
     Seq(Keyed("a", 60L), Keyed("a", 30L)).toDS().coalesce(1).write.json(s"$base/in/f1")
     Seq(Keyed("a", 30L)).toDS().coalesce(1).write.json(s"$base/in/f2")
     val stream = spark.readStream.schema("key STRING, size LONG")
@@ -150,7 +150,7 @@ class MainSpec extends SparkSpec {
   import Fixtures._
 
   test("Main --once delivers a record through the full pipeline") {
-    val base = java.nio.file.Files.createTempDirectory("graft-main").toString
+    val base = tmpDir("graft-main")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/in"))
     val rec = record("r1", envelopeJson("DATA_MESSAGE", Seq("Hello Main!")))
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$base/in/f.json"),

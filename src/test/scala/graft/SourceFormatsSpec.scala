@@ -22,7 +22,7 @@ class SourceFormatsSpec extends SparkSpec {
     .toDF("id", "text", "lang")
 
   private def roundtrip(fmt: String, opts: Map[String, String]): Unit = {
-    val base = java.nio.file.Files.createTempDirectory(s"graft-fmt-$fmt").toString
+    val base = tmpDir(s"graft-fmt-$fmt")
     fixture.write.options(opts).format(fmt).save(s"$base/out")
     val back = spark.read.options(opts).schema(fixture.schema).format(fmt)
       .load(s"$base/out")
@@ -44,7 +44,7 @@ class SourceFormatsSpec extends SparkSpec {
   }
 
   test("documents table survives a csv re-materialization (free-text at fixture scale)") {
-    val base = java.nio.file.Files.createTempDirectory("graft-fmt-docs").toString
+    val base = tmpDir("graft-fmt-docs")
     val docs = Tables.load(spark, sfDir, "documents")
     docs.write.option("header", "true").option("escape", "\"").csv(s"$base/csv")
     val back = spark.read.option("header", "true").option("escape", "\"")
@@ -113,7 +113,7 @@ class SourceFormatsSpec extends SparkSpec {
     val ms = MemoryStream[(Array[Byte], Array[Byte], String, Int, Long)]
     val kafkaShaped = ms.toDF()
       .toDF("key", "value", "topic", "partition", "offset")
-    val base = java.nio.file.Files.createTempDirectory("graft-kafka").toString
+    val base = tmpDir("graft-kafka")
     val conf = graft.streaming.FirehoseDelivery.Config(
       inputDir = s"$base/in", outputDir = s"$base/out",
       checkpointDir = s"$base/ck", triggerMs = 200L)
@@ -183,7 +183,7 @@ class SourceFormatsSpec extends SparkSpec {
     val wire = Fixtures.wireEncode(Fixtures.envelopeJson("DATA_MESSAGE", messages))
     produce(topic, Seq.fill(3)(wire))
 
-    val base = java.nio.file.Files.createTempDirectory("graft-kafka-live").toString
+    val base = tmpDir("graft-kafka-live")
     val conf = graft.streaming.FirehoseDelivery.Config(
       inputDir = s"$base/in", outputDir = s"$base/out",
       checkpointDir = s"$base/ck", triggerMs = 200L)
@@ -235,7 +235,7 @@ class SourceFormatsSpec extends SparkSpec {
     })
     producer.setDaemon(true)
     producer.start()
-    val base = java.nio.file.Files.createTempDirectory("graft-socket").toString
+    val base = tmpDir("graft-socket")
     val conf = graft.streaming.FirehoseDelivery.Config(
       inputDir = s"$base/in", outputDir = s"$base/out",
       checkpointDir = s"$base/ck", triggerMs = 200L)

@@ -1,6 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
@@ -19,7 +24,20 @@ object SparkSpec {
   }
 }
 
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
   def sfDir: String = "/root/testdata/sf0.001"
+
+  private val tmpDirs = new ConcurrentLinkedQueue[Path]
+
+  /** A fresh temp directory, deleted with its contents after the suite. */
+  def tmpDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    tmpDirs.add(dir)
+    dir.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tmpDirs.forEach(dir => FileUtils.deleteQuietly(dir.toFile))
+    finally super.afterAll()
 }

@@ -13,7 +13,7 @@ class StatefulSpec extends SparkSpec {
 
   test("sessionizeStream: intra-batch gaps emit immediately; the open session closes via event-time timeout") {
     import graft.streaming.StatefulOps.{SessEvent, Session}
-    val base = Files.createTempDirectory("graft-sess").toString
+    val base = tmpDir("graft-sess")
     val t0 = java.sql.Timestamp.valueOf("2020-01-01 00:00:00")
     def ts(min: Long) = new java.sql.Timestamp(t0.getTime + min * 60000L)
     def us(min: Long) = ts(min).getTime * 1000L
@@ -68,7 +68,7 @@ class StatefulSpec extends SparkSpec {
     // semantics specs.
     import graft.streaming.StatefulOps.{SessEvent, Session}
     import org.apache.spark.sql.functions.{col, min => smin, max => smax, unix_timestamp}
-    val base = Files.createTempDirectory("graft-sess-soak").toString
+    val base = tmpDir("graft-sess-soak")
     val events = Tables.events(spark, sfDir).select(
       col("user_id").cast("long").as("user_id"), col("ts")).as[SessEvent]
     val (tsMin, tsMax) = {
@@ -164,7 +164,7 @@ class StatefulSpec extends SparkSpec {
 
   test("sessionizeStream: a within-watermark late event older than the open session's start widens sess_start") {
     import graft.streaming.StatefulOps.{SessEvent, Session}
-    val base = Files.createTempDirectory("graft-sess-late").toString
+    val base = tmpDir("graft-sess-late")
     val t0 = java.sql.Timestamp.valueOf("2020-01-01 00:00:00")
     def ts(min: Long) = new java.sql.Timestamp(t0.getTime + min * 60000L)
     def us(min: Long) = ts(min).getTime * 1000L
@@ -201,7 +201,7 @@ class StatefulSpec extends SparkSpec {
 
   test("anomalyStream: per-key window state crosses micro-batches; stream == batch operator") {
     import graft.streaming.StatefulOps.{ValEvent, AnomalyHit}
-    val base = Files.createTempDirectory("graft-anom").toString
+    val base = tmpDir("graft-anom")
     val now = System.currentTimeMillis()
     def writeSlice(idx: Int, rows: Seq[ValEvent]): Unit = {
       rows.toDS().coalesce(1).write.json(s"$base/in/f$idx")
@@ -244,7 +244,7 @@ class StatefulSpec extends SparkSpec {
   }
 
   test("quota governor keeps per-key running state across micro-batches") {
-    val base = Files.createTempDirectory("graft-state").toString
+    val base = tmpDir("graft-state")
     // two files -> maxFilesPerTrigger=1 forces two micro-batches
     Seq(Keyed("a", 40L), Keyed("a", 40L), Keyed("b", 10L)).toDS()
       .coalesce(1).write.json(s"$base/in/f1")
@@ -273,7 +273,7 @@ class StatefulSpec extends SparkSpec {
 
   test("packStream: open-bin state crosses micro-batches; first-fit + oldest-evicted cap; per-shard bins; stream == batch fold") {
     import StatefulOps.{PackAssign, PackDoc}
-    val base = Files.createTempDirectory("graft-pack").toString
+    val base = tmpDir("graft-pack")
     Seq(PackDoc("a", 1L, 6L), PackDoc("a", 2L, 3L), PackDoc("a", 3L, 5L),
         PackDoc("b", 100L, 9L)).toDS()
       .coalesce(1).write.json(s"$base/in/f1")
@@ -314,7 +314,7 @@ class StatefulSpec extends SparkSpec {
 
   test("packStreamSink: batchId-keyed manifests; a replayed batch rewrites its first attempt's rows exactly, no duplicates") {
     import StatefulOps.PackDoc
-    val base = Files.createTempDirectory("graft-packsink").toString
+    val base = tmpDir("graft-packsink")
     Seq(PackDoc("a", 1L, 6L), PackDoc("a", 2L, 3L), PackDoc("a", 3L, 5L)).toDS()
       .coalesce(1).write.json(s"$base/in/f1")
     Seq(PackDoc("a", 4L, 1L), PackDoc("a", 5L, 6L), PackDoc("a", 6L, 4L)).toDS()

@@ -1,10 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.Base64
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.functions.CodecUtil
 import graft.streaming.{FirehoseDelivery, RecordSink, StreamingOps}
 
 /** Shared JVM state (local-mode executors) for the record-granular
@@ -73,7 +75,7 @@ class DoubleDeliverySink extends RecordSink.BatchSink {
 class StreamingSpec extends SparkSpec {
   import Fixtures._
 
-  private def tmp(): String = Files.createTempDirectory("graft-stream").toString
+  private def tmp(): String = tmpDir("graft-stream")
 
   private def writeRecords(dir: String, file: String, recs: Seq[(String, String)]): Unit = {
     Files.createDirectories(Paths.get(dir))
@@ -149,6 +151,117 @@ class StreamingSpec extends SparkSpec {
     FirehoseDelivery.processBatch(mkBatch("reingest-3-r1"), 5L, conf)
     assert(seenParts() == Seq("batchId=3", "batchId=4", "batchId=5"), seenParts().toString)
     assert(spark.read.parquet(s"$base/out/reingest-seen/batchId=5").count() == 0)
+  }
+
+  test("processBatch byte parity: primary, backup, failed and re-ingest outputs of one mixed batch") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    def b64(s: String): String = Base64.getEncoder.encodeToString(s.getBytes(UTF_8))
+    def data(messages: String*): String = wireEncode(envelopeJson("DATA_MESSAGE", messages))
+    // an event whose message is JSON null
+    val nullMsg = "\u0000null"
+    def withNulls(messages: String*): String =
+      wireEncode(envelopeJson("DATA_MESSAGE", messages).replace(jsonStr(nullMsg), "null"))
+    // (recordId, wire data, the transform's `data` column: None = ProcessingFailed)
+    val kept = Seq(
+      ("k1", data("größe héllo HelloHello", "Hello, world"),
+        Some(b64("größe héllo Hell YeahHell Yeah\nHell Yeah, world\n"))),
+      ("k2", data("first\nsecond", "Hello"), Some(b64("first\nsecond\nHell Yeah\n"))),
+      ("k3", data(""), Some(b64("\n"))),
+      // ends in an empty event: only the last of its two "\n" is stripped
+      ("k8", data("a", ""), Some(b64("a\n\n"))),
+      ("k4", withNulls(nullMsg), Some("")),
+      ("k5", withNulls(nullMsg, "tail Hello"), Some(b64("tail Hell Yeah\n"))),
+      ("k6", data(), Some("")),
+      ("f1", wireEncode(envelopeJson("CONTROL_MESSAGE", Seq("health check"))), None),
+      ("f2", "%%corrupt%%", None),
+      ("f3", wireEncode("{not json"), None),
+      ("k7", wireEncode(" \t\n\"" + b64("Hello bare\n") + "\""), Some(b64("Hello bare\n"))))
+    // past the cap: (recordId, wire data, the decoded re-ingest payload)
+    val dropped = Seq(
+      ("d1", data("Hello dropped größe"), "\"" + b64("Hell Yeah dropped größe\n") + "\""),
+      ("d2", wireEncode("\"a\\tb\\\"c\\\\d\\re\""), "\"a\tb\\\"c\\\\d\\re\""),
+      ("d3", wireEncode("\n \"x\\ny\""), "\"x\\ny\""))
+    // the governor charges len(data) + len(recordId), failed records 0
+    // (main.py:137-151): the kept prefix fills the cap exactly
+    val cap = kept.collect { case (id, _, Some(d)) => (d.length + id.length).toLong }.sum
+    val lines = kept.collect { case (_, _, Some(d)) =>
+      new String(Base64.getDecoder.decode(d), UTF_8).stripSuffix("\n")
+    }
+    val okBytes = lines.map(_.getBytes(UTF_8).length.toLong).sum
+    val input = kept.map(r => (r._1, r._2)) ++ dropped.map(r => (r._1, r._2))
+    val defaultFlush = FirehoseDelivery.Config("", "", "").flushBytes
+
+    def run(flushBytes: Long, recs: Seq[(String, String)], sizeCap: Long) = {
+      val base = tmp()
+      val conf = FirehoseDelivery.Config(s"$base/in", s"$base/out", s"$base/ck",
+        flushBytes = flushBytes, sizeCap = sizeCap)
+      writeRecords(s"$base/raw", "b.json", recs)
+      FirehoseDelivery.processBatch(
+        spark.read.schema("recordId STRING, data STRING").json(s"$base/raw"), 3L, conf)
+      conf
+    }
+    def parts(dir: String) = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
+    def bytesOf(f: java.io.File) = new String(Files.readAllBytes(f.toPath), UTF_8)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("recordId").collect().map(_.getString(0)).sorted.toSeq
+
+    for (flushBytes <- Seq(defaultFlush, 40L)) {
+      val conf = run(flushBytes, input, cap)
+      val files = parts(s"${conf.primaryDir}/batchId=3").filter(_.length > 0)
+      val nFiles = math.max(1, math.ceil(okBytes.toDouble / flushBytes).toInt)
+      assert(files.length == nFiles, s"flushBytes=$flushBytes: ${files.map(_.getName)}")
+      if (nFiles == 1) assert(bytesOf(files.head) == lines.map(_ + "\n").mkString)
+      else assert(files.map(bytesOf).mkString.split("\n", -1).init.sorted.toSeq ==
+        lines.flatMap(_.split("\n", -1)).sorted)
+      val backup = spark.read.json(s"${conf.backupDir}/batchId=3")
+      assert(backup.select("recordId", "data").collect().map(r => (r.getString(0), r.getString(1)))
+        .sorted.toSeq == input.sorted)
+      assert(ids(spark.read.json(s"${conf.failedDir}/batchId=3")) == Seq("f1", "f2", "f3"))
+      val reingested = spark.read.json(s"${conf.inputDir}/reingest-batch-3").collect()
+        .map(r => r.getAs[String]("recordId") -> new String(
+          CodecUtil.gunzip(Base64.getDecoder.decode(r.getAs[String]("data"))), UTF_8)).toMap
+      assert(reingested == dropped.map { case (id, _, p) => s"reingest-3-$id" -> p }.toMap)
+    }
+
+    // everything dropped: the batch's primary directory still exists, empty
+    val conf = run(defaultFlush, input.take(2), 1L)
+    val primary = new java.io.File(s"${conf.primaryDir}/batchId=3")
+    assert(primary.isDirectory && parts(primary.toString).forall(_.length == 0))
+    assert(spark.read.json(s"${conf.inputDir}/reingest-batch-3").count() == 2)
+  }
+
+  test("processBatch writes a decoded Ok payload's raw bytes, invalid UTF-8 included") {
+    // a bare string passes as Ok unchecked, so "/w==" decodes to the one
+    // byte 0xFF; the primary line keeps that byte rather than a U+FFFD
+    // replacement (EF BF BD), as do the Ok bytes that size the files
+    val base = tmp()
+    val conf = FirehoseDelivery.Config(s"$base/in", s"$base/out", s"$base/ck")
+    writeRecords(s"$base/raw", "b.json", Seq("x1" -> wireEncode("\"/w==\"")))
+    FirehoseDelivery.processBatch(
+      spark.read.schema("recordId STRING, data STRING").json(s"$base/raw"), 0L, conf)
+    val files = new java.io.File(s"${conf.primaryDir}/batchId=0").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.length > 0).toSeq
+    assert(files.length == 1, files.map(_.getName))
+    assert(Files.readAllBytes(files.head.toPath).toSeq == Seq(0xFF.toByte, '\n'.toByte))
+  }
+
+  test("one source scan per trigger: numInputRows sums to the rows placed in the input, re-ingested included") {
+    // the raw batch is persisted before any sink reads it; a second
+    // scan (the backup reading the source) would double numInputRows
+    val base = tmp()
+    val conf = FirehoseDelivery.Config(s"$base/in", s"$base/out", s"$base/ck",
+      triggerMs = 100L, sizeCap = 40L)
+    writeRecords(conf.inputDir, "events-1.json",
+      Seq(record("r1", envelopeJson("DATA_MESSAGE", Seq("Hello first"))),
+        record("r2", envelopeJson("DATA_MESSAGE", Seq("Hello second")))))
+    val q = FirehoseDelivery.start(spark, conf)
+    try q.processAllAvailable() finally q.stop()
+    val rows = q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+    // trigger 1: both records, r2 dropped; trigger 2: r2 re-ingested
+    assert(rows == Seq(2L, 1L), rows)
+    val primary = spark.read.text(conf.primaryDir).collect().map(_.getString(0)).sorted.toSeq
+    assert(primary == Seq("Hell Yeah first", "Hell Yeah second"))
   }
 
   test("e2e: control message lands in processing-failed, not primary") {
