@@ -60,7 +60,8 @@ object FirehoseTransform {
     * every CASE, so only bare strings pay for it.
     */
   def transform(records: DataFrame, permissive: Boolean = true): DataFrame = {
-    val payload = codecs.gunzip(unbase64(col("data")), lenient = permissive)
+    val payload = codecs.gunzip(codecs.unbase64(col("data"), lenient = permissive),
+      lenient = permissive)
     val text = col("_text")
     val decoded = records
       .select(col("recordId"), payload.cast("string").as("_text"))

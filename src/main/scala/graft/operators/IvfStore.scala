@@ -647,7 +647,8 @@ object IvfStore {
     * the collected set is what turns the probe into parquet
     * PartitionFilters, so the scan touches only probed cells' files
     * across every batchId directory. Exact cosine + per-query top-k
-    * over the candidates, identical ranking math to ivfTopK.
+    * over the candidates: the probe and the rank are ivfTopK's own
+    * ([[Similarity.probeCells]], [[Similarity.cellCosineTopK]]).
     */
   def topK(spark: SparkSession, storeDir: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame =
@@ -663,22 +664,12 @@ object IvfStore {
   def topKOf(spark: SparkSession, storeDir: String, version: Long,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val v = version
-    val queryCells = probeCells(spark, storeDir, v, queries, idCol, vecCol, nprobe)
+    val queryCells = probeCells(spark, storeDir, version, queries, idCol, vecCol, nprobe)
     val probed = probedSet(queryCells)
-    val corpusCells = spark.read.parquet(dataDir(storeDir, v))
+    val corpusCells = spark.read.parquet(dataDir(storeDir, version))
       .filter(col("cell").isin(probed: _*))
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"), col("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("_cos").desc, col("neighbor_id"))
-    queryCells.join(corpusCells, "cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("_cos", Similarity.cosine(col("_qv"), col("_cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        Similarity.q6(col("_cos")).as("cos_sim"))
+    Similarity.cellCosineTopK(queryCells, corpusCells, k)
   }
 
   /** The per-query probe list (query_id, _qv, cell) against version
@@ -693,17 +684,10 @@ object IvfStore {
   private def probeCells(spark: SparkSession, storeDir: String, v: Long,
       queries: DataFrame, idCol: String, vecCol: String,
       nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qRows = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
+    val qRows = Similarity.queryVecs(queries, idCol, vecCol)
     val local = spark.createDataFrame(
       java.util.Arrays.asList(qRows.collect(): _*), qRows.schema)
-    val cellW = Window.partitionBy(col("query_id")).orderBy(col("_d"), col("cell"))
-    local
-      .crossJoin(broadcast(centroidsOf(spark, storeDir, v)))
-      .withColumn("_d", Similarity.q6(Similarity.l2sq(col("_qv"), col("ctr"))))
-      .withColumn("_rn", row_number().over(cellW))
-      .filter(col("_rn") <= nprobe)
-      .select(col("query_id"), col("_qv"), col("cell"))
+    Similarity.probeCells(local, centroidsOf(spark, storeDir, v), nprobe)
   }
 
   /** The distinct probed-cell set, collected (<= |queries| x nprobe
@@ -722,10 +706,11 @@ object IvfStore {
     * centroids, (2) ADC-score the probed cells' code columns against
     * a broadcast integer-quantized distance table built from the live
     * version's STORED codebooks, (3) exact-L2 re-rank the `shortlist`
-    * survivors from the probed cells' vectors. Identical ranking math
-    * (1e-6 integer grids, lowest-id tie-breaks) and the same
-    * completeness guard (a neighbor missing any subspace's
-    * distance-table entry is excluded, not under-counted).
+    * survivors from the probed cells' vectors. Each step is
+    * ivfPqTopK's own ([[Similarity.probeCells]],
+    * [[Similarity.adcTable]], [[Similarity.adcShortlist]] with its
+    * completeness guard, [[Similarity.exactRerank]]); this supplies
+    * the version binding and the cell-pruned scans.
     *
     * THE 100 TB point: the ADC leg selects only id + the `nSub` int
     * code columns, so the columnar scan reads the 16-32x smaller code
@@ -756,7 +741,6 @@ object IvfStore {
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nprobe: Int, shortlist: Int, nSubReq: Int = 0,
       subDimReq: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1 && shortlist >= k && nprobe >= 1,
       s"need 1 <= k <= shortlist and nprobe >= 1, got (k=$k, shortlist=$shortlist, nprobe=$nprobe)")
     val v = version
@@ -772,46 +756,21 @@ object IvfStore {
     val probed = probedSet(queryCells)
     val probes = queryCells.select(col("query_id"), col("cell"))
     val qvecs = queryCells.select(col("query_id"), col("_qv")).distinct()
+    // one scan per leg, so each leg's projection prunes its own columns
+    def probedCells = spark.read.parquet(dataDir(storeDir, v))
+      .filter(col("cell").isin(probed: _*))
     // ADC leg: codes-only scan of the probed cells (id + nSub ints —
     // the vector column is pruned away by the projection)
-    val codeRows = spark.read.parquet(dataDir(storeDir, v))
-      .filter(col("cell").isin(probed: _*))
+    val codeRows = probedCells
       .select(col(idCol).as("neighbor_id") +: col("cell") +:
         (0 until nSub).map(i => col(s"c$i")): _*)
-      .select(col("neighbor_id"), col("cell"),
-        posexplode(array((0 until nSub).map(i => col(s"c$i")): _*))
-          .as(Seq("subspace", "code")))
-    val dtable = qvecs
-      .crossJoin(broadcast(codebooksOf(spark, storeDir, v)))
-      .select(col("query_id"), col("subspace"), col("code"),
-        floor(Similarity.l2sq(
-            slice(col("_qv"), col("subspace") * subDim + 1, lit(subDim)),
-            col("subvec")) * 1e6 + lit(0.5)).cast("long").as("_dq"))
-    val sw = Window.partitionBy(col("query_id")).orderBy(col("_dist"), col("neighbor_id"))
-    val short = codeRows.join(broadcast(probes), "cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .join(broadcast(dtable), Seq("query_id", "subspace", "code"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg((sum(col("_dq")).cast("double") / 1e6).as("_dist"),
-        count(lit(1)).as("_matched"))
-      .filter(col("_matched") === nSub)
-      .withColumn("_rm", row_number().over(sw))
-      .filter(col("_rm") <= shortlist)
-      .select(col("query_id"), col("neighbor_id"))
+      .select(col("neighbor_id"), col("cell"), Similarity.codeCells(nSub))
+    val short = Similarity.adcShortlist(codeRows.join(broadcast(probes), "cell"),
+      Similarity.adcTable(qvecs, codebooksOf(spark, storeDir, v), subDim), nSub, shortlist)
     // exact re-rank: vectors fetched ONLY for probed cells, joined to
     // the shortlist — |queries| x shortlist full-width rows move
-    val vecs = spark.read.parquet(dataDir(storeDir, v))
-      .filter(col("cell").isin(probed: _*))
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("_nv"))
-    val rw = Window.partitionBy(col("query_id")).orderBy(col("_ed"), col("neighbor_id"))
-    short.join(vecs, "neighbor_id")
-      .join(broadcast(qvecs), "query_id")
-      .withColumn("_ed",
-        floor(Similarity.l2sq(col("_nv"), col("_qv")) * 1e6 + lit(0.5)).cast("long"))
-      .withColumn("rank", row_number().over(rw))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        Similarity.q6(col("_ed").cast("double") / 1e6).as("exact_dist"))
+    Similarity.exactRerank(short,
+      probedCells.select(col(idCol).as("neighbor_id"), col(vecCol).as("_nv")), qvecs, k)
   }
 
   /** The batchId directories present under a version's data dir —

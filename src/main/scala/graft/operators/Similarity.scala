@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.functions.{transform => transformArray}
 
@@ -43,15 +43,9 @@ object Similarity {
     * broadcast); corpus side streams.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("_cos").desc, col("neighbor_id"))
-    cosineCandidates(corpus, queries, idCol, vecCol)
-      .withColumnRenamed("score", "_cos")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), q6(col("_cos")).as("cos_sim"))
-  }
+      vecCol: String, k: Int): DataFrame =
+    cosineTopK(cosineCandidates(corpus, queries, idCol, vecCol)
+      .withColumnRenamed("score", "_cos"), k)
 
   /** The scoring stage of [[bruteForceTopK]] WITHOUT the per-query
     * rank window: every (query, corpus) pair's raw cosine, query side
@@ -94,15 +88,12 @@ object Similarity {
       norm(col(vecCol)).as("_qn"), col(labelCol).as("_ql"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
       norm(col(vecCol)).as("_cn"), col(labelCol).as("neighbor_label"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    c.crossJoin(broadcast(q))
+    topKPerQuery(c.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id") &&
         col("neighbor_label") =!= col("_ql"))
       .select(col("query_id"), col("neighbor_id"), col("neighbor_label"),
-        q6(dot(col("_qv"), col("_cv")) / (col("_qn") * col("_cn"))).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        q6(dot(col("_qv"), col("_cv")) / (col("_qn") * col("_cn"))).as("cos_sim")),
+      k, Window.orderBy(col("cos_sim").desc, col("neighbor_id")))
   }
 
   /** Deterministic pseudo-random hyperplane component: md5-derived
@@ -194,6 +185,110 @@ object Similarity {
       .select(col("_id"), col("_v"),
         col("_best.cell").as("cell"), col("_best.dist").as("dist"))
 
+  // ---------------------------------------------- the search kernel
+  //
+  // One implementation each of the steps the exact, IVF, PQ and
+  // IVF-PQ plans (and IvfStore's serving over stored versions) are
+  // composed from. Each takes and returns frames, and every ranking
+  // breaks ties to the lowest id (the lowest cell, for probes).
+
+  /** Per-query top-k: `row_number` over `query_id` in the order of
+    * `order` (a `Window.orderBy(...)` spec), kept while `<= k`, in
+    * column `rankCol`.
+    */
+  private[operators] def topKPerQuery(df: DataFrame, k: Int, order: WindowSpec,
+      rankCol: String = "rank"): DataFrame =
+    df.withColumn(rankCol, row_number().over(order.partitionBy(col("query_id"))))
+      .filter(col(rankCol) <= k)
+
+  /** The (query_id, _qv) side every search broadcasts. */
+  private[operators] def queryVecs(queries: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
+
+  /** Cosine top-k of scored pairs (query_id, neighbor_id, _cos):
+    * highest first, reported on the q6 grid.
+    */
+  private def cosineTopK(scored: DataFrame, k: Int): DataFrame =
+    topKPerQuery(scored, k, Window.orderBy(col("_cos").desc, col("neighbor_id")))
+      .select(col("query_id"), col("neighbor_id"), col("rank"), q6(col("_cos")).as("cos_sim"))
+
+  /** Exact cosine top-k inside the probed cells: probe rows (query_id,
+    * _qv, cell) join the corpus rows (neighbor_id, _cv, cell) of those
+    * cells, self excluded.
+    */
+  private[operators] def cellCosineTopK(probes: DataFrame, corpusCells: DataFrame,
+      k: Int): DataFrame =
+    cosineTopK(probes.join(corpusCells, "cell")
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .withColumn("_cos", cosine(col("_qv"), col("_cv"))), k)
+
+  /** Each query's `nprobe` nearest cells by q6 squared L2 to the
+    * centroids (cell, ctr), ties to the lowest cell: (query_id, _qv,
+    * cell). |queries| x |cells| rows — the query side is small by
+    * contract.
+    */
+  private[operators] def probeCells(queries: DataFrame, centroids: DataFrame,
+      nprobe: Int): DataFrame =
+    topKPerQuery(queries.crossJoin(broadcast(centroids))
+        .withColumn("_d", q6(l2sq(col("_qv"), col("ctr")))),
+      nprobe, Window.orderBy(col("_d"), col("cell")), "_rn")
+      .select(col("query_id"), col("_qv"), col("cell"))
+
+  /** The `c0..c{nSub-1}` code columns of a row as (subspace, code) rows. */
+  private[operators] def codeCells(nSub: Int): Column =
+    posexplode(array((0 until nSub).map(sIdx => col(s"c$sIdx")): _*))
+      .as(Seq("subspace", "code"))
+
+  /** The ADC distance table (query_id, subspace, code, _dq): each query
+    * slice against each codebook entry, squared L2 on the 1e-6 integer
+    * grid, so a neighbor's sum over subspaces is exact in any order.
+    */
+  private[operators] def adcTable(qvecs: DataFrame, codebooks: DataFrame,
+      subDim: Int): DataFrame =
+    qvecs.crossJoin(broadcast(codebooks))
+      .select(col("query_id"), col("subspace"), col("code"),
+        floor(l2sq(slice(col("_qv"), col("subspace") * subDim + 1, lit(subDim)),
+          col("subvec")) * 1e6 + lit(0.5)).cast("long").as("_dq"))
+
+  /** ADC top-`depth` per query: candidate code rows (neighbor_id,
+    * subspace, code, and query_id once a probe has paired them) join
+    * the broadcast `dtable`, self excluded, and each neighbor's
+    * distance `_dist` is its summed table entries.
+    *
+    * Completeness guard: a (subspace, code) with no table entry — the
+    * -1 code [[graft.functions.PqUtil]] emits for a subspace whose
+    * codebook is empty — drops out of the inner join and would rank
+    * its neighbor on an under-counted sum, so only neighbors matched
+    * in all `nSub` subspaces are ranked. With complete codebooks
+    * every neighbor matches all `nSub` and the guard is a no-op.
+    */
+  private[operators] def adcShortlist(cands: DataFrame, dtable: DataFrame, nSub: Int,
+      depth: Int): DataFrame =
+    topKPerQuery(cands
+        .join(broadcast(dtable), Seq("query_id", "subspace", "code").filter(cands.columns.contains))
+        .filter(col("neighbor_id") =!= col("query_id"))
+        .groupBy(col("query_id"), col("neighbor_id"))
+        .agg((sum(col("_dq")).cast("double") / 1e6).as("_dist"),
+          count(lit(1)).as("_matched"))
+        .filter(col("_matched") === nSub),
+      depth, Window.orderBy(col("_dist"), col("neighbor_id")))
+
+  /** Exact re-rank of a shortlist (query_id, neighbor_id): only the
+    * shortlisted vectors (neighbor_id, _nv) are fetched, scored by
+    * squared L2 against the broadcast query vectors on the 1e-6
+    * integer grid: (query_id, neighbor_id, rank, exact_dist).
+    */
+  private[operators] def exactRerank(shortlist: DataFrame, vecs: DataFrame,
+      qvecs: DataFrame, k: Int): DataFrame =
+    topKPerQuery(shortlist.select(col("query_id"), col("neighbor_id"))
+        .join(vecs, "neighbor_id")
+        .join(broadcast(qvecs), "query_id")
+        .withColumn("_ed", floor(l2sq(col("_nv"), col("_qv")) * 1e6 + lit(0.5)).cast("long")),
+      k, Window.orderBy(col("_ed"), col("neighbor_id")))
+      .select(col("query_id"), col("neighbor_id"), col("rank"),
+        q6(col("_ed").cast("double") / 1e6).as("exact_dist"))
+
   /** IVF-style ANN: partition the corpus into cells by nearest
     * centroid (the inverted file), then answer queries by probing only
     * the `nprobe` nearest cells. At 100 TB the corpus is stored
@@ -210,24 +305,10 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
     // centroids: (cell: Int, ctr: Array[Double])
-    val cellW = Window.partitionBy(col("query_id")).orderBy(col("_d"), col("cell"))
     val corpusCells = assignCells(corpus, centroids, idCol, vecCol)
       .select(col("_id").as("neighbor_id"), col("_v").as("_cv"), col("cell"))
-    val queryCells = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("_d", q6(l2sq(col("_qv"), col("ctr"))))
-      .withColumn("_rn", row_number().over(cellW))
-      .filter(col("_rn") <= nprobe)
-      .select(col("query_id"), col("_qv"), col("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("_cos").desc, col("neighbor_id"))
-    queryCells.join(corpusCells, "cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("_cos", cosine(col("_qv"), col("_cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), q6(col("_cos")).as("cos_sim"))
+    cellCosineTopK(probeCells(queryVecs(queries, idCol, vecCol), centroids, nprobe),
+      corpusCells, k)
   }
 
   /** ANN candidate pairs — the default entry point. Delegates to
@@ -374,40 +455,18 @@ object Similarity {
     * order — no floating-point order dependence between engines or
     * partitionings.
     *
-    * Completeness guard: a (subspace, code) with no distance-table
-    * entry — e.g. the -1 sentinel [[graft.functions.PqUtil]] emits for
-    * a subspace whose codebook is empty — would silently vanish from
-    * the inner join and leave that neighbor ranked by an UNDER-COUNTED
-    * distance sum. The aggregation therefore also counts matched
-    * subspaces and keeps only neighbors with all `nSub` matched:
-    * incompletely-coded rows are excluded from the ranking rather than
-    * mis-ranked. With complete codebooks (the normal case) every row
-    * matches all nSub and the filter is a no-op.
+    * Completeness guard ([[adcShortlist]]): a neighbor missing a
+    * distance-table entry for any subspace is excluded from the
+    * ranking rather than mis-ranked on an under-counted sum. With
+    * complete codebooks (the normal case) the guard is a no-op.
     */
   def pqTopK(codes: DataFrame, queries: DataFrame, codebooks: DataFrame,
       idCol: String, vecCol: String, k: Int, nSub: Int = 8,
-      subDim: Int = 8): DataFrame = {
-    val dtable = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-      .crossJoin(broadcast(codebooks))
-      .select(col("query_id"), col("subspace"), col("code"),
-        floor(l2sq(slice(col("_qv"), col("subspace") * subDim + 1, lit(subDim)),
-          col("subvec")) * 1e6 + lit(0.5)).cast("long").as("_dq"))
-    val codeRows = codes.select(col("_id").as("neighbor_id"),
-      posexplode(array((0 until nSub).map(sIdx => col(s"c$sIdx")): _*))
-        .as(Seq("subspace", "code")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("_dist"), col("neighbor_id"))
-    codeRows.join(broadcast(dtable), Seq("subspace", "code"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg((sum(col("_dq")).cast("double") / 1e6).as("_dist"),
-        count(lit(1)).as("_matched"))
-      .filter(col("_matched") === nSub)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      subDim: Int = 8): DataFrame =
+    adcShortlist(codes.select(col("_id").as("neighbor_id"), codeCells(nSub)),
+      adcTable(queryVecs(queries, idCol, vecCol), codebooks, subDim), nSub, k)
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         q6(col("_dist")).as("approx_dist"))
-  }
 
   /** PQ shortlist + EXACT re-rank — the standard two-stage ANN serving
     * plan (IVF-PQ/FAISS style): [[pqTopK]] produces a `shortlist`-deep
@@ -426,20 +485,10 @@ object Similarity {
     */
   def pqTopKReranked(codes: DataFrame, corpus: DataFrame, queries: DataFrame,
       codebooks: DataFrame, idCol: String, vecCol: String, k: Int,
-      shortlist: Int, nSub: Int = 8, subDim: Int = 8): DataFrame = {
-    val short = pqTopK(codes, queries, codebooks, idCol, vecCol, shortlist, nSub, subDim)
-      .select(col("query_id"), col("neighbor_id"))
-    val vecs = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_nv"))
-    val qvecs = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("_ed"), col("neighbor_id"))
-    short.join(vecs, "neighbor_id")
-      .join(broadcast(qvecs), "query_id")
-      .withColumn("_ed", floor(l2sq(col("_nv"), col("_qv")) * 1e6 + lit(0.5)).cast("long"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        q6(col("_ed").cast("double") / 1e6).as("exact_dist"))
-  }
+      shortlist: Int, nSub: Int = 8, subDim: Int = 8): DataFrame =
+    exactRerank(pqTopK(codes, queries, codebooks, idCol, vecCol, shortlist, nSub, subDim),
+      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_nv")),
+      queryVecs(queries, idCol, vecCol), k)
 
   /** IVF x PQ composed serving plan — THE production 100 TB vector-
     * search shape (the faiss `IVFPQ` index layout, Jégou et al. 2011):
@@ -475,43 +524,12 @@ object Similarity {
       .withColumn("_codes", enc)
       .select(col("_id").as("neighbor_id"), col("cell"),
         posexplode(col("_codes")).as(Seq("subspace", "code")))
-    // per-query probe list: the nprobe nearest cells (|queries| x
-    // |cells| candidate rows — query side is small by contract)
-    val cellW = Window.partitionBy(col("query_id")).orderBy(col("_d"), col("cell"))
-    val probes = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("_d", q6(l2sq(col("_qv"), col("ctr"))))
-      .withColumn("_rn", row_number().over(cellW))
-      .filter(col("_rn") <= nprobe)
+    val probes = probeCells(queryVecs(queries, idCol, vecCol), centroids, nprobe)
       .select(col("query_id"), col("cell"))
-    // ADC distance table, integer-quantized (the pqTopK table)
-    val dtable = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-      .crossJoin(broadcast(codebooks))
-      .select(col("query_id"), col("subspace"), col("code"),
-        floor(l2sq(slice(col("_qv"), col("subspace") * subDim + 1, lit(subDim)),
-          col("subvec")) * 1e6 + lit(0.5)).cast("long").as("_dq"))
-    val sw = Window.partitionBy(col("query_id")).orderBy(col("_dist"), col("neighbor_id"))
-    val short = codeRows.join(broadcast(probes), "cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .join(broadcast(dtable), Seq("query_id", "subspace", "code"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg((sum(col("_dq")).cast("double") / 1e6).as("_dist"),
-        count(lit(1)).as("_matched"))
-      .filter(col("_matched") === nSub)
-      .withColumn("_rm", row_number().over(sw))
-      .filter(col("_rm") <= shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    // exact re-rank of the shortlist (the pqTopKReranked tail)
-    val vecs = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_nv"))
-    val qvecs = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-    val rw = Window.partitionBy(col("query_id")).orderBy(col("_ed"), col("neighbor_id"))
-    short.join(vecs, "neighbor_id")
-      .join(broadcast(qvecs), "query_id")
-      .withColumn("_ed", floor(l2sq(col("_nv"), col("_qv")) * 1e6 + lit(0.5)).cast("long"))
-      .withColumn("rank", row_number().over(rw))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        q6(col("_ed").cast("double") / 1e6).as("exact_dist"))
+    val short = adcShortlist(codeRows.join(broadcast(probes), "cell"),
+      adcTable(queryVecs(queries, idCol, vecCol), codebooks, subDim), nSub, shortlist)
+    exactRerank(short, corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_nv")),
+      queryVecs(queries, idCol, vecCol), k)
   }
 
   /** Lloyd's k-means over an embedding column, built from the pieces
@@ -615,13 +633,16 @@ object Similarity {
       contribU.as("_c"))).reduce(_ unionAll _)
     val fused = u.groupBy(col("query_id"), col("neighbor_id"))
       .agg(sum(col("_c")).as("rrf_u"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf_u").desc, col("neighbor_id"))
-    fused.withColumn("fused_rank", row_number().over(w))
-      .filter(col("fused_rank") <= topK)
+    fusedTopK(fused, topK)
+  }
+
+  /** The fused top-`topK` of both RRF entry points: largest nano-unit
+    * sum first.
+    */
+  private def fusedTopK(fused: DataFrame, topK: Int): DataFrame =
+    topKPerQuery(fused, topK, Window.orderBy(col("rrf_u").desc, col("neighbor_id")), "fused_rank")
       .select(col("query_id"), col("neighbor_id"),
         col("fused_rank").cast("int").as("fused_rank"), col("rrf_u"))
-  }
 
   /** [[reciprocalRankFusion]] fused with the per-leg ranking itself:
     * takes each leg's SCORED candidates (query_id, neighbor_id, score
@@ -665,12 +686,7 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), contribU.as("_c"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(sum(col("_c")).as("rrf_u"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf_u").desc, col("neighbor_id"))
-    fused.withColumn("fused_rank", row_number().over(w))
-      .filter(col("fused_rank") <= topK)
-      .select(col("query_id"), col("neighbor_id"),
-        col("fused_rank").cast("int").as("fused_rank"), col("rrf_u"))
+    fusedTopK(fused, topK)
   }
 
   /** Maximal-Marginal-Relevance re-rank: greedily pick `k` of each
@@ -848,10 +864,8 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("_idot", idot)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy((col("_idot").cast("double") * col("_cs")).desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, k,
+        Window.orderBy((col("_idot").cast("double") * col("_cs")).desc, col("neighbor_id")))
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         col("_idot").as("idot"),
         q6(col("_idot").cast("double") * col("_qs") * col("_cs") / lit(16129.0)).as("dot_approx"))

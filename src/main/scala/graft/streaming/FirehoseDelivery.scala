@@ -111,7 +111,8 @@ object FirehoseDelivery {
     *  1. persist the raw batch: the source is scanned (and its JSON
     *     parsed) once per trigger, whatever reads it;
     *  2. build and persist `governed`: transform + size governor, with
-    *     each Ok payload decoded ONCE into its primary line `value`;
+    *     each Ok payload decoded ONCE into its primary line `value`
+    *     (a payload that is not valid base64 fails its record);
     *  3. one probe job over `governed` (it also fills both caches):
     *     the Ok bytes set the primary file count, the dropped count
     *     decides whether the re-ingest leg runs;
@@ -190,8 +191,14 @@ object FirehoseDelivery {
       governed = FirehoseTransform.sizeGovernor(
         FirehoseTransform.transform(admitted, conf.permissive), conf.sizeCap)
         .select(col("recordId"), col("result"), col("reingest_data"),
-          when(col("result") === Ok, unbase64(col("data"))).as("_bytes"))
-        .select(col("recordId"), col("result"), col("reingest_data"), primaryLine.as("value"))
+          when(col("result") === Ok, codecs.unbase64(col("data"), lenient = true)).as("_bytes"))
+        // Firehose fails a transform result whose data is not valid
+        // base64; a bare string passes the transform unchecked, so the
+        // payload's one decode is also its check
+        .select(col("recordId"),
+          when(col("result") === Ok && bytes.isNull, lit(ProcessingFailed))
+            .otherwise(col("result")).as("result"),
+          col("reingest_data"), primaryLine.as("value"))
         .persist()
       val statsRow = governed.agg(
         sum(octet_length(col("value"))).as("_ok_bytes"),

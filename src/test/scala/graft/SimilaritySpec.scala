@@ -216,6 +216,35 @@ class SimilaritySpec extends SparkSpec {
         k = 5, nSub = 2, subDim = 2)
       .collect().map(r => (r.getLong(1), r.getInt(2)))
     assert(out.toSeq == Seq((10L, 1)))
+    // ivfPqTopK encodes the corpus itself, so the -1 code reaches it
+    // through a codebook with no subspace-1 entries: every neighbor
+    // then misses a subspace, and the guard must rank none of them
+    // rather than rank all on subspace 0 alone
+    val corpus = Seq((10L, Array(0.0, 0.0, 1.0, 1.0)), (11L, Array(1.0, 1.0, 0.0, 0.0)))
+      .toDF("vec_id", "embedding")
+    val ctrs = Seq((0, Array(0.0, 0.0, 0.0, 0.0))).toDF("cell", "ctr")
+    def ivfPq(codebooks: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfPqTopK(corpus, queries, ctrs, codebooks, "vec_id", "embedding",
+          k = 5, nprobe = 1, shortlist = 5, nSub = 2, subDim = 2)
+        .collect().map(_.getLong(1)).sorted.toSeq
+    assert(ivfPq(cbs) == Seq(10L, 11L))
+    assert(ivfPq(cbs.filter(col("subspace") === 0)).isEmpty)
+  }
+
+  test("ivfTopK probing every cell equals bruteForceTopK row for row") {
+    val e = Tables.load(spark, sfDir, "embeddings")
+    val centroid = udaf(new graft.functions.CentroidAggregator(64))
+    val centroids = e.groupBy(col("label").cast("int").as("cell"))
+      .agg(centroid(col("embedding")).as("ctr"))
+    val queries = e.filter(col("vec_id") % 97 === 0)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id", "rank", "cos_sim").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
+        .sortBy(r => (r._1, r._3)).toSeq
+    val ivf = rows(Similarity.ivfTopK(e, queries, centroids, "vec_id", "embedding",
+      k = 5, nprobe = centroids.count().toInt))
+    assert(ivf.nonEmpty)
+    assert(ivf == rows(Similarity.bruteForceTopK(e, queries, "vec_id", "embedding", 5)))
   }
 
   test("int8Quantize: dequantization error bounded by half a quantization step; zero vector safe") {

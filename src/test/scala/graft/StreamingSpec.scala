@@ -232,7 +232,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("processBatch writes a decoded Ok payload's raw bytes, invalid UTF-8 included") {
-    // a bare string passes as Ok unchecked, so "/w==" decodes to the one
+    // a bare string that decodes passes as Ok, so "/w==" decodes to the one
     // byte 0xFF; the primary line keeps that byte rather than a U+FFFD
     // replacement (EF BF BD), as do the Ok bytes that size the files
     val base = tmp()
@@ -244,6 +244,31 @@ class StreamingSpec extends SparkSpec {
       .filter(f => f.getName.startsWith("part-") && f.length > 0).toSeq
     assert(files.length == 1, files.map(_.getName))
     assert(Files.readAllBytes(files.head.toPath).toSeq == Seq(0xFF.toByte, '\n'.toByte))
+  }
+
+  test("processBatch fails a record whose base64 cannot decode, not the batch") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    // "abcde" ends in a one-character base64 unit, which no decoder
+    // accepts: as a bare string (b1) or as the wire data itself (b2) it
+    // must land in processing-failed while the rest of the batch is
+    // delivered, instead of failing the batch on every replay
+    val b64 = Base64.getEncoder.encodeToString("bare two\n".getBytes(UTF_8))
+    val base = tmp()
+    val conf = FirehoseDelivery.Config(s"$base/in", s"$base/out", s"$base/ck")
+    writeRecords(s"$base/raw", "b.json", Seq(
+      "g1" -> wireEncode(envelopeJson("DATA_MESSAGE", Seq("Hello one"))),
+      "b1" -> wireEncode("\"abcde\""),
+      "g2" -> wireEncode("\"" + b64 + "\""),
+      "b2" -> "abcde"))
+    FirehoseDelivery.processBatch(
+      spark.read.schema("recordId STRING, data STRING").json(s"$base/raw"), 0L, conf)
+    assert(spark.read.json(s"${conf.failedDir}/batchId=0").select("recordId")
+      .collect().map(_.getString(0)).sorted.toSeq == Seq("b1", "b2"))
+    val files = new java.io.File(s"${conf.primaryDir}/batchId=0").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.length > 0).toSeq
+    assert(files.length == 1, files.map(_.getName))
+    assert(new String(Files.readAllBytes(files.head.toPath), UTF_8) ==
+      "Hell Yeah one\nbare two\n")
   }
 
   test("one source scan per trigger: numInputRows sums to the rows placed in the input, re-ingested included") {
