@@ -130,7 +130,7 @@ case class Gzip(child: Expression) extends BinaryCodecExpression {
 
 /** gzip-decompress a BINARY column (reference: `gzip.decompress(...)`,
   * lambda/main.py:74). With `lenient = true`, malformed input yields
-  * null instead of failing the task (permissive-mode routing).
+  * null instead of failing the task (ProcessingFailed routing).
   */
 case class Gunzip(child: Expression, lenient: Boolean = false) extends BinaryCodecExpression {
   override def prettyName: String = "gunzip"

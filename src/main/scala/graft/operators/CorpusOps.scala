@@ -289,11 +289,7 @@ object CorpusOps {
     val lowQ = base.filter(col("quality") < qualityMin || col("quality").isNull)
       .select(Seq(col("doc_id"), col("quality"),
         lit("low_quality").as("disposition")) ++ nulls: _*)
-    val pass = base.filter(col("quality") >= qualityMin)
-      .withColumn("_md5", md5(encode(col("text"), "UTF-8")))
-    val tagged = pass.join(
-      pass.groupBy(col("_md5")).agg(min(col("doc_id")).as("_keeper")),
-      Seq("_md5"))
+    val tagged = Curation.keeperTagged(base.filter(col("quality") >= qualityMin))
     val exactDup = tagged.filter(col("doc_id") =!= col("_keeper"))
       .select(Seq(col("doc_id"), col("quality"),
         lit("exact_dup").as("disposition")) ++ nulls: _*)
@@ -303,18 +299,14 @@ object CorpusOps {
       case None =>
         (None, keepers, None)
       case Some(ev) =>
-        val grams = explode(array_distinct(
-          graft.functions.shingles.wordShingles(col("text"), evalN))).as("_g")
-        val evalSet = ev.select(grams)
-          .select(Dedup.hash48(col("_g")).as("_h")).distinct()
+        val evalSet = Curation.gramHashes(ev, Nil, col("text"), evalN).distinct()
         // persisted for the same reason as `base`: the id set feeds
         // BOTH the semi (contaminated) and anti (clean keepers)
         // branches, and its lineage is the keeper-gram explode — a
         // corpus-scale pass at 100 TB that must run once, not twice.
         // Small by nature (keepers that overlap the benchmark set).
-        val contamIds = keepers.select(col("doc_id"), grams)
-          .select(col("doc_id"), Dedup.hash48(col("_g")).as("_h"))
-          .join(broadcast(evalSet), Seq("_h"), "left_semi")
+        val contamIds = Curation.sharedGrams(
+            Curation.gramHashes(keepers, Seq("doc_id"), col("text"), evalN), evalSet)
           .select(col("doc_id")).distinct()
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         (Some(keepers.join(contamIds, Seq("doc_id"), "left_semi")

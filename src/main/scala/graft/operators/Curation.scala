@@ -116,6 +116,68 @@ object Curation {
         (dupFrac2 > dupFrac2Flag || topFrac2 > topFrac2Flag).cast("int").as("flagged"))
   }
 
+  /** The contamination kernel's gram step: one row per DISTINCT word
+    * `n`-gram of each row of `df`, as the `keep` columns plus
+    * `_h = hash48(gram)`. [[decontaminate]], [[decontaminateBloom]],
+    * [[evalContamination]], the curation pipeline's and the curation
+    * stream's eval gates and the published eval-gram table all derive
+    * their grams here, so they agree on the grain.
+    */
+  private[graft] def gramHashes(df: DataFrame, keep: Seq[String], text: Column,
+      n: Int): DataFrame =
+    df.select(keep.map(col) :+ explode(array_distinct(
+        graft.functions.shingles.wordShingles(text, n))).as("_g"): _*)
+      .select(keep.map(col) :+ Dedup.hash48(col("_g")).as("_h"): _*)
+
+  /** The rows of `grams` whose `_h` is in `evalSet`: a left-semi join
+    * against the BROADCAST eval set — eval benchmarks are small by
+    * nature, so the corpus side never shuffles for the join.
+    */
+  private[graft] def sharedGrams(grams: DataFrame, evalSet: DataFrame): DataFrame =
+    grams.join(broadcast(evalSet), Seq("_h"), "left_semi")
+
+  /** The per-doc contamination row: every id of `ids`, the `perDoc`
+    * frames (keyed by `idCol`, carrying `n_grams` / `n_matched`)
+    * left-joined on in order, projected to (n_grams, n_matched,
+    * contam_frac, contaminated). Docs shorter than n tokens have no
+    * grams: they are CLEAN rows (n_grams=0, contaminated=0), not absent
+    * ones — a keep-set built from this output must include them.
+    */
+  private[graft] def contamStats(ids: DataFrame, idCol: String,
+      perDoc: DataFrame*): DataFrame =
+    perDoc.foldLeft(ids.select(col(idCol)))(_.join(_, Seq(idCol), "left"))
+      .select(col(idCol),
+        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
+        coalesce(col("n_matched"), lit(0L)).as("n_matched"),
+        graft.functions.quantize.q6(coalesce(
+          col("n_matched").cast("double") / col("n_grams"), lit(0.0))).as("contam_frac"),
+        (coalesce(col("n_matched"), lit(0L)) > 0).cast("int").as("contaminated"))
+
+  /** Per id of `grams`: its gram count and how many of its grams are in
+    * `matched` (a distinct `_h` set), through one broadcast LEFT join,
+    * so the totals and the matches come from the same pass.
+    */
+  private def matchCounts(grams: DataFrame, idCol: String,
+      matched: DataFrame): DataFrame =
+    grams.join(broadcast(matched.withColumn("_m", lit(1))), Seq("_h"), "left")
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).as("n_grams"),
+        sum(coalesce(col("_m"), lit(0))).cast("long").as("n_matched"))
+
+  /** The exact-dup keeper tag of the curation pipeline and stream: each
+    * row of `df` (doc_id, text, ...) gains `_md5` of its text and
+    * `_keeper`, the lowest doc_id with that md5. A groupBy(min) joined
+    * back, not a window: one row per distinct text goes through the
+    * shuffle, and a skewed text is an AQE-splittable join instead of
+    * one window partition.
+    */
+  private[graft] def keeperTagged(df: DataFrame): DataFrame = {
+    val tagged = df.withColumn("_md5", md5(encode(col("text"), "UTF-8")))
+    tagged.join(
+      tagged.groupBy(col("_md5")).agg(min(col("doc_id")).as("_keeper")),
+      Seq("_md5"))
+  }
+
   /** Benchmark decontamination by n-gram overlap (the GPT-3/PaLM
     * method): hash each corpus document's distinct word n-grams and
     * count how many appear in the eval set's gram table. Returns one
@@ -129,28 +191,9 @@ object Curation {
     */
   def decontaminate(corpus: DataFrame, evalDocs: DataFrame, idCol: String,
       text: Column, n: Int = 8): DataFrame = {
-    val grams = graft.functions.shingles.wordShingles(text, n)
-    val evalGrams = evalDocs
-      .select(explode(array_distinct(grams)).as("_g"))
-      .select(Dedup.hash48(col("_g")).as("_h")).distinct()
-      .withColumn("_m", lit(1))
-    val corpusGrams = corpus
-      .select(col(idCol), explode(array_distinct(grams)).as("_g"))
-      .select(col(idCol), Dedup.hash48(col("_g")).as("_h"))
-    val q6 = graft.functions.quantize.q6 _
-    val perDoc = corpusGrams.join(broadcast(evalGrams), Seq("_h"), "left")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_grams"),
-        sum(coalesce(col("_m"), lit(0))).cast("long").as("n_matched"))
-    // docs shorter than n tokens have no grams: they are CLEAN rows
-    // (n_grams=0, contaminated=0), not absent ones — a keep-set built
-    // from this output must include them
-    corpus.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        coalesce(col("n_matched"), lit(0L)).as("n_matched"),
-        q6(coalesce(col("n_matched").cast("double") / col("n_grams"), lit(0.0))).as("contam_frac"),
-        (coalesce(col("n_matched"), lit(0L)) > 0).cast("int").as("contaminated"))
+    val evalSet = gramHashes(evalDocs, Nil, text, n).distinct()
+    contamStats(corpus, idCol,
+      matchCounts(gramHashes(corpus, Seq(idCol), text, n), idCol, evalSet))
   }
 
   /** Benchmark decontamination with a BLOOM-FILTER prefilter — the
@@ -181,35 +224,19 @@ object Curation {
   def decontaminateBloom(corpus: DataFrame, evalDocs: DataFrame, idCol: String,
       text: Column, n: Int = 8, expectedItems: Long = 1L << 20,
       fpp: Double = 0.01): DataFrame = {
-    val grams = graft.functions.shingles.wordShingles(text, n)
-    val evalGrams = evalDocs
-      .select(explode(array_distinct(grams)).as("_g"))
-      .select(Dedup.hash48(col("_g")).as("_h")).distinct()
-    val bf = evalGrams.stat.bloomFilter("_h", expectedItems, fpp)
+    val evalSet = gramHashes(evalDocs, Nil, text, n).distinct()
+    val bf = evalSet.stat.bloomFilter("_h", expectedItems, fpp)
     val bfBc = corpus.sparkSession.sparkContext.broadcast(bf)
     val mightContain = udf((h: Long) => bfBc.value.mightContainLong(h))
-    val corpusGrams = corpus
-      .select(col(idCol), explode(array_distinct(grams)).as("_g"))
-      .select(col(idCol), Dedup.hash48(col("_g")).as("_h"))
+    val corpusGrams = gramHashes(corpus, Seq(idCol), text, n)
     // branch 1: per-doc gram totals — join-free, map-side combined
     val totals = corpusGrams.groupBy(col(idCol))
       .agg(count(lit(1)).as("n_grams"))
     // branch 2: bloom-positive grams, exact-confirmed via semi join
-    val matched = corpusGrams
-      .filter(mightContain(col("_h")))
-      .join(broadcast(evalGrams), Seq("_h"), "left_semi")
+    val matched = sharedGrams(corpusGrams.filter(mightContain(col("_h"))), evalSet)
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_matched"))
-    val q6 = graft.functions.quantize.q6 _
-    // same short-doc contract as decontaminate: no grams -> CLEAN row
-    corpus.select(col(idCol))
-      .join(totals, Seq(idCol), "left")
-      .join(matched, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        coalesce(col("n_matched"), lit(0L)).as("n_matched"),
-        q6(coalesce(col("n_matched").cast("double") / col("n_grams"), lit(0.0))).as("contam_frac"),
-        (coalesce(col("n_matched"), lit(0L)) > 0).cast("int").as("contaminated"))
+    contamStats(corpus, idCol, totals, matched)
   }
 
   /** Contamination severity per EVAL doc — the transpose of
@@ -231,33 +258,14 @@ object Curation {
     * the corpus.
     *
     * Same short-doc contract as [[decontaminate]]: an eval doc with
-    * fewer than n tokens has no grams and reports a CLEAN row
-    * (n_grams=0, contaminated=0), not an absent one.
+    * fewer than n tokens has no grams and reports a CLEAN row.
     */
   def evalContamination(corpus: DataFrame, evalDocs: DataFrame,
       idCol: String, text: Column, n: Int = 8): DataFrame = {
-    val grams = graft.functions.shingles.wordShingles(text, n)
-    val evalGrams = evalDocs
-      .select(col(idCol), explode(array_distinct(grams)).as("_g"))
-      .select(col(idCol), Dedup.hash48(col("_g")).as("_h"))
-    val evalSet = evalGrams.select(col("_h")).distinct()
-    val hits = corpus
-      .select(explode(array_distinct(grams)).as("_g"))
-      .select(Dedup.hash48(col("_g")).as("_h"))
-      .join(broadcast(evalSet), Seq("_h"), "left_semi")
-      .distinct()
-      .withColumn("_m", lit(1))
-    val q6 = graft.functions.quantize.q6 _
-    val perDoc = evalGrams.join(broadcast(hits), Seq("_h"), "left")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_grams"),
-        sum(coalesce(col("_m"), lit(0))).cast("long").as("n_matched"))
-    evalDocs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        coalesce(col("n_matched"), lit(0L)).as("n_matched"),
-        q6(coalesce(col("n_matched").cast("double") / col("n_grams"), lit(0.0))).as("contam_frac"),
-        (coalesce(col("n_matched"), lit(0L)) > 0).cast("int").as("contaminated"))
+    val evalGrams = gramHashes(evalDocs, Seq(idCol), text, n)
+    val hits = sharedGrams(gramHashes(corpus, Nil, text, n),
+      evalGrams.select(col("_h")).distinct()).distinct()
+    contamStats(evalDocs, idCol, matchCounts(evalGrams, idCol, hits))
   }
 
   /** Temperature-based source mixing weights (alpha = 0.5, the

@@ -23,9 +23,11 @@ import graft.functions.codecs
   *    narrow map pipeline in a single stage; `from_json` is its one
   *    interpreted expression.
   *  - Corrupt inputs: the reference raises and fails the whole batch
-  *    (main.py:74 has no try/except). In permissive mode (default) we
-  *    instead route undecodable/unparsable records to ProcessingFailed,
-  *    the same side channel as non-DATA_MESSAGE control records.
+  *    (main.py:74 has no try/except). We instead route
+  *    undecodable/unparsable records to ProcessingFailed, the same side
+  *    channel as non-DATA_MESSAGE control records: base64 and gzip
+  *    decode leniently and `from_json` is PERMISSIVE, so one corrupt
+  *    record never fails its batch.
   */
 object FirehoseTransform {
 
@@ -59,9 +61,9 @@ object FirehoseTransform {
     * `\s` and a prefix compare, and `get_json_object` sits behind it in
     * every CASE, so only bare strings pay for it.
     */
-  def transform(records: DataFrame, permissive: Boolean = true): DataFrame = {
-    val payload = codecs.gunzip(codecs.unbase64(col("data"), lenient = permissive),
-      lenient = permissive)
+  def transform(records: DataFrame): DataFrame = {
+    val payload = codecs.gunzip(codecs.unbase64(col("data"), lenient = true),
+      lenient = true)
     val text = col("_text")
     val decoded = records
       .select(col("recordId"), payload.cast("string").as("_text"))
@@ -86,8 +88,8 @@ object FirehoseTransform {
         .when(col("_env").isNull || col("_env.messageType").isNull, lit(ProcessingFailed))
         .when(col("_env.messageType") =!= "DATA_MESSAGE", lit(ProcessingFailed))
         // DATA_MESSAGE without logEvents: the reference would raise on
-        // data['logEvents']; permissive mode fails the record rather
-        // than emitting Ok-with-null-data.
+        // data['logEvents']; we fail the record rather than emitting
+        // Ok-with-null-data.
         .when(col("_env.logEvents").isNull, lit(ProcessingFailed))
         .otherwise(lit(Ok))
         .as("result"),

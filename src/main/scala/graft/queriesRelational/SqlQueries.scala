@@ -11,26 +11,18 @@ import graft.queriesRelational.RelationalQueries.Q
   */
 object SqlQueries {
 
+  /** A query written once as SQL text: `spark.sql` over the registered
+    * views runs `text`, and the same `text` is its oracle.
+    */
+  private def sqlQ(name: String, text: String): Q =
+    Q(name, (s, dir) => { Tables.registerAll(s, dir); s.sql(text) }, Some(text))
+
   /** TPC-H Q5-shaped local-supplier volume, written as SQL text and
     * parsed/planned by Catalyst like any DataFrame query. The
     * c_nationkey = s_nationkey condition makes the join graph cyclic —
     * a real join-reorder workout.
     */
-  private val q57 = Q("q57_sql_text", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql("""
-      SELECT n_name,
-             CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS DOUBLE)/100.0 AS revenue
-      FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        JOIN nation ON s_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-      WHERE r_name IN ('ASIA', 'EUROPE')
-      GROUP BY n_name
-      ORDER BY n_name""")
-  }, Some("""
+  private val q57 = sqlQ("q57_sql_text", """
     SELECT n_name,
            CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) AS DOUBLE)/100.0 AS revenue
     FROM customer
@@ -41,61 +33,32 @@ object SqlQueries {
       JOIN region ON n_regionkey = r_regionkey
     WHERE r_name IN ('ASIA', 'EUROPE')
     GROUP BY n_name
-    ORDER BY n_name"""))
+    ORDER BY n_name""")
 
   /** Correlated scalar subquery: parts priced >= 1.05x their type's
     * average (Catalyst de-correlates into an aggregate + join).
     */
-  private val q58 = Q("q58_correlated_subquery", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql("""
-      SELECT p_partkey, p_type, p_retailprice
-      FROM part p
-      WHERE p_retailprice >= 1.05 * (
-        SELECT floor(avg(p_retailprice) * 1000000 + 0.5) / 1000000.0
-        FROM part q WHERE q.p_type = p.p_type)
-      ORDER BY p_partkey""")
-  }, Some("""
+  private val q58 = sqlQ("q58_correlated_subquery", """
     SELECT p_partkey, p_type, p_retailprice
     FROM part p
     WHERE p_retailprice >= 1.05 * (
       SELECT floor(avg(p_retailprice) * 1000000 + 0.5) / 1000000.0
       FROM part q WHERE q.p_type = p.p_type)
-    ORDER BY p_partkey"""))
+    ORDER BY p_partkey""")
 
   /** Uncorrelated IN-subquery + aggregate filter in SQL text. */
-  private val q59 = Q("q59_in_subquery", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql("""
-      SELECT o_orderkey, o_totalprice
-      FROM orders
-      WHERE o_custkey IN (
-        SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-        AND o_totalprice > 150000
-      ORDER BY o_orderkey""")
-  }, Some("""
+  private val q59 = sqlQ("q59_in_subquery", """
     SELECT o_orderkey, o_totalprice
     FROM orders
     WHERE o_custkey IN (
       SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
       AND o_totalprice > 150000
-    ORDER BY o_orderkey"""))
+    ORDER BY o_orderkey""")
 
   /** B16: explicit GROUPING SETS with grouping() disambiguation (the
     * third shape besides rollup q11 / cube q12).
     */
-  private val q68 = Q("q68_grouping_sets", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql("""
-      SELECT coalesce(o_orderstatus, 'ALL') AS status,
-             coalesce(o_orderpriority, 'ALL') AS priority,
-             CAST(grouping(o_orderstatus) AS BIGINT) AS g_status,
-             CAST(grouping(o_orderpriority) AS BIGINT) AS g_priority,
-             count(*) AS n
-      FROM orders
-      GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-      ORDER BY status, priority""")
-  }, Some("""
+  private val q68 = sqlQ("q68_grouping_sets", """
     SELECT coalesce(o_orderstatus, 'ALL') AS status,
            coalesce(o_orderpriority, 'ALL') AS priority,
            CAST(grouping(o_orderstatus) AS BIGINT) AS g_status,
@@ -103,7 +66,7 @@ object SqlQueries {
            count(*) AS n
     FROM orders
     GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-    ORDER BY status, priority"""))
+    ORDER BY status, priority""")
 
   /** TPC-H Q2-shaped min-cost-supplier lookup (no partsupp table in
     * this corpus, so lineitem is the part-supplier link): correlated
@@ -111,18 +74,7 @@ object SqlQueries {
     * Catalyst into an aggregate + join. DISTINCT because a supplier
     * can hit the per-part minimum on several lineitems.
     */
-  private val q70 = Q("q70_min_cost_supplier", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql("""
-      SELECT DISTINCT p_partkey, p_type, s_suppkey, s_name, l_extendedprice AS min_price
-      FROM part JOIN lineitem ON l_partkey = p_partkey
-        JOIN supplier ON s_suppkey = l_suppkey
-      WHERE p_size = 15
-        AND l_extendedprice = (
-          SELECT min(l2.l_extendedprice) FROM lineitem l2
-          WHERE l2.l_partkey = p_partkey)
-      ORDER BY p_partkey, s_suppkey""")
-  }, Some("""
+  private val q70 = sqlQ("q70_min_cost_supplier", """
     SELECT DISTINCT p_partkey, p_type, s_suppkey, s_name, l_extendedprice AS min_price
     FROM part JOIN lineitem ON l_partkey = p_partkey
       JOIN supplier ON s_suppkey = l_suppkey
@@ -130,33 +82,13 @@ object SqlQueries {
       AND l_extendedprice = (
         SELECT min(l2.l_extendedprice) FROM lineitem l2
         WHERE l2.l_partkey = p_partkey)
-    ORDER BY p_partkey, s_suppkey"""))
+    ORDER BY p_partkey, s_suppkey""")
 
   /** TPC-H Q8-shaped market share: 6-way join inside a derived table,
     * conditional aggregation over it, exact-cents revenue so the
     * share division is bit-identical across engines.
     */
-  private val q71 = Q("q71_market_share", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql("""
-      SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-             CAST(floor(CAST(sum(CASE WHEN nation = 'NATION_1' THEN rev_cents ELSE 0 END) AS DOUBLE)
-                   / sum(rev_cents) * 1000000 + 0.5) AS DOUBLE) / 1000000.0 AS mkt_share
-      FROM (
-        SELECT o_orderdate,
-               CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT) AS rev_cents,
-               n2.n_name AS nation
-        FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation n1 ON c_nationkey = n1.n_nationkey
-          JOIN region ON n1.n_regionkey = r_regionkey
-          JOIN supplier ON l_suppkey = s_suppkey
-          JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        WHERE r_name = 'AMERICA') t
-      GROUP BY year(o_orderdate)
-      ORDER BY o_year""")
-  }, Some("""
+  private val q71 = sqlQ("q71_market_share", """
     SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
            CAST(floor(CAST(sum(CASE WHEN nation = 'NATION_1' THEN rev_cents ELSE 0 END) AS DOUBLE)
                  / sum(rev_cents) * 1000000 + 0.5) AS DOUBLE) / 1000000.0 AS mkt_share
@@ -173,7 +105,7 @@ object SqlQueries {
         JOIN nation n2 ON s_nationkey = n2.n_nationkey
       WHERE r_name = 'AMERICA') t
     GROUP BY year(o_orderdate)
-    ORDER BY o_year"""))
+    ORDER BY o_year""")
 
   /** TPC-H Q20-shaped nesting: IN-subquery over a grouped derived
     * table whose filter is a correlated scalar SUM against the full
@@ -181,21 +113,7 @@ object SqlQueries {
     * (0.12 threshold: discriminating but non-empty at sf0.01 AND
     * sf0.1 — 48 and 76 suppliers respectively.)
     */
-  private val q72 = Q("q72_part_share_suppliers", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql("""
-      SELECT s_suppkey, s_name FROM supplier
-      WHERE s_suppkey IN (
-        SELECT sp.l_suppkey FROM (
-          SELECT l_suppkey, l_partkey, sum(l_quantity) AS qty
-          FROM lineitem
-          WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
-          GROUP BY l_suppkey, l_partkey) sp
-        WHERE sp.qty > 0.12 * (
-          SELECT sum(l2.l_quantity) FROM lineitem l2
-          WHERE l2.l_partkey = sp.l_partkey))
-      ORDER BY s_suppkey""")
-  }, Some("""
+  private val q72 = sqlQ("q72_part_share_suppliers", """
     SELECT s_suppkey, s_name FROM supplier
     WHERE s_suppkey IN (
       SELECT sp.l_suppkey FROM (
@@ -206,17 +124,14 @@ object SqlQueries {
       WHERE sp.qty > 0.12 * (
         SELECT sum(l2.l_quantity) FROM lineitem l2
         WHERE l2.l_partkey = sp.l_partkey))
-    ORDER BY s_suppkey"""))
+    ORDER BY s_suppkey""")
 
   /** Correlated EXISTS + NOT EXISTS (TPC-H Q4/Q22 shape): customers
     * with at least one urgent order but no high-line-count order.
     * Catalyst de-correlates both predicates into semi/anti joins —
     * the SQL-text route to the B9 operators, exercised together.
     */
-  private val q88 = Q("q88_exists_pair", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(SQL_Q88)
-  }, Some(SQL_Q88))
+  private val q88 = sqlQ("q88_exists_pair", SQL_Q88)
 
   private lazy val SQL_Q88 = """
     SELECT c_custkey, c_name
@@ -242,10 +157,7 @@ object SqlQueries {
     GROUP BY c_custkey, o_orderkey
     HAVING sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) > 15000
     ORDER BY c_custkey, o_orderkey"""
-  private val q109 = Q("q109_large_orders", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(largeOrdersSql)
-  }, Some(largeOrdersSql))
+  private val q109 = sqlQ("q109_large_orders", largeOrdersSql)
 
   /** TPC-H Q16-shaped supplier variety: distinct suppliers per part
     * (brand, size), excluding a NOT IN supplier subquery — the
@@ -257,10 +169,7 @@ object SqlQueries {
     WHERE l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
     GROUP BY p_brand, p_size
     ORDER BY p_brand, p_size"""
-  private val q110 = Q("q110_supplier_variety", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(supplierVarietySql)
-  }, Some(supplierVarietySql))
+  private val q110 = sqlQ("q110_supplier_variety", supplierVarietySql)
 
   /** TPC-H Q11-shaped value concentration: parts whose shipped value
     * exceeds 1.1x the MEAN per-part value — a scalar subquery over the
@@ -277,10 +186,7 @@ object SqlQueries {
     FROM v
     WHERE val_c > (SELECT CAST(floor(avg(val_c) * 1.1) AS BIGINT) FROM v)
     ORDER BY partkey"""
-  private val q111 = Q("q111_value_share", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(valueShareSql)
-  }, Some(valueShareSql))
+  private val q111 = sqlQ("q111_value_share", valueShareSql)
 
   /** TPC-H Q21-shaped "sole late supplier": suppliers whose late
     * shipment (60-day ship-lag proxy — this schema carries no
@@ -306,10 +212,7 @@ object SqlQueries {
           AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
     GROUP BY s_name
     ORDER BY numwait DESC, s_name"""
-  private val q121 = Q("q121_sole_late_supplier", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(soleLateSupplierSql)
-  }, Some(soleLateSupplierSql))
+  private val q121 = sqlQ("q121_sole_late_supplier", soleLateSupplierSql)
 
   /** TPC-H Q22-shaped "lapsed high-balance customers": above-average
     * balance, no order since mid-2000, counted per nation. The
@@ -332,10 +235,7 @@ object SqlQueries {
           AND o_orderdate >= TIMESTAMP '2000-06-01 00:00:00')
     GROUP BY c_nationkey
     ORDER BY c_nationkey"""
-  private val q122 = Q("q122_lapsed_customers", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(lapsedCustomersSql)
-  }, Some(lapsedCustomersSql))
+  private val q122 = sqlQ("q122_lapsed_customers", lapsedCustomersSql)
 
   /** TPC-H Q19-shaped disjunctive predicate revenue: three
     * brand/size/quantity conjunction arms OR-ed across a join — the
@@ -350,10 +250,7 @@ object SqlQueries {
     WHERE (p_brand = 'Brand#4'  AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
        OR (p_brand = 'Brand#2'  AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
        OR (p_brand = 'Brand#19' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)"""
-  private val q133 = Q("q133_disjunctive_revenue", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(disjunctiveRevenueSql)
-  }, Some(disjunctiveRevenueSql))
+  private val q133 = sqlQ("q133_disjunctive_revenue", disjunctiveRevenueSql)
 
   /** TPC-H Q15-shaped top supplier: revenue per supplier in a
     * 3-month window, then the supplier(s) hitting the maximum via a
@@ -372,10 +269,7 @@ object SqlQueries {
     FROM supplier JOIN rev ON s_suppkey = l_suppkey
     WHERE total_c = (SELECT max(total_c) FROM rev)
     ORDER BY s_suppkey"""
-  private val q134 = Q("q134_top_supplier", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(topSupplierSql)
-  }, Some(topSupplierSql))
+  private val q134 = sqlQ("q134_top_supplier", topSupplierSql)
 
   /** TPC-H Q5-shaped local-supplier volume: the classic 6-way
     * join-order exercise (customer-orders-lineitem-supplier-nation-
@@ -396,10 +290,7 @@ object SqlQueries {
       AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
       AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
     GROUP BY n_name ORDER BY revenue DESC, n_name"""
-  private val q151 = Q("q151_local_volume", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(localVolumeSql)
-  }, Some(localVolumeSql))
+  private val q151 = sqlQ("q151_local_volume", localVolumeSql)
 
   /** TPC-H Q7-shaped nation-pair shipping volume: the self-joined
     * nation dimension (n1 supplier side, n2 customer side) with the
@@ -424,10 +315,7 @@ object SqlQueries {
     ) shipping
     GROUP BY supp_nation, cust_nation, l_year
     ORDER BY supp_nation, cust_nation, l_year"""
-  private val q152 = Q("q152_trade_volume", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(tradeVolumeSql)
-  }, Some(tradeVolumeSql))
+  private val q152 = sqlQ("q152_trade_volume", tradeVolumeSql)
 
   /** TPC-H Q10-shaped returned-item report: top-20 customers by
     * revenue lost to returns in a half-year window — group on the
@@ -448,10 +336,7 @@ object SqlQueries {
     GROUP BY c_custkey, c_name, c_acctbal, n_name
     ORDER BY sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 + 0.5) AS BIGINT)) DESC, c_custkey
     LIMIT 20"""
-  private val q153 = Q("q153_returned_items", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(returnedItemsSql)
-  }, Some(returnedItemsSql))
+  private val q153 = sqlQ("q153_returned_items", returnedItemsSql)
 
   /** Column profiling of the orders table (Profiler.profile): total /
     * null / exact-distinct counts plus string-rendered bounds per
@@ -541,10 +426,7 @@ object SqlQueries {
     ) profit
     GROUP BY nation, o_year
     ORDER BY nation, o_year DESC"""
-  private val q157 = Q("q157_product_profit", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(productProfitSql)
-  }, Some(productProfitSql))
+  private val q157 = sqlQ("q157_product_profit", productProfitSql)
 
   /** TPC-H Q12-shaped shipping-class priority split: per lineitem
     * class (l_linestatus stands in for the schema's missing
@@ -562,10 +444,7 @@ object SqlQueries {
       AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
     GROUP BY l_linestatus
     ORDER BY l_linestatus"""
-  private val q158 = Q("q158_priority_shipclass", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(priorityClassSql)
-  }, Some(priorityClassSql))
+  private val q158 = sqlQ("q158_priority_shipclass", priorityClassSql)
 
   /** TPC-H Q14-shaped promo-revenue share: the percentage of a
     * month's revenue that came from PROMO-type parts. Both the
@@ -584,10 +463,7 @@ object SqlQueries {
       WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
         AND l_shipdate < TIMESTAMP '1997-10-01 00:00:00'
     ) promo"""
-  private val q159 = Q("q159_promo_revenue", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(promoRevenueSql)
-  }, Some(promoRevenueSql))
+  private val q159 = sqlQ("q159_promo_revenue", promoRevenueSql)
 
   /** TPC-H Q18-shaped large-volume customers: orders whose total line
     * quantity exceeds 180, with customer identity and the order's
@@ -610,10 +486,7 @@ object SqlQueries {
     GROUP BY c_name, c_custkey, o_orderkey, o_totalprice
     ORDER BY price_c DESC, o_orderkey
     LIMIT 100"""
-  private val q167 = Q("q167_big_order_customers", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(bigOrderCustomersSql)
-  }, Some(bigOrderCustomersSql))
+  private val q167 = sqlQ("q167_big_order_customers", bigOrderCustomersSql)
 
   /** Distribution-drift monitoring (Profiler.psiDrift): PSI between
     * an even-keyed baseline load of order prices and an odd-keyed
@@ -702,10 +575,7 @@ object SqlQueries {
       GROUP BY c_custkey)
     GROUP BY c_count
     ORDER BY custdist DESC, c_count DESC"""
-  private val q178 = Q("q178_custdist", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(q178Sql)
-  }, Some(q178Sql))
+  private val q178 = sqlQ("q178_custdist", q178Sql)
 
   /** TPC-H Q17-shaped small-quantity-order revenue: lineitems under
     * 20% of their part's average quantity, for one brand, reported
@@ -813,10 +683,7 @@ object SqlQueries {
       GROUP BY o_year
     ) shares
     ORDER BY o_year"""
-  private val q224 = Q("q224_market_share", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(marketShareSql)
-  }, Some(marketShareSql))
+  private val q224 = sqlQ("q224_market_share", marketShareSql)
 
   /** TPC-H Q13-shaped customer order-count distribution: LEFT join so
     * zero-order customers land in the c_count=0 bucket (the point of
@@ -835,10 +702,7 @@ object SqlQueries {
     ) c_orders
     GROUP BY c_count
     ORDER BY custdist DESC, c_count DESC"""
-  private val q225 = Q("q225_custdist", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(custDistSql)
-  }, Some(custDistSql))
+  private val q225 = sqlQ("q225_custdist", custDistSql)
 
   /** TPC-H Q17-shaped small-quantity-order revenue: the correlated
     * "below 20% of this part's average quantity" subquery, written as
@@ -862,10 +726,7 @@ object SqlQueries {
     JOIN agg ON a_partkey = l_partkey
     WHERE p_brand = 'Brand#1' AND p_size <= 3
       AND l_quantity * 1000000.0 < CAST(qlim_u AS DOUBLE)"""
-  private val q226 = Q("q226_small_qty_revenue", (s, dir) => {
-    Tables.registerAll(s, dir)
-    s.sql(smallQtySql)
-  }, Some(smallQtySql))
+  private val q226 = sqlQ("q226_small_qty_revenue", smallQtySql)
 
   val list: Seq[Q] = Seq(q57, q58, q59, q68, q70, q71, q72, q88, q109, q110, q111,
     q121, q122, q133, q134, q151, q152, q153, q154, q155, q157, q158, q159,

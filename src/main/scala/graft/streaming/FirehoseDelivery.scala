@@ -58,7 +58,6 @@ object FirehoseDelivery {
       flushBytes: Long = 5L * 1024 * 1024, // buffer_size default 5 MB (BASELINE.md)
       sizeCap: Long = 4000000L, // soft cap (main.py:147)
       maxAttempts: Int = 20, // re-ingest retry budget (main.py:156)
-      permissive: Boolean = true,
       availableNow: Boolean = false,
       // source batching: files per micro-batch (None = all available);
       // the bench uses this to shape sustained multi-batch runs
@@ -189,7 +188,7 @@ object FirehoseDelivery {
           bytes.substr(lit(1), octet_length(bytes) - 1))
           .otherwise(bytes).cast("string")
       governed = FirehoseTransform.sizeGovernor(
-        FirehoseTransform.transform(admitted, conf.permissive), conf.sizeCap)
+        FirehoseTransform.transform(admitted), conf.sizeCap)
         .select(col("recordId"), col("result"), col("reingest_data"),
           when(col("result") === Ok, codecs.unbase64(col("data"), lenient = true)).as("_bytes"))
         // Firehose fails a transform result whose data is not valid

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
+import graft.operators.Curation
+
 /** Event-time windowing + dedup operators (SURVEY.md §2 B32-B35).
   *
   * Each operator is a DataFrame -> DataFrame function that works
@@ -1032,14 +1034,14 @@ object StreamingOps {
     *    fresh keeper sharing at least one distinct `evalN`-gram with
     *    the STATIC benchmark set — the batch pipeline's fourth gate
     *    ([[graft.operators.CorpusOps.curationPipeline]]) applied per
-    *    micro-batch, in the q99 broadcast-BLOOM shape: the eval gram
+    *    micro-batch through the same contamination kernel
+    *    ([[graft.operators.Curation.gramHashes]] +
+    *    [[graft.operators.Curation.sharedGrams]]): the eval gram
     *    hashes are collected ONCE before start() (small by contract,
     *    and static — the stream must not re-run the eval lineage per
-    *    trigger), a bloom filter over them is broadcast and probed in
-    *    the batch's own scan stage, and the ~fpp survivors are
-    *    exact-confirmed against the broadcast gram set (no false
-    *    negatives + exact confirm = byte-identical to the pure exact
-    *    gate). Contaminated docs never enter the accepted history.
+    *    trigger) and the batch's gram hashes broadcast-semi-join them
+    *    in the batch's own scan stage. Contaminated docs never enter
+    *    the accepted history.
     *    For benchmark sets that ROTATE in production, pass `evalDir`
     *    instead (round 15): a `version`-partitioned gram-hash table
     *    ([[publishEvalGrams]]) the gate reads PER TRIGGER through
@@ -1048,8 +1050,9 @@ object StreamingOps {
     *    filters out later versions so it gates against exactly what
     *    its first attempt saw (publish versions monotonically; never
     *    publish V once batch V has committed). Per-trigger cost: one
-    *    partition-pruned read of the config-sized table + a
-    *    broadcast build — vs the static path's one-time collect;
+    *    partition-pruned read of the config-sized table — vs the
+    *    static path's one-time collect; both then run the same
+    *    broadcast semi-join;
     *  - `near_dup`: band-key collision with an earlier batch's
     *    accepted set ([[nearDupAgainstHistory]] over
     *    `stateDir/bands`). Within-batch near-dups are NOT flagged —
@@ -1110,7 +1113,6 @@ object StreamingOps {
       qualityMin: Double, stateDir: String, outDir: String,
       checkpointDir: String, n: Int = 3, k: Int = 8, rowsPerBand: Int = 2,
       evalDocs: Option[DataFrame] = None, evalN: Int = 8,
-      evalExpectedGrams: Long = 1L << 20, evalFpp: Double = 0.01,
       evalDir: Option[String] = None,
       gopher: Option[graft.operators.TextAnalysis.GopherGate] = None,
       c4: Option[graft.operators.TextAnalysis.C4Policy] = None,
@@ -1118,22 +1120,13 @@ object StreamingOps {
     require(evalDocs.isEmpty || evalDir.isEmpty,
       "pass evalDocs (static benchmark set, collected once) OR evalDir " +
         "(version-keyed churning set, read per trigger) — not both")
-    // The decontamination gate's static half, built ONCE before
-    // start(): collected eval gram hashes (bounded by contract — the
-    // benchmark set is small) + a bloom over them, broadcast to every
-    // batch. evalDocs must carry `textCol`.
-    val evalGate: Option[(org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter], Array[Long])] =
-      evalDocs.map { ev =>
-        val hashes = ev
-          .select(explode(array_distinct(
-            graft.functions.shingles.wordShingles(col(textCol), evalN))).as("_g"))
-          .select(graft.operators.Dedup.hash48(col("_g")).as("_h")).distinct()
-          .collect().map(_.getLong(0))
-        val bf = org.apache.spark.util.sketch.BloomFilter.create(
-          math.max(evalExpectedGrams, hashes.length.toLong), evalFpp)
-        hashes.foreach(bf.putLong)
-        (ev.sparkSession.sparkContext.broadcast(bf), hashes)
-      }
+    // The static decontamination gate's gram hashes, collected ONCE
+    // before start() (bounded by contract — the benchmark set is
+    // small) and rebuilt per batch as a LocalRelation. evalDocs must
+    // carry `textCol`.
+    val evalHashes: Option[Seq[Long]] = evalDocs.map(ev =>
+      Curation.gramHashes(ev, Nil, col(textCol), evalN).distinct()
+        .collect().map(_.getLong(0)).toSeq)
     // with the Gopher stage on, every disposition row also carries
     // the gate's per-rule audit columns; with the C4 stage on
     // (round 18), likewise the cleaner's page signals
@@ -1209,55 +1202,27 @@ object StreamingOps {
       var gateCache: Option[DataFrame] = None
       try {
         val lowQ = out(scored.filter(!col("_pass")), "low_quality")
-        // keeper via groupBy(min) + join back, not a window — the
-        // CorpusOps.curationPipeline skew rationale (one row per
-        // distinct text through the shuffle, AQE-splittable join)
-        val withMd5 = scored.filter(col("_pass"))
-          .withColumn("_md5", md5(encode(col("text"), "UTF-8")))
-        val pass = withMd5.join(
-          withMd5.groupBy(col("_md5")).agg(min(col("doc_id")).as("_keeper")),
-          Seq("_md5"))
+        val pass = Curation.keeperTagged(scored.filter(col("_pass")))
         val histMd5 = batchesBefore(spark, s"$stateDir/md5", batchId, "_md5" -> StringType)
         val keepers = pass.filter(col("doc_id") === col("_keeper"))
         val freshMd5 = keepers.join(histMd5, Seq("_md5"), "left_anti")
         val exactDup = out(pass.filter(col("doc_id") =!= col("_keeper"))
           .unionByName(keepers.join(histMd5, Seq("_md5"), "left_semi")),
           "exact_dup")
-        // decontamination gate. With evalDocs (static set): bloom
-        // probe in the batch's scan stage, exact confirm on the
-        // survivors — byte-identical to the pure exact gate, per
-        // q99. With evalDir (CHURNING set): the version-keyed gram
-        // table is read per trigger through `version <= batchId` —
+        // decontamination gate: the batch's gram hashes
+        // broadcast-semi-join the eval gram set. With evalDocs
+        // (static set) that set is the LocalRelation collected before
+        // start(). With evalDir (CHURNING set) it is the version-keyed
+        // gram table read per trigger through `version <= batchId` —
         // the accepted-history read discipline, so a replayed batch
-        // gates against exactly the versions its first attempt saw —
-        // and the batch's grams broadcast-semi-join it directly (the
-        // table is config-sized by the same contract that lets the
-        // static path collect it; a per-trigger bloom build would
-        // just repeat the broadcast's hash table on the driver).
-        def contamSplit(contamIds: DataFrame) =
-          (Some(out(freshMd5.join(contamIds, Seq("doc_id"), "left_semi"),
-            "contaminated")),
-            freshMd5.join(contamIds, Seq("doc_id"), "left_anti"),
-            Some(contamIds))
-        def batchGramHashes = freshMd5
-          .select(col("doc_id"), explode(array_distinct(
-            graft.functions.shingles.wordShingles(col("text"), evalN))).as("_g"))
-          .select(col("doc_id"), graft.operators.Dedup.hash48(col("_g")).as("_h"))
-        val (contaminated, cleanFresh, gateCache0) = (evalGate, evalDir) match {
-          case (Some((bfBc, hashes)), _) =>
+        // gates against exactly the versions its first attempt saw.
+        // No bloom prefilter: the set is config-sized either way, and
+        // a bloom in front of its broadcast hash table would test the
+        // same membership twice.
+        val evalSet: Option[DataFrame] = (evalHashes, evalDir) match {
+          case (Some(hashes), _) =>
             import spark.implicits._
-            val mightContain = udf((h: Long) => bfBc.value.mightContainLong(h))
-            val evalSet = hashes.toSeq.toDF("_h") // LocalRelation, rebuilt free
-            // persisted per batch: the id set feeds the semi branch,
-            // the anti branch, AND every downstream consumer of
-            // cleanFresh (near-dup screen, kept, history writes) —
-            // without the cache the batch-gram explode re-runs per
-            // sink action. Unpersisted in the finally below.
-            contamSplit(batchGramHashes
-              .filter(mightContain(col("_h")))
-              .join(broadcast(evalSet), Seq("_h"), "left_semi")
-              .select(col("doc_id")).distinct()
-              .persist())
+            Some(hashes.toDF("_h"))
           case (None, Some(dir)) =>
             // versions above the current batchId are INACTIVE: a
             // publisher stands up version V ahead of time and it
@@ -1271,17 +1236,24 @@ object StreamingOps {
             // schema skips footer inference, so an unmarked partial
             // directory is never even opened.
             val active = evalVersions(spark, dir).published.filter(_ <= batchId)
-            val evalSet =
-              if (active.isEmpty) emptyDf(spark, "_h" -> LongType) // gate open
+            Some(if (active.isEmpty) emptyDf(spark, "_h" -> LongType) // gate open
               else spark.read.schema("_h BIGINT, version BIGINT").parquet(dir)
-                .filter(col("version").isin(active: _*)).select(col("_h"))
-            contamSplit(batchGramHashes
-              .join(broadcast(evalSet), Seq("_h"), "left_semi")
-              .select(col("doc_id")).distinct()
-              .persist())
-          case (None, None) => (None, freshMd5, None)
+                .filter(col("version").isin(active: _*)).select(col("_h")))
+          case (None, None) => None
         }
-        gateCache = gateCache0
+        // persisted per batch: the id set feeds the semi branch, the
+        // anti branch, AND every downstream consumer of cleanFresh
+        // (near-dup screen, kept, history writes) — without the cache
+        // the batch-gram explode re-runs per sink action. Unpersisted
+        // in the finally below.
+        gateCache = evalSet.map(set => Curation.sharedGrams(
+            Curation.gramHashes(freshMd5, Seq("doc_id"), col("text"), evalN), set)
+          .select(col("doc_id")).distinct()
+          .persist())
+        val contaminated = gateCache.map(ids =>
+          out(freshMd5.join(ids, Seq("doc_id"), "left_semi"), "contaminated"))
+        val cleanFresh = gateCache.fold(freshMd5)(ids =>
+          freshMd5.join(ids, Seq("doc_id"), "left_anti"))
         val histBands = batchesBefore(spark, s"$stateDir/bands", batchId,
           "doc_id" -> LongType, "band_key" -> StringType)
         val collided = nearDupAgainstHistory(cleanFresh, histBands,
@@ -1346,10 +1318,7 @@ object StreamingOps {
     val spark = evalDocs.sparkSession
     val published = evalVersions(spark, evalDir)
     if (!published.published.contains(version)) {
-      evalDocs
-        .select(explode(array_distinct(
-          graft.functions.shingles.wordShingles(col(textCol), evalN))).as("_g"))
-        .select(graft.operators.Dedup.hash48(col("_g")).as("_h")).distinct()
+      Curation.gramHashes(evalDocs, Nil, col(textCol), evalN).distinct()
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$evalDir/version=$version")
       published.publish(version)

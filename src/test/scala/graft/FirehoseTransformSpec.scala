@@ -40,8 +40,8 @@ class FirehoseTransformSpec extends SparkSpec {
   import Fixtures._
   import spark.implicits._
 
-  private def run(records: Seq[(String, String)], permissive: Boolean = true): Map[String, Row] =
-    FirehoseTransform.transform(records.toDF("recordId", "data"), permissive)
+  private def run(records: Seq[(String, String)]): Map[String, Row] =
+    FirehoseTransform.transform(records.toDF("recordId", "data"))
       .collect().map(r => r.getString(0) -> r).toMap
 
   test("smoke: Hello -> Hell Yeah with newline (main.py:67-69)") {

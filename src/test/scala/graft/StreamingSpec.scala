@@ -2877,8 +2877,7 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(bandIds == Set(1L, 12L), s"accepted-only history, got $bandIds")
     assert(spark.read.parquet(s"$base/state/md5").count() == 2L)
-    // the exact gate (no bloom) must agree with the bloom-prefiltered
-    // gate through the batch pipeline's rule: doc 4/13 share an 8-gram
+    // docs 4/13 share an 8-gram with the eval set
     val evalGrams = evalDf.select(explode(graft.functions.shingles
       .wordShingles(col("text"), 8)).as("g")).distinct().count()
     assert(evalGrams > 0)
@@ -2892,6 +2891,19 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$base/out").count() == 8,
       "batchId-keyed overwrite must not duplicate rows")
     assert(spark.read.parquet(s"$base/state/md5").count() == 2L)
+    // the same eval set published as version 0 of an evalDir gate
+    // gives the same dispositions (fresh state, out and checkpoint)
+    assert(StreamingOps.publishEvalGrams(evalDf, "text", s"$base/eval", version = 0L) > 0)
+    StreamingOps.curationStream(
+      spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$base/in"),
+      "doc_id", "text", qualityMin = 0.25,
+      s"$base/state2", s"$base/out2", s"$base/ck2",
+      evalDir = Some(s"$base/eval")).awaitTermination(120000)
+    val viaDir = spark.read.parquet(s"$base/out2")
+      .select("doc_id", "disposition")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(viaDir == want, s"evalDir gate: $viaDir")
   }
 
   test("curationStream: a CHURNING eval set gains a gram mid-stream and gates the next batch, replay-safe") {
