@@ -43,15 +43,12 @@ object CodecUtil {
     try gunzip(bytes) catch { case _: java.io.IOException => null }
 
   /** Base64 decode with the MIME decoder, as Spark's `unbase64` does
-    * (characters outside the alphabet are skipped); malformed input,
-    * such as a final unit of one character, throws.
+    * (characters outside the alphabet are skipped); null on malformed
+    * input, such as a final unit of one character.
     */
-  def unbase64(utf8: org.apache.spark.unsafe.types.UTF8String): Array[Byte] =
-    java.util.Base64.getMimeDecoder.decode(utf8.getBytes)
-
-  /** Permissive variant of [[unbase64]]: null on malformed input. */
   def unbase64OrNull(utf8: org.apache.spark.unsafe.types.UTF8String): Array[Byte] =
-    try unbase64(utf8) catch { case _: IllegalArgumentException => null }
+    try java.util.Base64.getMimeDecoder.decode(utf8.getBytes)
+    catch { case _: IllegalArgumentException => null }
 
   private val md5Digest = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -148,30 +145,26 @@ case class Gunzip(child: Expression, lenient: Boolean = false) extends BinaryCod
   override protected def withNewChildInternal(c: Expression): Gunzip = copy(child = c)
 }
 
-/** Base64-decode a STRING column to BINARY ([[CodecUtil.unbase64]]),
+/** Base64-decode a STRING column to BINARY ([[CodecUtil.unbase64OrNull]]),
   * the one decoder of the delivery path: the transform's wire data and
-  * the delivered Ok payloads. With `lenient = true`, malformed input
-  * yields null instead of failing the task, so the decode is also the
-  * validity test.
+  * the delivered Ok payloads. Malformed input yields null instead of
+  * failing the task, so the decode is also the validity test.
   */
-private[graft] case class Unbase64(child: Expression, lenient: Boolean = false) extends UnaryExpression {
+private[graft] case class Unbase64(child: Expression) extends UnaryExpression {
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "unbase64"
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = lenient || child.nullable
+  override def nullable: Boolean = true
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     if (child.dataType.isInstanceOf[org.apache.spark.sql.types.StringType])
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires STRING input, got ${child.dataType.catalogString}")
-  override def nullSafeEval(v: Any): Any = {
-    val s = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-    if (lenient) CodecUtil.unbase64OrNull(s) else CodecUtil.unbase64(s)
-  }
+  override def nullSafeEval(v: Any): Any =
+    CodecUtil.unbase64OrNull(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (!lenient) defineCodeGen(ctx, ev, c => s"graft.functions.CodecUtil.unbase64($c)")
-    else nullSafeCodeGen(ctx, ev, c => s"""
+    nullSafeCodeGen(ctx, ev, c => s"""
       ${ev.value} = graft.functions.CodecUtil.unbase64OrNull($c);
       ${ev.isNull} = ${ev.value} == null;
     """)
@@ -212,8 +205,8 @@ object codecs {
   def gunzip(c: Column, lenient: Boolean = false): Column =
     shims.column(Gunzip(shims.expression(c), lenient))
 
-  private[graft] def unbase64(c: Column, lenient: Boolean = false): Column =
-    shims.column(Unbase64(shims.expression(c), lenient))
+  private[graft] def unbase64(c: Column): Column =
+    shims.column(Unbase64(shims.expression(c)))
 
   def base64Unchunked(c: Column): Column =
     shims.column(Base64Unchunked(shims.expression(c)))

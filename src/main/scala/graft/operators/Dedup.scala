@@ -25,22 +25,6 @@ object Dedup {
     */
   def hash48(s: Column): Column = graft.functions.codecs.hash48(s)
 
-  /** Persist + lineage-cut an operator-internal multi-consumer frame
-    * (the round-18 spine discipline, see
-    * [[org.apache.spark.sql.graft.shims.cutLineage]]): the persist
-    * makes the frame's derivation execute once no matter how many
-    * downstream joins reference it; the cut makes each reference a
-    * LogicalRDD leaf (no nested-InMemoryRelation re-rendering). EAGER
-    * — materializes at construction. The cache entry stays registered
-    * until `spark.catalog.clearCache()` (the bench clears per run);
-    * operators whose callers need scoped release take prepared frames
-    * instead (the [[minhashNearDupsPrepared]] contract).
-    */
-  private def cached(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    org.apache.spark.sql.graft.shims.cutLineage(p)
-  }
-
   /** Fixed MinHash seed pairs (a_k * h + b_k mod P). */
   val MINHASH_A: Seq[Long] = Seq(2971L, 6011L, 9103L, 3301L, 7873L, 4409L, 9973L, 5087L)
   val MINHASH_B: Seq[Long] = Seq(1409L, 2003L, 3947L, 4241L, 5443L, 6367L, 7237L, 8147L)
@@ -65,57 +49,77 @@ object Dedup {
     df.groupBy(md5(encode(payload, "UTF-8")).as("content_hash"))
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("n_copies"))
 
-  /** MinHash signatures: k per-document minima of seeded hash functions
-    * over the shingle set.
+  /** The k MinHash lanes of one row, as an array: lane i is the
+    * minimum of the seeded hash `(A_i * h + B_i) mod P` over the row's
+    * shingle hashes ([[graft.functions.MinHashLanes]], one native pass).
+    * Null when the row has no shingle hash. Batch signatures, batch
+    * bands and the stream's band keys all come from here.
     *
-    * Shape: explode -> project(hash) -> groupBy(min x k). The explode
-    * materializes one row per shingle so the md5 hash is computed ONCE
-    * and shared by all k lanes — the array-lambda formulation
-    * (array_min(transform(hashes, ...)) x k over a hash array column)
-    * gets CollapseProject'd into k copies of the md5 work, measured 5x
-    * slower at sf0.1. The k minima combine map-side (partial agg), so
-    * the shuffle carries k longs per doc, not the shingles.
+    * `hs` must be a BOUND column (the `_hs` of a
+    * [[prepareHashedShingles]] frame), never an inline hash
+    * expression, and callers bind the lanes array once before reading
+    * its items: an expression repeated per lane runs per lane (the
+    * stream's former band keys ran shingling + md5 9 times per row;
+    * PlanSpec pins one `hash48` per scan and one `minhash_lanes` per
+    * band side).
     */
-  def minhashSignatures(df: DataFrame, idCol: String, shingles: Column, k: Int = 8): DataFrame =
-    minhashSignaturesHashed(
-      df.select(col(idCol), explode_outer(array_distinct(shingles)).as("_s"))
-        .select(col(idCol), hash48(col("_s")).as("_h")),
-      idCol, col("_h"), k)
-
-  /** Signatures over an already-hashed shingle column (a long, one row
-    * per (doc, shingle-hash) — see [[prepareHashedShingles]] +
-    * explode). Lets the md5 pass run ONCE for the whole near-dup
-    * pipeline instead of once per DAG reference.
-    */
-  def minhashSignaturesHashed(df: DataFrame, idCol: String, hashed: Column, k: Int = 8): DataFrame = {
-    require(k <= MINHASH_A.length)
-    val sigs = (0 until k).map { i =>
-      min((lit(MINHASH_A(i)) * hashed + lit(MINHASH_B(i))) % lit(MINHASH_P)).as(s"sig$i")
-    }
-    df.groupBy(col(idCol)).agg(sigs.head, sigs.tail: _*)
+  private[graft] def minhashLanes(hs: Column, k: Int): Column = {
+    require(k <= MINHASH_A.length,
+      s"k=$k exceeds the ${MINHASH_A.length} fixed seed pairs")
+    graft.functions.minhash.lanes(hs, MINHASH_A.take(k), MINHASH_B.take(k), MINHASH_P)
   }
 
-  /** LSH banding: split the k signatures into bands of `rowsPerBand`,
-    * emit one (band_idx, band_key) row per band per doc. Candidate
-    * pairs are an equi-join on the band key — shuffle-partitioned by
-    * bucket, never O(n^2).
+  /** The LSH band keys of one row's bound lanes array `sigs`
+    * ([[minhashLanes]]): an array of k/rowsPerBand
+    * `(band_idx, band_key)` structs, band_key laid out `"b:sig:sig"`
+    * (the band index embedded, so a bare band_key join is band-aware;
+    * band tables on disk use this exact layout). Empty when `sigs` is
+    * null: all-null lanes would otherwise put every shingle-less doc in
+    * the shared buckets "0".."3" and candidate generation would go
+    * quadratic in the short-doc count.
     */
-  def lshBands(sigs: DataFrame, idCol: String, k: Int = 8, rowsPerBand: Int = 2): DataFrame = {
+  private[graft] def bandKeys(sigs: Column, k: Int, rowsPerBand: Int): Column = {
     require(k % rowsPerBand == 0,
       s"rowsPerBand=$rowsPerBand must divide k=$k or trailing signature lanes are silently unused")
-    val nBands = k / rowsPerBand
-    val bands = (0 until nBands).map { b =>
+    val bands = (0 until k / rowsPerBand).map { b =>
       val key = concat_ws(":",
-        (lit(b.toString) +: (0 until rowsPerBand).map(r => col(s"sig${b * rowsPerBand + r}"))): _*)
+        (lit(b.toString) +: (0 until rowsPerBand).map(r => sigs.getItem(b * rowsPerBand + r))): _*)
       struct(lit(b).as("band_idx"), key.as("band_key"))
     }
-    // docs with no shingles have all-null signatures; concat_ws skips
-    // nulls, so without this filter every such doc would share band
-    // keys "0".."3" and candidate generation would go quadratic in the
-    // short-doc count — the exact blowup banding exists to avoid.
-    sigs.filter(col("sig0").isNotNull)
-      .select(col(idCol), explode(array(bands: _*)).as("band"))
-      .select(col(idCol), col("band.band_idx"), col("band.band_key"))
+    when(sigs.isNotNull, array(bands: _*)).otherwise(array())
+  }
+
+  /** MinHash signatures `(id, sig0..sig{k-1})` of a
+    * [[prepareHashedShingles]] frame: narrow projections, no shuffle.
+    * A doc with no shingles gets null signatures.
+    */
+  def minhashSignatures(hashed: DataFrame, idCol: String, k: Int = 8): DataFrame =
+    hashed.select(col(idCol), minhashLanes(col("_hs"), k).as("_sig"))
+      .select(col(idCol) +: (0 until k).map(i => col("_sig").getItem(i).as(s"sig$i")): _*)
+
+  /** LSH banding of a [[prepareHashedShingles]] frame: one
+    * (id, band_idx, band_key) row per band per doc, none for a doc
+    * with no shingles. Narrow projections + an explode, so it runs on a
+    * streaming frame too. Candidate pairs are an equi-join on the band
+    * key — shuffle-partitioned by bucket, never O(n^2).
+    */
+  def lshBands(hashed: DataFrame, idCol: String, k: Int = 8, rowsPerBand: Int = 2): DataFrame =
+    hashed.select(col(idCol), minhashLanes(col("_hs"), k).as("_sig"))
+      .select(col(idCol), explode(bandKeys(col("_sig"), k, rowsPerBand)).as("_b"))
+      .select(col(idCol), col("_b.band_idx"), col("_b.band_key"))
+
+  /** Hot-bucket guardrail: drop the rows of `bands` whose bucket (the
+    * `keys` columns) holds more than `cap` rows — one map-side-combined
+    * count joined back. The band self-join is quadratic inside a
+    * bucket, and a bucket that wide is a near-uninformative key; a
+    * pair's other bands still vote. Dropping is part of the recall
+    * contract of every caller that enables it.
+    */
+  private[graft] def dropHotBuckets(bands: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
+    val small = bands.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("_n")).filter(col("_n") <= cap)
+      .select(keys.map(col): _*)
+    bands.join(small, keys).select(bands.columns.map(col): _*)
   }
 
   /** Candidate pairs from shared LSH buckets (id1 < id2, distinct). */
@@ -142,22 +146,16 @@ object Dedup {
       threshold: Double, k: Int = 8, rowsPerBand: Int = 2): DataFrame =
     minhashNearDupsOn(df, idCol, wordShingles(textCol), threshold, k, rowsPerBand)
 
-  /** The (id, distinct-shingle-array) frame every MinHash stage
-    * consumes. Exposed so callers can compute it ONCE — persist it or
-    * write it as a table — and feed [[minhashNearDupsPrepared]] /
-    * [[minhashSignatures]] from the same materialization instead of
-    * re-deriving shingles per query (the q41/q42/q44 family shares
-    * this stage; see DedupQueries.shingled).
-    */
-  def prepareShingles(df: DataFrame, idCol: String, shingles: Column): DataFrame =
-    df.select(col(idCol), array_distinct(shingles).as("_sh"))
-
-  /** The hashed equivalent: `(id, distinct 48-bit shingle hashes)`.
-    * This is the frame worth materializing — the md5 pass (the
-    * dominant near-dup cost: ~4M hashes at sf0.1 for char-12 shingles)
-    * runs once, and the persisted arrays are longs (~8 B/shingle vs
+  /** The `(id, _hs)` frame every MinHash stage consumes: each doc's
+    * distinct 48-bit shingle hashes. Exposed so callers can compute it
+    * ONCE — persist it or write it as a table — and feed
+    * [[minhashSignatures]] / [[lshBands]] / [[minhashNearDupsPrepared]]
+    * from the same materialization (the q41/q42/q44 family shares this
+    * stage; see DedupQueries.shingled). The md5 pass (the dominant
+    * near-dup cost: ~4M hashes at sf0.1 for char-12 shingles) runs
+    * once, and the persisted arrays are longs (~8 B/shingle vs
     * ~50 B/shingle for the string form), so the three in-DAG
-    * references (signatures + both verify sides) read ~32 MB instead
+    * references (bands + both verify sides) read ~32 MB instead
     * of recomputing ~4M md5 calls each. Verification Jaccard over the
     * hashed sets equals string-set Jaccard up to md5[0:48] collisions
     * (p ~ |union|^2 / 2^49 ~ 5e-9 for 1.6k-shingle pairs), and the
@@ -194,7 +192,7 @@ object Dedup {
 
   /** Near-dup pipeline over a pre-built `(idCol, _hs)` hashed-shingle
     * frame (see [[prepareHashedShingles]]). The frame is referenced
-    * THREE times in the DAG (signatures, and both sides of the verify
+    * THREE times in the DAG (bands, and both sides of the verify
     * join) — pass a persisted/materialized frame and the shingle+md5
     * derivation runs once, not three times. Verification is exact
     * Jaccard over the hashed sets (same value as string sets up to
@@ -203,26 +201,13 @@ object Dedup {
   def minhashNearDupsPrepared(withHashes: DataFrame, idCol: String,
       threshold: Double, k: Int = 8, rowsPerBand: Int = 2,
       maxBucket: Option[Int] = None): DataFrame = {
-    val exploded = withHashes.select(col(idCol), explode_outer(col("_hs")).as("_h"))
-    val sigs = minhashSignaturesHashed(exploded, idCol, col("_h"), k)
-    // optional hot-bucket guardrail (round 18, the fuzzyDecontaminate/
-    // q69 discipline): the self-join is QUADRATIC inside a band
-    // bucket, and minhash minima concentrate on globally-frequent
-    // shingles as the corpus grows. Dropping >cap buckets before the
-    // join is part of the recall contract when enabled — a bucket
-    // that wide is a near-uninformative key, and the pair's other
-    // bands still vote. Default None = the exhaustive-banded
-    // semantics every existing oracle states.
-    val bands = lshBands(sigs, idCol, k, rowsPerBand)
-    val pruned = maxBucket match {
-      case Some(cap) =>
-        val small = bands.groupBy(col("band_idx"), col("band_key"))
-          .agg(count(lit(1)).as("_n")).filter(col("_n") <= cap)
-          .select(col("band_idx"), col("band_key"))
-        bands.join(small, Seq("band_idx", "band_key"))
-      case None => bands
-    }
-    val candidates = lshCandidates(pruned, idCol)
+    // optional hot-bucket guardrail ([[dropHotBuckets]]): minhash
+    // minima concentrate on globally-frequent shingles as the corpus
+    // grows. Default None = the exhaustive-banded semantics every
+    // existing oracle states.
+    val bands = lshBands(withHashes, idCol, k, rowsPerBand)
+    val candidates = lshCandidates(
+      maxBucket.fold(bands)(dropHotBuckets(bands, Seq("band_idx", "band_key"), _)), idCol)
     val s1 = withHashes.select(col(idCol).as("id1"), col("_hs").as("_hs1"))
     val s2 = withHashes.select(col(idCol).as("id2"), col("_hs").as("_hs2"))
     candidates.join(s1, "id1").join(s2, "id2")
@@ -276,24 +261,12 @@ object Dedup {
       idCol: String, threshold: Double, k: Int = 8,
       rowsPerBand: Int = 2, maxBucket: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def bandsOf(df: DataFrame) = lshBands(
-      minhashSignaturesHashed(
-        df.select(col(idCol), explode_outer(col("_hs")).as("_h")),
-        idCol, col("_h"), k),
-      idCol, k, rowsPerBand)
-    val corpusBands = bandsOf(corpusHashed).select(col(idCol).as("doc_id"),
-      col("band_idx"), col("band_key"))
-    val corpusPruned = maxBucket match {
-      case Some(cap) =>
-        val small = corpusBands.groupBy(col("band_idx"), col("band_key"))
-          .agg(count(lit(1)).as("_n")).filter(col("_n") <= cap)
-          .select(col("band_idx"), col("band_key"))
-        corpusBands.join(small, Seq("band_idx", "band_key"))
-      case None => corpusBands
-    }
-    val cands = corpusPruned
-      .join(bandsOf(evalHashed).select(col(idCol).as("eval_id"),
-        col("band_idx"), col("band_key")), Seq("band_idx", "band_key"))
+    def bandsOf(df: DataFrame, id: String) = lshBands(df, idCol, k, rowsPerBand)
+      .select(col(idCol).as(id), col("band_idx"), col("band_key"))
+    val corpusBands = bandsOf(corpusHashed, "doc_id")
+    val cands = maxBucket
+      .fold(corpusBands)(dropHotBuckets(corpusBands, Seq("band_idx", "band_key"), _))
+      .join(bandsOf(evalHashed, "eval_id"), Seq("band_idx", "band_key"))
       .select(col("doc_id"), col("eval_id")).distinct()
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("_jq").desc, col("eval_id"))
@@ -690,7 +663,7 @@ object Dedup {
     * the frequency side is corpus-sized, so no broadcast) -> per-doc
     * counts. Both shuffles carry (doc_id, hash48) longs, never text —
     * linear in corpus token count, the same discipline as
-    * [[minhashSignatures]]. Documents shorter than `n` words have no
+    * [[prepareHashedShingles]]. Documents shorter than `n` words have no
     * spans and are absent from the output (callers treat missing as
     * dup_frac 0).
     */

@@ -62,7 +62,7 @@ object FirehoseTransform {
     * every CASE, so only bare strings pay for it.
     */
   def transform(records: DataFrame): DataFrame = {
-    val payload = codecs.gunzip(codecs.unbase64(col("data"), lenient = true),
+    val payload = codecs.gunzip(codecs.unbase64(col("data")),
       lenient = true)
     val text = col("_text")
     val decoded = records

@@ -384,14 +384,7 @@ object Similarity {
       nBands: Int = 4, bitsPerBand: Int = 4, dim: Int = 64,
       maxBucket: Option[Int] = None): DataFrame = {
     val bands = vectorBands(df, idCol, vecCol, nBands, bitsPerBand, dim)
-    val pruned = maxBucket match {
-      case Some(cap) =>
-        val small = bands.groupBy(col("band"), col("sig"))
-          .agg(count(lit(1)).as("_n")).filter(col("_n") <= cap)
-        bands.join(small, Seq("band", "sig"))
-          .select(col(idCol), col("band"), col("sig"))
-      case None => bands
-    }
+    val pruned = maxBucket.fold(bands)(Dedup.dropHotBuckets(bands, Seq("band", "sig"), _))
     val a = pruned.select(col("band"), col("sig"), col(idCol).as("id1"))
     val b = pruned.select(col("band"), col("sig"), col(idCol).as("id2"))
     val candidates = a.join(b, Seq("band", "sig"))

@@ -18,7 +18,7 @@ object DedupQueries {
     * family derives (doc_id, distinct shingles) from the same corpus —
     * q41/q42 over word 3-grams, q44 over char 12-grams — and each
     * near-dup query references the frame three times in its own DAG
-    * (signatures + both verify-join sides). Persisting the frame once
+    * (bands + both verify-join sides). Persisting the frame once
     * per (session, dir, kind) makes the shingle derivation run once
     * across the whole family instead of seven times. MEMORY_AND_DISK
     * so an oversized corpus spills instead of OOMing; at 100 TB the
@@ -135,10 +135,7 @@ object DedupQueries {
 
   /** B39: MinHash signatures (8 seeded hash lanes over 3-gram shingles). */
   private val q41 = Q("q41_minhash_sig", (s, dir) => {
-    Dedup.minhashSignaturesHashed(
-      shingled(s, dir, "word3")
-        .select(col("doc_id"), explode_outer(col("_hs")).as("_h")),
-      "doc_id", col("_h"))
+    Dedup.minhashSignatures(shingled(s, dir, "word3"), "doc_id")
       .orderBy(col("doc_id"))
   }, Some(s"""
     $sigsCte
@@ -481,11 +478,8 @@ object DedupQueries {
     val exact = Dedup.jaccardJoin(docs, "doc_id", Dedup.wordShingles("text", 3),
         tauPct = 60)
       .select(col("id_a"), col("id_b"))
-    val sigs = Dedup.minhashSignaturesHashed(
-      shingled(s, dir, "word3")
-        .select(col("doc_id"), org.apache.spark.sql.functions.explode_outer(col("_hs")).as("_h")),
-      "doc_id", col("_h"))
-    val cands = Dedup.lshCandidates(Dedup.lshBands(sigs, "doc_id"), "doc_id")
+    val cands = Dedup.lshCandidates(
+        Dedup.lshBands(shingled(s, dir, "word3"), "doc_id"), "doc_id")
       .withColumn("_found", lit(1L))
     exact.join(cands,
         col("id_a") === col("id1") && col("id_b") === col("id2"), "left")

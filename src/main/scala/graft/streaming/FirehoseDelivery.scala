@@ -190,7 +190,7 @@ object FirehoseDelivery {
       governed = FirehoseTransform.sizeGovernor(
         FirehoseTransform.transform(admitted), conf.sizeCap)
         .select(col("recordId"), col("result"), col("reingest_data"),
-          when(col("result") === Ok, codecs.unbase64(col("data"), lenient = true)).as("_bytes"))
+          when(col("result") === Ok, codecs.unbase64(col("data"))).as("_bytes"))
         // Firehose fails a transform result whose data is not valid
         // base64; a bare string passes the transform unchecked, so the
         // payload's one decode is also its check

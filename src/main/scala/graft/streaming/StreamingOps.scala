@@ -138,35 +138,22 @@ object StreamingOps {
     if (neg) -total else total
   }
 
-  /** Per-row MinHash LSH band keys — the STATELESS formulation of
-    * [[graft.operators.Dedup.minhashSignatures]]+[[graft.operators.Dedup.lshBands]]:
-    * array lambdas over the shingle hashes instead of explode+groupBy,
-    * so it runs on a streaming DataFrame with no aggregation state.
-    * Bit-identical band keys to the batch path (same hash48, same
-    * seed constants, same "b:sig:sig" key layout) — that equality is
-    * what lets a STREAM join a batch-built signature table. Costs one
-    * hash pass per signature lane (the batch path shares the hash via
-    * explode — fine there; here statelessness wins).
+  /** The `(doc_id, band_key)` LSH keys of a text frame, from the one
+    * MinHash/LSH kernel the batch path runs:
+    * [[graft.operators.Dedup.lshBands]] over a bound
+    * [[graft.operators.Dedup.prepareHashedShingles]] frame. Both steps
+    * are narrow projections (plus an explode), so this runs on a
+    * streaming frame with no aggregation state, and its keys are the
+    * batch band table's keys by construction — the equality that lets
+    * a stream join a batch-built table. The shingle + md5 pass runs
+    * once per row; the signature lanes read the bound hash array.
     */
-  def rowLshBandKeys(text: Column, n: Int = 3, k: Int = 8,
-      rowsPerBand: Int = 2): Column = {
+  private[graft] def textBandKeys(df: DataFrame, idCol: String, textCol: String,
+      n: Int, k: Int, rowsPerBand: Int): DataFrame = {
     import graft.operators.Dedup
-    require(k % rowsPerBand == 0, s"rowsPerBand=$rowsPerBand must divide k=$k")
-    require(k <= Dedup.MINHASH_A.length,
-      s"k=$k exceeds the ${Dedup.MINHASH_A.length} fixed seed pairs (same bound as minhashSignatures)")
-    val hs = transform(array_distinct(graft.functions.shingles.wordShingles(text, n)),
-      s => graft.functions.codecs.hash48(s))
-    val sigs = (0 until k).map { i =>
-      array_min(transform(hs,
-        h => (lit(Dedup.MINHASH_A(i)) * h + lit(Dedup.MINHASH_B(i))) % lit(Dedup.MINHASH_P)))
-    }
-    val bands = (0 until k / rowsPerBand).map { b =>
-      concat_ws(":",
-        (lit(b.toString) +: (0 until rowsPerBand).map(r => sigs(b * rowsPerBand + r))): _*)
-    }
-    // empty-shingle docs produce no band keys (null sigs would collapse
-    // into shared "b:" buckets — the same guard as Dedup.lshBands)
-    when(size(hs) > 0, array(bands: _*)).otherwise(array())
+    Dedup.lshBands(Dedup.prepareHashedShingles(df, idCol, Dedup.wordShingles(textCol, n)),
+        idCol, k, rowsPerBand)
+      .select(col(idCol).as("doc_id"), col("band_key"))
   }
 
   /** Incremental-ingestion near-dup screen: flag STREAMED documents
@@ -175,9 +162,9 @@ object StreamingOps {
     * batch, WITHOUT recomputing anything over the existing corpus.
     *
     * `historyBands` is the batch-built band table
-    * (Dedup.lshBands(Dedup.minhashSignatures(...)) materialized as a
+    * (Dedup.lshBands(Dedup.prepareHashedShingles(...)) materialized as a
     * table and maintained incrementally); the stream side computes
-    * per-row band keys ([[rowLshBandKeys]]) and equi-joins — a
+    * per-row band keys ([[textBandKeys]]) and equi-joins — a
     * stream-static join, stateless on the stream side. Output: one
     * row per (new doc, matched historical doc) candidate; exact
     * verification (Jaccard against the matched doc's stored shingles)
@@ -196,14 +183,20 @@ object StreamingOps {
     */
   def nearDupAgainstHistory(stream: DataFrame, historyBands: DataFrame,
       idCol: String, textCol: String, histIdCol: String = "doc_id",
-      n: Int = 3, k: Int = 8, rowsPerBand: Int = 2): DataFrame = {
-    val keyed = stream.select(col(idCol).as("new_id"),
-      explode(rowLshBandKeys(col(textCol), n, k, rowsPerBand)).as("_bk"))
-    // Dedup.lshBands' band_key already embeds the band index
-    // ("b:sig:sig") — the same layout rowLshBandKeys emits
-    val hist = historyBands.select(
-      col(histIdCol).as("hist_id"), col("band_key").as("_bk"))
-    val pairs = keyed.join(hist, "_bk").select(col("new_id"), col("hist_id"))
+      n: Int = 3, k: Int = 8, rowsPerBand: Int = 2): DataFrame =
+    bandCollisions(textBandKeys(stream, idCol, textCol, n, k, rowsPerBand),
+      historyBands, histIdCol)
+
+  /** [[nearDupAgainstHistory]] over already-derived
+    * [[textBandKeys]], so a batch that also writes its keys derives
+    * them once. The band_key embeds the band index ("b:sig:sig"), so
+    * the bare key join is band-aware.
+    */
+  private def bandCollisions(keys: DataFrame, historyBands: DataFrame,
+      histIdCol: String): DataFrame = {
+    val hist = historyBands.select(col(histIdCol).as("hist_id"), col("band_key"))
+    val pairs = keys.select(col("doc_id").as("new_id"), col("band_key"))
+      .join(hist, "band_key").select(col("new_id"), col("hist_id"))
     if (pairs.isStreaming) pairs else pairs.distinct()
   }
 
@@ -282,10 +275,18 @@ object StreamingOps {
     * the first batch lands there is no table yet: empty.
     */
   private def batchesBefore(spark: SparkSession, dir: String, batchId: Long,
-      fields: (String, DataType)*): DataFrame =
-    try spark.read.parquet(dir).filter(col("batchId") < batchId)
-      .select(fields.map(f => col(f._1)): _*)
-    catch { case _: AnalysisException => emptyDf(spark, fields: _*) }
+      fields: (String, DataType)*): DataFrame = {
+    // a stream's first batch finds no table yet: check before reading,
+    // since the read logs a FileNotFoundException trace before it fails
+    val path = new org.apache.hadoop.fs.Path(dir)
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
+      emptyDf(spark, fields: _*)
+    else
+      // the directory can exist with no data files yet
+      try spark.read.parquet(dir).filter(col("batchId") < batchId)
+        .select(fields.map(f => col(f._1)): _*)
+      catch { case _: AnalysisException => emptyDf(spark, fields: _*) }
+  }
 
   private def emptyDf(spark: SparkSession, fields: (String, DataType)*): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
@@ -509,9 +510,9 @@ object StreamingOps {
     * micro-batch's (doc_id, band_key) rows land under a `batchId=N`
     * subdirectory ([[batchKeyedSink]]), so checkpoint replays overwrite
     * their own output instead of duplicating history. The per-row band
-    * keys are [[rowLshBandKeys]] (bit-identical to the batch
-    * `Dedup.lshBands` layout), so a table bootstrapped in batch and
-    * grown by this stream is ONE consistent key space.
+    * keys are [[textBandKeys]] (the batch `Dedup.lshBands` kernel), so
+    * a table bootstrapped in batch and grown by this stream is ONE
+    * consistent key space.
     *
     * Read it back with `spark.read.option("recursiveFileLookup",
     * "true").parquet(tableDir)`. At 100 TB the table is the small
@@ -522,8 +523,7 @@ object StreamingOps {
       tableDir: String, checkpointDir: String,
       n: Int = 3, k: Int = 8, rowsPerBand: Int = 2,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    batchKeyedSink(stream.select(col(idCol).as("doc_id"),
-        explode(rowLshBandKeys(col(textCol), n, k, rowsPerBand)).as("band_key")),
+    batchKeyedSink(textBandKeys(stream, idCol, textCol, n, k, rowsPerBand),
       checkpointDir, trigger)(writeBatch(_, tableDir, _))
 
   /** STREAMING DOMAIN ROUTING (round 17) — the per-micro-batch face of
@@ -1008,11 +1008,12 @@ object StreamingOps {
     batchKeyedSink(stream, checkpointDir, trigger) { (batch, batchId) =>
       val history = batchesBefore(batch.sparkSession, tableDir, batchId,
         "doc_id" -> LongType, "band_key" -> StringType)
-      writeBatch(nearDupAgainstHistory(batch, history, idCol, textCol, "doc_id",
-        n, k, rowsPerBand), pairsDir, batchId)
-      writeBatch(batch.select(col(idCol).as("doc_id"),
-          explode(rowLshBandKeys(col(textCol), n, k, rowsPerBand)).as("band_key")),
-        tableDir, batchId)
+      // one key derivation serves the screen and the table write
+      val keys = textBandKeys(batch, idCol, textCol, n, k, rowsPerBand).persist()
+      try {
+        writeBatch(bandCollisions(keys, history, "doc_id"), pairsDir, batchId)
+        writeBatch(keys, tableDir, batchId)
+      } finally keys.unpersist()
     }
   }
 
@@ -1200,6 +1201,7 @@ object StreamingOps {
         df.select(Seq(col("doc_id"), col("quality")) ++ audit.map(col) :+
           lit(disp).as("disposition"): _*)
       var gateCache: Option[DataFrame] = None
+      var keysCache: Option[DataFrame] = None
       try {
         val lowQ = out(scored.filter(!col("_pass")), "low_quality")
         val pass = Curation.keeperTagged(scored.filter(col("_pass")))
@@ -1256,8 +1258,10 @@ object StreamingOps {
           freshMd5.join(ids, Seq("doc_id"), "left_anti"))
         val histBands = batchesBefore(spark, s"$stateDir/bands", batchId,
           "doc_id" -> LongType, "band_key" -> StringType)
-        val collided = nearDupAgainstHistory(cleanFresh, histBands,
-            "doc_id", "text", "doc_id", n, k, rowsPerBand)
+        // one key derivation serves the screen and the table write
+        val freshKeys = textBandKeys(cleanFresh, "doc_id", "text", n, k, rowsPerBand)
+        keysCache = Some(freshKeys.persist())
+        val collided = bandCollisions(freshKeys, histBands, "doc_id")
           .select(col("new_id").as("doc_id")).distinct()
         val nearDup = out(
           cleanFresh.join(collided, Seq("doc_id"), "left_semi"), "near_dup")
@@ -1269,13 +1273,13 @@ object StreamingOps {
             .unionByName(nearDup)
             .unionByName(out(kept, "kept")), outDir, batchId)
           writeBatch(kept.select(col("_md5")), s"$stateDir/md5", batchId)
-          writeBatch(kept.select(col("doc_id"),
-              explode(rowLshBandKeys(col("text"), n, k, rowsPerBand)).as("band_key")),
+          writeBatch(freshKeys.join(collided, Seq("doc_id"), "left_anti"),
             s"$stateDir/bands", batchId)
         } finally kept.unpersist()
       } finally {
         scored.unpersist()
         gateCache.foreach(_.unpersist())
+        keysCache.foreach(_.unpersist())
         c4State.foreach(_._1.unpersist())
       }
     }

@@ -20,10 +20,46 @@ class DedupSpec extends SparkSpec {
       (2L, "a b c d e f g h"),
       (3L, "q r s t u v w x")).toDF("doc_id", "text")
     val sigs = Dedup.minhashSignatures(
-      df.select(col("doc_id"), Dedup.wordShingles("text").as("_sh")), "doc_id", col("_sh"))
+      Dedup.prepareHashedShingles(df, "doc_id", Dedup.wordShingles("text")), "doc_id")
       .collect().map(r => r.getLong(0) -> (1 to 8).map(r.getLong)).toMap
     assert(sigs(1L) == sigs(2L))
     assert(sigs(1L) != sigs(3L))
+  }
+
+  test("minhash kernel: signatures, bands and stream band keys equal a plain-Scala fold") {
+    // an independent reference for the one MinHash/LSH kernel: batch
+    // signatures, batch bands and the stream's band keys all run it,
+    // so a stream == batch comparison alone cannot catch a lane error
+    val df = Seq[(Long, String)](
+      (1L, "the quick brown fox jumps over the lazy dog again and again"),
+      (2L, "the quick brown fox leaps over the lazy dog again today"),
+      (3L, "completely different content with no shared shingles here"),
+      (4L, "too short"), // no 3-word shingles
+      (5L, null)).toDF("doc_id", "text")
+    val hashed = Dedup.prepareHashedShingles(df, "doc_id", Dedup.wordShingles("text"))
+    val hs: Map[Long, Seq[Long]] = hashed.collect()
+      .map(r => r.getLong(0) -> Option(r.getSeq[Long](1)).getOrElse(Nil)).toMap
+    assert(hs(1L).nonEmpty && hs(4L).isEmpty && hs(5L).isEmpty)
+    // min over the doc's hashes of (A_i * h + B_i) mod P, lane by lane
+    val want: Map[Long, Option[Seq[Long]]] = hs.map { case (id, h) =>
+      id -> (if (h.isEmpty) None else Some(Dedup.MINHASH_A.indices.map(i =>
+        h.map(x => (Dedup.MINHASH_A(i) * x + Dedup.MINHASH_B(i)) % Dedup.MINHASH_P).min)))
+    }
+    val got = Dedup.minhashSignatures(hashed, "doc_id").collect().map { r =>
+      val sig = (1 to 8).map(i => if (r.isNullAt(i)) None else Some(r.getLong(i)))
+      r.getLong(0) -> (if (sig.forall(_.isEmpty)) None else Some(sig.map(_.get)))
+    }.toMap
+    assert(got == want, s"signatures diverge from the reference:\n$got\nvs\n$want")
+    val wantBands = want.toSeq.flatMap {
+      case (id, Some(sig)) => (0 until 4).map(b => (id, b, s"$b:${sig(2 * b)}:${sig(2 * b + 1)}"))
+      case (_, None) => Nil
+    }.toSet
+    val gotBands = Dedup.lshBands(hashed, "doc_id").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
+    assert(gotBands == wantBands, s"bands diverge from the reference:\n$gotBands\nvs\n$wantBands")
+    val streamKeys = graft.streaming.StreamingOps.textBandKeys(df, "doc_id", "text", 3, 8, 2)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(streamKeys == wantBands.map(t => (t._1, t._3)))
   }
 
   test("lsh pipeline finds a true near-dup pair and skips unrelated docs") {

@@ -274,6 +274,30 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
   }
 
+  test("MinHash lanes read a bound hash array: one hash48 per scan, never one per lane") {
+    // the shingle + md5 pass is the dominant near-dup cost; a lane
+    // expression that inlines the hash array instead of reading the
+    // bound `_hs` column repeats it per signature lane (9 per scan on
+    // the stream path before the one-kernel change), and band keys
+    // that inline the lanes array repeat the lanes per band. Spark
+    // shares no subplan between the unpersisted frame's references
+    // (two band sides, two verify sides), so the near-dup plan holds
+    // one hash48 per documents scan.
+    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
+    def count(df: org.apache.spark.sql.DataFrame, what: String): Int =
+      java.util.regex.Pattern.quote(what).r
+        .findAllIn(df.queryExecution.optimizedPlan.toString).length
+    val streamKeys = graft.streaming.StreamingOps.textBandKeys(docs, "doc_id", "text", 3, 8, 2)
+    assert(count(streamKeys, "hash48(") == 1 && count(streamKeys, "minhash_lanes(") == 1,
+      streamKeys.queryExecution.optimizedPlan)
+    val nearDups = graft.operators.Dedup.minhashNearDupsPrepared(
+      graft.operators.Dedup.prepareHashedShingles(docs, "doc_id",
+        graft.operators.Dedup.wordShingles("text")), "doc_id", 0.5)
+    val scans = count(nearDups, "Relation [")
+    assert(scans == 4 && count(nearDups, "hash48(") == scans &&
+      count(nearDups, "minhash_lanes(") == 2, nearDups.queryExecution.optimizedPlan)
+  }
+
   test("q50 nearest-centroid assignment is a narrow per-row argmin (no window, no corpus shuffle)") {
     val plan = planOf("q50_nearest_centroid")
     // round 1 planned crossJoin + row_number() OVER (PARTITION BY

@@ -735,10 +735,8 @@ class StreamingSpec extends SparkSpec {
       .parquet(s"$base/bands")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val batchBuilt = graft.operators.Dedup.lshBands(
-        graft.operators.Dedup.minhashSignatures(
-          graft.operators.Dedup.prepareShingles(hist, "doc_id",
-            graft.operators.Dedup.wordShingles("text")),
-          "doc_id", col("_sh")),
+        graft.operators.Dedup.prepareHashedShingles(hist, "doc_id",
+          graft.operators.Dedup.wordShingles("text")),
         "doc_id")
       .collect().map(r => (r.getLong(0), r.getString(2))).toSet
     assert(maintained == batchBuilt,
@@ -1308,10 +1306,8 @@ class StreamingSpec extends SparkSpec {
     // accreted key space == batch-built key space, key for key
     val maintained = table.select(col("doc_id"), col("band_key"))
     val batchBuilt = graft.operators.Dedup.lshBands(
-        graft.operators.Dedup.minhashSignatures(
-          graft.operators.Dedup.prepareShingles(docs, "doc_id",
-            graft.operators.Dedup.wordShingles("text")),
-          "doc_id", col("_sh")),
+        graft.operators.Dedup.prepareHashedShingles(docs, "doc_id",
+          graft.operators.Dedup.wordShingles("text")),
         "doc_id")
       .select(col("doc_id"), col("band_key"))
     assert(maintained.count() == batchBuilt.count())
@@ -3041,14 +3037,11 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // batch-built band table, as a pipeline would materialize it
     val bands = Dedup.lshBands(
-      Dedup.minhashSignatures(
-        Dedup.prepareShingles(hist, "doc_id", Dedup.wordShingles("text")),
-        "doc_id", col("_sh")),
+      Dedup.prepareHashedShingles(hist, "doc_id", Dedup.wordShingles("text")),
       "doc_id")
 
     // stateless per-row band keys must equal the batch path's exactly
-    val rowKeys = hist.select(col("doc_id"),
-      explode(StreamingOps.rowLshBandKeys(col("text"))).as("band_key"))
+    val rowKeys = StreamingOps.textBandKeys(hist, "doc_id", "text", 3, 8, 2)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val batchKeys = bands.collect()
       .map(r => (r.getLong(0), r.getString(2))).toSet
