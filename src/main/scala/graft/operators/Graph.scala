@@ -138,6 +138,47 @@ object Graph {
     org.apache.spark.sql.graft.shims.withMeasuredStats(ck, size, BigInt(n))
   }
 
+
+  /** The undirected front end of every undirected operator: each edge
+    * as its canonical (a, b) pair with a < b. Self-loops drop, and
+    * parallel and reversed edges collapse to one row, so a node's
+    * degree over this frame counts its distinct neighbours.
+    */
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges
+      .select(least(col(srcCol), col(dstCol)).as("a"),
+        greatest(col(srcCol), col(dstCol)).as("b"))
+      .filter(col("a") =!= col("b")).distinct()
+
+  /** The symmetric (node, nbr) adjacency of a canonical (a, b) frame:
+    * every undirected edge in both directions.
+    */
+  private def adjacency(canon: DataFrame): DataFrame =
+    canon.select(col("a").as("node"), col("b").as("nbr"))
+      .union(canon.select(col("b").as("node"), col("a").as("nbr")))
+
+  /** (node, `name`): each node's degree over a canonical (a, b) frame. */
+  private def degrees(canon: DataFrame, name: String = "_deg"): DataFrame =
+    adjacency(canon).groupBy(col("node")).agg(count(lit(1)).as(name))
+
+  /** The common-neighbour wedge engine of [[linkPredict]] and
+    * [[neighborhoodJaccard]]: every (_x, _y) pair with _x < _y that
+    * shares a centre _z, from the self-join of the adjacency `und` on
+    * the centre — cost sum_z deg(z)^2, the price every common-neighbour
+    * definition pays. Centres are the nodes of `deg` (node, _deg, ...)
+    * with 2 <= _deg <= `maxCenterDegree`; the cap is the scale lever
+    * (skipping hub centres bounds the fan-out at cap^2 per node). The
+    * centre's other `deg` columns ride along on each wedge.
+    */
+  private def wedges(und: DataFrame, deg: DataFrame, maxCenterDegree: Int): DataFrame = {
+    require(maxCenterDegree >= 2, s"maxCenterDegree must be >= 2, got $maxCenterDegree")
+    val centres = deg.filter(col("_deg") >= 2 && col("_deg") <= maxCenterDegree)
+      .withColumnRenamed("node", "_z")
+    val w1 = und.select(col("node").as("_z"), col("nbr").as("_x"))
+    val w2 = und.select(col("node").as("_z"), col("nbr").as("_y"))
+    w1.join(w2, "_z").filter(col("_x") < col("_y")).join(centres, "_z")
+  }
+
   /** Fixed-iteration PageRank over an edge list (src -> dst), damping
     * 85/100, uniform teleport. Returns (node, rank_u) with rank_u in
     * micro-rank units.
@@ -150,6 +191,23 @@ object Graph {
     *    iteration, which is irrelevant for the RANKING use;
     *  - integer floor-division drops sub-micro remainders (same).
     *
+    * The walk, its scale shape and the `srcSalt` out-degree-hub lever
+    * are [[rankWalk]]'s; the node count enters as a broadcast one-row
+    * aggregate (no driver count).
+    */
+  def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
+      iters: Int, srcSalt: Int = 1): DataFrame =
+    rankWalk(edges, srcCol, dstCol, iters, srcSalt) { nodes =>
+      nodes.crossJoin(broadcast(nodes.agg(count(lit(1)).as("_n"))))
+        .select(col("node"),
+          ldiv(lit(RANK_SCALE * 15L / 100L), col("_n")).as("_tele"),
+          ldiv(lit(RANK_SCALE), col("_n")).as("_init"))
+    }
+
+  /** The rank walk of [[pageRank]] and [[personalizedPageRank]], which
+    * differ only in where the mass starts and where teleport returns:
+    * `mass` maps the node frame (node) to (node, _tele, _init).
+    *
     * Scale shape: per iteration, ONE shuffle of (node, contribution)
     * longs — the Pregel pattern the connected-components operator
     * already uses. The LOOP-INVARIANT frames are built ONCE, before
@@ -161,13 +219,12 @@ object Graph {
     * at 100 TB that is iters x a full edge re-scan + re-shuffle).
     * With both invariants persisted on their join keys, the only
     * per-round exchange is the contribution aggregation itself.
-    * The node count enters as a broadcast one-row aggregate (no
-    * driver count); `localCheckpoint` truncates the iterative
-    * lineage each round. Iterations are FIXED — no convergence
-    * probe, no collect; the only driver-triggered jobs are the eager
-    * per-iteration `localCheckpoint` materializations that truncate
-    * the lineage. GraphSpec pins the loop-body plan via [[prStep]]:
-    * exactly one scan of each persisted invariant per round.
+    * `localCheckpoint` truncates the iterative lineage each round.
+    * Iterations are FIXED — no convergence probe, no collect; the only
+    * driver-triggered jobs are the eager per-iteration
+    * `localCheckpoint` materializations that truncate the lineage.
+    * GraphSpec pins the loop-body plan via [[prStep]]: exactly one
+    * scan of each persisted invariant per round.
     *
     * Hub skew (round 13). The two hub directions behave differently:
     *  - IN-degree hubs (10^5 pages link to one domain) are absorbed
@@ -185,14 +242,15 @@ object Graph {
     *    of |V| x srcSalt long-pairs — the standard replicate-the-
     *    small-side salting trade; results are BIT-IDENTICAL because
     *    the integer grid is aggregation-order-free, GraphSpec-
-    *    proven). Engage it for power-law link graphs; leave 1 for
-    *    the co-partitioned zero-exchange join.
+    *    proven). Engage it for power-law link graphs (a seed-adjacent
+    *    hub concentrates PPR mass flow exactly like the global walk);
+    *    leave 1 for the co-partitioned zero-exchange join.
     */
-  def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, srcSalt: Int = 1): DataFrame = {
-    // iters = 0 would silently return the uniform init ranks — and,
-    // with the post-loop unpersist() below, a frame that recomputes
-    // its whole invariant lineage on every action
+  private def rankWalk(edges: DataFrame, srcCol: String, dstCol: String,
+      iters: Int, srcSalt: Int)(mass: DataFrame => DataFrame): DataFrame = {
+    // iters = 0 would silently return the init ranks — and, with the
+    // post-loop unpersist() below, a frame that recomputes its whole
+    // invariant lineage on every action
     require(iters >= 1, s"need iters >= 1, got $iters")
     require(srcSalt >= 1, s"need srcSalt >= 1, got $srcSalt")
     // the distinct edge list feeds FOUR build lineages (nodes x2 via
@@ -203,7 +261,6 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = e.select(col("_src").as("node"))
       .union(e.select(col("_dst").as("node"))).distinct()
-    val nRow = nodes.agg(count(lit(1)).as("_n"))
     val outdeg = e.groupBy(col("_src")).agg(count(lit(1)).as("_outdeg"))
     val ejBase = e.join(outdeg, "_src")
     val ej = (if (srcSalt == 1) ejBase.repartition(col("_src"))
@@ -211,11 +268,7 @@ object Graph {
         .withColumn("_salt", pmod(xxhash64(col("_dst")), lit(srcSalt.toLong)))
         .repartition(col("_src"), col("_salt")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodesT = nodes.crossJoin(broadcast(nRow))
-      .select(col("node"),
-        ldiv(lit(RANK_SCALE * 15L / 100L), col("_n")).as("_tele"),
-        ldiv(lit(RANK_SCALE), col("_n")).as("_init"))
-      .repartition(col("node"))
+    val nodesT = mass(nodes).repartition(col("node"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var ranks = nodesT.select(col("node"), col("_init").as("rank_u"))
     // [[ckptEager]] cadence: lazy checkpoints truncate each round's
@@ -232,14 +285,13 @@ object Graph {
     ranks
   }
 
-  /** One synchronous rank round over the persisted loop invariants —
-    * shared by [[pageRank]] and [[personalizedPageRank]] (whose only
-    * difference is what `_tele`/`_init` hold), and a separate seam so
-    * GraphSpec can pin the loop-body plan: one scan of the persisted
-    * edge frame, one scan of the persisted node frame, and the single
-    * contribution shuffle (salt = 1); with salt > 1 the ranks side is
-    * replicated salt x and joined on (_src, _salt) so out-degree hub
-    * edges spread across salt partitions (see [[pageRank]]).
+  /** One synchronous rank round over [[rankWalk]]'s persisted loop
+    * invariants, and a separate seam so GraphSpec can pin the
+    * loop-body plan: one scan of the persisted edge frame, one scan of
+    * the persisted node frame, and the single contribution shuffle
+    * (salt = 1); with salt > 1 the ranks side is replicated salt x and
+    * joined on (_src, _salt) so out-degree hub edges spread across
+    * salt partitions.
     *
     * @param ej     persisted (_src, _dst, _outdeg), partitioned by _src
     *               (salt = 1) or (_src, _salt) (salt > 1)
@@ -285,13 +337,8 @@ object Graph {
     * triangle; integer counts, exact on any engine (q118).
     */
   def triangles(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val deg = canon.select(col("a").as("node"))
-      .union(canon.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+    val canon = undirected(edges, srcCol, dstCol)
+    val deg = degrees(canon, "deg")
     // orient (a, b) from the (deg, id)-smaller endpoint to the larger
     val withDeg = canon
       .join(deg.select(col("node").as("a"), col("deg").as("_da")), "a")
@@ -362,15 +409,9 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, iters: Int): DataFrame = {
     require(k >= 1 && iters >= 1, s"need k >= 1, iters >= 1; got ($k, $iters)")
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint()
-    var e = canon
+    var e = undirected(edges, srcCol, dstCol).localCheckpoint()
     // the ONLY full degree aggregation; the loop maintains it by delta
-    var deg = ckptMeasured(e.select(col("a").as("node"))
-      .union(e.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("_d")))
+    var deg = ckptMeasured(degrees(e, "_d"))
     // deg goes through [[ckptMeasured]], NOT plain eager
     // localCheckpoint: its round plan joins two deg-derived frames,
     // and carried-over stats ESTIMATES would compound ~3x bits/round
@@ -436,52 +477,25 @@ object Graph {
     * of spreading uniformly — the "related domains" expansion query
     * (rank the graph by proximity to a trusted seed list, then widen a
     * curation whitelist from the top). Initial mass and the 15%
-    * teleport split equally (integer floor) over the seeds; non-seed
-    * nodes start at zero and receive only damped in-flow. Same
-    * integer micro-rank grid, same one-shuffle-per-iteration Pregel
-    * shape, same dangling-mass leak as [[pageRank]]; the oracle
-    * unrolls iterations with a CASE on the seed set (q149).
+    * teleport split equally (integer floor) over the DISTINCT seeds, so
+    * a repeated seed id carries the same mass as a single one;
+    * non-seed nodes start at zero and receive only damped in-flow. The
+    * oracle unrolls iterations with a CASE on the seed set (q149).
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: Seq[Long], iters: Int, srcSalt: Int = 1): DataFrame = {
     require(seeds.nonEmpty && iters >= 1,
       s"need seeds and iters >= 1; got (${seeds.size}, $iters)")
-    require(srcSalt >= 1, s"need srcSalt >= 1, got $srcSalt")
-    // same build-lineage persist as [[pageRank]]
-    val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
-      .filter(col("_src") =!= col("_dst")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("_src").as("node"))
-      .union(e.select(col("_dst").as("node"))).distinct()
-    val outdeg = e.groupBy(col("_src")).agg(count(lit(1)).as("_outdeg"))
-    val isSeed = col("node").isInCollection(seeds)
+    val seedSet = seeds.distinct
+    val isSeed = col("node").isInCollection(seedSet)
     // exact Scala floor-div of the constant mass shares (n is a literal)
-    val initU = RANK_SCALE / seeds.length
-    val teleportU = (RANK_SCALE * 15L / 100L) / seeds.length
-    // same hoisted-invariant shape as [[pageRank]] — see there
-    // (including the srcSalt out-degree-hub lever: a seed-adjacent
-    // hub concentrates PPR mass flow exactly like the global walk)
-    val ejBase = e.join(outdeg, "_src")
-    val ej = (if (srcSalt == 1) ejBase.repartition(col("_src"))
-      else ejBase
-        .withColumn("_salt", pmod(xxhash64(col("_dst")), lit(srcSalt.toLong)))
-        .repartition(col("_src"), col("_salt")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodesT = nodes
-      .select(col("node"),
+    val initU = RANK_SCALE / seedSet.length
+    val teleportU = (RANK_SCALE * 15L / 100L) / seedSet.length
+    rankWalk(edges, srcCol, dstCol, iters, srcSalt) { nodes =>
+      nodes.select(col("node"),
         when(isSeed, lit(teleportU)).otherwise(lit(0L)).as("_tele"),
         when(isSeed, lit(initU)).otherwise(lit(0L)).as("_init"))
-      .repartition(col("node"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodesT.select(col("node"), col("_init").as("rank_u"))
-    // same lazy-then-eager checkpoint cadence as [[pageRank]]
-    for (i <- 0 until iters)
-      ranks = prStep(ej, nodesT, ranks, srcSalt)
-        .localCheckpoint(eager = ckptEager(i, iters))
-    e.unpersist()
-    ej.unpersist()
-    nodesT.unpersist()
-    ranks
+    }
   }
 
   /** Link prediction over an undirected graph: for every NON-adjacent
@@ -499,11 +513,8 @@ object Graph {
     * contribution is the exact integer quotient 1e12 div lnu — so
     * aa_micro (1e-6 AA units) is a long any engine replays.
     *
-    * Scale shape: candidate pairs come from the wedge self-join of
-    * the adjacency on the CENTER node — cost sum_z deg(z)^2, the
-    * price every common-neighbor definition pays. `maxCenterDegree`
-    * is the scale lever: skipping hub centers caps the fan-out at
-    * cap^2 per node and is the standard estimator trade (a hub's
+    * Scale shape: candidate pairs come from [[wedges]], whose
+    * `maxCenterDegree` cap is the standard estimator trade (a hub's
     * 1/ln(deg) contribution is negligible anyway — document the cap
     * when you use it). Adjacent pairs leave via one left-anti
     * equi-join against the edge list. Output: (node_a, node_b,
@@ -511,25 +522,13 @@ object Graph {
     */
   def linkPredict(edges: DataFrame, srcCol: String, dstCol: String,
       maxCenterDegree: Int = Int.MaxValue): DataFrame = {
-    require(maxCenterDegree >= 2, s"maxCenterDegree must be >= 2, got $maxCenterDegree")
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val und = canon.select(col("a").as("node"), col("b").as("nbr"))
-      .union(canon.select(col("b").as("node"), col("a").as("nbr")))
-    // wedge centers with their quantized inverse-log contribution;
-    // only deg >= 2 nodes can center a wedge, so ln(deg) > 0
-    val contrib = und.groupBy(col("node")).agg(count(lit(1)).as("_deg"))
-      .filter(col("_deg") >= 2 && col("_deg") <= maxCenterDegree)
-      .select(col("node"),
-        ldiv(lit(1000000000000L),
-          floor(log(col("_deg")) * 1e6 + lit(0.5)).cast("long")).as("_aa"))
-    val w1 = und.select(col("node").as("_z"), col("nbr").as("_x"))
-    val w2 = und.select(col("node").as("_z"), col("nbr").as("_y"))
-    val wedges = w1.join(w2, "_z").filter(col("_x") < col("_y"))
-      .join(contrib.select(col("node").as("_z"), col("_aa")), "_z")
-    wedges.groupBy(col("_x"), col("_y"))
+    val canon = undirected(edges, srcCol, dstCol)
+    // each centre's quantized inverse-log contribution; only deg >= 2
+    // nodes centre a wedge, so ln(deg) > 0 where it is used
+    val contrib = degrees(canon).withColumn("_aa",
+      ldiv(lit(1000000000000L), floor(log(col("_deg")) * 1e6 + lit(0.5)).cast("long")))
+    wedges(adjacency(canon), contrib, maxCenterDegree)
+      .groupBy(col("_x"), col("_y"))
       .agg(count(lit(1)).as("common_neighbors"), sum(col("_aa")).as("aa_micro"))
       .join(canon, col("_x") === col("a") && col("_y") === col("b"), "left_anti")
       .select(col("_x").as("node_a"), col("_y").as("node_b"),
@@ -546,10 +545,7 @@ object Graph {
     * [[linkPredict]], which predicts absent links) — a↔b being
     * linked doesn't change N(a) ∩ N(b).
     *
-    * Same wedge engine as [[linkPredict]]: candidates from the
-    * center self-join (sum_z deg(z)² — the price of any
-    * common-neighbor definition, capped by `maxCenterDegree` when
-    * hub centers must be skipped). With the cap INACTIVE the result
+    * Candidates come from [[wedges]]. With the cap INACTIVE the result
     * is exact. With the cap active, skipped hub centers UNDERCOUNT
     * the intersection, and because union_size is computed as
     * deg_a + deg_b − common from that capped count, the union is
@@ -564,20 +560,9 @@ object Graph {
     */
   def neighborhoodJaccard(edges: DataFrame, srcCol: String, dstCol: String,
       minSimMicro: Long = 0L, maxCenterDegree: Int = Int.MaxValue): DataFrame = {
-    require(maxCenterDegree >= 2, s"maxCenterDegree must be >= 2, got $maxCenterDegree")
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val und = canon.select(col("a").as("node"), col("b").as("nbr"))
-      .union(canon.select(col("b").as("node"), col("a").as("nbr")))
-    val deg = und.groupBy(col("node")).agg(count(lit(1)).as("_deg"))
-    val centers = deg.filter(col("_deg") >= 2 && col("_deg") <= maxCenterDegree)
-      .select(col("node").as("_z"))
-    val w1 = und.select(col("node").as("_z"), col("nbr").as("_x"))
-    val w2 = und.select(col("node").as("_z"), col("nbr").as("_y"))
-    val common = w1.join(w2, "_z").filter(col("_x") < col("_y"))
-      .join(centers, "_z")
+    val canon = undirected(edges, srcCol, dstCol)
+    val deg = degrees(canon)
+    val common = wedges(adjacency(canon), deg, maxCenterDegree)
       .groupBy(col("_x"), col("_y"))
       .agg(count(lit(1)).as("common_neighbors"))
     common
@@ -598,11 +583,11 @@ object Graph {
     * shortest-path features. Unreached nodes are absent (no
     * sentinel distances).
     *
-    * Same Pregel cadence as [[pageRank]]: per round, one hash join
-    * of the adjacency against the frontier-so-far (shuffles (node,
-    * hops) longs), one map-side-combined min — monotone, so
-    * re-relaxing already-settled nodes is free of correctness risk;
-    * `localCheckpoint` truncates the loop lineage, and rounds are
+    * Pregel cadence: per round, one hash join of the adjacency
+    * against the frontier-so-far (shuffles (node, hops) longs), one
+    * map-side-combined min — monotone, so re-relaxing already-settled
+    * nodes is free of correctness risk; `localCheckpoint` truncates
+    * the loop lineage on the [[ckptEager]] cadence, and rounds are
     * FIXED so an oracle unrolls them as CTEs (q175). rounds >= the
     * graph's eccentricity yields exact distances.
     */
@@ -610,24 +595,16 @@ object Graph {
       seeds: Seq[Long], rounds: Int): DataFrame = {
     require(seeds.nonEmpty && rounds >= 1,
       s"need seeds and rounds >= 1; got (${seeds.size}, $rounds)")
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
     // loop-invariant adjacency, persisted pre-partitioned on the
     // per-round join key: the frontier join then shuffles only the
     // (node, hops) side, and no round re-derives scan -> distinct ->
-    // union (see [[pageRank]] for the same audit)
-    val und = canon.select(col("a").as("node"), col("b").as("nbr"))
-      .union(canon.select(col("b").as("node"), col("a").as("nbr")))
+    // union
+    val und = adjacency(undirected(edges, srcCol, dstCol))
       .repartition(col("node"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = und.select(col("node")).distinct()
     var dist = nodes.filter(col("node").isInCollection(seeds))
       .select(col("node"), lit(0L).as("hops")).localCheckpoint(eager = false)
-    // lazy-then-eager checkpoint cadence as in [[pageRank]]: plans
-    // stay truncated per round, but the whole fixed-round loop
-    // materializes as ONE multi-stage job at the last round
     for (i <- 0 until rounds) {
       val reach = und.join(dist, "node")
         .select(col("nbr").as("node"), (col("hops") + 1L).as("hops"))
@@ -654,30 +631,23 @@ object Graph {
     * Scale shape: per iteration, one hash join of the undirected
     * adjacency against the label table (shuffles (node, label) pairs,
     * i.e. 2|E| rows), one map-side-combined count, and a per-node
-    * argmax window whose partitions are bounded by degree — the
-    * Pregel cadence of [[pageRank]]; `localCheckpoint` truncates the
-    * loop lineage. Returns (node, label).
+    * argmax window whose partitions are bounded by degree;
+    * `localCheckpoint` truncates the loop lineage on the
+    * [[ckptEager]] cadence. Returns (node, label).
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int): DataFrame = {
     require(iters >= 1, s"need iters >= 1, got $iters")
     import org.apache.spark.sql.expressions.Window
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
     // loop-invariant adjacency, persisted pre-partitioned on the
     // per-round join key (`nbr` — each round joins the label table
     // onto the NEIGHBOR end): the join then shuffles only the (node,
     // label) side, and no round re-derives scan -> distinct -> union
-    // (see [[pageRank]] for the same audit)
-    val und = canon.select(col("a").as("node"), col("b").as("nbr"))
-      .union(canon.select(col("b").as("node"), col("a").as("nbr")))
+    val und = adjacency(undirected(edges, srcCol, dstCol))
       .repartition(col("nbr"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var labels = und.select(col("node")).distinct()
       .select(col("node"), col("node").as("label")).localCheckpoint(eager = false)
-    // lazy-then-eager checkpoint cadence as in [[pageRank]]
     for (i <- 0 until iters) {
       val nb = und
         .join(labels.select(col("node").as("nbr"), col("label")), "nbr")

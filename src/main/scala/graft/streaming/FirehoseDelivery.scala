@@ -159,15 +159,9 @@ object FirehoseDelivery {
         else {
           val isRe = coalesce(col("recordId").startsWith("reingest-"), lit(false))
           val re = batch.filter(isRe).dropDuplicates("recordId")
-          val seen =
-            try spark.read.parquet(conf.seenDir)
-              .filter(col("batchId") =!= batchId).select(col("recordId"))
-            catch { case _: org.apache.spark.sql.AnalysisException => // no registry yet
-              spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("recordId",
-                    org.apache.spark.sql.types.StringType))))
-            }
+          val seen = StreamingOps.parquetOrEmpty(spark, conf.seenDir,
+            "recordId" -> org.apache.spark.sql.types.StringType)(
+            _.filter(col("batchId") =!= batchId))
           // fresh is re-derived for the union below — cheap, both passes
           // read the persisted raw batch and the registry is tiny
           val fresh = re.join(seen, Seq("recordId"), "left_anti")

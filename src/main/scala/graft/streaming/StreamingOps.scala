@@ -275,7 +275,14 @@ object StreamingOps {
     * the first batch lands there is no table yet: empty.
     */
   private def batchesBefore(spark: SparkSession, dir: String, batchId: Long,
-      fields: (String, DataType)*): DataFrame = {
+      fields: (String, DataType)*): DataFrame =
+    parquetOrEmpty(spark, dir, fields: _*)(_.filter(col("batchId") < batchId))
+
+  /** The `fields` of the parquet table at `dir` after `narrow`, or an
+    * empty frame of them while the table has no data.
+    */
+  private[streaming] def parquetOrEmpty(spark: SparkSession, dir: String,
+      fields: (String, DataType)*)(narrow: DataFrame => DataFrame): DataFrame = {
     // a stream's first batch finds no table yet: check before reading,
     // since the read logs a FileNotFoundException trace before it fails
     val path = new org.apache.hadoop.fs.Path(dir)
@@ -283,8 +290,7 @@ object StreamingOps {
       emptyDf(spark, fields: _*)
     else
       // the directory can exist with no data files yet
-      try spark.read.parquet(dir).filter(col("batchId") < batchId)
-        .select(fields.map(f => col(f._1)): _*)
+      try narrow(spark.read.parquet(dir)).select(fields.map(f => col(f._1)): _*)
       catch { case _: AnalysisException => emptyDf(spark, fields: _*) }
   }
 

@@ -61,6 +61,28 @@ class GraphSpec extends SparkSpec {
     assert(noisy == clean)
   }
 
+  test("undirected operators: reversed, parallel and self edges collapse to one undirected edge") {
+    // triangles {1,2,3} and {2,3,4} sharing edge (2,3), then a tail
+    // 4-5-6: every undirected operator has output on it. The noisy
+    // copy adds every edge reversed, self-loops (one on a node outside
+    // the graph, which must not appear) and a duplicated edge.
+    val clean = Seq((1L, 2L), (2L, 3L), (3L, 1L), (2L, 4L), (3L, 4L), (4L, 5L), (5L, 6L))
+    val noisy = clean ++ clean.map(_.swap) ++ Seq((1L, 1L), (4L, 4L), (99L, 99L), clean.head)
+    val ops: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "triangles" -> (Graph.triangles(_, "src", "dst")),
+      "kCore" -> (Graph.kCore(_, "src", "dst", k = 2, iters = 3)),
+      "linkPredict" -> (Graph.linkPredict(_, "src", "dst")),
+      "neighborhoodJaccard" -> (Graph.neighborhoodJaccard(_, "src", "dst")),
+      "bfsHops" -> (Graph.bfsHops(_, "src", "dst", Seq(1L), rounds = 3)),
+      "labelPropagation" -> (Graph.labelPropagation(_, "src", "dst", iters = 3)))
+    for ((name, op) <- ops) {
+      val want = op(clean.toDF("src", "dst")).collect().toSet
+      val got = op(noisy.toDF("src", "dst")).collect().toSet
+      assert(want.nonEmpty, s"$name: empty on the clean graph")
+      assert(got == want, s"$name: ${got.diff(want)} extra, ${want.diff(got)} missing")
+    }
+  }
+
   test("triangles: two triangles sharing an edge credit the shared nodes twice") {
     // {1,2,3} and {2,3,4} share edge (2,3)
     val r = tris(Seq((1L, 2L), (2L, 3L), (3L, 1L), (2L, 4L), (3L, 4L)))
@@ -110,6 +132,30 @@ class GraphSpec extends SparkSpec {
       "src", "dst", seeds = Seq(0L), iters = 3, srcSalt = 4)
       .as[(Long, Long)].collect().toMap
     assert(salted == plain, "salted PPR must be bit-identical")
+  }
+
+  test("personalizedPageRank: a repeated seed carries the mass of one seed, not a split of it") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    def ppr(seeds: Seq[Long]): Seq[(Long, Long)] =
+      Graph.personalizedPageRank(edges, "src", "dst", seeds, iters = 3)
+        .orderBy(col("node")).as[(Long, Long)].collect().toSeq
+    assert(ppr(Seq(3L, 3L)) == ppr(Seq(3L)))
+    assert(ppr(Seq(1L, 3L, 1L)) == ppr(Seq(1L, 3L)))
+  }
+
+  test("personalizedPageRank with every node a seed equals pageRank bit for bit") {
+    // 7 nodes, so 1e9/7 and 1.5e8/7 both floor; node 0 is dangling
+    val edges = ((1L to 5L).map(i => (i, 0L)) ++
+      Seq((1L, 2L), (2L, 3L), (6L, 1L), (3L, 6L))).toDF("src", "dst")
+    for (salt <- Seq(1, 3)) {
+      val pr = Graph.pageRank(edges, "src", "dst", iters = 4, srcSalt = salt)
+        .orderBy(col("node")).as[(Long, Long)].collect().toSeq
+      val ppr = Graph.personalizedPageRank(edges, "src", "dst", seeds = 0L to 6L,
+          iters = 4, srcSalt = salt)
+        .orderBy(col("node")).as[(Long, Long)].collect().toSeq
+      assert(pr.map(_._1) == (0L to 6L), pr.toString)
+      assert(ppr == pr, s"srcSalt $salt")
+    }
   }
 
   test("linkPredict: triangle+tail graph — adjacent pairs excluded, cn and AA hand-checked") {
