@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Corpus-curation operators for training-data pipelines: deterministic
   * stratified sampling and context-window sequence packing.
@@ -662,24 +663,23 @@ object CorpusOps {
     * corpus toward the target domain.
     *
     * Everything lives on integer grids: bucket log-probs are
-    * micro-nats (floor(ln·1e6+0.5) of the smoothed ratio), the
-    * per-doc weight is a BIGINT sum — exact under any aggregation
+    * micro-nats ([[smoothedTable]], the table [[nbModel]] builds too),
+    * the per-doc weight is a BIGINT sum — exact under any aggregation
     * order, engine-reproducible. Buckets come from the md5-derived
     * [[graft.functions.codecs]] hash48 (the q128 discipline), not a
     * JVM-private hash.
     *
-    * Shape: both distribution tables are `dim`-row aggregates
-    * (map-side combined) joined back as broadcasts; grams come from a
-    * posexplode + one windowed `lead` (whole-stage codegen — the
-    * repetitionStats lesson: no per-row lambda trees); the raw
-    * distribution folds out of the same per-doc bucket lineage the
-    * scoring join reads, the target is scanned once — no shuffle wider
-    * than the (doc, bucket) count.
+    * Shape: both distributions fold (map-side combined) into one
+    * config-sized (side, bucket) count, collected once; the `dim`-row
+    * log-ratio table is built on the driver and joins back as a
+    * broadcast of local rows. Grams come from one narrow generate per
+    * row ([[gramBuckets]]); nothing wider than the (doc, bucket) count
+    * ever shuffles.
     *
-    * The shared (doc, bucket) lineage feeds BOTH the per-doc scoring
-    * join and the raw distribution — a corpus-scale gram pass that
-    * must run once, not twice. [[dsirRun]] therefore PERSISTS it and
-    * hands the cache back in a release handle (the [[curationRun]]
+    * The (doc, bucket) counts feed BOTH the raw distribution and the
+    * per-doc scoring fold — a corpus-scale gram pass that must run
+    * once, not twice. [[dsirRun]] therefore PERSISTS them and hands
+    * the cache back in a release handle (the [[curationRun]]
     * discipline, round 17); this convenience form drops the handle —
     * the cache is still LRU-evictable, so one-shot callers pay
     * nothing, but long-lived sessions scoring many corpora should
@@ -697,20 +697,15 @@ object CorpusOps {
     def release(): Unit = cached.foreach(_.unpersist())
   }
 
-  /** [[dsirWeights]] with cache ownership returned to the caller: the
-    * (doc_id, bucket, cnt) frame — the one corpus-scale pass — is
-    * persisted so the raw-distribution fold and the scoring join both
-    * read the materialized counts instead of re-running the gram
-    * explode, and handed back for release after the last action.
-    */
   /** The hashed unigram+bigram feature stream shared by the DSIR
     * family and the NB classifier: one (doc_id, bucket) row per gram
     * occurrence, buckets from the md5-derived hash48 (the q128
-    * discipline). Narrow: posexplode + one windowed lead, whole-stage
-    * codegen (the repetitionStats lesson — no per-row lambda trees).
+    * discipline). Narrow: one generate per row, whole-stage codegen
+    * (the repetitionStats lesson — no per-row lambda trees).
     */
   private[operators] def gramBuckets(df: DataFrame, idCol: Column,
       textCol: Column, dim: Int, carry: Seq[String] = Nil): DataFrame = {
+    require(dim > 0, s"dim must be positive, got $dim")
     // One NARROW generate per row (optimization round 18): unigrams
     // are the split tokens, bigrams come from the native
     // [[graft.functions.shingles.wordShingles]] expression — the same
@@ -735,47 +730,99 @@ object CorpusOps {
           .as("bucket")): _*)
   }
 
-  /** The smoothed log-ratio table from two bucket-count frames — the
-    * shared tail of [[dsirRun]] and [[dsirModel]]. Both totals fold
-    * from the given counts; everything integral (micro-nats).
+  /** The per-doc gram counts every DSIR and NB scorer folds: one
+    * (doc_id, bucket, cnt) row per document and bucket it touches.
     */
-  private def dsirLr(spark: org.apache.spark.sql.SparkSession, tCounts: DataFrame,
-      rCounts: DataFrame, dim: Int): DataFrame = {
-    val allBuckets = spark.range(0, dim).select(col("id").as("bucket"))
-    val tTotal = tCounts.agg(coalesce(sum(col("cnt")), lit(0L)).as("_t"))
-    val rTotal = rCounts.agg(coalesce(sum(col("cnt")), lit(0L)).as("_r"))
-    allBuckets
-      .join(tCounts.withColumnRenamed("cnt", "_tc"), Seq("bucket"), "left")
-      .join(rCounts.withColumnRenamed("cnt", "_rc"), Seq("bucket"), "left")
-      .crossJoin(broadcast(tTotal)).crossJoin(broadcast(rTotal))
-      .select(col("bucket"),
-        // add-1 smoothing over the dim-bucket support: absent buckets
-        // still get a defined log-prob, the ratio never divides by 0
-        (floor(log((coalesce(col("_tc"), lit(0L)) + 1).cast("double") /
-            (col("_t") + dim).cast("double")) * 1e6 + lit(0.5)).cast("long") -
-         floor(log((coalesce(col("_rc"), lit(0L)) + 1).cast("double") /
-            (col("_r") + dim).cast("double")) * 1e6 + lit(0.5)).cast("long"))
-          .as("lr_u"))
+  private def docBucketCounts(df: DataFrame, idCol: Column, textCol: Column,
+      dim: Int): DataFrame =
+    gramBuckets(df, idCol, textCol, dim)
+      .groupBy(col("doc_id"), col("bucket")).agg(count(lit(1)).as("cnt"))
+
+  /** The natural log of the smoothed-model tables: `StrictMath.log`,
+    * the function Spark's LOG expression calls, so a driver-built
+    * table agrees bit for bit with an engine-side `log`. `Math.log`
+    * may run a JIT intrinsic that differs from it in the last ulp.
+    */
+  private[graft] def ln(x: Double): Double = StrictMath.log(x)
+
+  /** `floor(ln(x)·1e6 + 0.5)`: a log on the micro-nat grid. */
+  private[graft] def microLn(x: Double): Long = math.floor(ln(x) * 1e6 + 0.5).toLong
+
+  /** THE smoothed hashed-gram model behind [[nbModel]] and
+    * [[dsirModel]]: for every class in `classes` and every bucket in
+    * `[0, dim)`, counted or not, the add-1 micro-nat log-prob
+    * `lp_u(c, b) = microLn((cnt(c, b) + 1) / (total(c) + dim))` — the
+    * smoothing gives absent buckets a defined log-prob and never
+    * divides by 0. `counts` holds (label, bucket, cnt) rows; they fold
+    * (map-side combined) to the config-sized per-(label, bucket) sums,
+    * which are collected, and the arithmetic runs on the driver. `row`
+    * shapes each bucket's output rows from its per-class lp_u. The
+    * result is a LocalRelation of `schema`, so a scorer's broadcast
+    * builds straight from local rows.
+    */
+  private def smoothedTable(counts: DataFrame, classes: Seq[String], dim: Int,
+      schema: StructType)(row: (Long, String => Long) => Seq[Row]): DataFrame = {
+    val cnt = counts.groupBy(col("label"), col("bucket")).agg(sum(col("cnt")))
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val total = cnt.groupMapReduce(_._1._1)(_._2)(_ + _)
+    val rows = (0L until dim.toLong).flatMap(b => row(b, c => microLn(
+      (cnt.getOrElse((c, b), 0L) + 1).toDouble / (total.getOrElse(c, 0L) + dim).toDouble)))
+    counts.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  def dsirRun(raw: DataFrame, target: DataFrame, idCol: Column,
-      textCol: Column, dim: Int = 64): DsirRun = {
-    require(dim > 0, s"dim must be positive, got $dim")
-    val docBuckets = gramBuckets(raw, idCol, textCol, dim)
-      .groupBy(col("doc_id"), col("bucket")).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tCounts = gramBuckets(target, idCol, textCol, dim)
-      .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
-    // folds out of the PERSISTED docBuckets (round 17): the raw
-    // distribution and the scoring join share one materialization of
-    // the corpus gram pass instead of executing its lineage twice
-    val rCounts = docBuckets.groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
-    val lr = dsirLr(raw.sparkSession, tCounts, rCounts, dim)
-    val result = docBuckets.join(broadcast(lr), "bucket")
+  /** DSIR's (bucket, lr_u) table, `lr_u = lp_u(target) − lp_u(raw)`
+    * from [[smoothedTable]]; both sides are (bucket, cnt) rows.
+    */
+  private def dsirTable(target: DataFrame, raw: DataFrame, dim: Int): DataFrame =
+    smoothedTable(target.select(lit("t").as("label"), col("bucket"), col("cnt"))
+        .unionByName(raw.select(lit("r").as("label"), col("bucket"), col("cnt"))),
+      Seq("t", "r"), dim, StructType(Seq(StructField("bucket", LongType, nullable = false),
+        StructField("lr_u", LongType, nullable = false)))) { (b, lp) =>
+      Seq(Row(b, lp("t") - lp("r")))
+    }
+
+  /** One (bucket, cnt = 1) row per gram occurrence — a [[dsirTable]] side. */
+  private def gramRows(df: DataFrame, idCol: Column, textCol: Column, dim: Int): DataFrame =
+    gramBuckets(df, idCol, textCol, dim).select(col("bucket"), lit(1L).as("cnt"))
+
+  /** The per-doc DSIR fold: (doc_id, n_grams, dsir_weight_u) from
+    * (doc_id, bucket, cnt) counts against a (bucket, lr_u) table.
+    */
+  private def dsirFold(docBuckets: DataFrame, lr: DataFrame): DataFrame =
+    docBuckets.join(broadcast(lr), "bucket")
       .groupBy(col("doc_id"))
       .agg(sum(col("cnt")).as("n_grams"),
         sum(col("cnt") * col("lr_u")).as("dsir_weight_u"))
-    DsirRun(result, Seq(docBuckets))
+
+  /** The self-describing model check of [[dsirScore]] and [[nbScore]]
+    * (the IvfStore geometry discipline): a model's bucket support IS
+    * its feature dim, and a mismatched caller dim would hash grams into
+    * buckets the table doesn't cover — silently dropping features from
+    * the fold. An EAGER config-sized job at call time (one agg over the
+    * model frame; cheap against a LocalRelation or a persisted model, a
+    * full lineage execution otherwise).
+    */
+  private def requireModelDim(model: DataFrame, dim: Int, emptyMsg: String): Unit = {
+    val maxBucket = model.agg(max(col("bucket"))).head
+    require(!maxBucket.isNullAt(0), emptyMsg)
+    val modelDim = maxBucket.getLong(0) + 1
+    require(dim.toLong == modelDim,
+      s"dim=$dim disagrees with the model's bucket support ($modelDim) — " +
+        "score with the dim the model was trained with")
+  }
+
+  /** [[dsirWeights]] with cache ownership returned to the caller: the
+    * (doc_id, bucket, cnt) frame — the one corpus-scale pass — is
+    * persisted, so the table build (which materializes it) and the
+    * scoring fold both read the counts instead of re-running the gram
+    * explode, and handed back for release after the last action.
+    */
+  def dsirRun(raw: DataFrame, target: DataFrame, idCol: Column,
+      textCol: Column, dim: Int = 64): DsirRun = {
+    val docBuckets = docBucketCounts(raw, idCol, textCol, dim)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val lr = dsirTable(gramRows(target, idCol, textCol, dim), docBuckets, dim)
+    DsirRun(dsirFold(docBuckets, lr), Seq(docBuckets))
   }
 
   /** [[dsirRun]] over a PRE-COMPUTED (doc_id, bucket, cnt) frame when
@@ -783,69 +830,45 @@ object CorpusOps {
     * 18, guide §2.4): the target distribution folds from the shared
     * counts through a semi-join on the target ids instead of paying a
     * second full gram pass — `sum(cnt)` over a doc subset is exactly
-    * `gramBuckets(subset).groupBy(bucket).count` (the gram stream is
-    * per-occurrence, so per-doc counts partition it). Caller owns the
-    * counts frame's persistence ([[CorpusOps.pretrainingRun]] shares
-    * ONE materialized gram pass between the DSIR raw fold, this
-    * target fold, the scoring join, and the NB router).
+    * the subset's gram count (the gram stream is per-occurrence, so
+    * per-doc counts partition it). Caller owns the counts frame's
+    * persistence ([[CorpusOps.pretrainingRun]] shares ONE materialized
+    * gram pass between the DSIR table, the scoring fold and the NB
+    * router).
     */
-  private[operators] def dsirFromCounts(spark: org.apache.spark.sql.SparkSession,
-      docBuckets: DataFrame, targetIds: DataFrame, dim: Int): DataFrame = {
-    val tCounts = docBuckets.join(targetIds, Seq("doc_id"), "left_semi")
-      .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
-    val rCounts = docBuckets.groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
-    val lr = dsirLr(spark, tCounts, rCounts, dim)
-    docBuckets.join(broadcast(lr), "bucket")
-      .groupBy(col("doc_id"))
-      .agg(sum(col("cnt")).as("n_grams"),
-        sum(col("cnt") * col("lr_u")).as("dsir_weight_u"))
-  }
+  private[operators] def dsirFromCounts(docBuckets: DataFrame,
+      targetIds: DataFrame, dim: Int): DataFrame =
+    dsirFold(docBuckets, dsirTable(
+      docBuckets.join(targetIds, Seq("doc_id"), "left_semi"), docBuckets, dim))
 
   /** The FROZEN DSIR model: the (bucket, lr_u) log-ratio table alone —
     * `dim` rows, the config-sized artifact a train-once/score-often
     * split ships (the [[nbModel]]/[[nbScore]] discipline applied to
-    * DSIR, round 18). [[dsirWeights]] == [[dsirScore]] against this
-    * model over the same raw corpus — integer micro-nats, exactly
-    * reproducible — so a model trained offline scores streams
+    * DSIR, round 18), built eagerly as a LocalRelation.
+    * [[dsirWeights]] == [[dsirScore]] against this model over the same
+    * raw corpus — integer micro-nats, exactly reproducible — so a model
+    * trained offline scores streams
     * ([[graft.streaming.StreamingOps.dsirScoreStream]]) with
     * batch-identical weights.
     */
   def dsirModel(raw: DataFrame, target: DataFrame, idCol: Column,
-      textCol: Column, dim: Int = 64): DataFrame = {
-    require(dim > 0, s"dim must be positive, got $dim")
-    dsirLr(raw.sparkSession,
-      gramBuckets(target, idCol, textCol, dim)
-        .groupBy(col("bucket")).agg(count(lit(1)).as("cnt")),
-      gramBuckets(raw, idCol, textCol, dim)
-        .groupBy(col("bucket")).agg(count(lit(1)).as("cnt")),
-      dim)
-  }
+      textCol: Column, dim: Int = 64): DataFrame =
+    dsirTable(gramRows(target, idCol, textCol, dim),
+      gramRows(raw, idCol, textCol, dim), dim)
 
   /** Score `docs` against a frozen [[dsirModel]] table (or any
     * (bucket, lr_u) frame of that shape, e.g. a LocalRelation rebuilt
     * from a one-time collect in a streaming trigger). One batch-local
     * (doc, bucket) count + one broadcast join + one per-doc fold —
-    * nothing model-sized ever shuffles. Same self-describing dim
-    * check as [[nbScore]] (an eager config-sized agg at call time): a
-    * mismatched caller dim would hash grams into buckets the model
-    * doesn't cover, silently dropping features. Docs with no grams
-    * (null/empty text) produce no row — the nbScore contract.
+    * nothing model-sized ever shuffles. [[requireModelDim]] runs
+    * first. Docs with no grams (null/empty text) produce no row — the
+    * nbScore contract.
     */
   def dsirScore(docs: DataFrame, lr: DataFrame, idCol: Column,
       textCol: Column, dim: Int = 64): DataFrame = {
-    val lrRow = lr.agg(max(col("bucket"))).head
-    require(!lrRow.isNullAt(0),
+    requireModelDim(lr, dim,
       "empty DSIR model (lr has no rows) — train on non-empty corpora")
-    val lrDim = lrRow.getLong(0) + 1
-    require(dim.toLong == lrDim,
-      s"dim=$dim disagrees with the model's bucket support ($lrDim) — " +
-        "score with the dim the model was trained with")
-    gramBuckets(docs, idCol, textCol, dim)
-      .groupBy(col("doc_id"), col("bucket")).agg(count(lit(1)).as("cnt"))
-      .join(broadcast(lr), "bucket")
-      .groupBy(col("doc_id"))
-      .agg(sum(col("cnt")).as("n_grams"),
-        sum(col("cnt") * col("lr_u")).as("dsir_weight_u"))
+    dsirFold(docBucketCounts(docs, idCol, textCol, dim), lr)
   }
 
   /** Hashed-gram multinomial NAIVE BAYES classifier (round 17) — the
@@ -868,7 +891,7 @@ object CorpusOps {
     * gate wants (small margin = uncertain routing).
     *
     * Shape: the class-conditional table is a (labels x dim)-row
-    * aggregate joined back as a BROADCAST; the corpus side is one
+    * LocalRelation joined back as a BROADCAST; the corpus side is one
     * (doc, bucket) count shuffle + one (doc, label) fold + one
     * per-doc window over |labels| rows. Features come from the shared
     * [[gramBuckets]] stream. Nothing wider than the (doc, bucket)
@@ -881,10 +904,10 @@ object CorpusOps {
   }
 
   /** Train the NB model tables: the per-(label, bucket) micro-nat
-    * log-probs over the full `dim`-bucket support (add-1 smoothed)
+    * log-probs over the full `dim`-bucket support ([[smoothedTable]])
     * and the per-label micro-nat priors — both config-sized
-    * (labels x dim and labels rows), the broadcast/collect side of
-    * every scoring call. Split from the scorer so streaming serving
+    * (labels x dim and labels rows) LocalRelations, the broadcast side
+    * of every scoring call. Split from the scorer so streaming serving
     * ([[graft.streaming.StreamingOps.classifyStream]]) can train ONCE
     * and score every micro-batch against the same frozen tables.
     *
@@ -896,8 +919,6 @@ object CorpusOps {
     */
   def nbModel(train: DataFrame, idCol: Column, textCol: Column,
       labelCol: Column, dim: Int = 64): (DataFrame, DataFrame) = {
-    require(dim > 0, s"dim must be positive, got $dim")
-    val spark = train.sparkSession
     // id/text nullability filtered HERE, not just inside gramBuckets
     // (round-17 ADVICE): priors, the label set and the gram counts
     // must see the SAME document set — a label whose docs are all
@@ -907,56 +928,25 @@ object CorpusOps {
       .filter(labelCol.isNotNull && idCol.isNotNull && textCol.isNotNull)
       .select(idCol.as("doc_id"), labelCol.cast("string").as("label"),
         textCol.as("_txt"))
-    // class-conditional bucket counts over the dim-bucket support.
-    // `label` RIDES the gram stream (optimization round 19, the carry
-    // discipline): the old derive-by-join shape — gramBuckets(labeled)
-    // joined back against labeled on doc_id — exchanged the full
-    // training gram stream just to restore the label each gram row's
-    // source already carried. Same (label, bucket) multiset when each
-    // training row is its own document (the id contract every caller
-    // satisfies; a duplicated doc_id used to CROSS its copies' grams
-    // with its copies' labels — a join artifact, not a semantic).
-    val labelGrams = gramBuckets(labeled, col("doc_id"), col("_txt"), dim,
-      carry = Seq("label"))
-    val classCounts = labelGrams.groupBy(col("label"), col("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-    // Both model tables are CONFIG-SIZED (labels x dim and labels
-    // rows), so the grid completion and the log arithmetic happen on
-    // the DRIVER over two collected-once aggregates (optimization
-    // round 18): the old distributed form paid a labels-distinct
-    // shuffle + a grid cross-join + two grid joins per table build —
-    // five exchanges of config-sized frames, ~1.5 s of pure stage
-    // overhead per spine/classify call at ANY corpus size. The
-    // arithmetic is unchanged JVM double math (Math.log/Math.floor ==
-    // Spark's LOG/FLOOR on DoubleType), so every lp_u/prior_u is
-    // bit-identical with the old plan. Returned as LocalRelations —
-    // downstream broadcasts build straight from local rows.
-    val ccRows = classCounts.collect()
     val docCounts = labeled.groupBy(col("label")).agg(count(lit(1)).as("nd"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val nTotal = docCounts.values.sum
-    val totByLabel = ccRows.groupBy(_.getString(0))
-      .map { case (l, rs) => l -> rs.map(_.getLong(2)).sum }
-    val cntByKey = ccRows
-      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-    def microLn(x: Double): Long = math.floor(math.log(x) * 1e6 + 0.5).toLong
     val labels = docCounts.keys.toSeq.sorted
-    val lpRows: Seq[org.apache.spark.sql.Row] = for {
-      l <- labels; b <- 0L until dim.toLong
-    } yield org.apache.spark.sql.Row(l, b, microLn(
-      (cntByKey.getOrElse((l, b), 0L) + 1).toDouble /
-        (totByLabel.getOrElse(l, 0L) + dim).toDouble))
-    val priorRows: Seq[org.apache.spark.sql.Row] = labels.map(l =>
-      org.apache.spark.sql.Row(l,
-        microLn(docCounts(l).toDouble / nTotal.toDouble)))
-    import org.apache.spark.sql.types._
-    val lp = spark.createDataFrame(
-      java.util.Arrays.asList(lpRows: _*),
-      StructType(Seq(StructField("label", StringType, nullable = false),
+    // `label` RIDES the gram stream (optimization round 19, the carry
+    // discipline): no join of the training gram stream back against
+    // `labeled` on doc_id just to restore a column each gram row's
+    // source already carried
+    val lp = smoothedTable(
+      gramBuckets(labeled, col("doc_id"), col("_txt"), dim, carry = Seq("label"))
+        .withColumn("cnt", lit(1L)),
+      labels, dim, StructType(Seq(StructField("label", StringType, nullable = false),
         StructField("bucket", LongType, nullable = false),
-        StructField("lp_u", LongType, nullable = false))))
-    val priors = spark.createDataFrame(
-      java.util.Arrays.asList(priorRows: _*),
+        StructField("lp_u", LongType, nullable = false)))) { (b, lpOf) =>
+      labels.map(l => Row(l, b, lpOf(l)))
+    }
+    val nTotal = docCounts.values.sum
+    val priors = train.sparkSession.createDataFrame(
+      java.util.Arrays.asList(labels.map(l =>
+        Row(l, microLn(docCounts(l).toDouble / nTotal.toDouble))): _*),
       StructType(Seq(StructField("label", StringType, nullable = false),
         StructField("prior_u", LongType, nullable = false))))
     (lp, priors)
@@ -965,8 +955,9 @@ object CorpusOps {
   /** Score `corpus` against a trained NB model ([[nbModel]]'s
     * (lp, priors) tables — or any frames of that shape, e.g.
     * LocalRelations rebuilt from a one-time collect in a streaming
-    * trigger). One (doc, bucket) count shuffle, one (doc, label)
-    * fold, the |labels|-row per-doc argmax window.
+    * trigger). [[requireModelDim]] runs first; then one (doc, bucket)
+    * count shuffle, one (doc, label) fold, the |labels|-row per-doc
+    * argmax window.
     *
     * A document with NO grams (null or empty text) has no feature
     * rows and therefore NO output row — multinomial NB over zero
@@ -977,36 +968,18 @@ object CorpusOps {
     */
   def nbScore(corpus: DataFrame, lp: DataFrame, priors: DataFrame,
       idCol: Column, textCol: Column, dim: Int = 64): DataFrame = {
-    // the model is self-describing (the IvfStore geometry discipline):
-    // its bucket support IS the feature dim, and a mismatched caller
-    // dim would hash grams into buckets the lp grid doesn't cover —
-    // silently dropping features from the fold. This validation is an
-    // EAGER config-sized job at call time (one agg over the lp frame;
-    // cheap against a LocalRelation or a persisted model, a full
-    // lineage execution otherwise — materialize the model first when
-    // scoring repeatedly, as classifyStream's one-time collect does).
-    val lpRow = lp.agg(max(col("bucket"))).head
-    require(!lpRow.isNullAt(0),
+    requireModelDim(lp, dim,
       "empty NB model (lp has no rows) — train on a non-empty labeled set")
-    val lpDim = lpRow.getLong(0) + 1
-    require(dim.toLong == lpDim,
-      s"dim=$dim disagrees with the model's bucket support ($lpDim) — " +
-        "score with the dim the model was trained with")
-    val docBuckets = gramBuckets(
-        corpus.select(idCol.as("doc_id"), textCol.as("_txt")),
-        col("doc_id"), col("_txt"), dim)
-      .groupBy(col("doc_id"), col("bucket")).agg(count(lit(1)).as("cnt"))
-    nbScoreFromCounts(docBuckets, lp, priors)
+    nbScoreFromCounts(docBucketCounts(corpus, idCol, textCol, dim), lp, priors)
   }
 
   /** [[nbScore]]'s scoring tail over a PRE-COMPUTED (doc_id, bucket,
     * cnt) frame (optimization round 18): lets
     * [[CorpusOps.pretrainingRun]] route documents off the SAME
-    * materialized gram pass the DSIR stage folds from (when
-    * nbDim == dim) instead of paying a third full gram explode +
-    * count shuffle. No self-describing dim check here — the caller
-    * guarantees the counts were bucketed with the model's dim
-    * ([[nbScore]] keeps the eager validation for the public surface).
+    * materialized gram pass the DSIR stage folds from instead of
+    * paying another full gram explode + count shuffle. No model check
+    * here — the caller guarantees the counts were bucketed with the
+    * model's dim.
     */
   private[operators] def nbScoreFromCounts(docBuckets: DataFrame,
       lp: DataFrame, priors: DataFrame): DataFrame = {
@@ -1154,7 +1127,7 @@ object CorpusOps {
       dim: Int = 64, samplesPerLang: Int = 30, packBudget: Long = 512L,
       maxOpen: Int = 4, evalDocs: Option[DataFrame] = None,
       fuzzyTau: Double = 0.5, fuzzyRowsPerBand: Int = 2,
-      domainTrain: Option[DataFrame] = None, nbDim: Int = 64,
+      domainTrain: Option[DataFrame] = None,
       c4: Option[TextAnalysis.C4Policy] = None,
       sampleCollectCap: Int = 200000): PretrainRun = {
     require(sampleCollectCap >= 0,
@@ -1192,21 +1165,14 @@ object CorpusOps {
     }
     val nbFut = domainTrain.map { tr =>
       Par.inheritedFuture(docs.sparkSession.sparkContext) {
-        // The model tables are CONFIG-SIZED (labels x nbDim and labels
-        // rows): collect them once and rebuild as LocalRelations (the
-        // classifyStream discipline) instead of persisting two more
-        // eager cache stages — the scoring broadcast then builds from
-        // local rows, no cache-scan job per reference (optimization
-        // round 18).
-        val (lpRaw, priorsRaw) = nbModel(tr, col("doc_id"), col("text"),
-          col("label"), nbDim)
-        val lpRows = lpRaw.collect()
-        require(lpRows.nonEmpty,
+        // nbModel's tables are config-sized LocalRelations (labels x
+        // dim and labels rows): the scoring broadcasts build from local
+        // rows, no cache stage to hold
+        val (lp, priors) = nbModel(tr, col("doc_id"), col("text"),
+          col("label"), dim)
+        requireModelDim(lp, dim,
           "empty NB model (lp has no rows) — train on a non-empty labeled set")
-        val priorRows = priorsRaw.collect()
-        val spark = docs.sparkSession
-        (spark.createDataFrame(java.util.Arrays.asList(lpRows: _*), lpRaw.schema),
-          spark.createDataFrame(java.util.Arrays.asList(priorRows: _*), priorsRaw.schema))
+        (lp, priors)
       }
     }
     // C4 PRE-CLEAN leg (round 18, Raffel et al. 2020 via
@@ -1322,19 +1288,18 @@ object CorpusOps {
     // fold, (2) the DSIR target fold — a semi-join on the target ids,
     // exactly gramBuckets(target) folded, since the target is a subset
     // of clean — (3) the DSIR scoring join, and (4) the NB router
-    // (when nbDim == dim, below). Before, each consumer re-ran the
-    // posexplode + lead-window + hash48 gram pipeline: three full
-    // token-stream shuffles per spine run at ANY scale.
+    // below. Before, each consumer re-ran the posexplode + lead-window
+    // + hash48 gram pipeline: three full token-stream shuffles per
+    // spine run at ANY scale.
     val (docBuckets, docBucketsP) = cachedLeaf(
-      gramBuckets(clean, col("doc_id"), col("clean_text"), dim)
-        .groupBy(col("doc_id"), col("bucket")).agg(count(lit(1)).as("cnt")))
-    val dsirResult = dsirFromCounts(docs.sparkSession, docBuckets,
+      docBucketCounts(clean, col("doc_id"), col("clean_text"), dim))
+    val dsirResult = dsirFromCounts(docBuckets,
       clean.filter(targetPred).select(col("doc_id")), dim)
     // DOMAIN ROUTING leg (round 18, the q229 NB classifier composed
     // in): with `domainTrain` (a (doc_id, text, label) labeled
     // slice), every clean keeper is routed by the frozen NB model —
-    // trained ONCE, its two config-sized tables cached+cut like every
-    // other stage — and the resample quota applies per (lang, domain)
+    // trained ONCE into two config-sized LocalRelations, scored off the
+    // shared gram-bucket counts — and the resample quota applies per (lang, domain)
     // cell instead of per language: the fastText-style production
     // pattern where the router feeds the mixing step. Routing reads
     // the SCRUBBED text (nothing downstream of the curation boundary
@@ -1345,26 +1310,20 @@ object CorpusOps {
     // the plain spine's schema is untouched.
     val weightedBase = clean.select("doc_id", "lang", "n_tok")
       .join(dsirResult.select(col("doc_id"), col("dsir_weight_u")), "doc_id")
-    val (withDomain, domainCached) = nbFut match {
-      case None => (weightedBase, Seq.empty[DataFrame])
+    val withDomain = nbFut match {
+      case None => weightedBase
       case Some(fut) =>
-        // trained + collected in the background since function entry
-        // (it depends only on domainTrain); by now it is usually done
+        // trained in the background since function entry (it depends
+        // only on domainTrain); by now it is usually done
         val (lp, priors) = scala.concurrent.Await.result(fut,
           scala.concurrent.duration.Duration.Inf)
-        // route off the SHARED gram-bucket counts when the router's
-        // feature dim matches DSIR's (the declared spine queries run
-        // both at 64); a diverging nbDim pays its own gram pass
-        val routed = (if (nbDim == dim) nbScoreFromCounts(docBuckets, lp, priors)
-          else nbScore(clean.select(col("doc_id"), col("clean_text")),
-            lp, priors, col("doc_id"), col("clean_text"), nbDim))
+        val routed = nbScoreFromCounts(docBuckets, lp, priors)
           .select(col("doc_id"), col("predicted").as("domain"))
         // every gate-passing doc has >= minWords grams, so the router
         // covers it; the coalesce is the explicit-reject discipline
         // for callers who lower the gate below the 1-gram floor
-        (weightedBase.join(routed, Seq("doc_id"), "left")
-          .withColumn("domain", coalesce(col("domain"), lit("unrouted"))),
-          Seq.empty[DataFrame])
+        weightedBase.join(routed, Seq("doc_id"), "left")
+          .withColumn("domain", coalesce(col("domain"), lit("unrouted")))
     }
     // `weighted` (narrow 4/5-column corpus frame): read by the
     // resample AND the not_sampled anti-join; `sampled` (k rows per
@@ -1424,12 +1383,10 @@ object CorpusOps {
     // other shape (or the over-cap fallback) takes the distributed
     // packer.
     val sSchema = sampledDf.schema
-    val localPackOk = probe.length <= sampleCollectCap && {
-      import org.apache.spark.sql.types._
+    val localPackOk = probe.length <= sampleCollectCap &&
       sSchema("lang").dataType == StringType &&
-        sSchema("doc_id").dataType == LongType &&
-        sSchema("n_tok").dataType == LongType
-    }
+      sSchema("doc_id").dataType == LongType &&
+      sSchema("n_tok").dataType == LongType
     val bins =
       if (localPackOk) {
         val (iS, iD, iT) = (sSchema.fieldIndex("lang"),
@@ -1437,14 +1394,13 @@ object CorpusOps {
         val triples = probe.iterator
           .filter(r => !r.isNullAt(iS) && !r.isNullAt(iD) && !r.isNullAt(iT))
           .map(r => (r.getString(iS), r.getLong(iD), r.getLong(iT))).toArray
-        val outRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+        val outRows = new java.util.ArrayList[Row]()
         triples.groupBy(_._1).foreach { case (s, rs) =>
           val fold = new BinFold(packBudget, maxOpen)
           rs.sortBy { case (_, id, tok) => (-tok, id) }.foreach { case (_, id, tok) =>
-            outRows.add(org.apache.spark.sql.Row(id, fold.place(s, id, tok)._1))
+            outRows.add(Row(id, fold.place(s, id, tok)._1))
           }
         }
-        import org.apache.spark.sql.types._
         docs.sparkSession.createDataFrame(outRows,
           StructType(Seq(StructField("doc_id", LongType, nullable = false),
             StructField("bin_idx", LongType, nullable = false))))
@@ -1469,7 +1425,7 @@ object CorpusOps {
       u((c4Dropped.toSeq ++ contaminated.toSeq)
         .foldLeft(u(gated, notSampled))(u), packed),
       Seq(taggedP, scrubbedP, weightedP, docBucketsP) ++
-        c4Cached ++ gateCached ++ domainCached ++ sampleCached)
+        c4Cached ++ gateCached ++ sampleCached)
   }
 
   /** [[pretrainingRun]] without the cache handle — the one-shot
@@ -1482,13 +1438,13 @@ object CorpusOps {
       dim: Int = 64, samplesPerLang: Int = 30, packBudget: Long = 512L,
       maxOpen: Int = 4, evalDocs: Option[DataFrame] = None,
       fuzzyTau: Double = 0.5, fuzzyRowsPerBand: Int = 2,
-      domainTrain: Option[DataFrame] = None, nbDim: Int = 64,
+      domainTrain: Option[DataFrame] = None,
       c4: Option[TextAnalysis.C4Policy] = None,
       sampleCollectCap: Int = 200000): DataFrame =
     pretrainingRun(docs, minWords, maxWords, minMeanLen, maxMeanLen,
       stopWords, minStopHits, maxTop2Frac, targetPred, dim, samplesPerLang,
       packBudget, maxOpen, evalDocs, fuzzyTau, fuzzyRowsPerBand,
-      domainTrain, nbDim, c4, sampleCollectCap).result
+      domainTrain, c4, sampleCollectCap).result
 
   /** Context-window sequence packing, contiguous-chop style: within
     * each shard (`shardCol`), lay documents end-to-end in `orderCol`

@@ -1034,7 +1034,7 @@ object CorpusQueries {
         stopWords = Seq("the", "a"), minStopHits = 1L, maxTop2Frac = 0.12,
         targetPred = col("lang") === "en", dim = 64, samplesPerLang = 3,
         packBudget = 512L, maxOpen = 4,
-        domainTrain = Some(train), nbDim = 64)
+        domainTrain = Some(train))
       .orderBy(col("doc_id"))
   }, Some("""
     WITH RECURSIVE
@@ -1470,7 +1470,7 @@ object CorpusQueries {
         targetPred = col("lang") === "en", dim = 64, samplesPerLang = 3,
         packBudget = 512L, maxOpen = 4,
         evalDocs = Some(evalDocs), fuzzyTau = 0.4, fuzzyRowsPerBand = 1,
-        domainTrain = Some(train), nbDim = 64, c4 = Some(policy))
+        domainTrain = Some(train), c4 = Some(policy))
       .orderBy(col("doc_id"))
   }, Some("""    WITH RECURSIVE
     t0 AS (

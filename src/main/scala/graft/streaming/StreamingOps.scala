@@ -540,10 +540,10 @@ object StreamingOps {
     * pipeline runs INLINE with arrival: domain quotas, quality gates
     * and language routing act one trigger after the data lands.
     *
-    * The model tables are trained and COLLECTED ONCE before start()
-    * ([[collectOnce]]: otherwise every trigger re-executes the training
-    * lineage) — both are config-sized by construction (labels x dim
-    * log-probs, labels priors). Stateless; per batch the work is one
+    * The model tables are trained ONCE before start() and rebuilt per
+    * trigger from their rows ([[collectOnce]]) — both are config-sized
+    * by construction (labels x dim log-probs, labels priors).
+    * Stateless; per batch the work is one
     * batch-local (doc, bucket) count + two broadcast joins + the
     * |labels|-row argmax window.
     */
@@ -574,9 +574,9 @@ object StreamingOps {
     * resample/mix steps exactly as the batch pipeline's do — in integer
     * micro-nats, so stream == batch to the last bit.
     *
-    * The model is derived and COLLECTED ONCE before start()
-    * ([[collectOnce]]: otherwise every trigger re-executes the two
-    * corpus-scale gram passes). An empty TARGET fails AT SETUP — with
+    * The model is derived ONCE before start() (one pass over both
+    * corpora) and rebuilt per trigger from its rows ([[collectOnce]]).
+    * An empty TARGET fails AT SETUP — with
     * add-1 smoothing an all-smoothed model is well-defined but
     * meaningless (every weight a constant), exactly the silent
     * mis-routing a fail-fast exists to prevent. Stateless; per batch

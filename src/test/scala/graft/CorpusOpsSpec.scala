@@ -413,15 +413,21 @@ class CorpusOpsSpec extends SparkSpec {
       "the (doc, bucket) frame must be persisted")
     val rows = run.result.collect()
     assert(rows.length == 3)
-    // the ONE-PASS pin: the raw distribution fold and the scoring join
-    // both read the persisted (doc, bucket) counts — the executed plan
-    // carries (at least) two in-memory scans of the SAME cache, and
-    // the raw gram explode appears at most once (inside the cached
-    // plan), never as two live corpus passes
+    // the ONE-PASS pin: the log-ratio table is built eagerly from the
+    // persisted (doc, bucket) counts (the raw distribution folds out of
+    // them), and the scoring fold reads the same cache — the result
+    // plan scans the cached relation, runs no live gram explode (the
+    // one explode sits inside the cached plan) and takes lr from local
+    // rows
+    val opt = run.result.queryExecution.optimizedPlan
+    assert(opt.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }.nonEmpty, s"the scoring fold must read the persisted counts:\n$opt")
+    assert(opt.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
+    }.isEmpty, s"a live gram pass in the result plan:\n$opt")
     val plan = run.result.queryExecution.executedPlan.toString
-    val imr = "InMemoryTableScan".r.findAllIn(plan).length +
-      "TableCacheQueryStage".r.findAllIn(plan).length
-    assert(imr >= 2, s"expected both consumers on the cache, got $imr:\n${plan.take(1200)}")
+    assert(plan.contains("LocalTableScan"), s"lr must be local rows:\n${plan.take(1200)}")
     // the convenience form gives the same integers
     val viaConvenience = CorpusOps.dsirWeights(raw, target, col("doc_id"), col("text"))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
@@ -731,8 +737,8 @@ class CorpusOpsSpec extends SparkSpec {
     val run = CorpusOps.pretrainingRun(docs,
       minWords = 10L, maxWords = 100L, minMeanLen = 1.0, maxMeanLen = 9.0,
       stopWords = Seq("the"), minStopHits = 1L, maxTop2Frac = 0.5,
-      targetPred = col("lang") === "en", dim = 16, samplesPerLang = 2,
-      packBudget = 64L, maxOpen = 2, domainTrain = Some(train), nbDim = 128)
+      targetPred = col("lang") === "en", dim = 128, samplesPerLang = 2,
+      packBudget = 64L, maxOpen = 2, domainTrain = Some(train))
     val rows = run.result.collect()
     assert(run.result.columns.toSeq ==
       Seq("doc_id", "lang", "disposition", "dsir_weight_u", "sample_rank",
@@ -784,22 +790,22 @@ class CorpusOpsSpec extends SparkSpec {
     val run = CorpusOps.pretrainingRun(docs,
       minWords = 10L, maxWords = 100L, minMeanLen = 1.0, maxMeanLen = 9.0,
       stopWords = Seq("the"), minStopHits = 1L, maxTop2Frac = 0.5,
-      targetPred = col("lang") === "en", dim = 16, samplesPerLang = 2,
-      packBudget = 64L, maxOpen = 2, domainTrain = Some(train), nbDim = 32)
+      targetPred = col("lang") === "en", dim = 32, samplesPerLang = 2,
+      packBudget = 64L, maxOpen = 2, domainTrain = Some(train))
     val rows = run.result.collect()
     assert(rows.length == 2 && rows.forall(r =>
       r.getString(2) == "gated" && r.isNullAt(7)), rows.mkString(";"))
     run.release()
-    // an EMPTY labeled slice cannot train a router: the nbScore
+    // an EMPTY labeled slice cannot train a router: the model check's
     // empty-model require fires AT CONSTRUCTION (the classifyStream
     // fail-at-setup discipline), not as a confusing NPE mid-job
     intercept[IllegalArgumentException] {
       CorpusOps.pretrainingRun(docs,
         minWords = 10L, maxWords = 100L, minMeanLen = 1.0, maxMeanLen = 9.0,
         stopWords = Seq("the"), minStopHits = 1L, maxTop2Frac = 0.5,
-        targetPred = col("lang") === "en", dim = 16, samplesPerLang = 2,
+        targetPred = col("lang") === "en", dim = 32, samplesPerLang = 2,
         packBudget = 64L, maxOpen = 2,
-        domainTrain = Some(train.filter(col("label").isNull)), nbDim = 32)
+        domainTrain = Some(train.filter(col("label").isNull)))
     }
   }
 
@@ -850,6 +856,64 @@ class CorpusOpsSpec extends SparkSpec {
       CorpusOps.nbScore(corpus, lp, priors, col("doc_id"), col("text"), dim = 64)
     }
     assert(exDim.getMessage.contains("bucket support"))
+  }
+
+  test("smoothed-model log: the driver kernel's ln and micro-nats equal Spark's log bit for bit on 10k add-1 ratios") {
+    // the ratios the smoothed tables take logs of: (c + 1) / (t + dim)
+    // with 0 <= c <= t. Math.log differs from StrictMath.log (Spark's
+    // LOG) in the last ulp on a few percent of such ratios, so a kernel
+    // on Math.log fails the raw-log comparison here
+    val cases = (0 until 10000).map { i =>
+      val dim = Seq(16L, 64L, 256L)(i % 3)
+      val t = (i * 7919L) % 100000L
+      (i.toLong, (i * 104729L) % (t + 1), t, dim)
+    }
+    val engine = cases.toDF("i", "c", "t", "dim")
+      .select(col("i"), ((col("c") + 1).cast("double") /
+        (col("t") + col("dim")).cast("double")).as("x"))
+      .select(col("i"), col("x"), log(col("x")).as("ln"),
+        floor(log(col("x")) * 1e6 + lit(0.5)).cast("long").as("u"))
+      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2), r.getLong(3))))
+      .toMap
+    assert(engine.size == cases.size)
+    val bad = cases.flatMap { case (i, c, t, dim) =>
+      val x = (c + 1).toDouble / (t + dim).toDouble
+      val (sx, sLn, sU) = engine(i)
+      val ok = java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(sx) &&
+        java.lang.Double.doubleToRawLongBits(CorpusOps.ln(x)) ==
+          java.lang.Double.doubleToRawLongBits(sLn) &&
+        CorpusOps.microLn(x) == sU
+      if (ok) None else Some((c, t, dim, CorpusOps.ln(x), sLn))
+    }
+    assert(bad.isEmpty, s"${bad.size} ratios disagree, e.g. ${bad.take(3).mkString("; ")}")
+  }
+
+  test("one smoothed table: dsirModel's lr_u is nbModel's lp_u(t) - lp_u(r) on every bucket") {
+    val raw = Seq(
+      (1L, "alpha beta alpha gamma beta alpha"),
+      (2L, "beta gamma alpha beta gamma beta"),
+      (3L, "zulu yankee zulu xray yankee zulu"),
+      (4L, "xray zulu yankee xray zulu yankee delta")
+    ).toDF("doc_id", "text")
+    val target = Seq(
+      (10L, "alpha beta gamma alpha beta"),
+      (11L, "gamma alpha beta beta alpha epsilon")
+    ).toDF("doc_id", "text")
+    val train = target.withColumn("label", lit("t"))
+      .unionByName(raw.withColumn("label", lit("r")))
+    val lr = CorpusOps.dsirModel(raw, target, col("doc_id"), col("text"), dim = 32)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (lp, _) = CorpusOps.nbModel(train, col("doc_id"), col("text"), col("label"), dim = 32)
+    val lpOf = lp.collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(lr.keySet == (0L until 32L).toSet, lr.keySet.toSeq.sorted.toString)
+    assert(lpOf.size == 64, lpOf.size.toString)
+    (0L until 32L).foreach { b =>
+      assert(lr(b) == lpOf(("t", b)) - lpOf(("r", b)),
+        s"bucket $b: lr_u ${lr(b)} vs ${lpOf(("t", b))} - ${lpOf(("r", b))}")
+    }
+    // the smoothing keeps every bucket defined, and the two corpora do
+    // differ, so the pin is not vacuous
+    assert(lr.values.exists(_ != 0L))
   }
 
   test("curationPipeline: one disposition per doc — quality gate, exact keeper, cluster-safe split") {
