@@ -23,4 +23,12 @@ object quantize {
 
   /** 6-decimal (scores, similarities, ratios). */
   def q6(c: Column): Column = qN(c, 6)
+
+  /** The integer micro-unit grid: floor(x * 1e6 + 0.5) as a long. A
+    * value on this grid (micro-nats, micro-distances) sums exactly in
+    * any partitioning or order, so per-item terms are quantized here
+    * BEFORE any aggregation. [[graft.operators.CorpusOps.microLn]] is
+    * the driver-side twin for ln.
+    */
+  def micro(c: Column): Column = floor(c * 1e6 + lit(0.5)).cast("long")
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.quantize.micro
+
 /** Corpus-curation operators for training-data pipelines: deterministic
   * stratified sampling and context-window sequence packing.
   *
@@ -539,7 +541,7 @@ object CorpusOps {
     require(k > 0, s"k must be positive, got $k")
     val u = (Dedup.hash48(idCol.cast("string")).cast("double") + 1.0) /
       lit(281474976710656.0) // 2^48
-    val eUnat = floor(-log(u) * 1e6 + lit(0.5)).cast("long")
+    val eUnat = micro(-log(u))
     val w = Window.partitionBy(col("_ws_g"))
       .orderBy(col("_ws_key"), col("_ws_id"))
     df.filter(weightCol.cast("double") > 0.0)
@@ -745,7 +747,8 @@ object CorpusOps {
     */
   private[graft] def ln(x: Double): Double = StrictMath.log(x)
 
-  /** `floor(ln(x)·1e6 + 0.5)`: a log on the micro-nat grid. */
+  /** `floor(ln(x)·1e6 + 0.5)`: a log on the micro-nat grid; the
+    * driver twin of [[graft.functions.quantize.micro]]. */
   private[graft] def microLn(x: Double): Long = math.floor(ln(x) * 1e6 + 0.5).toLong
 
   /** THE smoothed hashed-gram model behind [[nbModel]] and
@@ -1022,11 +1025,10 @@ object CorpusOps {
     require(k > 0, s"k must be positive, got $k")
     val u = (Dedup.hash48(idCol.cast("string")).cast("double") + 1.0) /
       lit(281474976710656.0) // 2^48
-    val eUnat = floor(-log(u) * 1e6 + lit(0.5)).cast("long")
+    val eUnat = micro(-log(u))
     // e_unat = 0 (u within ~5e-7 of 1) would send ln to -Inf; the
     // floor-to-1 guard keeps the key finite and both engines agree
-    val gumbelU = floor(log(greatest(eUnat, lit(1L)).cast("double") / 1e6) *
-      1e6 + lit(0.5)).cast("long")
+    val gumbelU = micro(log(greatest(eUnat, lit(1L)).cast("double") / 1e6))
     val w = Window.partitionBy(col("_gk_g"))
       .orderBy(col("_gk_key").desc, col("_gk_id"))
     df.withColumn("_gk_g", groupCol)

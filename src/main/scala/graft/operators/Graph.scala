@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.quantize.micro
+
 /** Link-graph analytics for web-corpus curation: a domain/host-level
   * authority score (PageRank) is a standard quality prior for weighting
   * or filtering crawled training data (domains nobody links to are
@@ -526,7 +528,7 @@ object Graph {
     // each centre's quantized inverse-log contribution; only deg >= 2
     // nodes centre a wedge, so ln(deg) > 0 where it is used
     val contrib = degrees(canon).withColumn("_aa",
-      ldiv(lit(1000000000000L), floor(log(col("_deg")) * 1e6 + lit(0.5)).cast("long")))
+      ldiv(lit(1000000000000L), micro(log(col("_deg")))))
     wedges(adjacency(canon), contrib, maxCenterDegree)
       .groupBy(col("_x"), col("_y"))
       .agg(count(lit(1)).as("common_neighbors"), sum(col("_aa")).as("aa_micro"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.quantize.micro
+
 /** Data-quality profiling — the validation pass a 100 TB ingest runs
   * before anything downstream trusts the tables: per-column profiles
   * (cardinality, null rate, bounds) and referential-integrity orphan
@@ -137,11 +139,6 @@ object Profiler {
       .withColumn("base_cnt",
         element_at(lit(pb.binCounts.toArray), col("bin") + 1))
     val w = Window.partitionBy(lit(1))
-    val bs = greatest(col("base_cnt"), lit(1L)).cast("double")
-    val cs = greatest(col("cur_cnt"), lit(1L)).cast("double")
-    val bt = lit(pb.total.toDouble)
-    val ct = col("_ct").cast("double")
-    val lnMicro = floor(log((bs * ct) / (cs * bt)) * 1e6 + lit(0.5)).cast("long")
     joined
       .withColumn("_ct",
         // a load with zero measurable rows has undefined proportions;
@@ -152,9 +149,21 @@ object Profiler {
           .otherwise(sum(col("cur_cnt")).over(w)))
       .withColumn("psi_micro",
         when(col("base_cnt") === 0 && col("cur_cnt") === 0, lit(0L))
-          .otherwise(floor((bs / bt - cs / ct) * lnMicro.cast("double") + lit(0.5))
-            .cast("long")))
+          .otherwise(psiTerm(lit(pb.total.toDouble), col("_ct").cast("double"))))
       .select(col("bin"), col("base_cnt"), col("cur_cnt"), col("psi_micro"))
+  }
+
+  /** One bin's PSI contribution in integer micro-PSI, the term
+    * [[psiAgainst]] and [[psiCategoricalCounts]] share: (p - q) *
+    * ln(p/q) over the `base_cnt` and `cur_cnt` columns with zero counts
+    * floored at 1, p = base/`bt`, q = cur/`ct`; ln is quantized to the
+    * micro-nat grid first, then the product is floored to micro-units.
+    */
+  private def psiTerm(bt: Column, ct: Column): Column = {
+    val bs = greatest(col("base_cnt"), lit(1L)).cast("double")
+    val cs = greatest(col("cur_cnt"), lit(1L)).cast("double")
+    floor((bs / bt - cs / ct) * micro(log((bs * ct) / (cs * bt))).cast("double") + lit(0.5))
+      .cast("long")
   }
 
   /** Population-stability-index drift between two loads of the same
@@ -224,16 +233,10 @@ object Profiler {
       when(sum(c).over(w) === 0, raise_error(
         lit(s"psiCategorical: $side side has no measurable rows (PSI undefined)")))
         .otherwise(sum(c).over(w))
-    val bs = greatest(col("base_cnt"), lit(1L)).cast("double")
-    val cs = greatest(col("cur_cnt"), lit(1L)).cast("double")
-    val bt = col("_bt").cast("double")
-    val ct = col("_ct").cast("double")
-    val lnMicro = floor(log((bs * ct) / (cs * bt)) * 1e6 + lit(0.5)).cast("long")
     j.withColumn("_bt", tot(col("base_cnt"), "baseline"))
       .withColumn("_ct", tot(col("cur_cnt"), "current"))
       .filter(!col("_sent"))
-      .withColumn("psi_micro",
-        floor((bs / bt - cs / ct) * lnMicro.cast("double") + lit(0.5)).cast("long"))
+      .withColumn("psi_micro", psiTerm(col("_bt").cast("double"), col("_ct").cast("double")))
       .select(col("cat"), col("base_cnt"), col("cur_cnt"), col("psi_micro"))
   }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.functions.{transform => transformArray}
 
+import graft.functions.quantize.micro
+
 /** Similarity search over embedding columns (SURVEY.md §2 B40-B41, B44).
   *
   * Vector math uses `zip_with`/`aggregate` higher-order functions with
@@ -248,8 +250,8 @@ object Similarity {
       subDim: Int): DataFrame =
     qvecs.crossJoin(broadcast(codebooks))
       .select(col("query_id"), col("subspace"), col("code"),
-        floor(l2sq(slice(col("_qv"), col("subspace") * subDim + 1, lit(subDim)),
-          col("subvec")) * 1e6 + lit(0.5)).cast("long").as("_dq"))
+        micro(l2sq(slice(col("_qv"), col("subspace") * subDim + 1, lit(subDim)),
+          col("subvec"))).as("_dq"))
 
   /** ADC top-`depth` per query: candidate code rows (neighbor_id,
     * subspace, code, and query_id once a probe has paired them) join
@@ -284,7 +286,7 @@ object Similarity {
     topKPerQuery(shortlist.select(col("query_id"), col("neighbor_id"))
         .join(vecs, "neighbor_id")
         .join(broadcast(qvecs), "query_id")
-        .withColumn("_ed", floor(l2sq(col("_nv"), col("_qv")) * 1e6 + lit(0.5)).cast("long")),
+        .withColumn("_ed", micro(l2sq(col("_nv"), col("_qv")))),
       k, Window.orderBy(col("_ed"), col("neighbor_id")))
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         q6(col("_ed").cast("double") / 1e6).as("exact_dist"))

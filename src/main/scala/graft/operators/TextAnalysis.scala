@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.functions.{transform => transformArray, filter => filterArray}
 
+import graft.functions.quantize.micro
+
 /** Text-analysis operators for training-data pipelines: language ID
   * (marker-token scoring), quality scoring, token counting
   * (whitespace + regex "BPE-ish"), and rolling-hash fingerprinting.
@@ -25,28 +27,6 @@ object TextAnalysis {
     "zh" -> Seq("de5", "shi4", "le5", "zai4", "he2", "you3", "wo3"))
 
   def tokens(textCol: String): Column = split(col(textCol), " ")
-
-  /** N and avgdl in ONE scalar aggregate over the tokenized corpus —
-    * the round-12 scan fusion: computing them as separate one-row
-    * frames paid two full corpus scans. Shared by [[bm25]] and
-    * [[bm25Candidates]] so the two variants cannot drift (the avgdl
-    * contract is oracle-visible: any drift is a score shift).
-    * Null-text contract: null-toks docs count into `_nd` (they are
-    * documents) but not into `_avgdl` (no measurable length —
-    * numerator and denominator both skip them, exactly the rows a
-    * per-doc dl frame and a SQL mirror's unnest would have: split
-    * yields >= 1 token for every non-null text, while a NULL text
-    * yields a NULL array that unnest drops). Values are bit-identical
-    * to the former separate aggregates.
-    */
-  private def corpusStatsOf(docsT: DataFrame): DataFrame =
-    docsT.agg(
-      count(lit(1)).cast("double").as("_nd"),
-      // explicit null gate: size(null) is -1 under legacy sizeOfNull
-      // and null under ANSI — the `when` makes the exclusion
-      // independent of that config
-      (sum(when(col("_toks").isNotNull, size(col("_toks")))).cast("double") /
-        count(col("_toks")).cast("double")).as("_avgdl"))
 
   /** Count of tokens present in a fixed marker set. */
   def markerScore(toks: Column, markers: Seq[String]): Column =
@@ -146,26 +126,6 @@ object TextAnalysis {
       .withColumn("ratio", q6(col("gz_bytes").cast("double") / col("raw_bytes")))
   }
 
-  /** Unigram language-model scoring — the perplexity-style quality
-    * signal (a doc whose tokens are corpus-typical scores low; line
-    * noise and boilerplate score high). Trains the model and scores in
-    * ONE plan: token unigram counts -> per-token surprise
-    * -ln p(t) = ln(total/count), INTEGER-quantized to a 1e-6 grid —
-    * so each doc's sum over tokens is a long addition, exact under any
-    * partitioning/order — then mean surprise per doc (nats).
-    *
-    * Scale shape: one explode + two hash aggregations build the model
-    * (shuffles carry (term, count), map-side combined — the TF-IDF
-    * build, q55); the surprise table is vocabulary-sized (words:
-    * ~10^6 rows / ~10 MB at web scale) and BROADCAST to score, so the
-    * corpus token stream never shuffles for the join. For gram-level
-    * models whose table outgrows a broadcast, drop the broadcast hint
-    * and the same plan shuffle-joins on the term key.
-    *
-    * Output: (id, n_tokens, mean_nll) with mean_nll =
-    * floor(sum_micro/n + 0.5)/1e6 — one IEEE division + floor,
-    * engine-reproducible.
-    */
   /** Vocabulary coverage by minimum-frequency threshold — the
     * tokenizer-training prestep: "if we keep only tokens seen >= t
     * times, how many types survive and what share of the corpus'
@@ -210,33 +170,21 @@ object TextAnalysis {
     * mean bit-for-bit. Documents with < 2 tokens have no bigrams and
     * are absent.
     *
-    * Scale shape: bigram expansion is a NARROW per-row transform
-    * (slice/zip of the token array — no window, no shuffle for
-    * adjacency); then two map-side-combined counts (type table,
-    * history table) and V as a broadcast one-row aggregate. The type
-    * table joins back broadcast here (fine for corpus-LM tables up
-    * to ~100s of MB); for web-scale models drop the hint and the
-    * same plan shuffle-joins on the (w1, w2) key.
+    * Scale shape: the narrow [[bigrams]] expansion and its
+    * map-side-combined type table; C(w1) sums the type table per w1
+    * (vocabulary-scale, never the bigram stream again) and V is a
+    * broadcast one-row aggregate; [[meanSurprise]] scores.
     */
   def bigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val t = df.select(col(idCol), tokens(textCol).as("_l"))
-    val big = t.where(size(col("_l")) >= 2)
-      .select(col(idCol), explode(expr(
-        "transform(sequence(0, size(_l) - 2), i -> struct(_l[i] AS w1, _l[i + 1] AS w2))")).as("_b"))
-      .select(col(idCol), col("_b.w1").as("w1"), col("_b.w2").as("w2"))
-    val vocab = t.select(explode(col("_l")).as("term")).distinct()
+    val docs = lmDocs(df, idCol, textCol)
+    val (big, types) = bigrams(docs, idCol, textCol)
+    val vocab = docs.select(explode(tokens(textCol)).as("term")).distinct()
       .agg(count(lit(1)).as("_v"))
-    val hist = big.groupBy(col("w1")).agg(count(lit(1)).as("_ch"))
-    val types = big.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("_cb"))
+    val hist = types.groupBy(col("w1")).agg(sum(col("_cb")).as("_ch"))
     val surprise = types.join(hist, "w1").crossJoin(broadcast(vocab))
       .select(col("w1"), col("w2"),
-        floor(log((col("_ch") + col("_v")).cast("double") / (col("_cb") + lit(1)))
-          * 1e6 + lit(0.5)).cast("long").as("_su"))
-    big.join(broadcast(surprise), Seq("w1", "w2"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("_su")).as("_ssum"))
-      .select(col(idCol), col("n_bigrams"),
-        (floor(col("_ssum").cast("double") / col("n_bigrams") + lit(0.5)) / lit(1e6)).as("mean_nll"))
+        micro(log((col("_ch") + col("_v")).cast("double") / (col("_cb") + lit(1)))).as("_su"))
+    meanSurprise(big, surprise, Seq("w1", "w2"), idCol, "n_bigrams")
   }
 
   /** Interpolated KNESER-NEY bigram surprise (round 18; Kneser & Ney
@@ -269,20 +217,12 @@ object TextAnalysis {
     * has no bigram and no row — the caller's explicit-reject
     * decision, as in the add-one variant.
     *
-    * Shape: three count aggregations over the bigram stream ((w1,w2),
-    * (w1), (w2)) + a one-row type total; the surprise table is
-    * bigram-TYPE-keyed (vocabulary-scale, not corpus-scale) and
-    * broadcast back onto the bigram stream — the same shuffles as
-    * [[bigramLogProb]], one extra (w2) aggregation.
+    * Shape: [[bigramLogProb]]'s — the (w1,w2) type table over the
+    * bigram stream, then (w1) and a one-row type total over the type
+    * table — plus one (w2) aggregation of the type table.
     */
   def knBigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val t = df.filter(col(idCol).isNotNull && col(textCol).isNotNull)
-      .select(col(idCol), tokens(textCol).as("_l"))
-    val big = t.where(size(col("_l")) >= 2)
-      .select(col(idCol), explode(expr(
-        "transform(sequence(0, size(_l) - 2), i -> struct(_l[i] AS w1, _l[i + 1] AS w2))")).as("_b"))
-      .select(col(idCol), col("_b.w1").as("w1"), col("_b.w2").as("w2"))
-    val cb = big.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("_cb"))
+    val (big, cb) = bigrams(lmDocs(df, idCol, textCol), idCol, textCol)
     // per history w1: total continuations c(w1·) and distinct-type
     // count N1+(w1,·) — one pass over the type table
     val ch = cb.groupBy(col("w1"))
@@ -291,32 +231,77 @@ object TextAnalysis {
     val tt = cb.agg(count(lit(1)).as("_tt"))
     val surprise = cb.join(ch, "w1").join(n2, "w2").crossJoin(broadcast(tt))
       .select(col("w1"), col("w2"),
-        floor(log((lit(4L) * col("_ch") * col("_tt")).cast("double") /
-            ((lit(4L) * col("_cb") - lit(3L)) * col("_tt") +
-              lit(3L) * col("_n1p") * col("_n2")).cast("double"))
-          * 1e6 + lit(0.5)).cast("long").as("_su"))
-    big.join(broadcast(surprise), Seq("w1", "w2"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("_su")).as("_ssum"))
-      .select(col(idCol), col("n_bigrams"),
-        (floor(col("_ssum").cast("double") / col("n_bigrams") + lit(0.5)) / lit(1e6)).as("mean_nll"))
+        micro(log((lit(4L) * col("_ch") * col("_tt")).cast("double") /
+          ((lit(4L) * col("_cb") - lit(3L)) * col("_tt") +
+            lit(3L) * col("_n1p") * col("_n2")).cast("double"))).as("_su"))
+    meanSurprise(big, surprise, Seq("w1", "w2"), idCol, "n_bigrams")
   }
 
+  /** Unigram language-model scoring — the perplexity-style quality
+    * signal (a doc whose tokens are corpus-typical scores low; line
+    * noise and boilerplate score high). Trains the model and scores in
+    * ONE plan: token unigram counts -> per-token surprise
+    * -ln p(t) = ln(total/count), INTEGER-quantized to a 1e-6 grid —
+    * so each doc's sum over tokens is a long addition, exact under any
+    * partitioning/order — then mean surprise per doc (nats).
+    *
+    * Scale shape: one explode + two hash aggregations build the model
+    * (shuffles carry (term, count), map-side combined — the TF-IDF
+    * build, q55); the surprise table is vocabulary-sized (words:
+    * ~10^6 rows / ~10 MB at web scale) and [[meanSurprise]] scores.
+    *
+    * Output: (id, n_tokens, mean_nll).
+    */
   def unigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = df.select(col(idCol), explode(tokens(textCol)).as("term"))
+    val tok = lmDocs(df, idCol, textCol).select(col(idCol), explode(tokens(textCol)).as("term"))
     val vocab = tok.groupBy(col("term")).agg(count(lit(1)).as("_c"))
     // corpus token total as a one-row in-plan aggregate (no driver
     // count — the q55 discipline)
     val total = vocab.agg(sum(col("_c")).cast("double").as("_total"))
     val surprise = vocab.crossJoin(broadcast(total))
-      .select(col("term"),
-        floor(log(col("_total") / col("_c")) * 1e6 + lit(0.5)).cast("long").as("_su"))
-    tok.join(broadcast(surprise), "term")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_tokens"), sum(col("_su")).as("_ssum"))
-      .select(col(idCol), col("n_tokens"),
-        (floor(col("_ssum").cast("double") / col("n_tokens") + lit(0.5)) / lit(1e6)).as("mean_nll"))
+      .select(col("term"), micro(log(col("_total") / col("_c"))).as("_su"))
+    meanSurprise(tok, surprise, Seq("term"), idCol, "n_tokens")
   }
+
+  /** The corpus-LM front end of [[unigramLogProb]], [[bigramLogProb]]
+    * and [[knBigramLogProb]]: the documents with a non-null id and
+    * text. A null-id document is no document — a GROUP BY would merge
+    * every null id into one pseudo-doc — so it neither gets a row nor
+    * counts into the model.
+    */
+  private def lmDocs(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.filter(col(idCol).isNotNull && col(textCol).isNotNull)
+
+  /** The bigram stream (id, w1, w2) of [[lmDocs]] — a NARROW per-row
+    * slice/zip of the token array, no window, no shuffle for adjacency
+    * — and its type table (w1, w2, `_cb`). A doc with < 2 tokens has no
+    * bigram. Both bigram smoothers read the history count C(w1) as the
+    * sum of `_cb` per w1, off the type table.
+    */
+  private def bigrams(docs: DataFrame, idCol: String, textCol: String): (DataFrame, DataFrame) = {
+    val big = docs.select(col(idCol), tokens(textCol).as("_l")).where(size(col("_l")) >= 2)
+      .select(col(idCol), explode(expr(
+        "transform(sequence(0, size(_l) - 2), i -> struct(_l[i] AS w1, _l[i + 1] AS w2))")).as("_b"))
+      .select(col(idCol), col("_b.w1").as("w1"), col("_b.w2").as("w2"))
+    (big, big.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("_cb")))
+  }
+
+  /** The per-document fold of every corpus LM: `table` (`keys`, `_su`
+    * micro-nat surprise per event type) joins BROADCAST onto the
+    * corpus-scale `events` stream — the type table is vocabulary-sized,
+    * so the stream never shuffles for the join (for a table that
+    * outgrows a broadcast, drop the hint and the same plan
+    * shuffle-joins on `keys`) — and each doc folds to (id, `nName`,
+    * mean_nll = floor(sum_micro/n + 0.5)/1e6): a long sum, then one
+    * IEEE division + floor, engine-reproducible.
+    */
+  private def meanSurprise(events: DataFrame, table: DataFrame, keys: Seq[String],
+      idCol: String, nName: String): DataFrame =
+    events.join(broadcast(table), keys)
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).as(nName), sum(col("_su")).as("_ssum"))
+      .select(col(idCol), col(nName),
+        (floor(col("_ssum").cast("double") / col(nName) + lit(0.5)) / lit(1e6)).as("mean_nll"))
 
   /** Feature-hashed TF-IDF document vectors (the "hashing trick"):
     * each term lands in bucket hash48(term) mod `dim`, weighted
@@ -346,9 +331,7 @@ object TextAnalysis {
     val nDocs = df.agg(count(lit(1)).cast("double").as("_nd"))
     val idf = tf.groupBy(col("term")).agg(count(lit(1)).as("_df"))
       .crossJoin(broadcast(nDocs))
-      .select(col("term"),
-        floor(log(col("_nd") / col("_df").cast("double")) * 1e6 + lit(0.5))
-          .cast("long").as("_idf_u"))
+      .select(col("term"), micro(log(col("_nd") / col("_df").cast("double"))).as("_idf_u"))
     tf.join(idf, "term")
       .groupBy(col(idCol),
         pmod(graft.functions.codecs.hash48(col("term")), lit(dim.toLong)).as("bucket"))
@@ -385,54 +368,73 @@ object TextAnalysis {
     * per-document sum — a double sum across partitions would be
     * aggregation-order-dependent; the integer sum cannot be (q138).
     *
-    * Scale: query terms filter the exploded token stream EARLY (the
-    * shuffle carries only matching (doc, term) rows); doc lengths are
-    * one map-side-combined aggregation; df/avgdl/N are tiny
-    * broadcast aggregates. No vocabulary table, no score matrix.
+    * Scale: see [[bm25Terms]] — the fixed terms filter the token
+    * stream before its one shuffle; no vocabulary table, no score
+    * matrix.
     */
   def bm25(df: DataFrame, idCol: String, textCol: String,
       queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "at least one query term required")
-    // same round-11 shape as bm25Candidates: doc length rides the
-    // token rows into the tf aggregation (narrow size(tokens), no dl
-    // scan/exchange/join), avgdl and N are narrow scalar aggregates,
-    // and idf derives from tf with both aggregated columns referenced
-    // so ReuseExchange serves contrib AND idf from one shuffle.
-    // Contract (shared with bm25Candidates): null-id docs are excluded
-    // EVERYWHERE — scores, N, df, avgdl — stated here because a SQL
-    // mirror's GROUP BY would instead lump all null ids into one
-    // merged pseudo-doc; the oracle carries the same IS NOT NULL.
-    val docsT = df.filter(col(idCol).isNotNull)
+    bm25Terms(df, idCol, textCol, k1, b)(_.filter(col("term").isin(queryTerms: _*)))
+      .groupBy(col(idCol))
+      .agg(sum(col("_c_u")).as("_s_u"))
+      .select(col(idCol), (col("_s_u").cast("double") / lit(1e6)).as("bm25"))
+  }
+
+  /** THE BM25 scorer behind [[bm25]] and [[bm25Candidates]]: each
+    * non-null-id doc's per-term contribution `_c_u` on the integer
+    * micro-unit grid, as (term, `idCol`, `_c_u`) at the (doc, term)
+    * grain. `restrict` cuts the exploded (`idCol`, `_dl`, term) token
+    * stream to the query terms BEFORE the tf shuffle, so the shuffle
+    * carries only matching (doc, term) rows.
+    *
+    * Contract: null-id docs are excluded EVERYWHERE — contributions
+    * and the corpus statistics N, df and avgdl. A SQL mirror's
+    * GROUP BY would lump them into one pseudo-doc; the oracles carry
+    * the same IS NOT NULL.
+    *
+    * Shape: doc length is size(tokens), a NARROW per-row value that
+    * rides the token rows INTO the tf aggregation (max over the group;
+    * `_dl` is constant per doc), not its own scan, exchange and
+    * join-back. N and avgdl are ONE scalar aggregate broadcast to both
+    * legs (ReuseExchange serves them from one broadcast). A null text
+    * counts into N (it is a document) but not into avgdl, exactly the
+    * rows a SQL unnest keeps: split yields >= 1 token for every
+    * non-null text; the `when` gate makes that independent of
+    * sizeOfNull. df is counted as sum(1 where _tf >= 1 and _dl >= 1)
+    * — the same number as count(*) — because referencing BOTH
+    * aggregated columns keeps the idf subtree identical to the
+    * contribution's, so ReuseExchange serves both from one
+    * token-stream shuffle (a plain count(*) lets pruning specialize
+    * the idf copy into a second explode + exchange of the corpus).
+    * The scoring arithmetic runs once per (doc, term), never per
+    * fanned-out (query, doc, term) row.
+    */
+  private def bm25Terms(docs: DataFrame, idCol: String, textCol: String,
+      k1: Double, b: Double)(restrict: DataFrame => DataFrame): DataFrame = {
+    val docsT = docs.filter(col(idCol).isNotNull)
       .select(col(idCol), tokens(textCol).as("_toks"))
-    // N and avgdl fused into one scalar-aggregate scan (round 12);
-    // both legs broadcast the same one-row frame, so ReuseExchange
-    // serves them from a single broadcast
-    val stats = corpusStatsOf(docsT)
-    val tok = docsT.select(col(idCol),
-      size(col("_toks")).cast("long").as("_dl"), explode(col("_toks")).as("term"))
-    val qtok = tok.filter(col("term").isin(queryTerms: _*))
-    val tf = qtok.groupBy(col(idCol), col("term"))
+    val stats = docsT.agg(
+      count(lit(1)).cast("double").as("_nd"),
+      (sum(when(col("_toks").isNotNull, size(col("_toks")))).cast("double") /
+        count(col("_toks")).cast("double")).as("_avgdl"))
+    val tf = restrict(docsT.select(col(idCol),
+        size(col("_toks")).cast("long").as("_dl"), explode(col("_toks")).as("term")))
+      .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("_tf"), max(col("_dl")).as("_dl"))
     val idf = tf.groupBy(col("term"))
       .agg(sum(when(col("_tf") >= 1 && col("_dl") >= 1, lit(1L))).as("_df"))
       .crossJoin(broadcast(stats))
-      .select(col("term"),
-        floor(log((col("_nd") - col("_df").cast("double") + 0.5) /
-          (col("_df").cast("double") + 0.5) + 1.0) * 1e6 + lit(0.5))
-          .cast("long").as("_idf_u"))
-    val contrib = tf
-      .join(broadcast(idf), "term")
+      .select(col("term"), micro(log((col("_nd") - col("_df").cast("double") + 0.5) /
+        (col("_df").cast("double") + 0.5) + 1.0)).as("_idf_u"))
+    tf.join(broadcast(idf), "term")
       .crossJoin(broadcast(stats))
-      .select(col(idCol),
+      .select(col("term"), col(idCol),
         floor(col("_idf_u").cast("double") *
           (col("_tf").cast("double") * (k1 + 1)) /
           (col("_tf").cast("double") +
             lit(k1) * (lit(1.0 - b) + lit(b) * col("_dl").cast("double") / col("_avgdl"))) +
           lit(0.5)).cast("long").as("_c_u"))
-    contrib.groupBy(col(idCol))
-      .agg(sum(col("_c_u")).as("_s_u"))
-      .select(col(idCol),
-        (col("_s_u").cast("double") / lit(1e6)).as("bm25"))
   }
 
   /** Per-query BM25 retrieval ("more-like-this"): each query
@@ -483,72 +485,13 @@ object TextAnalysis {
     */
   def bm25Candidates(docs: DataFrame, queries: DataFrame, idCol: String,
       textCol: String, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // Contract: null-id docs are excluded EVERYWHERE — candidates AND
-    // the corpus statistics (N, df, avgdl). Excluding them only from
-    // candidates while counting them into N (an interim draft) shifts
-    // every score the moment a null-id doc exists; the oracle states
-    // the same IS NOT NULL. Filtering HERE — not relying on the
-    // join's implicit null rejection — also keeps the tf subtree's
-    // pushed filters identical on the contrib and idf paths, which is
-    // what lets ReuseExchange serve both from one token-stream
-    // shuffle. Doc length is size(tokens) — a NARROW per-row value,
-    // so it rides the token rows INTO the tf aggregation (max over
-    // the group; _dl is constant per doc) instead of being its own
-    // scan + explode + exchange + join-back.
-    val docsT = docs.filter(col(idCol).isNotNull)
-      .select(col(idCol).as("_did"), tokens(textCol).as("_toks"))
-    val tok = docsT.select(col("_did"),
-      size(col("_toks")).cast("long").as("_dl"), explode(col("_toks")).as("term"))
-    // N and avgdl fused into ONE scalar-aggregate scan (round 12 —
-    // they were two separate full-corpus scans for two one-row
-    // broadcast frames); values bit-identical, see corpusStatsOf
-    val stats = corpusStatsOf(docsT)
     val qterms = queries
       .select(col(idCol).as("query_id"), explode(tokens(textCol)).as("term"))
       .distinct()
     val need = qterms.select(col("term")).distinct()
-    val tf = tok.join(broadcast(need), "term")
-      .groupBy(col("_did"), col("term"))
-      .agg(count(lit(1)).as("_tf"), max(col("_dl")).as("_dl"))
-    // df = docs containing the term (tf is one row per (doc, term)).
-    // Counted as sum(1 where _tf >= 1 and _dl >= 1) — the SAME number
-    // as count(*) (tf >= 1 by construction, dl >= 1 because split
-    // yields >= 1 token) — but referencing BOTH aggregated columns
-    // keeps this subtree identical to the contrib path's, so
-    // Catalyst's ReuseExchange serves both from one token-stream
-    // shuffle (a plain count(*) let pruning specialize this copy —
-    // a second full explode + exchange of the corpus token stream;
-    // the first draft paid exactly that).
-    val idf = tf.groupBy(col("term"))
-      .agg(sum(when(col("_tf") >= 1 && col("_dl") >= 1, lit(1L))).as("_df"))
-      .crossJoin(broadcast(stats))
-      .select(col("term"),
-        floor(log((col("_nd") - col("_df").cast("double") + 0.5) /
-          (col("_df").cast("double") + 0.5) + 1.0) * 1e6 + lit(0.5))
-          .cast("long").as("_idf_u"))
-    // A term's contribution is QUERY-INDEPENDENT (idf, tf and dl are
-    // per-(doc, term)): evaluate the scoring arithmetic at the
-    // (doc, term) grain BEFORE fanning out to (query, doc, term) —
-    // round 12: the previous order ran the floor/log expression once
-    // per fanned-out row, |queries-sharing-term| times more arithmetic
-    // for identical longs (measured 2.4 s -> 1.3 s for the sparse leg
-    // at sf0.1, where a closed vocabulary makes the fan-out dense).
-    // No open-vocabulary regression hides here: tf is already
-    // restricted to QUERY terms (the broadcast `need` semi-filter
-    // upstream), so this grain is (doc, query-term) — never the full
-    // corpus vocabulary — and it is always <= the fanned-out grain.
-    // The per-(query, doc) sum adds the same values, so scores are
-    // bit-identical.
-    val scored = tf
-      .join(broadcast(idf), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("term"), col("_did"),
-        floor(col("_idf_u").cast("double") *
-          (col("_tf").cast("double") * (k1 + 1)) /
-          (col("_tf").cast("double") +
-            lit(k1) * (lit(1.0 - b) + lit(b) * col("_dl").cast("double") / col("_avgdl"))) +
-          lit(0.5)).cast("long").as("_c_u"))
-    scored
+    // the corpus id rides as `_did` so it cannot collide with query_id
+    bm25Terms(docs.select(col(idCol).as("_did"), col(textCol)), "_did", textCol, k1, b)(
+        _.join(broadcast(need), "term"))
       .join(broadcast(qterms), "term") // query term sets are serving-size
       .filter(col("_did") =!= col("query_id"))
       .groupBy(col("query_id"), col("_did"))
@@ -577,30 +520,6 @@ object TextAnalysis {
     "va" -> "l", "val" -> "u", "valu" -> "e", "o" -> "r", "qu" -> "er",
     "q" -> "u", "s" -> "m", "sm" -> "a", "sma" -> "ll", "l" -> "l")
 
-  /** Greedy subword (BPE) tokenization over a broadcast FIXED
-    * merge-rank table — the token accounting every LLM-pipeline budget
-    * decision actually runs on: whitespace counts ([[tokens]]) are
-    * 1.3-1.7x off per language, and mixing weights / packing budgets
-    * downstream inherit the error (cf. Sennrich et al. 2016).
-    *
-    * Algorithm (per word): start from characters; each round finds the
-    * LOWEST-RANK merge whose pair occurs adjacently and replaces all
-    * its non-overlapping occurrences left to right; repeat `rounds`
-    * times (a word of length L needs at most L-1 — rounds bounds the
-    * chain like pageRank's fixed iterations). The token sequence rides
-    * a sentinel-delimited string, so a round is: one fold over the
-    * merge table for the best applicable rank (narrow), then one
-    * literal replace — both codegen'd expressions, no shuffle.
-    *
-    * Scale shape: tokenization runs on the DISTINCT-word vocabulary
-    * table, then a broadcast join maps occurrences back — the corpus
-    * text is scanned once and never re-shuffled, and the iterative
-    * work is proportional to |vocab|, not corpus size (exactly how
-    * production tokenizers cache word -> pieces).
-    *
-    * Output: (id, word_pos, word, tokens, n_subwords) per word
-    * occurrence; `tokens` is the space-joined subword sequence.
-    */
   /** BPE merge-table TRAINING (round 18; Sennrich et al. 2016 —
     * [[bpeTokenize]] APPLIES a merge table, this LEARNS one, closing
     * the tokenizer loop): k greedy iterations, each (1) counting
@@ -736,6 +655,30 @@ object TextAnalysis {
     trainBpeMerges(df, textCol, k).orderBy(col("rank")).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
 
+  /** Greedy subword (BPE) tokenization over a broadcast FIXED
+    * merge-rank table — the token accounting every LLM-pipeline budget
+    * decision actually runs on: whitespace counts ([[tokens]]) are
+    * 1.3-1.7x off per language, and mixing weights / packing budgets
+    * downstream inherit the error (cf. Sennrich et al. 2016).
+    *
+    * Algorithm (per word): start from characters; each round finds the
+    * LOWEST-RANK merge whose pair occurs adjacently and replaces all
+    * its non-overlapping occurrences left to right; repeat `rounds`
+    * times (a word of length L needs at most L-1 — rounds bounds the
+    * chain like pageRank's fixed iterations). The token sequence rides
+    * a sentinel-delimited string, so a round is: one fold over the
+    * merge table for the best applicable rank (narrow), then one
+    * literal replace — both codegen'd expressions, no shuffle.
+    *
+    * Scale shape: tokenization runs on the DISTINCT-word vocabulary
+    * table, then a broadcast join maps occurrences back — the corpus
+    * text is scanned once and never re-shuffled, and the iterative
+    * work is proportional to |vocab|, not corpus size (exactly how
+    * production tokenizers cache word -> pieces).
+    *
+    * Output: (id, word_pos, word, tokens, n_subwords) per word
+    * occurrence; `tokens` is the space-joined subword sequence.
+    */
   def bpeTokenize(df: DataFrame, idCol: Column, textCol: Column,
       merges: Seq[(String, String)] = BPE_MERGES, rounds: Int = 8): DataFrame = {
     require(rounds >= 1 && merges.nonEmpty, "need rounds >= 1 and a non-empty merge table")
@@ -805,11 +748,10 @@ object TextAnalysis {
     freq.groupBy(col(idCol))
       .agg(sum(col("_c")).as("n_tokens"),
         count(lit(1)).as("n_types"),
-        sum(floor(col("_c").cast("double") * log(col("_c").cast("double")) * 1e6 + lit(0.5))
-          .cast("long")).as("_clc"))
+        sum(micro(col("_c").cast("double") * log(col("_c").cast("double")))).as("_clc"))
       .select(col(idCol), col("n_tokens"), col("n_types"),
         ldiv(col("n_types") * 1000, col("n_tokens")).as("ttr_pm"),
-        (floor(log(col("n_tokens").cast("double")) * 1e6 + lit(0.5)).cast("long") -
+        (micro(log(col("n_tokens").cast("double"))) -
           ldiv(col("_clc"), col("n_tokens"))).as("entropy_unat"))
   }
 
@@ -1012,6 +954,20 @@ object TextAnalysis {
       .na.fill(0.0) // a doc shorter than n grams has no rows for that n
   }
 
+  /** The Gopher gate's thresholds as one value — what
+    * [[graft.streaming.StreamingOps.curationStream]] takes to run
+    * this gate as its quality stage (round 17).
+    */
+  final case class GopherGate(minWords: Long, maxWords: Long,
+      minMeanLen: Double, maxMeanLen: Double, stopWords: Seq[String],
+      minStopHits: Long, maxTop2Frac: Double)
+
+  /** [[gopherQualityGate]] from a [[GopherGate]] parameter bundle. */
+  def gopherQualityGate(df: DataFrame, idCol: Column, textCol: Column,
+      g: GopherGate): DataFrame =
+    gopherQualityGate(df, idCol, textCol, g.minWords, g.maxWords,
+      g.minMeanLen, g.maxMeanLen, g.stopWords, g.minStopHits, g.maxTop2Frac)
+
   /** Gopher-style QUALITY GATE (round 16; Rae et al. 2021 appendix A
     * — the rule set, with thresholds as parameters because they are
     * corpus-tuned in every production pipeline): a document keeps iff
@@ -1032,20 +988,6 @@ object TextAnalysis {
     * such fragments separately; a real pipeline's minWords floor is
     * far above 2 anyway.
     */
-  /** The Gopher gate's thresholds as one value — what
-    * [[graft.streaming.StreamingOps.curationStream]] takes to run
-    * this gate as its quality stage (round 17).
-    */
-  final case class GopherGate(minWords: Long, maxWords: Long,
-      minMeanLen: Double, maxMeanLen: Double, stopWords: Seq[String],
-      minStopHits: Long, maxTop2Frac: Double)
-
-  /** [[gopherQualityGate]] from a [[GopherGate]] parameter bundle. */
-  def gopherQualityGate(df: DataFrame, idCol: Column, textCol: Column,
-      g: GopherGate): DataFrame =
-    gopherQualityGate(df, idCol, textCol, g.minWords, g.maxWords,
-      g.minMeanLen, g.maxMeanLen, g.stopWords, g.minStopHits, g.maxTop2Frac)
-
   def gopherQualityGate(df: DataFrame, idCol: Column, textCol: Column,
       minWords: Long, maxWords: Long, minMeanLen: Double,
       maxMeanLen: Double, stopWords: Seq[String], minStopHits: Long,

@@ -397,7 +397,8 @@ object TextQueries {
     TextAnalysis.unigramLogProb(Tables.load(s, dir, "documents"), "doc_id", "text")
       .orderBy(col("doc_id"))
   }, Some("""
-    WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+    WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
+                 WHERE doc_id IS NOT NULL AND text IS NOT NULL),
     v AS (SELECT term, count(*) AS c FROM tok GROUP BY term),
     n AS (SELECT CAST(sum(c) AS DOUBLE) AS total FROM v),
     su AS (SELECT term, CAST(floor(ln(total / c) * 1000000 + 0.5) AS BIGINT) AS s_u FROM v, n),
@@ -1445,7 +1446,8 @@ object TextQueries {
     TextAnalysis.bigramLogProb(Tables.load(s, dir, "documents"), "doc_id", "text")
       .orderBy(col("doc_id"))
   }, Some("""
-    WITH tok AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
+    WITH tok AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents
+                 WHERE doc_id IS NOT NULL AND text IS NOT NULL),
     v AS (SELECT CAST(count(DISTINCT term) AS BIGINT) AS vv FROM
             (SELECT unnest(l) AS term FROM tok)),
     big AS (

@@ -469,6 +469,37 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), "expected broadcast joins")
   }
 
+  test("bm25 and bm25Candidates serve idf and contrib from ONE (doc, term) tf shuffle (ReusedExchange)") {
+    // both BM25 entry points derive idf and the per-term contribution
+    // from the same tf aggregate; ReuseExchange must serve the second
+    // consumer from the first one's (doc, term) exchange, or the corpus
+    // token stream is exploded and shuffled twice. Only the final
+    // (post-execution) adaptive plan shows the reuse, so collect first.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    object helper extends AdaptiveSparkPlanHelper
+    def reusedHashKeys(df: DataFrame): Seq[Seq[String]] = {
+      df.collect()
+      helper.collect(df.queryExecution.executedPlan) {
+        case r: ReusedExchangeExec => r.child.outputPartitioning
+      }.collect { case h: HashPartitioning =>
+        h.expressions.collect { case a: Attribute => a.name }
+      }
+    }
+    val d = Tables.load(spark, sfDir, "documents")
+    val fixed = reusedHashKeys(graft.operators.TextAnalysis.bm25(d, "doc_id", "text",
+      queryTerms = Seq("hash", "join", "scan", "merge")))
+    assert(fixed.length == 1 && fixed.head.last == "term" && fixed.head.length == 2,
+      s"bm25: expected one reused (doc, term) exchange, got $fixed")
+    val perQuery = reusedHashKeys(graft.operators.TextAnalysis.bm25Candidates(
+      d, d.filter(col("doc_id") % 97 === 0), "doc_id", "text"))
+    assert(perQuery.length == 1 && perQuery.head.last == "term" && perQuery.head.length == 2,
+      s"bm25Candidates: expected one reused (doc, term) exchange, got $perQuery")
+  }
+
   test("int8 quantization is a narrow projection: no Exchange in the plan") {
     val e = Tables.load(spark, sfDir, "embeddings")
     val plan = graft.operators.Similarity.int8Quantize(e, "vec_id", "embedding")

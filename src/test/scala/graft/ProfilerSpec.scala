@@ -89,6 +89,25 @@ class ProfilerSpec extends SparkSpec {
     assert(ex.getMessage.contains("no measurable rows"), ex.getMessage)
   }
 
+  test("psiAgainst and psiCategorical score the same per-bin counts to the same psi_micro") {
+    // one PSI term behind both: values 1..7 are bins 0..6 under bounds
+    // 1.5..6.5 and categories "1".."7" categorically; value 6 is absent
+    // from the current load and value 7 new in it (floor-at-1 smoothing)
+    val baseCounts = Seq(40L, 25L, 13L, 9L, 7L, 5L, 0L)
+    val curCounts = Seq(10L, 30L, 20L, 15L, 3L, 0L, 12L)
+    def load(counts: Seq[Long]) =
+      counts.zipWithIndex.flatMap { case (c, i) => Seq.fill(c.toInt)(i + 1L) }.toDF("v")
+    val (base, cur) = (load(baseCounts), load(curCounts))
+    val pb = Profiler.PsiBaseline((1 to 6).map(_ + 0.5), baseCounts)
+    val binned = Profiler.psiAgainst(pb, cur, col("v"))
+      .collect().map(r => (r.getInt(0) + 1).toString -> r.getLong(3)).toMap
+    val categorical = Profiler.psiCategorical(base, cur, col("v"))
+      .collect().map(r => r.getString(0) -> r.getLong(3)).toMap
+    assert(binned.size == 7 && binned == categorical,
+      s"binned $binned vs categorical $categorical")
+    assert(binned.values.forall(_ > 0L), s"every bin moved: $binned")
+  }
+
   test("psiDrift: bins empty on both sides contribute exactly zero") {
     // a constant measure collapses every boundary: all mass lands in
     // bin 0 and bins 1..7 must smooth to 0, not NaN or a spurious hit

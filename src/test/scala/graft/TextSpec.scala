@@ -139,6 +139,27 @@ class TextSpec extends SparkSpec {
     assert(zFlagged.isEmpty, s"masking premise broken — z-score caught $zFlagged")
   }
 
+  test("bm25 and bm25Candidates agree: a doc's distinct terms as the fixed query score every other doc bit-equal") {
+    // one BM25 kernel behind both entry points: with query doc 97's
+    // distinct terms as bm25's term set, every other doc's score is
+    // bm25Candidates' score_u for query 97 (which excludes self)
+    val docs = Tables.load(spark, sfDir, "documents")
+    val q = docs.filter(col("doc_id") === 97L)
+    val terms = q.select(explode(split(col("text"), " "))).distinct()
+      .collect().map(_.getString(0)).toSeq
+    val fixed = TextAnalysis.bm25(docs, "doc_id", "text", terms)
+      .filter(col("doc_id") =!= 97L)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val cands = TextAnalysis.bm25Candidates(docs, q, "doc_id", "text")
+      .collect().map { r =>
+        assert(r.getLong(0) == 97L)
+        r.getLong(1) -> r.getLong(2).toDouble / 1e6
+      }.toMap
+    assert(cands.size > 100, s"expected a dense candidate set, got ${cands.size}")
+    assert(fixed == cands,
+      s"${(fixed.toSet diff cands.toSet).size} of ${fixed.size} scores differ")
+  }
+
   test("bm25Retrieve: per-query more-like-this ranking — shared-term docs rank, self excluded") {
     import spark.implicits._
     import graft.operators.TextAnalysis
@@ -363,6 +384,28 @@ class TextSpec extends SparkSpec {
     val short = TextAnalysis.knBigramLogProb(
       Seq((9L, "solo")).toDF("doc_id", "text"), "doc_id", "text")
     assert(short.count() == 0L)
+  }
+
+  test("corpus-LM scorers: null-id docs yield no row and do not move the other docs' scores") {
+    // a SQL GROUP BY would lump both null-id docs into one pseudo-doc
+    // and count their tokens into the model; all three scorers share
+    // one front end that drops them (and null texts) everywhere
+    val kept = Seq((Option(1L), "a b c a"), (Option(2L), "b c d e"))
+    val all = (kept ++ Seq((Option.empty[Long], "b c d"), (Option.empty[Long], "x y z")))
+      .toDF("doc_id", "text")
+    val scorers = Seq[(String, (org.apache.spark.sql.DataFrame, String, String) =>
+        org.apache.spark.sql.DataFrame)](
+      "unigram" -> TextAnalysis.unigramLogProb,
+      "add-one bigram" -> TextAnalysis.bigramLogProb,
+      "kn bigram" -> TextAnalysis.knBigramLogProb)
+    for ((name, score) <- scorers) {
+      def rows(df: org.apache.spark.sql.DataFrame) = score(df, "doc_id", "text")
+        .collect().map(r => (Option(r.get(0)), r.getLong(1), r.getDouble(2))).toSet
+      val got = rows(all)
+      assert(got.forall(_._1.isDefined), s"$name: null-id docs must yield no row: $got")
+      assert(got == rows(kept.toDF("doc_id", "text")),
+        s"$name: null-id docs must not move the other docs' scores: $got")
+    }
   }
 
   test("trainBpeMerges: the distributed loop (collectThreshold = 0) learns a bit-identical merge table to the driver fast path") {

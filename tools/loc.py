@@ -3,17 +3,22 @@
 
 Usage:
 
-    python3 tools/loc.py [PATH ...]          # default: src/main/scala
+    python3 tools/loc.py [PATH ...]             # default: src/main/scala
+    python3 tools/loc.py --base REV [PATH ...]  # REV vs the working tree
 
 Each PATH is a file or a directory (searched for *.scala, *.java and
 *.py files). Prints one `<lines>  <file>` row per file and a `total`
-row. A line counts when it holds any character outside a comment:
+row. With `--base REV` each row is `<base> <change> <delta>  <file>`:
+the base side is read with `git show REV:<file>` (no checkout), the
+change side from the working tree, and a file present on one side only
+counts 0 on the other. A line counts when it holds any character outside a comment:
 `//` line comments and `/* */` and `/** */` block comments (nested, as
 in Scala) are excluded, and comment markers inside string and character
 literals are not comments. For .py files, `#` starts a comment (a
 docstring is a string, so it counts).
 """
 import os
+import subprocess
 import sys
 
 EXTS = (".scala", ".java", ".py")
@@ -111,18 +116,48 @@ def files(paths):
                     yield os.path.join(root, name)
 
 
+def git(*args):
+    return subprocess.run(["git", *args], check=True, capture_output=True,
+                          text=True).stdout
+
+
+def base_files(rev, paths):
+    """{file: source} of every counted file under `paths` at `rev`."""
+    names = git("ls-tree", "-r", "--name-only", rev, "--", *paths).split("\n")
+    return {f: git("show", f"{rev}:./{f}") for f in names if f.endswith(EXTS)}
+
+
+def count(f, src):
+    return code_lines(src, hash_comments=f.endswith(".py"))
+
+
 def main(argv):
+    base = None
+    if argv[:1] == ["--base"]:
+        if len(argv) < 2:
+            sys.exit("loc: --base needs a revision")
+        base, argv = argv[1], argv[2:]
     paths = argv or ["src/main/scala"]
-    missing = [p for p in paths if not os.path.exists(p)]
+    olds = base_files(base, paths) if base else {}
+    missing = [p for p in paths if not os.path.exists(p)
+               and not any(f == p or f.startswith(p.rstrip("/") + "/") for f in olds)]
     if missing:
         sys.exit(f"loc: no such path: {', '.join(missing)}")
-    total = 0
-    for f in files(paths):
+    news = {}
+    for f in files(p for p in paths if os.path.exists(p)):
         with open(f, encoding="utf-8") as fh:
-            k = code_lines(fh.read(), hash_comments=f.endswith(".py"))
-        total += k
-        print(f"{k:7d}  {f}")
-    print(f"{total:7d}  total")
+            news[os.path.normpath(f)] = count(f, fh.read())
+    if base is None:
+        for f, k in news.items():
+            print(f"{k:7d}  {f}")
+        print(f"{sum(news.values()):7d}  total")
+        return
+    olds = {os.path.normpath(f): count(f, src) for f, src in olds.items()}
+    for f in sorted(set(olds) | set(news)):
+        o, n = olds.get(f, 0), news.get(f, 0)
+        print(f"{o:7d} {n:7d} {n - o:+7d}  {f}")
+    o, n = sum(olds.values()), sum(news.values())
+    print(f"{o:7d} {n:7d} {n - o:+7d}  total")
 
 
 if __name__ == "__main__":
